@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
   * Each query is forced via queryExecution.toRdd.count() so the full
@@ -55,35 +53,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // long-running-driver hygiene: ContextCleaner only releases
-      // executor-side broadcast/RDD blocks after the driver GCs the
-      // owning references, and with a large driver heap a full GC may
-      // never happen inside one bench run — 1256 query executions
-      // then accumulate dead broadcast blocks on the block manager
-      // (the BENCHNOTES r13/r14 late-session iterative-family
-      // inflation). Spark's own knob for exactly this, production-
-      // justified for any many-query driver; it changes BETWEEN-query
-      // state, never a timed region.
-      .config("spark.cleaner.periodicGC.interval", "120s")
-      // the generated-class cache defaults to 100 entries; a
-      // 314-query workload cycles far past that, so every measured
-      // round re-paid Janino compilation for every query — exactly
-      // the one-time cost the unmeasured warm-up round exists to
-      // amortize (and which a production driver running a fixed query
-      // library amortizes by construction). Sized to hold the whole
-      // registry's generated classes; caches CODE, never data.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Log.quietAuditedWarnings()
+    val cpus = graft.pipeline.SparkSessionFactory.localCpus
+    val spark = graft.pipeline.SparkSessionFactory.local(cpus)
 
     // Timed INGEST phase (round 15): the layout catalog's contract is
     // "pay each artifact derivation once at ingest, read it everywhere"
@@ -111,7 +82,7 @@ object Bench {
     // startup from the first measured query
     spark.read.parquet(s"$sfDir/region.parquet").queryExecution.toRdd.count()
 
-    val cpuPre = cpuCanary(cpus.toInt)
+    val cpuPre = cpuCanary(cpus)
     val memPre = memcpyCanary()
 
     // Round 0 is an unmeasured warm-up (Janino codegen compile + JIT —
@@ -174,7 +145,7 @@ object Bench {
     val lateBuilds =
       graft.operators.LayoutCatalog.buildsPublished.get() - ingestBuilds
     val ingest = s""""ingest_sec":${num(ingestSec, 3)},"ingest_builds":$ingestBuilds,"late_builds":$lateBuilds"""
-    val cpuPost = cpuCanary(cpus.toInt)
+    val cpuPost = cpuCanary(cpus)
     val memPost = memcpyCanary()
     val canary = s"""{"cpu${cpus}_pre_sec":${num(cpuPre, 2)},"memcpy_pre_gbps":${num(memPre, 2)},"cpu${cpus}_post_sec":${num(cpuPost, 2)},"memcpy_post_gbps":${num(memPost, 2)}}"""
     val json =

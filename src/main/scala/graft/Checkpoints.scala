@@ -24,7 +24,7 @@ object Checkpoints {
     * checkpoints there instead of executor-local blocks. */
   val DirConf = "spark.graft.checkpointDir"
 
-  /** Evidence hook (PlanDump only): when set, every materialization
+  /** Evidence hook (`Diag --plans` only): when set, every materialization
     * writes its input's `explain("formatted")` to
     * `<prefix><seq>.txt` BEFORE checkpointing — so iterative queries'
     * per-round plans are archivable even though the executed tail
@@ -32,7 +32,7 @@ object Checkpoints {
     * evidence gap). Never set during Bench/Verify. */
   @volatile private var dumpPrefix: Option[String] = None
   private val dumpSeq = new java.util.concurrent.atomic.AtomicInteger()
-  def setPlanDumpPrefix(prefix: Option[String]): Unit = {
+  def setDumpPrefix(prefix: Option[String]): Unit = {
     dumpPrefix = prefix
     dumpSeq.set(0)
   }
@@ -60,20 +60,7 @@ object Checkpoints {
     * full vertex-table shuffle per round (guide §2.4). Stats,
     * constraints and ordering carry over exactly as
     * Dataset.checkpoint carried them. */
-  def materialize(df: DataFrame): DataFrame = {
-    dumpPlan(df)
-    val session = df.sparkSession
-    val dir = session.conf.get(DirConf, "")
-    if (!dir.isEmpty) {
-      val sc = session.sparkContext
-      // setCheckpointDir appends a per-app UUID subdir; only (re)set
-      // when the configured root changed so repeated materializations
-      // share one checkpoint directory
-      if (!sc.getCheckpointDir.exists(_.contains(dir))) sc.setCheckpointDir(dir)
-    }
-    org.apache.spark.sql.graftbridge.Bridge
-      .checkpointKeepPartitioning(df, reliable = !dir.isEmpty)
-  }
+  def materialize(df: DataFrame): DataFrame = checkpoint(df, None)._1
 
   /** [[materialize]] that ALSO returns an exact aggregate (Σ or max,
     * as BigInteger) of one LONG column, computed inside the
@@ -83,43 +70,21 @@ object Checkpoints {
     * blocks (guide §1.2: the per-round job count is the serial
     * dimension of a driver-side loop). None ⇔ no non-null rows. */
   def materializeAggLong(df: DataFrame, column: String, isMax: Boolean)
+      : (DataFrame, Option[java.math.BigInteger]) =
+    checkpoint(df, Some((df.schema.fieldIndex(column), isMax)))
+
+  private def checkpoint(df: DataFrame, agg: Option[(Int, Boolean)])
       : (DataFrame, Option[java.math.BigInteger]) = {
     dumpPlan(df)
-    val session = df.sparkSession
-    val dir = session.conf.get(DirConf, "")
-    if (!dir.isEmpty) {
-      val sc = session.sparkContext
+    val dir = df.sparkSession.conf.get(DirConf, "")
+    if (dir.nonEmpty) {
+      val sc = df.sparkSession.sparkContext
+      // setCheckpointDir appends a per-app UUID subdir; only (re)set
+      // when the configured root changed so repeated materializations
+      // share one checkpoint directory
       if (!sc.getCheckpointDir.exists(_.contains(dir))) sc.setCheckpointDir(dir)
     }
-    val ordinal = df.schema.fieldIndex(column)
     org.apache.spark.sql.graftbridge.Bridge.checkpointAggLong(
-      df, reliable = !dir.isEmpty, Some((ordinal, isMax)))
-  }
-
-  /** [[materialize]] for KEYED loop state: repartitions `df` to
-    * exactly `numPartitions` on `keys` (REPARTITION_BY_NUM — exempt
-    * from AQE partition coalescing, so the count is the real layout),
-    * stores it, and returns a frame that still DECLARES
-    * HashPartitioning(keys, numPartitions). Iterative queries that
-    * join every round on the same key (pointer-jump CC's label table,
-    * label propagation's edge list, HITS' score table) then pay the
-    * keyed exchange ONCE here instead of re-exchanging the stored
-    * frame on every round's join side (guide §2.4: two operations
-    * keyed the same way share one exchange). The declared partitioning
-    * is verified against the executed plan inside
-    * [[org.apache.spark.sql.graftbridge.Bridge.keyedCheckpoint]]. */
-  def materializeKeyed(df: DataFrame, numPartitions: Int,
-      keys: String*): DataFrame = {
-    val keyed = df.repartition(numPartitions,
-      keys.map(org.apache.spark.sql.functions.col): _*)
-    dumpPlan(keyed)
-    val session = df.sparkSession
-    val dir = session.conf.get(DirConf, "")
-    if (!dir.isEmpty) {
-      val sc = session.sparkContext
-      if (!sc.getCheckpointDir.exists(_.contains(dir))) sc.setCheckpointDir(dir)
-    }
-    org.apache.spark.sql.graftbridge.Bridge.keyedCheckpoint(
-      keyed, keys, numPartitions, reliable = !dir.isEmpty)
+      df, reliable = dir.nonEmpty, agg)
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch ingest-cost probe for the INCREMENTAL maintenance paths
@@ -25,23 +24,14 @@ import org.apache.spark.sql.functions._
   * from disk — exactly the production append posture (the archive
   * artifact already exists when today's delta lands).
   *
-  * Usage: GRAFT_SCALE_B=/tmp/graft_scale/x25 tools/incr_probe.sh
+  * Usage: GRAFT_SCALE_B=/tmp/graft_scale/x25 tools/run_main.sh graft.IncrProbe
   */
 object IncrProbe {
 
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("GRAFT_SCALE_B", "/tmp/graft_scale/x25")
     val warm = sys.env.getOrElse("GRAFT_SCALE_WARM", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Log.quietAuditedWarnings()
+    val spark = graft.pipeline.SparkSessionFactory.local()
 
     def freshRoot(): java.io.File = {
       val d = java.nio.file.Files

@@ -64,10 +64,8 @@ object Ingest {
     * the same artifact serializes and distinct artifacts write to
     * distinct process-tagged temp dirs — in-process concurrency was
     * already the contract (the cross-JVM publish race is handled the
-    * same way). Sequential fallback via `parallel = false` for A/B
-    * measurement. */
-  def buildAll(s: SparkSession, dir: String,
-      parallel: Boolean = true): Unit = {
+    * same way). */
+  def buildAll(s: SparkSession, dir: String): Unit = {
     def timed(name: String, f: () => Unit): Unit = {
       s.sparkContext.setJobDescription(s"ingest: $name")
       val t0 = System.nanoTime()
@@ -76,49 +74,34 @@ object Ingest {
         f"[ingest] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     val gs = groups(s, dir)
-    if (!parallel) gs.foreach { case (n, f) => timed(n, f) }
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(gs.size)
-      try {
-        // job descriptions/groups are thread-local: set inside each
-        // pool thread, so every group's jobs are labelled correctly
-        val fs = gs.map { case (n, f) =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            def call(): Unit = timed(n, f)
-          })
-        }
-        // propagate the FIRST failure (get unwraps in submit order —
-        // deterministic enough for a build that must simply all pass)
-        fs.foreach(_.get())
-      } finally pool.shutdown()
-    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(gs.size)
+    try {
+      // job descriptions/groups are thread-local: set inside each
+      // pool thread, so every group's jobs are labelled correctly
+      val fs = gs.map { case (n, f) =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = timed(n, f)
+        })
+      }
+      // propagate the FIRST failure (get unwraps in submit order —
+      // deterministic enough for a build that must simply all pass)
+      fs.foreach(_.get())
+    } finally pool.shutdown()
   }
 
   /** Standalone ops entry point: wipe the catalog root and rebuild
-    * everything, timed. Args: [sfDir] [seq|par]. */
+    * everything, timed. Args: [sfDir]. */
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val par = !args.lift(1).contains("seq")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    Log.quietAuditedWarnings()
+    val s = graft.pipeline.SparkSessionFactory.local()
     graft.operators.LayoutCatalog.deleteRecursively(
       graft.operators.LayoutCatalog.root)
     val t0 = System.nanoTime()
-    buildAll(s, dir, parallel = par)
+    buildAll(s, dir)
     val sec = (System.nanoTime() - t0) / 1e9
     val builds = graft.operators.LayoutCatalog.buildsPublished.get()
     s.stop()
-    println(f"""{"ingest_sec":$sec%.3f,"ingest_builds":$builds,"parallel":$par}""")
+    println(f"""{"ingest_sec":$sec%.3f,"ingest_builds":$builds}""")
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling dry-run harness: measures how query wall-time grows when
   * the corpus grows K×, with both scales generated by the SAME writer
   * (tools/gen_scale.py) and measured inside ONE JVM in alternated
@@ -24,7 +22,7 @@ import org.apache.spark.sql.SparkSession
   * threads), so read alpha together with the absolute times.
   *
   * Usage: GRAFT_SCALE_A=/tmp/graft_scale/x1 GRAFT_SCALE_B=.../x5
-  *        GRAFT_SCALE_K=5 tools/scale_probe.sh [queryName ...]
+  *        GRAFT_SCALE_K=5 tools/run_main.sh graft.ScaleProbe [queryName ...]
   */
 object ScaleProbe {
 
@@ -53,7 +51,6 @@ object ScaleProbe {
     val dirB = sys.env.getOrElse("GRAFT_SCALE_B", "/tmp/graft_scale/x5")
     val k = sys.env.getOrElse("GRAFT_SCALE_K", "5").toDouble
     val rounds = sys.env.getOrElse("GRAFT_SCALE_ROUNDS", "2").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val names = if (args.nonEmpty) args.toSeq else defaultQueries
 
     // scratch layout root: cold builds are measured, the durable
@@ -64,15 +61,7 @@ object ScaleProbe {
       java.nio.file.Files.createTempDirectory("graft-scale-layouts").toString)
     sys.props("graft.layout.root") = scratch
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.pipeline.SparkSessionFactory.local()
 
     def run(name: String, dir: String): Double = {
       val t0 = System.nanoTime()

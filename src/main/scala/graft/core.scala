@@ -122,7 +122,8 @@ object Det {
   def davg(c: Column): Column = sum(dec(c)).cast("double") / count(lit(1))
 }
 
-/** Logging hygiene for the headline mains (Verify / Bench / Diag). */
+/** Logging hygiene applied by `SparkSessionFactory.local`, i.e. for
+  * every main and the test session. */
 object Log {
   /** Silence WindowExecBase's per-execution "No Partition Defined for
     * Window operation!" line. Every unpartitioned window in the
@@ -132,8 +133,9 @@ object Log {
     * the hand-audited whitelist (q121's survivor-only phase 2), and
     * the sweep FAILS the build otherwise. That sweep is the real
     * scale guard; the log line re-raises already-adjudicated sites
-    * 500+ times per full Verify sweep, so the mains quiet the logger
-    * (the structural check, unlike the log, cannot be ignored). */
+    * 500+ times per full Verify sweep, so the local session quiets
+    * the logger (the structural check, unlike the log, cannot be
+    * ignored). */
   def quietAuditedWarnings(): Unit =
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window",

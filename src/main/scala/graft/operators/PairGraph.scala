@@ -120,7 +120,7 @@ object PairGraph {
     // cliff): documents is one parquet file, so without this the
     // whole gram kernel strands on ONE task while every other core
     // idles — measured 1.79 → 1.42 s steady on the q310 shape at
-    // sf0.1 (R15Probe), and the same pass is the head of every
+    // sf0.1 (OPTIMIZATION_r15), and the same pass is the head of every
     // pairs07 ingest build
     val spread = graft.Tables.spreadKernelInput(s, dir, Seq("documents"),
       graft.Tables.load(s, dir, "documents").select("doc_id", "text"),

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 /** Runnable usage sample: full medallion run against a local lake with
   * an injected page source (no network). `sbt "runMain
   * graft.pipeline.PipelineDemo [rootDir]"`.
@@ -24,13 +22,7 @@ object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft-demo").toString)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkSessionFactory.local()
 
     val settings = Settings(
       lakeRoot = s"$root/lake",

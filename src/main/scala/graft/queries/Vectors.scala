@@ -116,7 +116,7 @@ object Vectors {
     * only, so both engines land the same rung with no float-log
     * boundary risk. nProbe is 2 for tiny k and saturates at 4, so the
     * probed corpus FRACTION falls as 4/√n while absolute probe work
-    * grows only as √n — the production IVF cost model. PqSweep-
+    * grows only as √n — the production IVF cost model. Sweep-
     * measured at the three SFs (rungs k=32/32/64, p=4): recall@5 =
     * 0.98 / 0.98 / 0.99 at 0.51 / 0.51 / 0.71 s steady — vs the old
     * fixed-8's 0.87 / 0.89 / 0.68, and FASTER at sf0.1 (0.71 s vs
@@ -2270,7 +2270,7 @@ object Vectors {
   // retrieve-then-rerank, the deployment shape. nCentroids and
   // nProbe ride the √n LADDER (pqK/pqProbe — the round-10 fixed k=8
   // measured 0.87/0.89/0.68 across sf0.001/0.01/0.1; the ladder's
-  // rungs measure 0.98/0.98/0.99 at ≤ 0.71 s steady, the PqSweep
+  // rungs measure 0.98/0.98/0.99 at ≤ 0.71 s steady, the round-11 PQ sweep
   // operating points — √n cells both shrink residuals, so the PQ
   // loses less, and shrink the probed candidate set). Shortlist
   // stays 100 = 20·k_final. Centroids, codebook and LUT all

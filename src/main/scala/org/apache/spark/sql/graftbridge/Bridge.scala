@@ -28,86 +28,6 @@ object Bridge {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.analyzed
 
-  /** Eager checkpoint that PRESERVES hash partitioning across the
-    * materialize boundary.
-    *
-    * `Dataset.localCheckpoint()/checkpoint()` wrap the stored RDD in a
-    * LogicalRDD whose outputPartitioning is taken from
-    * `executedPlan.outputPartitioning` — and under AQE the executed
-    * plan is an AdaptiveSparkPlanExec, a LeafExecNode whose default
-    * outputPartitioning is UnknownPartitioning(0). Every iterative
-    * query that checkpoints keyed loop state (pointer-jump CC, label
-    * propagation, HITS) therefore re-exchanges the SAME keyed frame on
-    * both sides of the next round's joins, every round (visible in
-    * plans/r14/q294_*_before.txt: Exchange over "Scan ExistingRDD ...
-    * UnknownPartitioning(0)" on inputs that were written out hash
-    * partitioned).
-    *
-    * This helper re-implements the checkpoint with the partitioning
-    * carried over: execute, copy + store the rows exactly as
-    * Dataset.checkpoint does, then read the FINAL adaptive plan's real
-    * outputPartitioning and declare it on the LogicalRDD (rewritten
-    * onto the analyzed output attributes). The declaration is
-    * VERIFIED, never trusted: unless the executed partitioning is
-    * exactly HashPartitioning(`keys`, `numPartitions`) the call
-    * throws — a silently wrong co-partitioning claim would corrupt
-    * every downstream join. Callers guarantee the physical layout by
-    * repartitioning on the keys with an explicit partition count
-    * (REPARTITION_BY_NUM is exempt from AQE coalescing), which
-    * [[graft.Checkpoints.materializeKeyed]] does. */
-  def keyedCheckpoint(df: org.apache.spark.sql.DataFrame, keys: Seq[String],
-      numPartitions: Int, reliable: Boolean): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.LogicalRDD
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-    val session = ds.sparkSession
-    val qe = ds.queryExecution
-    // same storage path as Dataset.checkpoint(eager = true): copy the
-    // reused UnsafeRow buffers, mark the RDD, force materialization
-    val rdd = qe.toRdd.map(_.copy())
-    if (reliable) rdd.checkpoint() else rdd.localCheckpoint()
-    rdd.count(): Unit
-    val finalPlan = qe.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    val out = qe.analyzed.output
-    val byId = finalPlan.output.map(_.exprId).zip(out).toMap
-    // a projection that aliases the key reports a PartitioningCollection
-    // of equivalent partitionings — any member that is exactly
-    // HashPartitioning(keys, numPartitions) proves the layout
-    def members(p: org.apache.spark.sql.catalyst.plans.physical.Partitioning)
-        : Seq[org.apache.spark.sql.catalyst.plans.physical.Partitioning] =
-      p match {
-        case c: org.apache.spark.sql.catalyst.plans.physical.PartitioningCollection =>
-          c.partitionings.flatMap(members)
-        case other => Seq(other)
-      }
-    val declared = members(finalPlan.outputPartitioning)
-      .collectFirst {
-        case h: HashPartitioning if h.numPartitions == numPartitions &&
-            h.expressions.forall(_.isInstanceOf[AttributeReference]) &&
-            h.expressions.map { case a: AttributeReference =>
-              byId.get(a.exprId).map(_.name)
-            } == keys.map(Option(_)) =>
-          HashPartitioning(
-            h.expressions.map { case a: AttributeReference => byId(a.exprId) },
-            numPartitions)
-      }
-      .getOrElse(throw new IllegalStateException(
-        s"keyedCheckpoint: executed partitioning " +
-          s"${finalPlan.outputPartitioning} is not " +
-          s"HashPartitioning($keys, $numPartitions) — caller must " +
-          "repartition(numPartitions, keys) first"))
-    val (stats, constraints) =
-      LogicalRDD.rewriteStatsAndConstraints(qe.analyzed, qe.optimizedPlan)
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      session,
-      LogicalRDD(out, rdd, declared)(session, stats, constraints))
-  }
-
   /** Eager local/reliable checkpoint that declares WHATEVER
     * partitioning the final (adaptive) plan actually executed with —
     * the partitioning `Dataset.localCheckpoint` would have preserved
@@ -115,18 +35,16 @@ object Bridge {
     * Declaring the executed layout is definitionally sound (no
     * verification needed); attribute references are rewritten onto the
     * analyzed output, and a partitioning that references anything else
-    * degrades to UnknownPartitioning — exactly the old behavior. */
-  def checkpointKeepPartitioning(df: org.apache.spark.sql.DataFrame,
-      reliable: Boolean): org.apache.spark.sql.DataFrame =
-    checkpointAggLong(df, reliable, None)._1
-
-  /** [[checkpointKeepPartitioning]] that additionally folds a LONG
-    * column aggregate into the checkpoint's own forcing action —
-    * iterative drivers that need one scalar per round (a convergence
-    * Σ, an L∞ max) otherwise pay a SECOND job per round just to read
-    * it back from the stored blocks. `agg = (ordinal, isMax)`: exact
-    * BigInteger sum of (or max over) the non-null values of that
-    * column; empty input and all-null both yield None. */
+    * degrades to UnknownPartitioning — exactly the old behavior.
+    *
+    * `agg = Some((ordinal, isMax))` additionally folds a LONG column
+    * aggregate into the checkpoint's own forcing action — iterative
+    * drivers that need one scalar per round (a convergence Σ, an L∞
+    * max) otherwise pay a SECOND job per round just to read it back
+    * from the stored blocks: exact BigInteger sum of (or max over) the
+    * non-null values of that column; empty input and all-null both
+    * yield None. `agg = None` forces with a bare count and returns
+    * None. */
   def checkpointAggLong(df: org.apache.spark.sql.DataFrame,
       reliable: Boolean, agg: Option[(Int, Boolean)])
       : (org.apache.spark.sql.DataFrame, Option[java.math.BigInteger]) = {

@@ -40,6 +40,31 @@ class CheckpointsSpec extends SparkSpec {
     } finally spark.conf.unset(Checkpoints.DirConf)
   }
 
+  test("materializeAggLong: the reliable path returns the local path's rows and scalars") {
+    import spark.implicits._
+    // every 7th value null: the scalar covers non-null values only
+    val df = (1 to 100).map(i => (i, if (i % 7 == 0) None else Some(3L * i)))
+      .toDF("k", "v")
+    def run(isMax: Boolean): (Seq[String], Option[java.math.BigInteger]) = {
+      val (m, agg) = Checkpoints.materializeAggLong(df, "v", isMax)
+      (m.collect().map(_.toString).sorted.toSeq, agg)
+    }
+    val local = Seq(false, true).map(run)
+    val nonNull = (1 to 100).filter(_ % 7 != 0).map(3L * _)
+    assert(local.map(_._2) === Seq(Some(java.math.BigInteger.valueOf(nonNull.sum)),
+      Some(java.math.BigInteger.valueOf(nonNull.max))))
+    assert(local.head._1.length === 100)
+    val dir = Files.createTempDirectory("graft-ckpt-agg").toString
+    spark.conf.set(Checkpoints.DirConf, dir)
+    try {
+      assert(Seq(false, true).map(run) === local)
+      val files = Files.walk(Paths.get(dir))
+      try assert(files.filter(Files.isRegularFile(_)).count() > 0,
+        s"expected reliable checkpoint files under $dir")
+      finally files.close()
+    } finally spark.conf.unset(Checkpoints.DirConf)
+  }
+
   test("checkpointed registry queries are value-identical under both durability paths") {
     // The deploy-posture parity ask: every query whose plan runs
     // through Checkpoints.materialize must produce the same rows

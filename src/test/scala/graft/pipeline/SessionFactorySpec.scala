@@ -66,6 +66,11 @@ class SessionFactorySpec extends SparkSpec {
       assert(conf("spark.sql.extensions") === "graft.plans.GraftExtensions")
       assert(conf("spark.hadoop.fs.s3a.endpoint") === "objectstore:9123")
       assert(conf("spark.sql.session.timeZone") === "UTC")
+      SparkSessionFactory.standardConf.foreach { case (k, v) => assert(conf(k) === v) }
+    }
+    // the local session (the one these specs run on) carries the same contract
+    SparkSessionFactory.standardConf.foreach { case (k, v) =>
+      assert(spark.sparkContext.getConf.get(k) === v, k)
     }
   }
 

@@ -251,7 +251,7 @@ class RetrievalSpec extends SparkSpec {
         s"($qid, $vid) rerank score must be the exact cosine")
     }
     // measured operating point at sf0.001 is 0.98 on the √n ladder's
-    // k=32 rung (PqSweep, round 11; was 0.87 on fixed k=8); the pin
+    // k=32 rung (round-11 PQ sweep; was 0.87 on fixed k=8); the pin
     // leaves noise margin but would catch any structural break
     // (wrong cells probed, LUT misindexed, shortlist dropped)
     val hits = exact.map { case (qid, truth) =>
@@ -263,7 +263,7 @@ class RetrievalSpec extends SparkSpec {
   test("q286 IVF-PQ recall@5 clears 0.80 at sf0.1 — the √n-ladder scale pin") {
     // The round-10 weak mark: the FIXED 8-cell index measured 0.68
     // here. The pqK/pqProbe ladder (k = pow2-ceil √n = 64 at this
-    // corpus, probe 4) measures 0.99 (PqSweep) — this pin holds the
+    // corpus, probe 4) measures 0.99 (round-11 PQ sweep) — this pin holds the
     // scale story: recall must survive the largest test SF, not just
     // the toy one.
     val sfL = "/root/testdata/sf0.1"

@@ -4,41 +4,16 @@
 # Running graft.Bench through sbt leaves sbt's "[success] Total time..."
 # as the true last stdout line, which breaks any consumer that parses
 # the LAST line of captured stdout as the result JSON. This script runs
-# the already-compiled classes directly with java (mirroring build.sbt's
-# fork flags), so the bare result JSON emitted by Bench is the genuine
-# final line of stdout. All build chatter goes to stderr.
+# Bench directly with java through tools/run_main.sh (build.sbt's fork
+# flags), so the bare result JSON emitted by Bench is the genuine final
+# line of stdout. All build chatter goes to stderr.
 #
 # Usage: tools/bench.sh            (env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
 #                                        SPARK_GRAFT_BENCH_OUT, SPARK_DRIVER_MEM)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-CLASSES=target/scala-2.13/classes
-# (re)compile if classes are missing or any main source is newer
-if [ ! -d "$CLASSES" ] || \
-   [ -n "$(find src/main -name '*.scala' -newer "$CLASSES" -print -quit 2>/dev/null)" ]; then
-  sbt -batch compile 1>&2
-fi
-
-# JDK-17 module opens: same list as build.sbt (what spark-submit injects)
-OPENS=(
-  java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect
-  java.base/java.io java.base/java.net java.base/java.nio
-  java.base/java.util java.base/java.util.concurrent
-  java.base/java.util.concurrent.atomic
-  java.base/sun.nio.ch java.base/sun.nio.cs
-  java.base/sun.security.action java.base/sun.util.calendar
-)
-OPEN_FLAGS=()
-for p in "${OPENS[@]}"; do OPEN_FLAGS+=(--add-opens "$p=ALL-UNNAMED"); done
-
-java \
-  "${OPEN_FLAGS[@]}" \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
-  "-Xmx${SPARK_DRIVER_MEM:-48g}" \
-  -cp "$CLASSES:/opt/spark/jars/*" \
-  graft.Bench
+tools/run_main.sh graft.Bench
 rc=$?
 
 # Archive the FULL per-query map per round: BENCH_r{N}.json keeps only

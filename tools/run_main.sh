@@ -1,13 +1,24 @@
 #!/usr/bin/env bash
-# Plain-java launcher for graft.ScaleProbe (same flags as tools/bench.sh).
-# Usage: GRAFT_SCALE_A=... GRAFT_SCALE_B=... tools/scale_probe.sh [query ...]
+# Plain-java launcher for any graft main: (re)compiles when the classes
+# are missing or a main source is newer, then runs the class with
+# build.sbt's fork flags. No sbt wrapper chatter reaches stdout, so a
+# main's own last stdout line stays the last line.
+#
+# Usage: tools/run_main.sh <MainClass> [args...]
+#   e.g. GRAFT_SCALE_A=... GRAFT_SCALE_B=... tools/run_main.sh graft.ScaleProbe
+#        GRAFT_SCALE_B=/tmp/graft_scale/x25 tools/run_main.sh graft.IncrProbe
+#   (env: SPARK_GRAFT_CPUS, SPARK_DRIVER_MEM)
 set -euo pipefail
 cd "$(dirname "$0")/.."
+MAIN="${1:?usage: tools/run_main.sh <MainClass> [args...]}"; shift
+
 CLASSES=target/scala-2.13/classes
 if [ ! -d "$CLASSES" ] || \
    [ -n "$(find src/main -name '*.scala' -newer "$CLASSES" -print -quit 2>/dev/null)" ]; then
   sbt -batch compile 1>&2
 fi
+
+# JDK-17 module opens: same list as build.sbt (what spark-submit injects)
 OPENS=(
   java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect
   java.base/java.io java.base/java.net java.base/java.nio
@@ -18,10 +29,11 @@ OPENS=(
 )
 OPEN_FLAGS=()
 for p in "${OPENS[@]}"; do OPEN_FLAGS+=(--add-opens "$p=ALL-UNNAMED"); done
+
 exec java \
   "${OPEN_FLAGS[@]}" \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   "-Xmx${SPARK_DRIVER_MEM:-48g}" \
   -cp "$CLASSES:/opt/spark/jars/*" \
-  graft.ScaleProbe "$@"
+  "$MAIN" "$@"
