@@ -29,9 +29,9 @@ object Ingest {
   /** The independent artifact groups, with display names for the job
     * description / timing log. Groups share no artifact except the
     * pair graph (listed in its own group AND resolved by TextOps'
-    * hook — the per-artifact computeIfAbsent memo serializes the
-    * duplicate resolve, so the second caller blocks on the first and
-    * reads the memoized location). */
+    * hook — [[graft.operators.LayoutCatalog.resolve]]'s once-per-key
+    * memo makes the second caller wait for the first build and read
+    * its location). */
   private def groups(s: SparkSession, dir: String)
       : Seq[(String, () => Unit)] = Seq(
     // trading-graph bucketed layout (edges_v3: pairs + pairs_s +
@@ -59,12 +59,12 @@ object Ingest {
     * never fill the cluster alone (bucketed writes, Lloyd rounds,
     * per-segment index writes), so one group's scheduling gaps and
     * stage tails back-fill with another group's tasks. Every builder
-    * funnels through LayoutCatalog.buildAndPublish with a
-    * per-artifact computeIfAbsent memo, so concurrent resolution of
-    * the same artifact serializes and distinct artifacts write to
-    * distinct process-tagged temp dirs — in-process concurrency was
-    * already the contract (the cross-JVM publish race is handled the
-    * same way). */
+    * funnels through LayoutCatalog.resolve, whose once-per-key memo
+    * holds no map lock while a build runs: concurrent resolution of
+    * the same artifact waits for one build, distinct artifacts build
+    * in parallel into distinct process-tagged temp dirs — in-process
+    * concurrency was already the contract (the cross-JVM publish race
+    * is handled the same way). */
   def buildAll(s: SparkSession, dir: String): Unit = {
     def timed(name: String, f: () => Unit): Unit = {
       s.sparkContext.setJobDescription(s"ingest: $name")

@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.io.File
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,8 +16,8 @@ import org.apache.spark.sql.functions._
   * corpus files they derive from, so a SECOND JVM (the production
   * contract: many jobs, one ingest) resolves them from disk instead
   * of re-paying the fact⋈fact derivation. A changed corpus snapshot
-  * fingerprints to a new directory and rebuilds; the in-process map
-  * only memoizes the resolve.
+  * fingerprints to a new directory and rebuilds, in the same JVM too
+  * ([[LayoutCatalog.resolve]] keys its memo on the fingerprint).
   *
   * Two artifacts, one derivation — both now WEIGHTED (round-9's
   * distinct layout forced q228 to re-run the fact join just for its
@@ -32,13 +34,11 @@ import org.apache.spark.sql.functions._
   *     (degree/strength windows and every frontier⋈edges join consume
   *     it with no exchange on the edge side).
   *
-  * Each table is repartitioned to exactly one file per bucket before
-  * the write, so the scan reports HashPartitioning(key, 32) and the
-  * bucket files stay sorted. Catalog table names derive from a hash
-  * of the (root, corpus, fingerprint) key itself — never from a
-  * mutable map size — so concurrent first-time resolves of different
-  * corpora cannot alias, and re-registration is idempotent if the
-  * SparkSession (and its catalog) is recreated mid-JVM.
+  * Each table is written and registered through
+  * [[LayoutCatalog.writeBucketed]] / [[LayoutCatalog.bucketed]]: one
+  * file per bucket, so the scan reports HashPartitioning(key, 32),
+  * and catalog names hashed from the published location, so
+  * registration is idempotent if the SparkSession is recreated.
   *
   * Semantics are a layout only: every consumer's oracle derives the
   * identical pair list straight from parquet.
@@ -49,16 +49,6 @@ object EdgeLayout {
     * adds the supplier-bucketed pairs copy), so an upgraded engine
     * never misreads an older artifact as current. */
   val LayoutVersion = 3
-
-  /** (catalog root, sf dir) → (pairs location, pairs_s location,
-    * edges location, name tag). Memoizes the resolve only — the
-    * artifact itself is on disk and outlives the process. */
-  private val resolved = new java.util.concurrent.ConcurrentHashMap[
-    String, (java.io.File, java.io.File, java.io.File, String)]()
-
-  /** Test hook: forget every in-process resolve (disk untouched), so
-    * a spec can prove the durable read-back path. */
-  def reset(): Unit = resolved.clear()
 
   /** The one derivation both tables share: (c, s, n) trading pairs
     * with their order-line counts. Orders and lineitem are BOTH fact
@@ -86,27 +76,11 @@ object EdgeLayout {
       .agg(count(lit(1)).as("n"))
   }
 
-  /** Build both bucketed tables under `tmp` (the catalog's
-    * unpublished temp dir). Bucketed writes require saveAsTable, so
-    * the build registers process-tagged scratch names and drops them
-    * (external tables — the files stay) once written. */
-  private def buildInto(s: SparkSession, dir: String,
-      tmp: java.io.File): Unit = {
-    val bt = s"${LayoutCatalog.processTag}_${tmp.getName.hashCode.toHexString}"
-    val pairsScratch = s"graft_build_pairs_$bt"
-    val pairsSScratch = s"graft_build_pairs_s_$bt"
-    val edgesScratch = s"graft_build_edges_$bt"
-    try {
-      // one file per bucket: repartition on the bucket key with the
-      // bucket count (same murmur3 hash as the bucketed write), so
-      // the read-back claims HashPartitioning(key, 32) AND the
-      // per-bucket sort survives as the scan's output ordering
-      derivePairs(s, dir)
-        .repartition(32, col("c"))
-        .write.mode("overwrite")
-        .bucketBy(32, "c").sortBy("c")
-        .option("path", new java.io.File(tmp, "pairs").getAbsolutePath)
-        .saveAsTable(pairsScratch)
+  /** Build the three bucketed tables under `tmp` (the catalog's
+    * unpublished temp dir). */
+  private def buildInto(s: SparkSession, dir: String, tmp: File): Unit =
+    LayoutCatalog.writeBucketed(derivePairs(s, dir), new File(tmp, "pairs"),
+        "c") { pairs =>
       // v3: the SAME pair rows bucketed by the supplier key — s-keyed
       // consumers (HITS' authority steps, supplier-side joins)
       // otherwise re-shuffle the pair corpus by s on EVERY execution;
@@ -114,100 +88,54 @@ object EdgeLayout {
       // all of them (guide §2.4: bucketed tables persist a
       // partitioning across jobs). Built from the pairs read-back — a
       // bucketed scan, not a re-run of the fact⋈fact join.
-      s.table(pairsScratch)
-        .repartition(32, col("s"))
-        .write.mode("overwrite")
-        .bucketBy(32, "s").sortBy("s")
-        .option("path", new java.io.File(tmp, "pairs_s").getAbsolutePath)
-        .saveAsTable(pairsSScratch)
+      LayoutCatalog.writeBucketed(pairs, new File(tmp, "pairs_s"), "s")(_ => ())
       // both edge directions from ONE explode pass over the pairs
       // table read-back (cheap: a bucketed scan, not the fact join)
-      s.table(pairsScratch)
-        .select(explode(array(
-          struct(col("c").as("src"), (-(col("s") + 1)).as("dst"),
-            col("n")),
-          struct((-(col("s") + 1)).as("src"), col("c").as("dst"),
-            col("n")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"),
-          col("e.n").as("n"))
-        .repartition(32, col("src"))
-        .write.mode("overwrite")
-        .bucketBy(32, "src").sortBy("src")
-        .option("path", new java.io.File(tmp, "edges").getAbsolutePath)
-        .saveAsTable(edgesScratch)
-    } finally {
-      s.sql(s"DROP TABLE IF EXISTS $pairsScratch")
-      s.sql(s"DROP TABLE IF EXISTS $pairsSScratch")
-      s.sql(s"DROP TABLE IF EXISTS $edgesScratch")
+      LayoutCatalog.writeBucketed(
+        pairs.select(explode(array(
+            struct(col("c").as("src"), (-(col("s") + 1)).as("dst"),
+              col("n")),
+            struct((-(col("s") + 1)).as("src"), col("c").as("dst"),
+              col("n")))).as("e"))
+          .select(col("e.src").as("src"), col("e.dst").as("dst"),
+            col("e.n").as("n")),
+        new File(tmp, "edges"), "src")(_ => ())
     }
+
+  /** The published bucketed table `leaf` of `dir`'s layout, bucketed
+    * and sorted by `key`. */
+  private def table(s: SparkSession, dir: String, leaf: String,
+      schema: String, key: String): DataFrame = {
+    val dest = LayoutCatalog.resolve(s"edges_v$LayoutVersion", dir,
+      Seq("orders", "lineitem"), "")(buildInto(s, dir, _))
+    LayoutCatalog.bucketed(s, new File(dest, leaf), schema, key)
   }
 
-  /** Idempotent per-session registration of a published bucketed
-    * table: CREATE TABLE over the existing files re-attaches the
-    * bucket-spec metadata (Spark recovers each file's bucket id from
-    * its name), so a recreated session reads the same artifact
-    * exchange-free without rewriting a byte. IF NOT EXISTS makes the
-    * check-then-create race-free: two threads resolving the same
-    * layout concurrently in one session must both succeed. */
-  private def registerIfAbsent(s: SparkSession, name: String,
-      loc: java.io.File, schema: String, key: String): Unit =
-    if (!s.catalog.tableExists(name))
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $name ($schema) USING PARQUET
-               |CLUSTERED BY ($key) SORTED BY ($key) INTO 32 BUCKETS
-               |LOCATION '${loc.getAbsolutePath}'""".stripMargin)
-
-  private def ensure(s: SparkSession, dir: String)
-      : (String, String, String) = {
-    val key = LayoutCatalog.root.getAbsolutePath + "|" + dir
-    val (pairsLoc, pairsSLoc, edgesLoc, tag) =
-      resolved.computeIfAbsent(key, _ => {
-        val fp = LayoutCatalog.fingerprint(dir, Seq("orders", "lineitem"))
-        val dest = LayoutCatalog.publishedDir(s"edges_v$LayoutVersion",
-          LayoutCatalog.sanitize(dir), fp)
-        LayoutCatalog.buildAndPublish(dest, tmp => buildInto(s, dir, tmp))
-        // table-name tag from the KEY (never a map size): deterministic,
-        // collision-free across corpora and catalog roots
-        val md = java.security.MessageDigest.getInstance("SHA-256")
-        val kh = md.digest((key + "|" + fp).getBytes("UTF-8"))
-          .take(6).map(b => f"${b & 0xff}%02x").mkString
-        (new java.io.File(dest, "pairs"), new java.io.File(dest, "pairs_s"),
-          new java.io.File(dest, "edges"), s"${fp}_$kh")
-      })
-    val pairsName = s"graft_pairs_$tag"
-    val pairsSName = s"graft_pairs_s_$tag"
-    val edgesName = s"graft_edges_$tag"
-    registerIfAbsent(s, pairsName, pairsLoc,
-      "c BIGINT, s BIGINT, n BIGINT", "c")
-    registerIfAbsent(s, pairsSName, pairsSLoc,
-      "c BIGINT, s BIGINT, n BIGINT", "s")
-    registerIfAbsent(s, edgesName, edgesLoc,
-      "src BIGINT, dst BIGINT, n BIGINT", "src")
-    (pairsName, pairsSName, edgesName)
-  }
+  private val PairsSchema = "c BIGINT, s BIGINT, n BIGINT"
 
   /** Distinct (c, s) trading pairs, bucketed by c — exchange-free
     * input for c-keyed aggregates and self-joins. (A projection of
     * the weighted table; pruning n keeps the bucketing.) */
   def pairs(s: SparkSession, dir: String): DataFrame =
-    s.table(ensure(s, dir)._1).select("c", "s")
+    weightedPairs(s, dir).select("c", "s")
 
   /** The SAME distinct (c, s) pairs bucketed by s — exchange-free
     * input for supplier-keyed aggregates and joins (v3). */
   def pairsBySupplier(s: SparkSession, dir: String): DataFrame =
-    s.table(ensure(s, dir)._2).select("c", "s")
+    table(s, dir, "pairs_s", PairsSchema, "s").select("c", "s")
 
   /** (c, s, n) trading pairs with order-line counts, bucketed by c. */
   def weightedPairs(s: SparkSession, dir: String): DataFrame =
-    s.table(ensure(s, dir)._1)
+    table(s, dir, "pairs", PairsSchema, "c")
 
   /** Symmetric (src, dst) edge list (suppliers −(s+1)), bucketed by
     * src — exchange-free edge side for every vertex-program join. */
   def edges(s: SparkSession, dir: String): DataFrame =
-    s.table(ensure(s, dir)._3).select("src", "dst")
+    weightedEdges(s, dir).select("src", "dst")
 
   /** Symmetric (src, dst, n) edge list with per-edge line counts,
     * bucketed by src — the weighted vertex-program layout (q228's
     * friction weights, q284's volume-weighted rank). */
   def weightedEdges(s: SparkSession, dir: String): DataFrame =
-    s.table(ensure(s, dir)._3)
+    table(s, dir, "edges", "src BIGINT, dst BIGINT, n BIGINT", "src")
 }

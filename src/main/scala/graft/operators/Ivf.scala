@@ -154,8 +154,8 @@ object Ivf {
     * the interpreted `array_min(transform(...))` it replaces —
     * `IvfSpec` pins kernel == HOF replay): at √n-ladder cell counts
     * the k·dim interpreted closure calls per row were the ingest hot
-    * loop (the q209 lesson at the assignment stage — IncrProbe
-    * measured the 25×-fixture k=256 full build at 252 s interpreted). */
+    * loop (the q209 lesson at the assignment stage — BENCHNOTES round 11
+    * records the 25×-fixture k=256 full build at 252 s interpreted). */
   def assignCosine(df: DataFrame, qvCol: String, centroids: DataFrame): DataFrame =
     df.crossJoin(broadcast(centroidArrayCos(centroids)))
       .withColumn("centroid_id",
@@ -209,15 +209,6 @@ object Ivf {
     cents
   }
 
-  /** (catalog root, corpus, config) → persisted parquet path.
-    * Memoizes the resolve only — the artifact is durable on disk
-    * (see [[graft.operators.LayoutCatalog]]). */
-  private val persistedPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Test hook: forget in-process resolves (disk untouched). */
-  def reset(): Unit = persistedPaths.clear()
-
   /** TRAIN-ONCE / PERSIST / READ-BACK — the production split of
     * [[trainCentroidsCosine]]: the centroid table is a LAYOUT
     * ARTIFACT like a bucketed edge corpus (EdgeLayout), trained once
@@ -236,30 +227,21 @@ object Ivf {
   def persistedCentroidsCosine(df: DataFrame, corpusKey: String,
       idCol: String, qvCol: String, n: Int, rounds: Int,
       variant: String = ""): DataFrame = {
-    import graft.operators.{LayoutCatalog => LC}
-    val spark = df.sparkSession
     // corpusKey is the corpus directory for every current caller;
     // fingerprint its embeddings table so a changed snapshot retrains
-    // (an absent table still yields a stable key). The fingerprint is
-    // part of the MEMO key too, so in-JVM corpus changes re-resolve
-    // instead of serving a stale path (the pqN-cache lesson).
-    // `variant` tags a SUBSET training corpus (`df` already filtered
-    // by the caller, e.g. the incremental-index archive) — it lands in
-    // the key and the directory base so subset-trained centroids never
-    // collide with the full-corpus table.
-    val fp = LC.fingerprint(corpusKey, Seq("embeddings"))
-    val key = s"${LC.root.getAbsolutePath}|$corpusKey|$n|$rounds|cos|$variant|$fp"
-    val path = persistedPaths.computeIfAbsent(key, _ => {
-      val vtag = if (variant.isEmpty) "" else s"_$variant"
-      val dest = LC.publishedDir("ivf_v1",
-        s"${LC.sanitize(corpusKey)}${vtag}_k${n}_r${rounds}_cos", fp)
-      LC.buildAndPublish(dest, tmp =>
-        trainCentroidsCosine(df, idCol, qvCol, n, rounds)
-          .write.mode("overwrite")
-          .parquet(new java.io.File(tmp, "centroids").getAbsolutePath))
-      new java.io.File(dest, "centroids").getAbsolutePath
-    })
-    spark.read.parquet(path)
+    // (an absent table still yields a stable key). `variant` tags a
+    // SUBSET training corpus (`df` already filtered by the caller,
+    // e.g. the incremental-index archive) — it lands in the directory
+    // base so subset-trained centroids never collide with the
+    // full-corpus table.
+    val vtag = if (variant.isEmpty) "" else s"_$variant"
+    val dest = LayoutCatalog.resolve("ivf_v1", corpusKey, Seq("embeddings"),
+      s"${vtag}_k${n}_r${rounds}_cos")(tmp =>
+      trainCentroidsCosine(df, idCol, qvCol, n, rounds)
+        .write.mode("overwrite")
+        .parquet(new java.io.File(tmp, "centroids").getAbsolutePath))
+    df.sparkSession.read.parquet(
+      new java.io.File(dest, "centroids").getAbsolutePath)
   }
 
   /** DuckDB CTE chain replaying [[trainCentroids]] exactly: expects a

@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.io.File
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -51,11 +53,14 @@ object IvfPq {
     * merge is proven against). */
   val LayoutVersion = 2
 
-  private val resolved = new java.util.concurrent.ConcurrentHashMap[
-    String, (java.io.File, java.io.File)]()
+  /** Resolve one `ivfpq` artifact of `dir` with base-name suffix
+    * `suffix`, fingerprinted over the embeddings table. */
+  private def resolve(dir: String, suffix: String)(build: File => Unit): File =
+    LayoutCatalog.resolve(s"ivfpq_v$LayoutVersion", dir, Seq("embeddings"),
+      suffix)(build)
 
-  /** Test hook: forget every in-process resolve (disk untouched). */
-  def reset(): Unit = { resolved.clear(); segResolved.clear() }
+  private def read(s: SparkSession, dest: File, leaf: String): DataFrame =
+    s.read.parquet(new File(dest, leaf).getAbsolutePath)
 
   /** r-way cell assignment + per-copy residuals of `base` against the
     * broadcast centroid table (columns vec_id, centroid_id, qn, rv). */
@@ -186,19 +191,10 @@ object IvfPq {
   def persistedIndex(base: DataFrame, dir: String, cents: DataFrame,
       nCentroids: Int, rounds: Int, replication: Int)
       : (DataFrame, DataFrame) = {
-    import graft.operators.{LayoutCatalog => LC}
     val spark = base.sparkSession
-    // fingerprint in the memo key: in-JVM corpus changes re-resolve
-    val fp = LC.fingerprint(dir, Seq("embeddings"))
-    val key = s"${LC.root.getAbsolutePath}|$dir|$nCentroids|$rounds|$replication|pq|$fp"
-    val (codesLoc, cbLoc) = resolved.computeIfAbsent(key, _ => {
-      val dest = LC.publishedDir(s"ivfpq_v$LayoutVersion",
-        s"${LC.sanitize(dir)}_k${nCentroids}_r${rounds}_x$replication", fp)
-      LC.buildAndPublish(dest, tmp => buildInto(base, base, cents, replication, tmp))
-      (new java.io.File(dest, "codes"), new java.io.File(dest, "codebook"))
-    })
-    (spark.read.parquet(codesLoc.getAbsolutePath),
-      spark.read.parquet(cbLoc.getAbsolutePath))
+    val dest = resolve(dir, s"_k${nCentroids}_r${rounds}_x$replication")(
+      buildInto(base, base, cents, replication, _))
+    (read(spark, dest, "codes"), read(spark, dest, "codebook"))
   }
 
   /** INCREMENTAL ingest for the vector index — the production append
@@ -260,55 +256,37 @@ object IvfPq {
       deltaPreds: Seq[Column], tag: String, nCentroids: Int, rounds: Int,
       replication: Int, maxSegments: Int = 4)
       : (DataFrame, DataFrame, DataFrame) = {
-    import graft.operators.{LayoutCatalog => LC}
     require(deltaPreds.nonEmpty, "need at least one delta predicate")
     val spark = base.sparkSession
     val baseArch = base.filter(archPred)
-    val ak = LC.predKey(Seq(archPred))
+    val ak = LayoutCatalog.predKey(Seq(archPred))
     val cents = Ivf.persistedCentroidsCosine(baseArch, dir, "vec_id", "qv",
       nCentroids, rounds, variant = s"${tag}_arch_$ak")
-    // fingerprint + predicate content keys in the MEMO key (not just
-    // the artifact names): in-JVM corpus changes and changed splits
-    // must re-resolve, never serve a stale location (the pqN lesson)
-    val fp = LC.fingerprint(dir, Seq("embeddings"))
-    val segKeys = deltaPreds.map(p => LC.predKey(Seq(p)))
-    val key = s"${LC.root.getAbsolutePath}|$dir|$nCentroids|$rounds|" +
-      s"$replication|pq|$tag|$ak|${segKeys.mkString(",")}|$maxSegments|$fp"
-    val (codesLocs, cbLoc) = segResolved.computeIfAbsent(key, _ => {
-      def dest(variant: String) = LC.publishedDir(s"ivfpq_v$LayoutVersion",
-        s"${LC.sanitize(dir)}_${tag}_${variant}_k${nCentroids}_r${rounds}_x$replication", fp)
-      val archDest = dest(s"arch_$ak")
-      LC.buildAndPublish(archDest, tmp =>
-        buildInto(baseArch, baseArch, cents, replication, tmp))
-      val cbFile = new java.io.File(archDest, "codebook")
-      def cbt = spark.read.parquet(cbFile.getAbsolutePath)
-      val segDests = deltaPreds.zipWithIndex.map { case (p, i) =>
-        val d = dest(s"seg${i}_${segKeys(i)}")
-        LC.buildAndPublish(d, tmp => writeCodes(codeAgainst(
+    // one resolve per split artifact: the predicate content keys live
+    // in the base names, so changed splits never reuse a location
+    def split(variant: String)(build: File => Unit): File =
+      resolve(dir,
+        s"_${tag}_${variant}_k${nCentroids}_r${rounds}_x$replication")(build)
+    val archDest = split(s"arch_$ak")(
+      buildInto(baseArch, baseArch, cents, replication, _))
+    val cbt = read(spark, archDest, "codebook")
+    val segDests = deltaPreds.zipWithIndex.map { case (p, i) =>
+      split(s"seg${i}_${LayoutCatalog.predKey(Seq(p))}")(tmp =>
+        writeCodes(codeAgainst(
           subspaced(residuals(base.filter(p), cents, replication)), cbt), tmp))
-        d
-      }
-      def codesOf(d: java.io.File) = new java.io.File(d, "codes")
-      val folded = deltaPreds.length - (deltaPreds.length % maxSegments)
+    }
+    val folded = deltaPreds.length - (deltaPreds.length % maxSegments)
+    val live =
       if (folded > 0) {
-        val fk = LC.predKey(archPred +: deltaPreds.take(folded))
-        val mergedDest = dest(s"compacted${folded}_$fk")
-        LC.buildAndPublish(mergedDest, tmp => writeTables(
+        val fk = LayoutCatalog.predKey(archPred +: deltaPreds.take(folded))
+        split(s"compacted${folded}_$fk")(tmp => writeTables(
           (archDest +: segDests.take(folded))
-            .map(d => spark.read.parquet(codesOf(d).getAbsolutePath))
+            .map(read(spark, _, "codes"))
             .reduce(_ unionByName _),
-          cbt, tmp))
-        (codesOf(mergedDest) +: segDests.drop(folded).map(codesOf), cbFile)
-      } else ((archDest +: segDests).map(codesOf), cbFile)
-    })
-    val codes = codesLocs
-      .map(f => spark.read.parquet(f.getAbsolutePath))
-      .reduce(_ unionByName _)
-    (codes, spark.read.parquet(cbLoc.getAbsolutePath), cents)
+          cbt, tmp)) +: segDests.drop(folded)
+      } else archDest +: segDests
+    (live.map(read(spark, _, "codes")).reduce(_ unionByName _), cbt, cents)
   }
-
-  private val segResolved = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[java.io.File], java.io.File)]()
 
   /** Publish ONE code-segment artifact from an EXPLICIT vector row
     * set — the streaming ingest's entry point
@@ -325,14 +303,11 @@ object IvfPq {
   def publishCodeSegmentRows(base: DataFrame, dir: String, cents: DataFrame,
       cbt: DataFrame, nCentroids: Int, rounds: Int, replication: Int,
       tag: String, i: Int, key: String): java.io.File = {
-    import graft.operators.{LayoutCatalog => LC}
-    val fp = LC.fingerprint(dir, Seq("embeddings"))
-    val dest = LC.publishedDir(s"ivfpq_v$LayoutVersion",
-      s"${LC.sanitize(dir)}_${tag}_seg${i}_${key}_k${nCentroids}_r${rounds}_x$replication",
-      fp)
-    LC.buildAndPublish(dest, tmp => writeCodes(codeAgainst(
-      subspaced(residuals(base, cents, replication)), cbt), tmp))
-    new java.io.File(dest, "codes")
+    val dest = resolve(dir,
+      s"_${tag}_seg${i}_${key}_k${nCentroids}_r${rounds}_x$replication")(tmp =>
+      writeCodes(codeAgainst(
+        subspaced(residuals(base, cents, replication)), cbt), tmp))
+    new File(dest, "codes")
   }
 
   /** Per-copy PQ reconstruction error of an index: for each

@@ -2,11 +2,21 @@ package graft.operators
 
 import java.io.File
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Files
 
-/** Durable, corpus-snapshot-keyed home for layout artifacts — the
-  * catalog behind the bucketed edge corpus ([[EdgeLayout]]) and the
-  * persisted IVF centroids ([[Ivf.persistedCentroidsCosine]]).
+import scala.util.Try
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+
+/** Durable, corpus-snapshot-keyed home for layout artifacts, and the
+  * ONE resolve path every artifact-backed operator goes through: the
+  * bucketed edge corpus ([[EdgeLayout]]), the near-dup pair graph
+  * ([[PairGraph]]), the lexical and positional indexes
+  * ([[TextIndex]]), the persisted IVF centroids
+  * ([[Ivf.persistedCentroidsCosine]]) and the IVF-PQ codes
+  * ([[IvfPq]]). An operator supplies only a kind, a corpus, the
+  * tables it fingerprints, a base-name suffix and a builder.
   *
   * The 100 TB contract these artifacts exist for is "pay the shuffle /
   * training once AT INGEST, then every job reuses it" — which only
@@ -25,6 +35,14 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *     (name|size|mtime per file, hashed). A corpus snapshot maps to
   *     exactly one artifact; a changed snapshot maps to a NEW
   *     directory, never a silent stale read.
+  *   - **Memo**: [[resolve]] memoizes per published directory path
+  *     (root, kind, base, fingerprint), so the fingerprint is always
+  *     part of the in-process key — a corpus that changes inside one
+  *     JVM re-resolves. Each key holds a once-cell: concurrent
+  *     resolves of one key wait for a single build, resolves of
+  *     different keys never block each other (no map lock is held
+  *     while a build runs, so builds may nest), and a failed build is
+  *     forgotten so the next resolve rebuilds. [[reset]] clears it.
   *   - **Commit protocol**: builders write into a process-tagged
   *     `.tmp_*` sibling and publish with an atomic directory rename.
   *     If the rename loses a race (another JVM published the same
@@ -39,6 +57,12 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *     `.tmp_*` orphans older than a day. Disk use is therefore
   *     bounded at one live artifact per (kind, corpus), fixing the
   *     round-9 unbounded tmpdir accumulation.
+  *   - **Bucketed tables**: [[writeBucketed]] writes one file per
+  *     bucket through a scratch `graft_build_<leaf>_<hash>` table;
+  *     [[bucketed]] re-attaches a published location to the session
+  *     catalog as `graft_<leaf>_<hash>`, where leaf is the location's
+  *     directory name (`pairs`, `edges`, `postings`, ...) and hash is
+  *     16 hex chars of its absolute path.
   *
   * Versioning: bump the artifact kind's version segment (e.g.
   * `edges_v2`) whenever the BUILD semantics change, so an upgraded
@@ -48,7 +72,7 @@ object LayoutCatalog {
 
   /** Per-process tag for unpublished temp builds (pid + JVM start
     * nanos): concurrent builders never share a temp path. */
-  val processTag: String =
+  private val processTag: String =
     java.lang.Long.toHexString(ProcessHandle.current().pid()) + "x" +
       java.lang.Long.toHexString(System.nanoTime() & 0xffffffffL)
 
@@ -80,14 +104,18 @@ object LayoutCatalog {
       else if (f.isFile) add(f)
       else sb.append(t).append("|absent\n")
     }
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    md.digest(sb.toString.getBytes(StandardCharsets.UTF_8))
-      .take(8).map(b => f"${b & 0xff}%02x").mkString
+    hex16(sb.toString)
   }
+
+  /** First 8 bytes of SHA-256(`s`), as 16 hex chars. */
+  private def hex16(s: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes(StandardCharsets.UTF_8))
+      .take(8).map(b => f"${b & 0xff}%02x").mkString
 
   /** Filesystem-safe corpus base name ("/root/testdata/sf0.001" →
     * "root_testdata_sf0.001"). */
-  def sanitize(s: String): String =
+  private def sanitize(s: String): String =
     s.replaceAll("[^A-Za-z0-9._-]+", "_").replaceAll("^_+", "")
 
   /** Deterministic 16-hex content key of a predicate list (the
@@ -101,13 +129,10 @@ object LayoutCatalog {
     * exactly the double-count bug this key exists to prevent, and
     * 32-bit birthday risk is non-trivial for long-lived many-split
     * deployments; name length is not a constraint here. */
-  def predKey(preds: Seq[org.apache.spark.sql.Column]): String = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    md.digest(preds
-        .map(c => org.apache.spark.sql.graftbridge.Bridge.expression(c).sql)
-        .mkString("|").getBytes(StandardCharsets.UTF_8))
-      .take(8).map(b => f"${b & 0xff}%02x").mkString
-  }
+  def predKey(preds: Seq[org.apache.spark.sql.Column]): String =
+    hex16(preds
+      .map(c => org.apache.spark.sql.graftbridge.Bridge.expression(c).sql)
+      .mkString("|"))
 
   /** The published artifact directory for (kind, corpus base,
     * fingerprint) — e.g. `<root>/edges_v2/sf0.001_ab12cd34ef567890`. */
@@ -120,6 +145,88 @@ object LayoutCatalog {
     * can only be a torn relic of a pre-v2 builder (or a crashed
     * non-atomic filesystem move) and must be rebuilt. */
   def isPublished(dir: File): Boolean = new File(dir, "_meta").isFile
+
+  /** Once-per-key holder: the first read of `result` runs the resolve
+    * under this cell's own lock, so concurrent readers of one key wait
+    * for it while other keys proceed. */
+  private final class Once(run: () => File) {
+    lazy val result: Try[File] = Try(run())
+  }
+
+  private val memo = new java.util.concurrent.ConcurrentHashMap[String, Once]()
+
+  /** Test hook: forget every in-process resolve (disk untouched) —
+    * what a new JVM sees. */
+  def reset(): Unit = memo.clear()
+
+  /** THE resolve path: the published directory of artifact `kind` for
+    * corpus `dir` (base name `sanitize(dir) + suffix`, fingerprinted
+    * over `tables`), building and publishing it with `build(tmpDir)`
+    * when this snapshot has none. Memoized per published path; a
+    * failed build is dropped from the memo and rethrown. */
+  def resolve(kind: String, dir: String, tables: Seq[String],
+      suffix: String)(build: File => Unit): File = {
+    val dest = publishedDir(kind, sanitize(dir) + suffix,
+      fingerprint(dir, tables))
+    val key = dest.getAbsolutePath
+    val once =
+      memo.computeIfAbsent(key, _ => new Once(() => buildAndPublish(dest, build)))
+    if (once.result.isFailure) memo.remove(key, once)
+    once.result.get
+  }
+
+  /** Bucket count of every bucketed artifact table. */
+  private val Buckets = 32
+
+  private def tableName(prefix: String, loc: File): String =
+    s"${prefix}_${loc.getName}_${hex16(loc.getAbsolutePath)}"
+
+  /** Bucketed write of `df` to `loc`, bucketed by `sortBy.head` and
+    * sorted by `sortBy`. Repartitioning on the bucket key with the
+    * bucket count first (same murmur3 hash as the bucketed write)
+    * yields one file per bucket, so a read-back claims
+    * HashPartitioning(key, 32) and keeps the per-bucket sort. Bucketed
+    * writes need saveAsTable: a scratch table is registered and
+    * dropped (an external table — the files stay). `readBack` gets
+    * that table's bucketed scan before the drop, for derived writes
+    * whose bytes depend on its partitioning. */
+  def writeBucketed(df: DataFrame, loc: File, sortBy: String*)(
+      readBack: DataFrame => Unit): Unit = {
+    val s = df.sparkSession
+    val scratch = tableName("graft_build", loc)
+    try {
+      df.repartition(Buckets, col(sortBy.head))
+        .write.mode("overwrite")
+        .bucketBy(Buckets, sortBy.head).sortBy(sortBy.head, sortBy.tail: _*)
+        .option("path", loc.getAbsolutePath)
+        .saveAsTable(scratch)
+      readBack(s.table(scratch))
+    } finally {
+      s.sql(s"DROP TABLE IF EXISTS $scratch"): Unit
+    }
+  }
+
+  /** Idempotent per-session registration of a published bucketed
+    * location as `graft_<leaf>_<hash>`; returns the table name.
+    * CREATE TABLE over the existing files re-attaches the bucket-spec
+    * metadata (Spark recovers each file's bucket id from its name), so
+    * a recreated session reads the same artifact exchange-free without
+    * rewriting a byte. IF NOT EXISTS makes the check-then-create
+    * race-free: two threads registering one location both succeed. */
+  def registerBucketed(s: SparkSession, loc: File, schema: String,
+      key: String): String = {
+    val name = tableName("graft", loc)
+    if (!s.catalog.tableExists(name))
+      s.sql(s"""CREATE TABLE IF NOT EXISTS $name ($schema) USING PARQUET
+               |CLUSTERED BY ($key) SORTED BY ($key) INTO $Buckets BUCKETS
+               |LOCATION '${loc.getAbsolutePath}'""".stripMargin)
+    name
+  }
+
+  /** [[registerBucketed]], read as a table. */
+  def bucketed(s: SparkSession, loc: File, schema: String,
+      key: String): DataFrame =
+    s.table(registerBucketed(s, loc, schema, key))
 
   /** Build-then-publish: calls `build(tmpDir)` to produce the artifact
     * under an unpublished temp sibling, then atomically renames it to

@@ -45,32 +45,18 @@ object PairGraph {
     * never misreads an old artifact as current. */
   val LayoutVersion = 1
 
-  /** Memoized resolve (fingerprint in the key: a corpus that changes
-    * within one JVM must re-resolve, not serve the stale artifact). */
-  private val resolved =
-    new java.util.concurrent.ConcurrentHashMap[String, File]()
-
-  /** Test hook: clears the in-process memo — what a new JVM sees. */
-  def reset(): Unit = resolved.clear()
-
   /** All document pairs with word-5-gram Jaccard ≥ 0.7:
     * `(doc_a, doc_b, sza, szb, n_common)` with doc_a < doc_b —
     * resolved from the published artifact, building it first if this
     * corpus snapshot has none. */
   def qualifyingPairs(s: SparkSession, dir: String): DataFrame = {
-    val fp = LayoutCatalog.fingerprint(dir, Seq("documents"))
-    val key = LayoutCatalog.root.getAbsolutePath + "|" + dir + "|" + fp
-    val loc = resolved.computeIfAbsent(key, _ => {
-      val dest = LayoutCatalog.publishedDir(s"pairs07_v$LayoutVersion",
-        LayoutCatalog.sanitize(dir), fp)
-      LayoutCatalog.buildAndPublish(dest, tmp =>
-        derive(s, dir)
-          .repartition(32, col("doc_a"))
-          .write.mode("overwrite")
-          .parquet(new File(tmp, "pairs").getAbsolutePath))
-      new File(dest, "pairs")
-    })
-    s.read.parquet(loc.getAbsolutePath)
+    val dest = LayoutCatalog.resolve(s"pairs07_v$LayoutVersion", dir,
+      Seq("documents"), "")(tmp =>
+      derive(s, dir)
+        .repartition(32, col("doc_a"))
+        .write.mode("overwrite")
+        .parquet(new File(tmp, "pairs").getAbsolutePath))
+    s.read.parquet(new File(dest, "pairs").getAbsolutePath)
   }
 
   /** CAPPED-OUTPUT exact dedup: canonical exemplar per document,

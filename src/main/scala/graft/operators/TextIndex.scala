@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.io.File
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -80,16 +82,6 @@ object TextIndex {
     * where doclen is one row per document). */
   val LayoutVersion = 3
 
-  /** (catalog root, sf dir, variant) → (postings location, doclen
-    * location, name tag). Memoizes the resolve only — the artifact is
-    * on disk and outlives the process. */
-  private val resolved = new java.util.concurrent.ConcurrentHashMap[
-    String, (java.io.File, java.io.File, String)]()
-
-  /** Test hook: forget every in-process resolve (disk untouched), so
-    * a spec can prove the durable read-back path. */
-  def reset(): Unit = { resolved.clear(); resolvedPos.clear() }
-
   /** The shared derivation: adjacent-token bigrams of every document,
     * exactly as the inline consumers built them (q76/q90's
     * expression, including the size ≥ 2 guard against Spark's
@@ -137,98 +129,69 @@ object TextIndex {
     * doc_id, so the output bytes depend only on the row SET, not on
     * which path (from-scratch, segment, or compaction merge) produced
     * it. */
-  private def writeInto(s: SparkSession, postings: DataFrame,
-      tmp: java.io.File): Unit = {
-    val bt = s"${LayoutCatalog.processTag}_${tmp.getName.hashCode.toHexString}"
-    val postingsScratch = s"graft_build_postings_$bt"
-    try {
-      // one file per bucket: repartition on the bucket key with the
-      // bucket count so the read-back claims HashPartitioning(g, 32).
-      // coalesce(tf, 0) normalizes NULLABILITY: a fresh aggregate's
-      // count() is non-nullable while a published table reads back
-      // nullable — left as-is the two build paths would write
-      // different parquet schemas/encodings (required vs optional
-      // repetition) and break byte-identity (a .to(schema) widening
-      // is optimized away; coalesce with a literal survives and pins
-      // tf non-nullable on BOTH paths)
-      postings.select(col("doc_id"), col("g"),
+  private def writeInto(postings: DataFrame, tmp: File): Unit =
+    // coalesce(tf, 0) normalizes NULLABILITY: a fresh aggregate's
+    // count() is non-nullable while a published table reads back
+    // nullable — left as-is the two build paths would write
+    // different parquet schemas/encodings (required vs optional
+    // repetition) and break byte-identity (a .to(schema) widening
+    // is optimized away; coalesce with a literal survives and pins
+    // tf non-nullable on BOTH paths)
+    LayoutCatalog.writeBucketed(
+        postings.select(col("doc_id"), col("g"),
           coalesce(col("tf"), lit(0L)).as("tf"),
-          coalesce(col("dl"), lit(0L)).as("dl"))
-        .repartition(32, col("g"))
-        .write.mode("overwrite")
-        .bucketBy(32, "g").sortBy("g", "doc_id")
-        .option("path", new java.io.File(tmp, "postings").getAbsolutePath)
-        .saveAsTable(postingsScratch)
+          coalesce(col("dl"), lit(0L)).as("dl")),
+        new File(tmp, "postings"), "g", "doc_id") { written =>
       // doc lengths from the postings read-back (a bucketed scan, not
       // a re-tokenize); doc-count-sized, one totally-ordered parquet
       // file — the corpus-stats (N, T) aggregate input
-      s.table(postingsScratch)
-        .groupBy("doc_id").agg(sum(col("tf")).as("dl"))
+      written.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
         .repartition(1).sortWithinPartitions("doc_id")
         .write.mode("overwrite")
-        .parquet(new java.io.File(tmp, "doclen").getAbsolutePath)
-    } finally {
-      s.sql(s"DROP TABLE IF EXISTS $postingsScratch")
+        .parquet(new File(tmp, "doclen").getAbsolutePath)
     }
-  }
 
-  /** Idempotent per-session registration of the published bucketed
-    * postings (same contract as [[EdgeLayout]]): CREATE TABLE over
-    * the existing files re-attaches the bucket-spec metadata.
-    * IF NOT EXISTS makes the check-then-create race-free. */
-  private def registerIfAbsent(s: SparkSession, name: String,
-      loc: java.io.File): Unit =
-    if (!s.catalog.tableExists(name))
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $name (doc_id BIGINT, g STRING, tf BIGINT, dl BIGINT)
-               |USING PARQUET
-               |CLUSTERED BY (g) SORTED BY (g) INTO 32 BUCKETS
-               |LOCATION '${loc.getAbsolutePath}'""".stripMargin)
+  private val PostingsSchema = "doc_id BIGINT, g STRING, tf BIGINT, dl BIGINT"
+
+  /** Registered bucketed postings table of a published artifact. */
+  private def postingsTable(s: SparkSession, dest: File): String =
+    LayoutCatalog.registerBucketed(s, new File(dest, "postings"),
+      PostingsSchema, "g")
+
+  private def postingsOf(s: SparkSession, dest: File): DataFrame =
+    s.table(postingsTable(s, dest))
+
+  private def doclensOf(s: SparkSession, dest: File): DataFrame =
+    s.read.parquet(new File(dest, "doclen").getAbsolutePath)
 
   /** Resolve-or-build the artifact for (dir, variant): `variant` is
     * "" for the full-corpus index and a caller-chosen suffix for
     * subset/merged artifacts (it lands in the directory base name, so
-    * retention never crosses variants). */
-  private def ensure(s: SparkSession, dir: String, variant: String,
-      build: java.io.File => Unit): (String, java.io.File) = {
-    // the corpus fingerprint is part of the MEMO key, not just the
-    // artifact name: a corpus path whose data changes within one JVM
-    // (scratch-root probe harnesses) must re-resolve, not serve the
-    // stale pre-change artifact (the pqN-cache lesson)
-    val fp = LayoutCatalog.fingerprint(dir, Seq("documents"))
-    val key = LayoutCatalog.root.getAbsolutePath + "|" + dir + "|" +
-      variant + "|" + fp
-    val (postingsLoc, doclenLoc, tag) = resolved.computeIfAbsent(key, _ => {
-      val base = LayoutCatalog.sanitize(dir) +
-        (if (variant.isEmpty) "" else s"_$variant")
-      val dest = LayoutCatalog.publishedDir(s"lexical_v$LayoutVersion",
-        base, fp)
-      LayoutCatalog.buildAndPublish(dest, build)
-      val md = java.security.MessageDigest.getInstance("SHA-256")
-      val kh = md.digest((key + "|" + fp).getBytes("UTF-8"))
-        .take(6).map(b => f"${b & 0xff}%02x").mkString
-      (new java.io.File(dest, "postings"), new java.io.File(dest, "doclen"),
-        s"${fp}_$kh")
-    })
-    val name = s"graft_postings_$tag"
-    registerIfAbsent(s, name, postingsLoc)
-    (name, doclenLoc)
-  }
+    * retention never crosses variants). Returns the published dir. */
+  private def ensure(dir: String, variant: String)(build: File => Unit): File =
+    LayoutCatalog.resolve(s"lexical_v$LayoutVersion", dir, Seq("documents"),
+      if (variant.isEmpty) "" else s"_$variant")(build)
 
-  private def ensureFull(s: SparkSession, dir: String): (String, java.io.File) =
-    ensure(s, dir, "", tmp =>
-      writeInto(s, withDl(tfOf(spread(s, dir,
-        graft.Tables.load(s, dir, "documents")))), tmp))
+  /** The artifact of `docs` under `variant`, built from scratch
+    * (tokenize the input-spread documents) when absent. `docs` is
+    * by-name: a warm resolve never touches the corpus. */
+  private def ensureDocs(s: SparkSession, dir: String, variant: String,
+      docs: => DataFrame): File =
+    ensure(dir, variant)(writeInto(withDl(tfOf(spread(s, dir, docs))), _))
+
+  private def ensureFull(s: SparkSession, dir: String): File =
+    ensureDocs(s, dir, "", graft.Tables.load(s, dir, "documents"))
 
   /** (doc_id, g, tf) bigram postings, bucketed by g — exchange-free
     * input for g-keyed aggregates, idf joins, and posting-list
     * self-joins. */
   def bigramPostings(s: SparkSession, dir: String): DataFrame =
-    s.table(ensureFull(s, dir)._1)
+    postingsOf(s, ensureFull(s, dir))
 
   /** (doc_id, dl) total bigram count per document — doc-count-sized;
     * consumers broadcast it. */
   def docLengths(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(ensureFull(s, dir)._2.getAbsolutePath)
+    doclensOf(s, ensureFull(s, dir))
 
   /** INCREMENTAL ingest, LSM-style: postings + doclens for the full
     * corpus at `dir`, built WITHOUT re-tokenizing the archive AND
@@ -290,43 +253,29 @@ object TextIndex {
       archPred: Column, deltaPreds: Seq[Column], tag: String,
       maxSegments: Int = 4): (DataFrame, DataFrame) = {
     require(deltaPreds.nonEmpty, "need at least one delta predicate")
-    val docs = graft.Tables.load(s, dir, "documents")
     val ak = LayoutCatalog.predKey(Seq(archPred))
-    val (archName, archDl) = ensure(s, dir, s"${tag}_arch_$ak", tmp =>
-      writeInto(s, withDl(tfOf(spread(s, dir, docs.filter(archPred)))), tmp))
+    val arch = ensureDocs(s, dir, s"${tag}_arch_$ak",
+      graft.Tables.load(s, dir, "documents").filter(archPred))
     val segs = deltaPreds.zipWithIndex.map { case (p, i) =>
       ensureSegment(s, dir, p, tag, i)
     }
     val folded = deltaPreds.length - (deltaPreds.length % maxSegments)
-    if (folded > 0) {
-      val fk = LayoutCatalog.predKey(archPred +: deltaPreds.take(folded))
-      val (mName, mDl) = ensure(s, dir, s"${tag}_compacted${folded}_$fk",
-        tmp => writeInto(s,
-          (archName +: segs.take(folded).map(_._1)).map(s.table)
+    val live =
+      if (folded > 0) {
+        val fk = LayoutCatalog.predKey(archPred +: deltaPreds.take(folded))
+        ensure(dir, s"${tag}_compacted${folded}_$fk")(writeInto(
+          (arch +: segs.take(folded)).map(postingsOf(s, _))
             .reduce(_ unionByName _),
-          tmp))
-      val live = segs.drop(folded)
-      val postings = (s.table(mName) +: live.map(x => s.table(x._1)))
-        .reduce(_ unionByName _)
-      val doclens = (mDl +: live.map(_._2))
-        .map(f => s.read.parquet(f.getAbsolutePath))
-        .reduce(_ unionByName _)
-      (postings, doclens)
-    } else {
-      val postings = (archName +: segs.map(_._1)).map(s.table)
-        .reduce(_ unionByName _)
-      val doclens = (archDl +: segs.map(_._2))
-        .map(f => s.read.parquet(f.getAbsolutePath))
-        .reduce(_ unionByName _)
-      (postings, doclens)
-    }
+          _)) +: segs.drop(folded)
+      } else arch +: segs
+    (live.map(postingsOf(s, _)).reduce(_ unionByName _),
+      live.map(doclensOf(s, _)).reduce(_ unionByName _))
   }
 
   private def ensureSegment(s: SparkSession, dir: String, pred: Column,
-      tag: String, i: Int): (String, java.io.File) =
-    ensure(s, dir, s"${tag}_seg${i}_${LayoutCatalog.predKey(Seq(pred))}",
-      tmp => writeInto(s, withDl(tfOf(spread(s, dir,
-        graft.Tables.load(s, dir, "documents").filter(pred)))), tmp))
+      tag: String, i: Int): File =
+    ensureDocs(s, dir, s"${tag}_seg${i}_${LayoutCatalog.predKey(Seq(pred))}",
+      graft.Tables.load(s, dir, "documents").filter(pred))
 
   /** Publish ONE LSM segment artifact from an EXPLICIT row set — the
     * streaming ingest's entry point ([[graft.streaming.StreamOps
@@ -340,9 +289,11 @@ object TextIndex {
     * published artifact — the publish is idempotent). Returns the
     * registered bucketed postings table name and the doclen file. */
   def publishSegmentRows(s: SparkSession, dir: String, docs: DataFrame,
-      tag: String, i: Int, key: String): (String, java.io.File) =
-    ensure(s, dir, s"${tag}_seg${i}_$key",
-      tmp => writeInto(s, withDl(tfOf(docs)), tmp))
+      tag: String, i: Int, key: String): (String, File) = {
+    val dest = ensure(dir, s"${tag}_seg${i}_$key")(
+      writeInto(withDl(tfOf(docs)), _))
+    (postingsTable(s, dest), new File(dest, "doclen"))
+  }
 
   /** The i-th delta segment of a segmented split, as its own bucketed
     * postings table — index-monitoring consumers (q290's delta
@@ -351,7 +302,7 @@ object TextIndex {
     * segments ⇒ df_merged − df_archive = df_segment). */
   def deltaSegment(s: SparkSession, dir: String, deltaPred: Column,
       tag: String, i: Int = 0): DataFrame =
-    s.table(ensureSegment(s, dir, deltaPred, tag, i)._1)
+    postingsOf(s, ensureSegment(s, dir, deltaPred, tag, i))
 
   /** The ARCHIVE half of an incremental split (documents NOT matching
     * `deltaPred`), as its own durable artifact: (postings, doclens).
@@ -361,14 +312,13 @@ object TextIndex {
     * ([[graft.streaming.StreamOps.incrementalBm25]]). */
   def archiveIndex(s: SparkSession, dir: String,
       deltaPred: Column, tag: String): (DataFrame, DataFrame) = {
-    val docs = graft.Tables.load(s, dir, "documents")
     // content-keyed identically to segmentedPostings' single-pred
     // archive (archPred = ¬deltaPred), so the two paths share the
     // artifact
     val ak = LayoutCatalog.predKey(Seq(!deltaPred))
-    val (archName, archDl) = ensure(s, dir, s"${tag}_arch_$ak", tmp =>
-      writeInto(s, withDl(tfOf(spread(s, dir, docs.filter(!deltaPred)))), tmp))
-    (s.table(archName), s.read.parquet(archDl.getAbsolutePath))
+    val arch = ensureDocs(s, dir, s"${tag}_arch_$ak",
+      graft.Tables.load(s, dir, "documents").filter(!deltaPred))
+    (postingsOf(s, arch), doclensOf(s, arch))
   }
 
   // -----------------------------------------------------------------
@@ -387,9 +337,6 @@ object TextIndex {
   /** Bump when the positional BUILD semantics change. */
   val PositionalLayoutVersion = 1
 
-  private val resolvedPos = new java.util.concurrent.ConcurrentHashMap[
-    String, (java.io.File, String)]()
-
   /** The shared positional derivation — exactly q303/q304's inline
     * form: split on single space, 1-based positions, every doc (no
     * length guard: a 1-token doc contributes its single position). */
@@ -398,54 +345,22 @@ object TextIndex {
       .select(col("doc_id"), col("col").as("tok"),
         (col("pos") + 1).cast("long").as("pos"))
 
-  /** Deterministic bucketed write of (doc_id, tok, pos): one file per
-    * bucket, rows totally ordered by (tok, doc_id, pos) — bytes a
-    * pure function of the row set, like the bigram writeInto. */
-  private def writeIntoPositional(s: SparkSession, pos: DataFrame,
-      tmp: java.io.File): Unit = {
-    val bt = s"${LayoutCatalog.processTag}_${tmp.getName.hashCode.toHexString}p"
-    val scratch = s"graft_build_pospostings_$bt"
-    try {
-      pos.select(col("doc_id"), col("tok"),
-          coalesce(col("pos"), lit(0L)).as("pos"))
-        .repartition(32, col("tok"))
-        .write.mode("overwrite")
-        .bucketBy(32, "tok").sortBy("tok", "doc_id", "pos")
-        .option("path", new java.io.File(tmp, "pospostings").getAbsolutePath)
-        .saveAsTable(scratch)
-    } finally {
-      s.sql(s"DROP TABLE IF EXISTS $scratch")
-    }
-  }
-
-  private def registerIfAbsentPositional(s: SparkSession, name: String,
-      loc: java.io.File): Unit =
-    if (!s.catalog.tableExists(name))
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $name (doc_id BIGINT, tok STRING, pos BIGINT)
-               |USING PARQUET
-               |CLUSTERED BY (tok) SORTED BY (tok) INTO 32 BUCKETS
-               |LOCATION '${loc.getAbsolutePath}'""".stripMargin)
-
-  /** Resolve-or-build one positional artifact for (dir, variant);
-    * returns the registered bucketed table name. */
+  /** Resolve-or-build one positional artifact of `docs` for
+    * (dir, variant): a deterministic bucketed write of
+    * (doc_id, tok, pos), one file per bucket, rows totally ordered by
+    * (tok, doc_id, pos) — bytes a pure function of the row set, like
+    * the bigram writeInto. `docs` is by-name, as in [[ensureDocs]].
+    * Returns the registered bucketed table name. */
   private def ensurePositional(s: SparkSession, dir: String,
-      variant: String, build: java.io.File => Unit): String = {
-    val fp = LayoutCatalog.fingerprint(dir, Seq("documents"))
-    val key = LayoutCatalog.root.getAbsolutePath + "|" + dir + "|" +
-      variant + "|" + fp
-    val (loc, tag) = resolvedPos.computeIfAbsent(key, _ => {
-      val base = LayoutCatalog.sanitize(dir) + s"_$variant"
-      val dest = LayoutCatalog.publishedDir(
-        s"positional_v$PositionalLayoutVersion", base, fp)
-      LayoutCatalog.buildAndPublish(dest, build)
-      val md = java.security.MessageDigest.getInstance("SHA-256")
-      val kh = md.digest((key + "|" + fp).getBytes("UTF-8"))
-        .take(6).map(b => f"${b & 0xff}%02x").mkString
-      (new java.io.File(dest, "pospostings"), s"${fp}_$kh")
-    })
-    val name = s"graft_pospostings_$tag"
-    registerIfAbsentPositional(s, name, loc)
-    name
+      variant: String, docs: => DataFrame): String = {
+    val dest = LayoutCatalog.resolve(s"positional_v$PositionalLayoutVersion",
+      dir, Seq("documents"), s"_$variant")(tmp =>
+      LayoutCatalog.writeBucketed(
+        positionalOf(docs).select(col("doc_id"), col("tok"),
+          coalesce(col("pos"), lit(0L)).as("pos")),
+        new File(tmp, "pospostings"), "tok", "doc_id", "pos")(_ => ()))
+    LayoutCatalog.registerBucketed(s, new File(dest, "pospostings"),
+      "doc_id BIGINT, tok STRING, pos BIGINT", "tok")
   }
 
   /** Publish ONE positional LSM segment from an EXPLICIT row set —
@@ -456,17 +371,15 @@ object TextIndex {
     * table name. */
   def publishPositionalSegmentRows(s: SparkSession, dir: String,
       docs: DataFrame, tag: String, i: Int, key: String): String =
-    ensurePositional(s, dir, s"${tag}_pseg${i}_$key",
-      tmp => writeIntoPositional(s, positionalOf(docs), tmp))
+    ensurePositional(s, dir, s"${tag}_pseg${i}_$key", docs)
 
   /** The ARCHIVE half of a positional split: documents matching
     * `archPred`, as a durable bucketed artifact. */
   def positionalArchive(s: SparkSession, dir: String,
       archPred: Column, tag: String): DataFrame = {
     val ak = LayoutCatalog.predKey(Seq(archPred))
-    s.table(ensurePositional(s, dir, s"${tag}_parch_$ak", tmp =>
-      writeIntoPositional(s, positionalOf(spread(s, dir,
-        graft.Tables.load(s, dir, "documents").filter(archPred))), tmp)))
+    s.table(ensurePositional(s, dir, s"${tag}_parch_$ak", spread(s, dir,
+      graft.Tables.load(s, dir, "documents").filter(archPred))))
   }
 
   /** Multi-append positional LSM view: archive ∪ one segment per
@@ -479,8 +392,7 @@ object TextIndex {
     val segs = deltaPreds.zipWithIndex.map { case (p, i) =>
       s.table(ensurePositional(s, dir,
         s"${tag}_pseg${i}_${LayoutCatalog.predKey(Seq(p))}",
-        tmp => writeIntoPositional(s, positionalOf(spread(s, dir,
-          graft.Tables.load(s, dir, "documents").filter(p))), tmp)))
+        spread(s, dir, graft.Tables.load(s, dir, "documents").filter(p))))
     }
     (positionalArchive(s, dir, archPred, tag) +: segs)
       .reduce(_ unionByName _)

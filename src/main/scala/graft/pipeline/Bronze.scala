@@ -68,7 +68,7 @@ object Bronze {
   }
 
   /** Fetch-all-pages walk (/root/reference/app/tasks/extract.py:29-77):
-    * page 1 first; with a Link rel="last" → deterministic 2..last range
+    * page 1 first; with a Link rel="last" → deterministic 2..min(last, cap) range
     * stopping only on an empty page; without → capped loop stopping on an
     * empty page or the first short page. Returns (pagesWritten, records).
     */
@@ -88,29 +88,19 @@ object Bronze {
     var pages = 1
     var records = first.records
 
-    Pagination.parseLastPage(first.linkHeader) match {
-      case Some(last) if last >= 2 =>
-        var p = 2
-        var stop = false
-        while (p <= math.min(last, settings.maxPagesCap) && !stop) {
-          val pg = source.fetch(p, settings.perPage)
-          if (pg.records == 0) stop = true
-          else {
-            write(p, pg.body); pages += 1; records += pg.records; p += 1
-          }
-        }
-      case _ =>
-        var p = 2
-        var stop = false
-        while (p <= settings.maxPagesCap && !stop) {
-          val pg = source.fetch(p, settings.perPage)
-          if (pg.records == 0) stop = true
-          else {
-            write(p, pg.body); pages += 1; records += pg.records
-            if (pg.records < settings.perPage) stop = true
-            p += 1
-          }
-        }
+    // a rel="last" page ≥ 2 bounds the walk (still capped); without it
+    // the walk runs to the cap and a short page is the last page
+    val last = Pagination.parseLastPage(first.linkHeader).filter(_ >= 2)
+    val bound = last.fold(settings.maxPagesCap)(math.min(_, settings.maxPagesCap))
+    var p = 2
+    var stop = false
+    while (p <= bound && !stop) {
+      val pg = source.fetch(p, settings.perPage)
+      if (pg.records == 0) stop = true
+      else {
+        write(p, pg.body); pages += 1; records += pg.records; p += 1
+        stop = last.isEmpty && pg.records < settings.perPage
+      }
     }
     (pages, records)
   }

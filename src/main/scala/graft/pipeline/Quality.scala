@@ -162,12 +162,6 @@ object Quality {
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
       java.nio.charset.StandardCharsets.UTF_8), env)
 
-  def silverChecks(silver: DataFrame): Seq[CheckResult] =
-    evaluate(silver, silverSuite)
-
-  def goldChecks(gold: DataFrame): Seq[CheckResult] =
-    evaluate(gold, goldSuite)
-
   /** Runs both layer suites; `settings.qualityChecksPath` (env
     * QUALITY_CHECKS_PATH) switches from the in-code literals to the
     * file-driven suites — checks as configuration, the reference's

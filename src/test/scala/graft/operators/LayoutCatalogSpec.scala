@@ -22,22 +22,14 @@ class LayoutCatalogSpec extends SparkSpec {
   override def beforeAll(): Unit = {
     super.beforeAll()
     sys.props("graft.layout.root") = new File(scratch, "root").getAbsolutePath
-    EdgeLayout.reset()
-    Ivf.reset()
-    TextIndex.reset()
-    IvfPq.reset()
-    PairGraph.reset()
+    LayoutCatalog.reset()
   }
 
   override def afterAll(): Unit = {
     // restore the default root for later suites in the shared JVM and
     // drop any memoized resolves that point into the scratch root
     sys.props.remove("graft.layout.root")
-    EdgeLayout.reset()
-    Ivf.reset()
-    TextIndex.reset()
-    IvfPq.reset()
-    PairGraph.reset()
+    LayoutCatalog.reset()
     LayoutCatalog.deleteRecursively(scratch)
     super.afterAll()
   }
@@ -70,7 +62,7 @@ class LayoutCatalogSpec extends SparkSpec {
     assert(cold.nonEmpty)
 
     // simulate a brand-new JVM: no memo, no catalog entries — only disk
-    EdgeLayout.reset()
+    LayoutCatalog.reset()
     edgeTableNames().foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
     val warm = EdgeLayout.weightedPairs(spark, dir)
       .orderBy("c", "s").collect().map(_.toSeq).toSeq
@@ -81,7 +73,7 @@ class LayoutCatalogSpec extends SparkSpec {
 
   test("edge layout: warm read-back keeps the bucketed (exchange-free) scan") {
     val dir = corpus.getAbsolutePath
-    EdgeLayout.reset()
+    LayoutCatalog.reset()
     edgeTableNames().foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
     // AQE wraps the plan in an opaque AdaptiveSparkPlanExec; disable it
     // so the scan/exchange assertions can see the nodes
@@ -133,7 +125,7 @@ class LayoutCatalogSpec extends SparkSpec {
     assert(dl == dlInline)
 
     // simulate a brand-new JVM: no memo, no catalog entries — only disk
-    TextIndex.reset()
+    LayoutCatalog.reset()
     spark.catalog.listTables().collect().map(_.name)
       .filter(_.startsWith("graft_postings_"))
       .foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
@@ -146,7 +138,7 @@ class LayoutCatalogSpec extends SparkSpec {
 
   test("lexical index: g-keyed aggregate and self-join run exchange-free") {
     val dir = corpus.getAbsolutePath
-    TextIndex.reset()
+    LayoutCatalog.reset()
     spark.catalog.listTables().collect().map(_.name)
       .filter(_.startsWith("graft_postings_"))
       .foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
@@ -191,7 +183,7 @@ class LayoutCatalogSpec extends SparkSpec {
 
   test("lexical index: LSM append publishes only the delta segment; the view equals a rebuild row-for-row") {
     val dir = corpus.getAbsolutePath
-    TextIndex.reset()
+    LayoutCatalog.reset()
     spark.catalog.listTables().collect().map(_.name)
       .filter(_.startsWith("graft_postings_"))
       .foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
@@ -236,7 +228,7 @@ class LayoutCatalogSpec extends SparkSpec {
 
   test("lexical index: compaction folds archive+segments into an artifact byte-identical to a rebuild") {
     val dir = corpus.getAbsolutePath
-    TextIndex.reset()
+    LayoutCatalog.reset()
     spark.catalog.listTables().collect().map(_.name)
       .filter(_.startsWith("graft_postings_"))
       .foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
@@ -271,7 +263,7 @@ class LayoutCatalogSpec extends SparkSpec {
 
   test("lexical index: a grown predicate list never double-counts, and appends past the fold boundary reuse the compacted artifact") {
     val dir = corpus.getAbsolutePath
-    TextIndex.reset()
+    LayoutCatalog.reset()
     spark.catalog.listTables().collect().map(_.name)
       .filter(_.startsWith("graft_postings_"))
       .foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
@@ -321,7 +313,7 @@ class LayoutCatalogSpec extends SparkSpec {
     assert(LayoutCatalog.buildsPublished.get() == before + 1)
     assert(coldCodes.nonEmpty && coldCb.length === 128)
 
-    IvfPq.reset()
+    LayoutCatalog.reset()
     val (codes2, cb2) = IvfPq.persistedIndex(base, dir, cents, 8, 2, 3)
     assert(LayoutCatalog.buildsPublished.get() == before + 1,
       "warm resolve must NOT rebuild — the index is durable")
@@ -357,8 +349,7 @@ class LayoutCatalogSpec extends SparkSpec {
 
   test("ivf-pq incremental: delta codes publish as their own segment; view equals frozen-codebook rebuild") {
     val dir = corpus.getAbsolutePath
-    IvfPq.reset()
-    Ivf.reset()
+    LayoutCatalog.reset()
     val base = pqBase(dir)
     val deltaPred = col("vec_id") % 10 === 0
     val (codes, cbt, cents) = IvfPq.incrementalIndex(
@@ -402,8 +393,7 @@ class LayoutCatalogSpec extends SparkSpec {
 
   test("ivf-pq compaction: folded segments byte-identical to the frozen-codebook rebuild") {
     val dir = corpus.getAbsolutePath
-    IvfPq.reset()
-    Ivf.reset()
+    LayoutCatalog.reset()
     val base = pqBase(dir)
     // four disjoint daily deltas reach the maxSegments=4 fold
     // boundary → the fold covers the full corpus
@@ -431,8 +421,7 @@ class LayoutCatalogSpec extends SparkSpec {
 
   test("ivf-pq multi-append: a grown predicate list never double-codes and reuses the fold") {
     val dir = corpus.getAbsolutePath
-    IvfPq.reset()
-    Ivf.reset()
+    LayoutCatalog.reset()
     val base = pqBase(dir)
     val archPred = col("vec_id") % 10 >= 6
     def day(i: Int) = col("vec_id") % 10 === i
@@ -482,11 +471,33 @@ class LayoutCatalogSpec extends SparkSpec {
     // a new snapshot: same bytes, new mtime — the fingerprint moves
     val li = new File(corpus, "lineitem.parquet")
     assert(li.setLastModified(li.lastModified() + 60000))
-    EdgeLayout.reset()
+    LayoutCatalog.reset()
     val before = LayoutCatalog.buildsPublished.get()
     EdgeLayout.weightedPairs(spark, dir).count()
     assert(LayoutCatalog.buildsPublished.get() == before + 1,
       "changed fingerprint must rebuild")
+    val newDirs = kind.listFiles().map(_.getName)
+      .filterNot(_.startsWith(".tmp_")).toSet
+    assert(newDirs.size == 1 && newDirs.intersect(oldDirs).isEmpty,
+      s"retention must keep only the live artifact: old=$oldDirs new=$newDirs")
+  }
+
+  test("edge layout: a changed corpus snapshot rebuilds without clearing the memo") {
+    // the same roll as above, but the memo is NOT cleared: a resolve
+    // memoized in this JVM must notice the new fingerprint instead of
+    // serving the pre-change artifact
+    val dir = corpus.getAbsolutePath
+    EdgeLayout.weightedPairs(spark, dir).queryExecution // resolved + memoized
+    val kind = new File(LayoutCatalog.root, s"edges_v${EdgeLayout.LayoutVersion}")
+    val oldDirs = kind.listFiles().map(_.getName)
+      .filterNot(_.startsWith(".tmp_")).toSet
+
+    val li = new File(corpus, "lineitem.parquet")
+    assert(li.setLastModified(li.lastModified() + 60000))
+    val before = LayoutCatalog.buildsPublished.get()
+    EdgeLayout.weightedPairs(spark, dir).count()
+    assert(LayoutCatalog.buildsPublished.get() == before + 1,
+      "changed fingerprint must rebuild even with the resolve memoized")
     val newDirs = kind.listFiles().map(_.getName)
       .filterNot(_.startsWith(".tmp_")).toSet
     assert(newDirs.size == 1 && newDirs.intersect(oldDirs).isEmpty,
@@ -504,7 +515,7 @@ class LayoutCatalogSpec extends SparkSpec {
       .orderBy("centroid_id").collect().map(_.toSeq).toSeq
     assert(LayoutCatalog.buildsPublished.get() == before + 1)
 
-    Ivf.reset()
+    LayoutCatalog.reset()
     val warm = Ivf.persistedCentroidsCosine(base, dir, "vec_id", "qv", 4, 1)
       .orderBy("centroid_id").collect().map(_.toSeq).toSeq
     assert(LayoutCatalog.buildsPublished.get() == before + 1,
@@ -520,7 +531,7 @@ class LayoutCatalogSpec extends SparkSpec {
     // old generation — archive, every segment, and the fold artifact
     val dir = corpus.getAbsolutePath
     def resetSession(): Unit = {
-      TextIndex.reset()
+      LayoutCatalog.reset()
       spark.catalog.listTables().collect().map(_.name)
         .filter(_.startsWith("graft_postings_"))
         .foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
@@ -598,14 +609,14 @@ class LayoutCatalogSpec extends SparkSpec {
     // a rolled fingerprint. Runs LAST among the corpus-layout tests
     // because it rolls documents.parquet's mtime.
     val dir = corpus.getAbsolutePath
-    PairGraph.reset()
+    LayoutCatalog.reset()
     val before = LayoutCatalog.buildsPublished.get()
     val cold = PairGraph.qualifyingPairs(spark, dir)
       .collect().map(_.toSeq).toSet
     assert(LayoutCatalog.buildsPublished.get() == before + 1)
     assert(cold.nonEmpty, "fixture must contain qualifying pairs")
 
-    PairGraph.reset()
+    LayoutCatalog.reset()
     val warm = PairGraph.qualifyingPairs(spark, dir)
       .collect().map(_.toSeq).toSet
     assert(LayoutCatalog.buildsPublished.get() == before + 1,
@@ -619,7 +630,7 @@ class LayoutCatalogSpec extends SparkSpec {
       .filterNot(_.startsWith(".tmp_")).toSet
     val docs = new File(corpus, "documents.parquet")
     assert(docs.setLastModified(docs.lastModified() + 60000))
-    PairGraph.reset()
+    LayoutCatalog.reset()
     PairGraph.qualifyingPairs(spark, dir).queryExecution.toRdd.count()
     assert(LayoutCatalog.buildsPublished.get() == before + 2,
       "changed fingerprint must rebuild")
@@ -627,6 +638,33 @@ class LayoutCatalogSpec extends SparkSpec {
       .filterNot(_.startsWith(".tmp_")).toSet
     assert(newDirs.size == 1 && newDirs.intersect(oldDirs).isEmpty,
       s"retention must keep only the live artifact: old=$oldDirs new=$newDirs")
+  }
+
+  test("resolve: concurrent resolves of one key share one build; a failed build is not memoized") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val dir = corpus.getAbsolutePath
+    val calls = new java.util.concurrent.atomic.AtomicInteger()
+    def build(tmp: File): Unit = {
+      calls.incrementAndGet()
+      Thread.sleep(200)
+      tmp.mkdirs()
+      Files.writeString(new File(tmp, "p").toPath, "x"): Unit
+    }
+    val dests = Await.result(Future.sequence((1 to 4).map(_ =>
+      Future(LayoutCatalog.resolve("oncekind", dir, Seq("orders"), "")(build)))),
+      1.minute)
+    assert(calls.get() == 1, "one build for four concurrent resolves")
+    assert(dests.toSet.size == 1 && LayoutCatalog.isPublished(dests.head))
+
+    intercept[IllegalStateException] {
+      LayoutCatalog.resolve("failkind", dir, Seq("orders"), "")(
+        _ => throw new IllegalStateException("build failed"))
+    }
+    val retried = LayoutCatalog.resolve("failkind", dir, Seq("orders"), "")(build)
+    assert(calls.get() == 2 && LayoutCatalog.isPublished(retried),
+      "a retry after a failed build must rebuild, not rethrow")
   }
 
   test("publish loser of a concurrent race reads the winner's artifact") {

@@ -44,14 +44,12 @@ class PqDriftSpec extends SparkSpec {
   override def beforeAll(): Unit = {
     super.beforeAll()
     sys.props("graft.layout.root") = new File(scratch, "root").getAbsolutePath
-    Ivf.reset()
-    IvfPq.reset()
+    LayoutCatalog.reset()
   }
 
   override def afterAll(): Unit = {
     sys.props.remove("graft.layout.root")
-    Ivf.reset()
-    IvfPq.reset()
+    LayoutCatalog.reset()
     LayoutCatalog.deleteRecursively(scratch)
     super.afterAll()
   }

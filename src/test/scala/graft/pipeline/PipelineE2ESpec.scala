@@ -176,4 +176,41 @@ class PipelineE2ESpec extends SparkSpec {
     // short page 3 (2 < per_page 3) stopped the walk — page 4 never fetched
     assert(!FakeSource.calls.contains(4))
   }
+
+  /** Pages of the given record counts (absent = empty); page 1 carries
+    * a Link header whose rel="last" names `last`. */
+  private final class LinkSource(sizes: Map[Int, Int], last: Int)
+      extends Bronze.PageSource {
+    var calls: List[Int] = Nil
+    override def fetch(page: Int, perPage: Int): Bronze.Page = {
+      calls = page :: calls
+      val n = sizes.getOrElse(page, 0)
+      val link = Option.when(page == 1)(
+        s"""<http://unused?per_page=$perPage&page=2>; rel="next", """ +
+          s"""<http://unused?per_page=$perPage&page=$last>; rel="last"""")
+      Bronze.Page(Seq.fill(n)("{}").mkString("[", ",", "]"), n, link)
+    }
+  }
+
+  test("Link pagination walks to rel=last: a short page does not stop it; the cap and an empty page do") {
+    val root = Files.createTempDirectory("graft-pg-link").toString
+    def walk(src: LinkSource, cap: Int, date: String): (Int, Int) =
+      Bronze.ingest(spark, settings(root).copy(maxPagesCap = cap), src, date)
+    val sizes = Map(1 -> 3, 2 -> 1, 3 -> 3, 4 -> 2)
+
+    // short page 2 (1 < per_page 3) does not end a Link walk
+    val full = new LinkSource(sizes, last = 4)
+    assert(walk(full, 10000, "2026-02-02") === ((4, 9)))
+    assert(full.calls.sorted === List(1, 2, 3, 4))
+
+    // maxPagesCap bounds the walk below rel="last"
+    val capped = new LinkSource(sizes, last = 4)
+    assert(walk(capped, 3, "2026-02-03") === ((3, 7)))
+    assert(capped.calls.sorted === List(1, 2, 3))
+
+    // an empty page before rel="last" ends the walk
+    val gap = new LinkSource(Map(1 -> 3, 2 -> 3, 3 -> 3, 5 -> 3), last = 6)
+    assert(walk(gap, 10000, "2026-02-04") === ((3, 9)))
+    assert(gap.calls.sorted === List(1, 2, 3, 4))
+  }
 }

@@ -5,8 +5,9 @@
 # main's own last stdout line stays the last line.
 #
 # Usage: tools/run_main.sh <MainClass> [args...]
-#   e.g. GRAFT_SCALE_A=... GRAFT_SCALE_B=... tools/run_main.sh graft.ScaleProbe
-#        GRAFT_SCALE_B=/tmp/graft_scale/x25 tools/run_main.sh graft.IncrProbe
+#   e.g. tools/run_main.sh graft.Ingest <sfDir>
+#        SPARK_GRAFT_SF_DIR=/tmp/graft_scale/x5 tools/run_main.sh graft.Diag q94_pagerank
+#        (a K× rung from: python3 tools/gen_scale.py <srcSfDir> /tmp/graft_scale/x5 5)
 #   (env: SPARK_GRAFT_CPUS, SPARK_DRIVER_MEM)
 set -euo pipefail
 cd "$(dirname "$0")/.."
