@@ -18,8 +18,11 @@ import org.apache.spark.sql.SparkSession
   *
   * Coverage: each query family owns an `ingestArtifacts` hook that calls
   * the same resolver entry points its queries call, with the same
-  * parameters (no constant is duplicated here). Completeness is
-  * self-audited at run time: Bench records
+  * parameters (no constant is duplicated here). The LSM split
+  * artifacts are named by one split value per artifact
+  * ([[graft.queries.Splits]]: d10 and c10), which the hook and the
+  * queries that read it share, so the two cannot drift apart.
+  * Completeness is self-audited at run time: Bench records
   * [[graft.operators.LayoutCatalog.buildsPublished]] after ingest and
   * reports any build that happens during warm-up/measured rounds as
   * `late_builds` (expected 0).

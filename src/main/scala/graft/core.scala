@@ -19,15 +19,15 @@ final case class Q(name: String, oracle: Option[String])(
 object Tables {
   /** Loads one test table. `events.ts` has shipped in two fixture
     * generations: nanosecond-precision parquet (which Spark 4 refuses
-    * to read as a timestamp — legacy nanosAsLong reads it as a long we
-    * truncate to µs, exactly what DuckDB's reader does) and plain
+    * to read as a timestamp — legacy nanosAsLong, which every session
+    * carries through `SparkSessionFactory.standardConf`, reads it as a
+    * long we truncate to µs, exactly what DuckDB's reader does) and plain
     * µs-precision TIMESTAMP_NTZ. Handle both by inspecting the read
     * dtype; either way the result is a µs TimestampType in the UTC
     * session zone, identical to DuckDB's view (FIXTURES.md caveat).
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(s"$dir/$name.parquet")
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
@@ -109,6 +109,9 @@ object Knuth {
     s"((($column + $salt) % 2147483648) * 2654435761) % 4294967296"
   def col(c: Column, salt: Long): Column =
     (((c + lit(salt)) % lit(2147483648L)) * lit(2654435761L)) % lit(4294967296L)
+  /** The same hash on a JVM long, for stateful streaming operators. */
+  def scalar(x: Long, salt: Long): Long =
+    (((x + salt) % 2147483648L) * 2654435761L) % 4294967296L
 }
 
 object Det {

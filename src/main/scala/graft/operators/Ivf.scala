@@ -244,36 +244,14 @@ object Ivf {
       new java.io.File(dest, "centroids").getAbsolutePath)
   }
 
-  /** DuckDB CTE chain replaying [[trainCentroids]] exactly: expects a
-    * `normed` CTE (vec_id, qv) and the seed CTE named `cents0`; emits
-    * asg/pos/cents CTEs per round. The final table is `cents<rounds>`.
-    * Append after the seed CTE with a leading comma. */
-  def trainSqlCtes(rounds: Int, dim: Int): String =
-    (0 until rounds).map { k =>
-      s"""asg$k AS (
-          SELECT vec_id, qv, centroid_id FROM (
-            SELECT n.vec_id, n.qv, c.centroid_id,
-                   ROW_NUMBER() OVER (PARTITION BY n.vec_id
-                     ORDER BY ${sqDistSql("n.qv", "c.cv")}, c.centroid_id) AS rn
-            FROM normed n CROSS JOIN cents$k c) t
-          WHERE rn = 1),
-        pos$k AS (
-          SELECT centroid_id, i,
-                 CAST(SUM(qv[CAST(i AS INT)]) AS BIGINT) AS sv,
-                 CAST(COUNT(*) AS BIGINT) AS cnt
-          FROM asg$k, (SELECT unnest(range(1, ${dim + 1})) AS i) p
-          GROUP BY centroid_id, i),
-        cents${k + 1} AS (
-          SELECT centroid_id, list(m ORDER BY i) AS cv
-          FROM (SELECT centroid_id, i, sv // cnt AS m FROM pos$k) t
-          GROUP BY centroid_id)"""
-    }.mkString(",\n        ")
-
-  /** DuckDB CTE chain replaying [[trainCentroidsCosine]]: like
-    * [[trainSqlCtes]] but each round assigns by the spherical key and
-    * every cents CTE carries cn (the seed `cents0` must too). `src`
-    * names the CTE the training rounds read (default `normed`; an
-    * incremental-index oracle trains on the `arch` subset). */
+  /** DuckDB CTE chain replaying [[trainCentroidsCosine]] exactly:
+    * expects the seed CTE named `cents0` (carrying cn) and emits
+    * asg/pos/cents CTEs per round, each round assigning by the
+    * spherical key; the final table is `cents<rounds>` and every cents
+    * CTE carries cn. `src` names the (vec_id, qv) CTE the training
+    * rounds read (default `normed`; an incremental-index oracle trains
+    * on the `arch` subset). Append after the seed CTE with a leading
+    * comma. */
   def trainSqlCtesCosine(rounds: Int, dim: Int, src: String = "normed"): String =
     (0 until rounds).map { k =>
       s"""asg$k AS (

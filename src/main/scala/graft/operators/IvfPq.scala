@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
   * totally ordered (codes hashed 32-way on vec_id and sorted by the
   * unique (vec_id, centroid_id, subspace); codebook one file sorted
   * by (subspace, code)) and nullability-pinned, so artifact bytes
-  * are a pure function of the row set. [[incrementalIndex]] then
-  * gives appends the production PQ shape: centroids AND codebook are
+  * are a pure function of the row set. [[splitIndex]] then gives
+  * the appends of a [[LayoutCatalog.Split]] the production PQ shape: centroids AND codebook are
   * trained once on the ARCHIVE snapshot and FROZEN (retraining per
   * append would re-code the world); a delta of new vectors pays only
   * its own assignment + coding against the frozen tables, published
@@ -37,8 +37,9 @@ import org.apache.spark.sql.functions._
   * never rewritten), and the read view archive ∪ segments is
   * row-identical to a frozen-codebook rebuild over the full corpus
   * (per-vector coding is an independent argmin, so delta∪archive ≡
-  * code-everything). Compaction folds segments into one artifact
-  * whose bytes equal that rebuild's — LayoutCatalogSpec pins the
+  * code-everything). Archive, segments and the fold resolve through
+  * [[LayoutCatalog.resolveSplit]] like the text indexes' splits; the
+  * fold's bytes equal that rebuild's — LayoutCatalogSpec pins the
   * per-file MD5s.
   *
   * Schema: `codes` (vec_id, centroid_id, qn, subspace, code) — one
@@ -53,11 +54,13 @@ object IvfPq {
     * merge is proven against). */
   val LayoutVersion = 2
 
-  /** Resolve one `ivfpq` artifact of `dir` with base-name suffix
-    * `suffix`, fingerprinted over the embeddings table. */
-  private def resolve(dir: String, suffix: String)(build: File => Unit): File =
-    LayoutCatalog.resolve(s"ivfpq_v$LayoutVersion", dir, Seq("embeddings"),
-      suffix)(build)
+  private val Kind = s"ivfpq_v$LayoutVersion"
+
+  private val Embeddings = Seq("embeddings")
+
+  /** Base-name tail of every artifact built with these parameters. */
+  private def params(nCentroids: Int, rounds: Int, replication: Int): String =
+    s"_k${nCentroids}_r${rounds}_x$replication"
 
   private def read(s: SparkSession, dest: File, leaf: String): DataFrame =
     s.read.parquet(new File(dest, leaf).getAbsolutePath)
@@ -192,100 +195,50 @@ object IvfPq {
       nCentroids: Int, rounds: Int, replication: Int)
       : (DataFrame, DataFrame) = {
     val spark = base.sparkSession
-    val dest = resolve(dir, s"_k${nCentroids}_r${rounds}_x$replication")(
+    val dest = LayoutCatalog.resolve(Kind, dir, Embeddings,
+      params(nCentroids, rounds, replication))(
       buildInto(base, base, cents, replication, _))
     (read(spark, dest, "codes"), read(spark, dest, "codebook"))
   }
 
-  /** INCREMENTAL ingest for the vector index — the production append
-    * path, LSM-style: vectors matching `deltaPred` are "today's
-    * batch"; the archive (everything else) owns the TRAINED state —
-    * spherical centroids ([[Ivf.persistedCentroidsCosine]] under an
-    * archive variant key) and the residual codebook — both trained
-    * once per archive snapshot and FROZEN. The append codes the delta
-    * against those frozen tables (per-vector assignment + argmin —
-    * independent of every other vector) and publishes ONLY the
-    * delta's own code-segment artifact: append compute is
-    * O(delta · (k + 16·8)) integer kernels and append I/O is
-    * O(delta) code rows — the archive's codes are never rewritten.
-    * The returned view unions archive + segment codes, row-identical
-    * to a frozen-codebook rebuild over the full corpus; compaction
-    * ([[segmentedIndex]], segment count > maxSegments) folds the
-    * read-backs into one artifact BYTE-identical to that rebuild
-    * (LayoutCatalogSpec pins both). Returns
-    * (codes view, codebook, centroids) — everything a search
+  /** The LSM vector index of `split` — the production append path:
+    * the archive (vectors matching `split.archPred`) owns the TRAINED
+    * state — spherical centroids ([[Ivf.persistedCentroidsCosine]]
+    * under the archive's base name) and the residual codebook — both
+    * trained once per archive snapshot and FROZEN (retraining per
+    * append would re-code the world). Each delta codes against those
+    * frozen tables (per-vector assignment + argmin — independent of
+    * every other vector) into its OWN code-segment artifact: append
+    * compute is O(delta · (k + 16·8)) integer kernels and append I/O
+    * is O(delta) code rows — the archive's codes are never rewritten.
+    * Resolution, naming and the fold rung are
+    * [[LayoutCatalog.resolveSplit]]'s; the fold merges the archive and
+    * the oldest segments' codes into one artifact BYTE-identical to a
+    * frozen-codebook rebuild over the same vectors. The returned view
+    * unions the live codes — row-identical to a frozen-codebook
+    * rebuild over the full corpus (LayoutCatalogSpec pins both).
+    * Returns (codes view, codebook, centroids) — everything a search
     * consumer (q289) needs. */
-  def incrementalIndex(base: DataFrame, dir: String, deltaPred: Column,
-      tag: String, nCentroids: Int, rounds: Int, replication: Int)
-      : (DataFrame, DataFrame, DataFrame) =
-    segmentedIndex(base, dir, Seq(deltaPred), tag, nCentroids, rounds,
-      replication)
-
-  /** Multi-append LSM index with the archive defined as the
-    * complement of the predicate set — the single-snapshot form
-    * ([[incrementalIndex]] and the specs call it this way). The
-    * archive's membership here DEPENDS on the predicate set, so a
-    * grown list re-derives the archive; day-over-day appenders that
-    * want the trained archive to stay warm should use
-    * [[segmentedIndexFrom]] with an explicit, STABLE archive
-    * predicate. */
-  def segmentedIndex(base: DataFrame, dir: String, deltaPreds: Seq[Column],
-      tag: String, nCentroids: Int, rounds: Int, replication: Int,
-      maxSegments: Int = 4): (DataFrame, DataFrame, DataFrame) = {
-    require(deltaPreds.nonEmpty, "need at least one delta predicate")
-    segmentedIndexFrom(base, dir, !deltaPreds.reduce(_ || _), deltaPreds,
-      tag, nCentroids, rounds, replication, maxSegments)
-  }
-
-  /** Multi-append LSM index: the archive (vectors matching `archPred`)
-    * trains centroids + codebook; each predicate's delta codes against
-    * the frozen tables into its own segment artifact (O(delta) write).
-    * `archPred` and the `deltaPreds` must be pairwise disjoint and
-    * jointly cover the corpus; every split artifact embeds a CONTENT
-    * KEY of its predicate ([[LayoutCatalog.predKey]]), so a changed or
-    * grown split never silently reuses an artifact built for a
-    * different partition — appending day N+1 reuses the trained
-    * archive and days 1..N's code segments and pays O(delta) for the
-    * new segment only. Reads union archive + segments; compaction is
-    * grouped and amortized: the oldest ⌊N/maxSegments⌋·maxSegments
-    * segments fold with the archive into one merged artifact (bytes
-    * equal a frozen-codebook build over the same vectors) — ONE
-    * O(corpus) write per maxSegments appends — and the view is that
-    * table plus the live tail segments. */
-  def segmentedIndexFrom(base: DataFrame, dir: String, archPred: Column,
-      deltaPreds: Seq[Column], tag: String, nCentroids: Int, rounds: Int,
-      replication: Int, maxSegments: Int = 4)
+  def splitIndex(base: DataFrame, dir: String, split: LayoutCatalog.Split,
+      nCentroids: Int, rounds: Int, replication: Int)
       : (DataFrame, DataFrame, DataFrame) = {
-    require(deltaPreds.nonEmpty, "need at least one delta predicate")
     val spark = base.sparkSession
-    val baseArch = base.filter(archPred)
-    val ak = LayoutCatalog.predKey(Seq(archPred))
-    val cents = Ivf.persistedCentroidsCosine(baseArch, dir, "vec_id", "qv",
-      nCentroids, rounds, variant = s"${tag}_arch_$ak")
-    // one resolve per split artifact: the predicate content keys live
-    // in the base names, so changed splits never reuse a location
-    def split(variant: String)(build: File => Unit): File =
-      resolve(dir,
-        s"_${tag}_${variant}_k${nCentroids}_r${rounds}_x$replication")(build)
-    val archDest = split(s"arch_$ak")(
-      buildInto(baseArch, baseArch, cents, replication, _))
-    val cbt = read(spark, archDest, "codebook")
-    val segDests = deltaPreds.zipWithIndex.map { case (p, i) =>
-      split(s"seg${i}_${LayoutCatalog.predKey(Seq(p))}")(tmp =>
-        writeCodes(codeAgainst(
-          subspaced(residuals(base.filter(p), cents, replication)), cbt), tmp))
-    }
-    val folded = deltaPreds.length - (deltaPreds.length % maxSegments)
-    val live =
-      if (folded > 0) {
-        val fk = LayoutCatalog.predKey(archPred +: deltaPreds.take(folded))
-        split(s"compacted${folded}_$fk")(tmp => writeTables(
-          (archDest +: segDests.take(folded))
-            .map(read(spark, _, "codes"))
-            .reduce(_ unionByName _),
-          cbt, tmp)) +: segDests.drop(folded)
-      } else archDest +: segDests
-    (live.map(read(spark, _, "codes")).reduce(_ unionByName _), cbt, cents)
+    val cents = Ivf.persistedCentroidsCosine(base.filter(split.archPred), dir,
+      "vec_id", "qv", nCentroids, rounds, variant = split.archive(""))
+    val (arch, live) = LayoutCatalog.resolveSplit(Kind, dir, Embeddings,
+      split, "", params(nCentroids, rounds, replication))(
+      archive = p => {
+        val baseArch = base.filter(p)
+        buildInto(baseArch, baseArch, cents, replication, _)
+      },
+      segment = (archDir, p) => writeCodes(codeAgainst(
+        subspaced(residuals(base.filter(p), cents, replication)),
+        read(spark, archDir, "codebook")), _),
+      fold = Some(parts => writeTables(
+        parts.map(read(spark, _, "codes")).reduce(_ unionByName _),
+        read(spark, parts.head, "codebook"), _)))
+    (live.map(read(spark, _, "codes")).reduce(_ unionByName _),
+      read(spark, arch, "codebook"), cents)
   }
 
   /** Publish ONE code-segment artifact from an EXPLICIT vector row
@@ -303,10 +256,11 @@ object IvfPq {
   def publishCodeSegmentRows(base: DataFrame, dir: String, cents: DataFrame,
       cbt: DataFrame, nCentroids: Int, rounds: Int, replication: Int,
       tag: String, i: Int, key: String): java.io.File = {
-    val dest = resolve(dir,
-      s"_${tag}_seg${i}_${key}_k${nCentroids}_r${rounds}_x$replication")(tmp =>
+    val dest = LayoutCatalog.resolve(Kind, dir, Embeddings,
+      s"_${LayoutCatalog.segmentName(tag, "", i, key)}" +
+        params(nCentroids, rounds, replication))(
       writeCodes(codeAgainst(
-        subspaced(residuals(base, cents, replication)), cbt), tmp))
+        subspaced(residuals(base, cents, replication)), cbt), _))
     new File(dest, "codes")
   }
 
@@ -375,13 +329,14 @@ object IvfPq {
     * integer aggregate over the already-built segment view (an
     * ingest-time decision, like AQE's runtime stats — not query-path
     * work). Returns (codes, codebook, centroids, retrained). */
-  def driftGatedIndex(base: DataFrame, dir: String, deltaPred: Column,
-      tag: String, nCentroids: Int, rounds: Int, replication: Int,
-      maxDriftPermille: Long = 1500L)
+  def driftGatedIndex(base: DataFrame, dir: String,
+      split: LayoutCatalog.Split, nCentroids: Int, rounds: Int,
+      replication: Int, maxDriftPermille: Long = 1500L)
       : (DataFrame, DataFrame, DataFrame, Boolean) = {
-    val (codes, cbt, cents) = incrementalIndex(base, dir, deltaPred, tag,
-      nCentroids, rounds, replication)
-    val (_, _, drift) = driftStats(base, codes, cbt, cents, deltaPred)
+    val (codes, cbt, cents) = splitIndex(base, dir, split, nCentroids,
+      rounds, replication)
+    val (_, _, drift) = driftStats(base, codes, cbt, cents,
+      split.deltaPreds.reduce(_ || _))
     if (drift <= maxDriftPermille) (codes, cbt, cents, false)
     else {
       // retrain == the plain per-snapshot build over the full corpus

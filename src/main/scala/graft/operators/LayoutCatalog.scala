@@ -6,8 +6,9 @@ import java.nio.file.Files
 
 import scala.util.Try
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Durable, corpus-snapshot-keyed home for layout artifacts, and the
   * ONE resolve path every artifact-backed operator goes through: the
@@ -63,6 +64,13 @@ import org.apache.spark.sql.functions.col
   *     catalog as `graft_<leaf>_<hash>`, where leaf is the location's
   *     directory name (`pairs`, `edges`, `postings`, ...) and hash is
   *     16 hex chars of its absolute path.
+  *   - **LSM splits**: a [[Split]] (tag, archive predicate, delta
+  *     predicates) owns the archive / segment / fold base names, and
+  *     [[resolveSplit]] is the one archive → segments → fold skeleton
+  *     the bigram, positional and IVF-PQ builders resolve through (the
+  *     fold at the fixed rung [[FoldRung]]). Streamed micro-batch
+  *     segments take their names from [[segmentName]], keyed by batch
+  *     content.
   *
   * Versioning: bump the artifact kind's version segment (e.g.
   * `edges_v2`) whenever the BUILD semantics change, so an upgraded
@@ -107,8 +115,10 @@ object LayoutCatalog {
     hex16(sb.toString)
   }
 
-  /** First 8 bytes of SHA-256(`s`), as 16 hex chars. */
-  private def hex16(s: String): String =
+  /** First 8 bytes of SHA-256(`s`), as 16 hex chars — the digest of
+    * fingerprints, predicate keys, table names and the streaming
+    * ingest's micro-batch content keys. */
+  private[graft] def hex16(s: String): String =
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(s.getBytes(StandardCharsets.UTF_8))
       .take(8).map(b => f"${b & 0xff}%02x").mkString
@@ -117,22 +127,6 @@ object LayoutCatalog {
     * "root_testdata_sf0.001"). */
   private def sanitize(s: String): String =
     s.replaceAll("[^A-Za-z0-9._-]+", "_").replaceAll("^_+", "")
-
-  /** Deterministic 16-hex content key of a predicate list (the
-    * expressions' SQL forms, hashed). Split-artifact names (LSM
-    * archive / segment / compacted) embed it so two different delta
-    * splits can NEVER resolve to the same artifact: without it, a
-    * grown predicate list silently reused the shorter list's archive
-    * — which still contained the new days' rows — and the union view
-    * double-counted them. 64 bits of digest, not 32: a collision at
-    * the same (dir, tag, segment position) would silently resurrect
-    * exactly the double-count bug this key exists to prevent, and
-    * 32-bit birthday risk is non-trivial for long-lived many-split
-    * deployments; name length is not a constraint here. */
-  def predKey(preds: Seq[org.apache.spark.sql.Column]): String =
-    hex16(preds
-      .map(c => org.apache.spark.sql.graftbridge.Bridge.expression(c).sql)
-      .mkString("|"))
 
   /** The published artifact directory for (kind, corpus base,
     * fingerprint) — e.g. `<root>/edges_v2/sf0.001_ab12cd34ef567890`. */
@@ -173,6 +167,88 @@ object LayoutCatalog {
       memo.computeIfAbsent(key, _ => new Once(() => buildAndPublish(dest, build)))
     if (once.result.isFailure) memo.remove(key, once)
     once.result.get
+  }
+
+  /** Segments fold into the archive in groups of this many: a split
+    * with N deltas folds its oldest N − N % FoldRung segments. */
+  val FoldRung = 4
+
+  /** Content key of a predicate list (16 hex chars over the
+    * expressions' `.sql` forms). Split-artifact names embed it so two
+    * different splits are meant to resolve to different artifacts.
+    * Caveat, pinned by LayoutCatalogSpec: a Spark 4 `Column` converts
+    * to an unresolved `ColumnNodeExpression` whose `.sql` is the
+    * constant `columnnodeexpression()`, so today the key depends on
+    * the list's LENGTH only — the tag, the segment index and the fold
+    * count are what actually tell split artifacts apart. */
+  private def predKey(preds: Seq[Column]): String =
+    hex16(preds.map(c => Bridge.expression(c).sql).mkString("|"))
+
+  /** One LSM split of a corpus: the stable ARCHIVE (rows matching
+    * `archPred`) plus one delta SEGMENT per predicate in `deltaPreds`,
+    * each its own durable artifact, unioned at read. The predicates
+    * must be pairwise disjoint and jointly cover the corpus (each
+    * delta models one day's batch); an empty `deltaPreds` names the
+    * archive alone. The split owns every artifact base name:
+    * `<tag>_<infix>arch_<key>`, `<tag>_<infix>seg<i>_<key>` and
+    * `<tag>_compacted<N>_<key>`, where `infix` tells artifact families
+    * of one kind directory apart ("" for bigram postings and IVF-PQ
+    * codes, "p" for positional postings). */
+  final case class Split(tag: String, archPred: Column,
+      deltaPreds: Seq[Column]) {
+    def archive(infix: String): String =
+      s"${tag}_${infix}arch_${predKey(Seq(archPred))}"
+    def segment(infix: String, i: Int): String =
+      segmentName(tag, infix, i, predKey(Seq(deltaPreds(i))))
+    /** How many of the oldest segments the fold covers. */
+    def folded: Int = deltaPreds.length - deltaPreds.length % FoldRung
+    /** The fold's content key covers (archive, folded prefix), so
+      * between fold boundaries every append reuses it. */
+    def fold: String = s"${tag}_compacted${folded}_${
+      predKey(archPred +: deltaPreds.take(folded))}"
+  }
+
+  /** Base name of segment `i` of split `tag` keyed by `key` — a
+    * predicate split's content key, or a streamed micro-batch's
+    * content key (a checkpoint replay re-derives the same key and lands
+    * on the published artifact). */
+  def segmentName(tag: String, infix: String, i: Int, key: String): String =
+    s"${tag}_${infix}seg${i}_$key"
+
+  /** THE LSM resolve skeleton every split-aware builder uses: resolves
+    * `split`'s archive with `archive(archPred)`, then each segment with
+    * `segment(archiveDir, deltaPred)`, then — when `fold` is given and
+    * the split holds at least [[FoldRung]] segments — the compacted
+    * artifact with `fold(archive +: oldest folded segments)`. Every
+    * artifact resolves under `kind` for corpus `dir` (fingerprinted
+    * over `tables`) with base-name suffix `_<name><params>`. Returns
+    * the archive and the LIVE artifacts in union order: the fold and
+    * the tail segments, or the archive and every segment.
+    *
+    * Compaction is grouped and amortized: the fold's bytes equal a
+    * from-scratch build over the same rows (every builder writes
+    * totally ordered files), one O(corpus) write per FoldRung appends.
+    * Folded segments stay on disk until the snapshot fingerprint rolls
+    * (concurrent readers of the pre-fold view never see files vanish);
+    * the next snapshot's retention sweep retires them. */
+  def resolveSplit(kind: String, dir: String, tables: Seq[String],
+      split: Split, infix: String, params: String)(
+      archive: Column => File => Unit,
+      segment: (File, Column) => File => Unit,
+      fold: Option[Seq[File] => File => Unit]): (File, Seq[File]) = {
+    def at(name: String)(build: File => Unit): File =
+      resolve(kind, dir, tables, s"_$name$params")(build)
+    val arch = at(split.archive(infix))(archive(split.archPred))
+    val segs = split.deltaPreds.zipWithIndex.map { case (p, i) =>
+      at(split.segment(infix, i))(segment(arch, p))
+    }
+    val n = split.folded
+    val live = fold match {
+      case Some(f) if n > 0 =>
+        at(split.fold)(f(arch +: segs.take(n))) +: segs.drop(n)
+      case _ => arch +: segs
+    }
+    (arch, live)
   }
 
   /** Bucket count of every bucketed artifact table. */

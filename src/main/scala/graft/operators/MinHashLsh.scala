@@ -22,8 +22,10 @@ import org.apache.spark.sql.functions._
   *
   * Determinism: each per-seed minimum is the first 8 hex chars of
   * md5("<seed>:" || shingle) minimized over the distinct 3-gram
-  * shingles — replayed exactly in DuckDB by [[seededMinSql]] /
-  * [[bandKeySql]] (see the q58 oracle).
+  * shingles — replayed exactly in DuckDB by the q66 oracle's
+  * `list_min(list_transform(grams, g -> substr(md5('<seed>:' || g),
+  * 1, 8)))` per seed; the universal family's replay is
+  * [[universalMinSql]] (q58, q192).
   */
 object MinHashLsh {
 
@@ -48,10 +50,6 @@ object MinHashLsh {
     concat_ws("|", (0 until rowsPerBand).map(t =>
       element_at(sigCol, band * rowsPerBand + t + 1).cast("string")): _*)
 
-  /** DuckDB-side replay of one seeded minimum over a grams list column. */
-  def seededMinSql(gramsCol: String, seed: Int): String =
-    s"list_min(list_transform($gramsCol, g -> substr(md5('$seed:' || g), 1, 8)))"
-
   /** DuckDB-side replay of one UNIVERSAL-family minimum (the
     * `minhash_fast` math): gh(g) is the exact-integer Knuth 3-gram
     * hash shared with the other text oracles; seed constants are
@@ -64,12 +62,6 @@ object MinHashLsh {
     s"list_min(list_transform($gramsCol, g -> ($a * ($gh) + $b) % " +
       s"${graft.functions.MinHashKernel.UniversalP}))"
   }
-
-  /** DuckDB-side replay of [[bandKeyCol]] over per-seed columns named
-    * h0, h1, ... (as produced by [[seededMinSql]] aliases). */
-  def bandKeySql(band: Int, rowsPerBand: Int): String =
-    (0 until rowsPerBand).map(t => s"h${band * rowsPerBand + t}")
-      .mkString(" || '|' || ")
 
   /** Explodes each row into `cfg.bands` rows with columns `band`
     * (0-based int) and `band_key` (string). The k-hash signature is

@@ -44,22 +44,21 @@ import org.apache.spark.sql.functions._
   * append-only: a daily delta of new documents lands beside an
   * already-indexed archive, and re-paying the corpus per append —
   * either its tokenize (compute) or its bytes (the v2 merged-write)
-  * — defeats the pay-once posture. [[incrementalPostings]] /
-  * [[segmentedPostings]] therefore publish each delta as its OWN
-  * bucketed segment artifact (tokenize the delta, write the delta —
-  * O(delta) compute AND I/O) and serve reads as a union view over
-  * archive + segments; doc_ids are disjoint across append
-  * boundaries, so no (doc, gram) group straddles a segment and the
-  * view is row-identical to a from-scratch rebuild. A compaction
-  * rung folds the oldest maxSegments-multiple of segments (published
-  * read-backs) into one artifact whose bytes are IDENTICAL to a
-  * from-scratch build over the same documents (total file order ⇒
-  * bytes are a function of the row set — LayoutCatalogSpec pins
-  * per-bucket MD5 equality), amortizing the fold to one O(corpus)
-  * write per maxSegments appends. Every split artifact embeds a
-  * content key of its predicate, so a grown or changed split always
-  * resolves fresh artifacts — never a stale archive that still
-  * contains a later day's documents.
+  * — defeats the pay-once posture. [[splitParts]] /
+  * [[splitPostings]] therefore publish each delta of a
+  * [[LayoutCatalog.Split]] as its OWN bucketed segment artifact
+  * (tokenize the delta, write the delta — O(delta) compute AND I/O)
+  * and serve reads as a union view over archive + segments; doc_ids
+  * are disjoint across append boundaries, so no (doc, gram) group
+  * straddles a segment and the view is row-identical to a
+  * from-scratch rebuild. Resolution, naming and the compaction rung
+  * are [[LayoutCatalog.resolveSplit]]'s: every [[LayoutCatalog
+  * .FoldRung]] segments fold (published read-backs) into one artifact
+  * whose bytes are IDENTICAL to a from-scratch build over the same
+  * documents (total file order ⇒ bytes are a function of the row set
+  * — LayoutCatalogSpec pins per-bucket MD5 equality). The positional
+  * family ([[positionalSplit]]) resolves through the same skeleton
+  * without a fold.
   * v3 also denormalizes `dl` into the postings rows, deleting the
   * doclen join (previously an unbounded broadcast) from every
   * BM25-family consumer.
@@ -164,23 +163,19 @@ object TextIndex {
   private def doclensOf(s: SparkSession, dest: File): DataFrame =
     s.read.parquet(new File(dest, "doclen").getAbsolutePath)
 
-  /** Resolve-or-build the artifact for (dir, variant): `variant` is
-    * "" for the full-corpus index and a caller-chosen suffix for
-    * subset/merged artifacts (it lands in the directory base name, so
-    * retention never crosses variants). Returns the published dir. */
-  private def ensure(dir: String, variant: String)(build: File => Unit): File =
-    LayoutCatalog.resolve(s"lexical_v$LayoutVersion", dir, Seq("documents"),
-      if (variant.isEmpty) "" else s"_$variant")(build)
+  private val Kind = s"lexical_v$LayoutVersion"
 
-  /** The artifact of `docs` under `variant`, built from scratch
-    * (tokenize the input-spread documents) when absent. `docs` is
-    * by-name: a warm resolve never touches the corpus. */
-  private def ensureDocs(s: SparkSession, dir: String, variant: String,
-      docs: => DataFrame): File =
-    ensure(dir, variant)(writeInto(withDl(tfOf(spread(s, dir, docs))), _))
+  private val Docs = Seq("documents")
+
+  /** Build of the artifact of `docs` (by-name: a warm resolve never
+    * touches the corpus): tokenize the input-spread documents, write. */
+  private def buildDocs(s: SparkSession, dir: String, docs: => DataFrame)(
+      tmp: File): Unit =
+    writeInto(withDl(tfOf(spread(s, dir, docs))), tmp)
 
   private def ensureFull(s: SparkSession, dir: String): File =
-    ensureDocs(s, dir, "", graft.Tables.load(s, dir, "documents"))
+    LayoutCatalog.resolve(Kind, dir, Docs, "")(
+      buildDocs(s, dir, graft.Tables.load(s, dir, "documents")))
 
   /** (doc_id, g, tf) bigram postings, bucketed by g — exchange-free
     * input for g-keyed aggregates, idf joins, and posting-list
@@ -193,89 +188,39 @@ object TextIndex {
   def docLengths(s: SparkSession, dir: String): DataFrame =
     doclensOf(s, ensureFull(s, dir))
 
-  /** INCREMENTAL ingest, LSM-style: postings + doclens for the full
-    * corpus at `dir`, built WITHOUT re-tokenizing the archive AND
-    * without rewriting it. `deltaPred` marks "today's batch"; the
-    * append publishes ONLY the delta's own segment artifact —
-    * tokenize the delta, bucket-write its postings — so append
-    * compute AND I/O are O(delta). The returned view unions the
-    * archive's published postings with the segment's: row-identical
-    * to a from-scratch rebuild (doc_ids are disjoint across the
-    * append boundary, so no (doc, gram) group straddles it —
-    * LayoutCatalogSpec pins the row identity, and pins BYTE identity
-    * for the compacted artifact [[segmentedPostings]] folds segments
-    * into). Returns (postings view, doclens view). */
-  def incrementalPostings(s: SparkSession, dir: String,
-      deltaPred: Column, tag: String): (DataFrame, DataFrame) =
-    segmentedPostings(s, dir, Seq(deltaPred), tag)
+  /** The LIVE artifacts of LSM `split` in union order, each as
+    * (postings, doclens): the archive's and every segment's, or — past
+    * the fold rung — the compacted fold's and the tail segments'. Each
+    * delta publishes its OWN segment artifact (tokenize the delta,
+    * write the delta — append compute AND I/O are O(delta)); doc_ids
+    * are disjoint across append boundaries, so no (doc, gram) group
+    * straddles a part and the union is row-identical to a
+    * from-scratch rebuild (LayoutCatalogSpec pins the rows, and the
+    * fold's per-bucket bytes). The fold merges published read-backs —
+    * zero re-tokenization. Index-monitoring consumers read parts on
+    * their own (q290: a one-delta split's segment df IS the df rise
+    * the append contributed), and a split with no deltas is its
+    * archive alone (the seed of [[graft.streaming.StreamOps
+    * .incrementalBm25]]). */
+  def splitParts(s: SparkSession, dir: String, split: LayoutCatalog.Split)
+      : Seq[(DataFrame, DataFrame)] = {
+    def docs(p: Column) = graft.Tables.load(s, dir, "documents").filter(p)
+    val (_, live) = LayoutCatalog.resolveSplit(Kind, dir, Docs, split, "", "")(
+      archive = p => buildDocs(s, dir, docs(p)),
+      segment = (_, p) => buildDocs(s, dir, docs(p)),
+      fold = Some(parts =>
+        writeInto(parts.map(postingsOf(s, _)).reduce(_ unionByName _), _)))
+    live.map(d => (postingsOf(s, d), doclensOf(s, d)))
+  }
 
-  /** Multi-append LSM view with the archive defined as the complement
-    * of the predicate set — the single-snapshot form ([[
-    * incrementalPostings]] and the specs call it this way). Because
-    * the archive's membership here DEPENDS on the predicate set, a
-    * grown list re-derives the archive artifact (its row set shrank);
-    * callers that append day-over-day and want the archive to stay
-    * warm should use [[segmentedPostingsFrom]] with an explicit,
-    * STABLE archive predicate instead. */
-  def segmentedPostings(s: SparkSession, dir: String,
-      deltaPreds: Seq[Column], tag: String, maxSegments: Int = 4)
+  /** The LSM view of `split`: (postings, doclens) unioned over
+    * [[splitParts]]. */
+  def splitPostings(s: SparkSession, dir: String, split: LayoutCatalog.Split)
       : (DataFrame, DataFrame) = {
-    require(deltaPreds.nonEmpty, "need at least one delta predicate")
-    segmentedPostingsFrom(s, dir, !deltaPreds.reduce(_ || _), deltaPreds,
-      tag, maxSegments)
+    val parts = splitParts(s, dir, split)
+    (parts.map(_._1).reduce(_ unionByName _),
+      parts.map(_._2).reduce(_ unionByName _))
   }
-
-  /** Multi-append LSM view: the archive (documents matching
-    * `archPred`) plus one delta segment per predicate, each its own
-    * durable artifact, unioned at read. `archPred` and the
-    * `deltaPreds` MUST be pairwise disjoint and jointly cover the
-    * corpus (each delta models one day's batch); every artifact name
-    * embeds a CONTENT KEY of its predicate ([[LayoutCatalog.predKey]]),
-    * so a changed or grown split can never silently reuse an artifact
-    * built for a different partition of the corpus — appending day
-    * N+1 reuses the archive and days 1..N's segments untouched and
-    * pays O(delta) compute and I/O for the new segment only.
-    *
-    * COMPACTION is grouped and amortized: the oldest
-    * ⌊N/maxSegments⌋·maxSegments segments fold (as published
-    * read-backs — zero re-tokenization) with the archive into one
-    * merged artifact whose bytes are identical to a from-scratch
-    * build over the same documents (writeInto's total file order
-    * makes bytes a pure function of the row set); the view is that
-    * table plus the still-live tail segments. The fold artifact's
-    * content key covers (archive, folded prefix), so between fold
-    * boundaries every append reuses it — ONE O(corpus) write per
-    * maxSegments appends, not per append. Old segment artifacts stay
-    * on disk until the snapshot fingerprint rolls (concurrent readers
-    * of the pre-compaction view never see files vanish); the next
-    * corpus snapshot's retention sweep retires them. */
-  def segmentedPostingsFrom(s: SparkSession, dir: String,
-      archPred: Column, deltaPreds: Seq[Column], tag: String,
-      maxSegments: Int = 4): (DataFrame, DataFrame) = {
-    require(deltaPreds.nonEmpty, "need at least one delta predicate")
-    val ak = LayoutCatalog.predKey(Seq(archPred))
-    val arch = ensureDocs(s, dir, s"${tag}_arch_$ak",
-      graft.Tables.load(s, dir, "documents").filter(archPred))
-    val segs = deltaPreds.zipWithIndex.map { case (p, i) =>
-      ensureSegment(s, dir, p, tag, i)
-    }
-    val folded = deltaPreds.length - (deltaPreds.length % maxSegments)
-    val live =
-      if (folded > 0) {
-        val fk = LayoutCatalog.predKey(archPred +: deltaPreds.take(folded))
-        ensure(dir, s"${tag}_compacted${folded}_$fk")(writeInto(
-          (arch +: segs.take(folded)).map(postingsOf(s, _))
-            .reduce(_ unionByName _),
-          _)) +: segs.drop(folded)
-      } else arch +: segs
-    (live.map(postingsOf(s, _)).reduce(_ unionByName _),
-      live.map(doclensOf(s, _)).reduce(_ unionByName _))
-  }
-
-  private def ensureSegment(s: SparkSession, dir: String, pred: Column,
-      tag: String, i: Int): File =
-    ensureDocs(s, dir, s"${tag}_seg${i}_${LayoutCatalog.predKey(Seq(pred))}",
-      graft.Tables.load(s, dir, "documents").filter(pred))
 
   /** Publish ONE LSM segment artifact from an EXPLICIT row set — the
     * streaming ingest's entry point ([[graft.streaming.StreamOps
@@ -283,42 +228,17 @@ object TextIndex {
     * rows IS its own delta, so it goes through the identical
     * tokenize → tf → dl → deterministic bucketed write as a
     * predicate-defined segment — same bytes for the same row set —
-    * but keyed by a caller-supplied CONTENT KEY of the batch (the
-    * streaming twin of [[LayoutCatalog.predKey]]; checkpointed
-    * micro-batch replays re-derive the same key and land on the
-    * published artifact — the publish is idempotent). Returns the
-    * registered bucketed postings table name and the doclen file. */
+    * but named by a caller-supplied CONTENT KEY of the batch
+    * ([[LayoutCatalog.segmentName]]; checkpointed micro-batch replays
+    * re-derive the same key and land on the published artifact — the
+    * publish is idempotent). Returns the registered bucketed postings
+    * table name and the doclen file. */
   def publishSegmentRows(s: SparkSession, dir: String, docs: DataFrame,
       tag: String, i: Int, key: String): (String, File) = {
-    val dest = ensure(dir, s"${tag}_seg${i}_$key")(
+    val dest = LayoutCatalog.resolve(Kind, dir, Docs,
+      s"_${LayoutCatalog.segmentName(tag, "", i, key)}")(
       writeInto(withDl(tfOf(docs)), _))
     (postingsTable(s, dest), new File(dest, "doclen"))
-  }
-
-  /** The i-th delta segment of a segmented split, as its own bucketed
-    * postings table — index-monitoring consumers (q290's delta
-    * report) read the day's segment directly: its per-gram df IS the
-    * document-frequency rise the append contributed (doc-disjoint
-    * segments ⇒ df_merged − df_archive = df_segment). */
-  def deltaSegment(s: SparkSession, dir: String, deltaPred: Column,
-      tag: String, i: Int = 0): DataFrame =
-    postingsOf(s, ensureSegment(s, dir, deltaPred, tag, i))
-
-  /** The ARCHIVE half of an incremental split (documents NOT matching
-    * `deltaPred`), as its own durable artifact: (postings, doclens).
-    * This is both the base [[segmentedPostings]] unions segments onto
-    * and the seed a STREAMING index-maintenance consumer loads its
-    * hot posting lists / global stats from
-    * ([[graft.streaming.StreamOps.incrementalBm25]]). */
-  def archiveIndex(s: SparkSession, dir: String,
-      deltaPred: Column, tag: String): (DataFrame, DataFrame) = {
-    // content-keyed identically to segmentedPostings' single-pred
-    // archive (archPred = ¬deltaPred), so the two paths share the
-    // artifact
-    val ak = LayoutCatalog.predKey(Seq(!deltaPred))
-    val arch = ensureDocs(s, dir, s"${tag}_arch_$ak",
-      graft.Tables.load(s, dir, "documents").filter(!deltaPred))
-    (postingsOf(s, arch), doclensOf(s, arch))
   }
 
   // -----------------------------------------------------------------
@@ -331,11 +251,13 @@ object TextIndex {
   // own O(delta) segment; positions are DOCUMENT-LOCAL, so a doc's
   // rows live wholly inside one segment and archive ∪ segments is
   // row-identical to a from-scratch build. Compaction deliberately
-  // not implemented until a consumer needs it — the fold would follow
-  // the bigram family's pattern verbatim.
+  // not implemented until a consumer needs it — the skeleton's fold
+  // would take a positional builder the way it takes the bigram one.
 
   /** Bump when the positional BUILD semantics change. */
   val PositionalLayoutVersion = 1
+
+  private val PosKind = s"positional_v$PositionalLayoutVersion"
 
   /** The shared positional derivation — exactly q303/q304's inline
     * form: split on single space, 1-based positions, every doc (no
@@ -345,56 +267,48 @@ object TextIndex {
       .select(col("doc_id"), col("col").as("tok"),
         (col("pos") + 1).cast("long").as("pos"))
 
-  /** Resolve-or-build one positional artifact of `docs` for
-    * (dir, variant): a deterministic bucketed write of
+  /** Build of one positional artifact of `docs` (by-name, as in
+    * [[buildDocs]]): a deterministic bucketed write of
     * (doc_id, tok, pos), one file per bucket, rows totally ordered by
     * (tok, doc_id, pos) — bytes a pure function of the row set, like
-    * the bigram writeInto. `docs` is by-name, as in [[ensureDocs]].
-    * Returns the registered bucketed table name. */
-  private def ensurePositional(s: SparkSession, dir: String,
-      variant: String, docs: => DataFrame): String = {
-    val dest = LayoutCatalog.resolve(s"positional_v$PositionalLayoutVersion",
-      dir, Seq("documents"), s"_$variant")(tmp =>
-      LayoutCatalog.writeBucketed(
-        positionalOf(docs).select(col("doc_id"), col("tok"),
-          coalesce(col("pos"), lit(0L)).as("pos")),
-        new File(tmp, "pospostings"), "tok", "doc_id", "pos")(_ => ()))
+    * the bigram writeInto. */
+  private def buildPositional(docs: => DataFrame)(tmp: File): Unit =
+    LayoutCatalog.writeBucketed(
+      positionalOf(docs).select(col("doc_id"), col("tok"),
+        coalesce(col("pos"), lit(0L)).as("pos")),
+      new File(tmp, "pospostings"), "tok", "doc_id", "pos")(_ => ())
+
+  /** Registered bucketed table of a published positional artifact. */
+  private def positionalTable(s: SparkSession, dest: File): String =
     LayoutCatalog.registerBucketed(s, new File(dest, "pospostings"),
       "doc_id BIGINT, tok STRING, pos BIGINT", "tok")
-  }
 
   /** Publish ONE positional LSM segment from an EXPLICIT row set —
     * the streaming ingest entry point ([[graft.streaming.StreamOps
-    * .positionalSegmentIngest]]), keyed by a caller-supplied content
+    * .positionalSegmentIngest]]), named by a caller-supplied content
     * key of the micro-batch so checkpointed replays land on the
     * published artifact (idempotent). Returns the registered bucketed
     * table name. */
   def publishPositionalSegmentRows(s: SparkSession, dir: String,
       docs: DataFrame, tag: String, i: Int, key: String): String =
-    ensurePositional(s, dir, s"${tag}_pseg${i}_$key", docs)
+    positionalTable(s, LayoutCatalog.resolve(PosKind, dir, Docs,
+      s"_${LayoutCatalog.segmentName(tag, "p", i, key)}")(
+      buildPositional(docs)))
 
-  /** The ARCHIVE half of a positional split: documents matching
-    * `archPred`, as a durable bucketed artifact. */
-  def positionalArchive(s: SparkSession, dir: String,
-      archPred: Column, tag: String): DataFrame = {
-    val ak = LayoutCatalog.predKey(Seq(archPred))
-    s.table(ensurePositional(s, dir, s"${tag}_parch_$ak", spread(s, dir,
-      graft.Tables.load(s, dir, "documents").filter(archPred))))
-  }
-
-  /** Multi-append positional LSM view: archive ∪ one segment per
-    * delta predicate (pairwise disjoint, jointly covering the corpus
-    * with the archive). Row-identical to deriving positions from the
-    * full corpus — positions are document-local and doc_ids are
-    * disjoint across the append boundary. */
-  def segmentedPositionalFrom(s: SparkSession, dir: String,
-      archPred: Column, deltaPreds: Seq[Column], tag: String): DataFrame = {
-    val segs = deltaPreds.zipWithIndex.map { case (p, i) =>
-      s.table(ensurePositional(s, dir,
-        s"${tag}_pseg${i}_${LayoutCatalog.predKey(Seq(p))}",
-        spread(s, dir, graft.Tables.load(s, dir, "documents").filter(p))))
-    }
-    (positionalArchive(s, dir, archPred, tag) +: segs)
-      .reduce(_ unionByName _)
+  /** Positional LSM view of `split`: archive ∪ one segment per delta,
+    * no fold. Row-identical to deriving positions from the full
+    * corpus — positions are document-local and doc_ids are disjoint
+    * across the append boundary. A split with no deltas reads the
+    * archive alone. */
+  def positionalSplit(s: SparkSession, dir: String,
+      split: LayoutCatalog.Split): DataFrame = {
+    def docs(p: Column) =
+      spread(s, dir, graft.Tables.load(s, dir, "documents").filter(p))
+    val (_, live) = LayoutCatalog.resolveSplit(PosKind, dir, Docs, split,
+      "p", "")(
+      archive = p => buildPositional(docs(p)),
+      segment = (_, p) => buildPositional(docs(p)),
+      fold = None)
+    live.map(d => s.table(positionalTable(s, d))).reduce(_ unionByName _)
   }
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -87,12 +86,4 @@ object GraftExtensions {
     descriptor("jaccard5w", classOf[Jaccard5W]) {
       case Seq(a, b) => Jaccard5W(a, b)
     })
-
-  /** Runtime registration on an existing session (no extensions config
-    * needed — e.g. notebooks or tests sharing one session). */
-  def register(spark: SparkSession): Unit =
-    descriptors.foreach { case (id, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        id.funcName, builder, "built-in")
-    }
 }

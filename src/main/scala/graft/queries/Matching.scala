@@ -27,20 +27,21 @@ object Matching {
 
   /** Resolve (building if absent) every durable text-index artifact
     * this family's queries consume — called by [[graft.Ingest]] so the
-    * bench charges the builds to its timed ingest phase. Parameters
-    * mirror the query bodies exactly: the base lexical index
-    * (q90/q113/q288-siblings), the d10 incremental split (q288/q290)
-    * and the c10 five-append LSM split (q295/q298). */
+    * bench charges the builds to its timed ingest phase: the base
+    * lexical index (q90/q113/q288-siblings), the d10 incremental split
+    * (q288/q290) and the c10 five-append LSM split (q295/q298) — the
+    * split values the queries read. */
   def ingestArtifacts(s: SparkSession, dir: String): Unit = {
     graft.operators.TextIndex.bigramPostings(s, dir)
     graft.operators.TextIndex.docLengths(s, dir)
-    graft.operators.TextIndex.incrementalPostings(
-      s, dir, col("doc_id") % 10 === 0, "d10")
-    graft.operators.TextIndex.segmentedPostingsFrom(
-      s, dir, col("doc_id") % 10 <= 4,
-      (5 to 9).map(i => col("doc_id") % 10 === i), "c10")
+    graft.operators.TextIndex.splitParts(s, dir, d10Docs)
+    graft.operators.TextIndex.splitParts(s, dir, c10Docs)
     ()
   }
+
+  /** The bigram LSM splits of the documents corpus. */
+  private val d10Docs = Splits.d10("doc_id")
+  private val c10Docs = Splits.c10("doc_id")
 
   /** q75's edit-distance ceiling: adjectives in the synthetic part
     * vocabulary differ by ≤ 4 edits; the noun (blocking key) is shared. */
@@ -583,7 +584,7 @@ object Matching {
     // Post-ingest retrieval check over the INCREMENTALLY-MAINTAINED
     // lexical index: doc_id % 10 == 0 stands in for today's crawl
     // batch (q87's split); the index it searches is the LSM view
-    // TextIndex.incrementalPostings serves — the archive's PUBLISHED
+    // TextIndex.splitPostings serves — the archive's PUBLISHED
     // postings ∪ today's segment artifact. The archive is never
     // re-tokenized NOR rewritten: the append publishes only the
     // delta's own O(delta) segment, so the daily index cost — compute
@@ -638,8 +639,7 @@ object Matching {
       // the LSM index view: archive postings read back from the
       // durable catalog (zero re-tokenization) ∪ today's segment —
       // the append published only the delta's O(delta) artifact
-      val (tf, dls) = graft.operators.TextIndex.incrementalPostings(
-        s, dir, col("doc_id") % 10 === 0, "d10")
+      val (tf, dls) = graft.operators.TextIndex.splitPostings(s, dir, d10Docs)
       val stats = dls.agg(count(lit(1)).as("n"), sum(col("dl")).as("t"))
       // pushdown term list derives from the (query_id, term) pairs —
       // one source of truth (q90's rule)
@@ -716,13 +716,12 @@ object Matching {
         LEFT JOIN dfa a USING (g)
         WHERE rnk <= 15""")
     ) { (s, dir) =>
-      val pred = col("doc_id") % 10 === 0
-      val (arch, _) = graft.operators.TextIndex.archiveIndex(s, dir, pred, "d10")
       // the day's LSM segment IS the delta report's input: doc-ids
       // are disjoint across the append boundary, so the segment's own
       // per-gram df equals df_merged − df_archive — no merged table
       // needs to exist, let alone be scanned
-      val seg = graft.operators.TextIndex.deltaSegment(s, dir, pred, "d10")
+      val Seq((arch, _), (seg, _)) =
+        graft.operators.TextIndex.splitParts(s, dir, d10Docs)
       val dfA = arch.groupBy("g").agg(count(lit(1)).as("df_arch"))
       val dfN = seg.groupBy("g").agg(count(lit(1)).as("df_new"))
       val rise = dfN.join(dfA, Seq("g"), "left")
@@ -740,7 +739,7 @@ object Matching {
     // the compaction read path under the oracle gate. q288 exercises
     // a single-delta split; here the index has absorbed FIVE appends
     // (days doc_id % 10 = 5..9 over a stable doc_id % 10 <= 4
-    // archive), which crosses segmentedPostingsFrom's maxSegments=4
+    // archive), which crosses the LSM skeleton's fold rung of 4
     // compaction rung: the oldest four segments folded with the
     // archive into one merged artifact (bytes identical to a
     // from-scratch build over the same documents — LayoutCatalogSpec
@@ -795,11 +794,9 @@ object Matching {
     ) { (s, dir) =>
       import s.implicits._
       // five appends over a STABLE archive — day 9 is the live tail;
-      // days 5..8 folded with the archive at the maxSegments=4 rung,
+      // days 5..8 folded with the archive at the fold rung of 4,
       // so this view reads the compacted artifact ∪ one tail segment
-      val (tf, dls) = graft.operators.TextIndex.segmentedPostingsFrom(
-        s, dir, col("doc_id") % 10 <= 4,
-        (5 to 9).map(i => col("doc_id") % 10 === i), "c10")
+      val (tf, dls) = graft.operators.TextIndex.splitPostings(s, dir, c10Docs)
       val stats = dls.agg(count(lit(1)).as("n"), sum(col("dl")).as("t"))
       val qTerms = Seq((1, "vector small"), (1, "filter hash"),
         (2, "sort a"), (2, "merge order"),
@@ -839,7 +836,7 @@ object Matching {
     // distinct grams, posting rows and total term occurrences the
     // index serves. This is the number an operator reads to decide
     // whether the tail has grown enough to justify the next fold
-    // (tail n_postings ≈ compacted/maxSegments is the steady state)
+    // (tail n_postings ≈ compacted/4 is the steady state)
     // and to check the fold lost nothing. Spark computes it from the
     // ARTIFACTS ONLY — the same two bucketed scans as q295, the
     // distinct-gram aggregate riding the g bucket partitioning, never
@@ -864,9 +861,7 @@ object Matching {
                CAST(SUM(tf) AS BIGINT) AS total_tf
         FROM tf GROUP BY 1""")
     ) { (s, dir) =>
-      val (tf, _) = graft.operators.TextIndex.segmentedPostingsFrom(
-        s, dir, col("doc_id") % 10 <= 4,
-        (5 to 9).map(i => col("doc_id") % 10 === i), "c10")
+      val (tf, _) = graft.operators.TextIndex.splitPostings(s, dir, c10Docs)
       tf.withColumn("tier",
           when(col("doc_id") % 10 === 9, "tail").otherwise("compacted"))
         .groupBy("tier")

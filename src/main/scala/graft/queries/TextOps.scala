@@ -32,11 +32,13 @@ object TextOps {
     * and the c10 five-append positional LSM split (q312). */
   def ingestArtifacts(s: SparkSession, dir: String): Unit = {
     graft.operators.PairGraph.qualifyingPairs(s, dir)
-    graft.operators.TextIndex.segmentedPositionalFrom(
-      s, dir, col("doc_id") % 10 <= 4,
-      (5 to 9).map(i => col("doc_id") % 10 === i), "c10")
+    c10Positional(s, dir)
     ()
   }
+
+  /** The c10 positional LSM view (q312). */
+  private def c10Positional(s: SparkSession, dir: String): DataFrame =
+    graft.operators.TextIndex.positionalSplit(s, dir, Splits.c10("doc_id"))
 
   /** 3-gram character shingles, distinct, Spark side. */
   private val shinglesExpr =
@@ -1485,7 +1487,7 @@ object TextOps {
     // is the one non-linear step, and sampling it is statistically
     // free for a bias estimate (each n_match stratum keeps thousands
     // of pairs, uniformly thinned). Per-doc gram sets are computed
-    // ONCE (localCheckpoint) and pairs intersect the precomputed
+    // ONCE (Checkpoints.materialize) and pairs intersect the precomputed
     // arrays — no per-pair re-shingling. Output is ≤ k+1 rows.
     Q(
       "q149_minhash_calibration",
@@ -1548,15 +1550,15 @@ object TextOps {
       // spread the signature kernel input (the q192 single-file-scan
       // cliff): the minhash + gram-code kernels otherwise run on the
       // single task a one-file corpus scans as
-      val sigs = graft.Tables.spreadKernelInput(s, dir, Seq("documents"),
-          t(s, dir, "documents").select("doc_id", "text"), col("doc_id"))
-        .filter(length(col("text")) >= 3)
-        .select(col("doc_id"),
-          graft.functions.MinHash.minhashFast(col("text"), cfg.numHashes)
-            .as("sig"),
-          graft.functions.Jaccard.gramCodes3(col("text")).as("grams"))
-        .withColumn("n_grams", size(col("grams")).cast("long"))
-        .localCheckpoint()
+      val sigs = graft.Checkpoints.materialize(
+        graft.Tables.spreadKernelInput(s, dir, Seq("documents"),
+            t(s, dir, "documents").select("doc_id", "text"), col("doc_id"))
+          .filter(length(col("text")) >= 3)
+          .select(col("doc_id"),
+            graft.functions.MinHash.minhashFast(col("text"), cfg.numHashes)
+              .as("sig"),
+            graft.functions.Jaccard.gramCodes3(col("text")).as("grams"))
+          .withColumn("n_grams", size(col("grams")).cast("long")))
       val banded = sigs.select(col("doc_id"),
         posexplode(array((0 until cfg.bands).map(j =>
           graft.operators.MinHashLsh.bandKeyCol(col("sig"), j, cfg.rowsPerBand)): _*))
@@ -1688,7 +1690,7 @@ object TextOps {
     // the declared sample rate is the knob, and per sampled pair the
     // exact side is one allocation-free sorted merge of precomputed
     // int64 gram codes (GramCodeKernel; per-doc state computed once,
-    // localCheckpoint'd). At production scale the same harness runs
+    // materialized). At production scale the same harness runs
     // over a doc-level sample first; nothing else changes.
     Q(
       "q163_neardup_eval",
@@ -1754,13 +1756,13 @@ object TextOps {
     ) { (s, dir) =>
       // per-doc detector state, ONE corpus pass, materialized: minhash
       // signature, simhash, sorted gram codes
-      val sigs = t(s, dir, "documents")
-        .filter(length(col("text")) >= 3)
-        .select(col("doc_id"),
-          graft.functions.MinHash.minhashFast(col("text"), 6).as("sig"),
-          graft.functions.SimHash.simhash16(col("text")).as("simhash"),
-          graft.functions.Jaccard.gramCodes3(col("text")).as("grams"))
-        .localCheckpoint()
+      val sigs = graft.Checkpoints.materialize(
+        t(s, dir, "documents")
+          .filter(length(col("text")) >= 3)
+          .select(col("doc_id"),
+            graft.functions.MinHash.minhashFast(col("text"), 6).as("sig"),
+            graft.functions.SimHash.simhash16(col("text")).as("simhash"),
+            graft.functions.Jaccard.gramCodes3(col("text")).as("grams")))
       // sampled upper-triangle pair universe: the join CONDITION
       // carries the Knuth thinning, so the nested-loop join emits only
       // sampled pairs — never a materialized n² set
@@ -1881,12 +1883,12 @@ object TextOps {
         FROM pts"""
       }
     ) { (s, dir) =>
-      val sigs = t(s, dir, "documents")
-        .filter(length(col("text")) >= 3)
-        .select(col("doc_id"),
-          graft.functions.MinHash.minhashFast(col("text"), 6).as("sig"),
-          graft.functions.Jaccard.gramCodes3(col("text")).as("grams"))
-        .localCheckpoint()
+      val sigs = graft.Checkpoints.materialize(
+        t(s, dir, "documents")
+          .filter(length(col("text")) >= 3)
+          .select(col("doc_id"),
+            graft.functions.MinHash.minhashFast(col("text"), 6).as("sig"),
+            graft.functions.Jaccard.gramCodes3(col("text")).as("grams")))
       val pairs = sigs.as("a")
         .join(sigs.as("b"),
           col("b.doc_id") > col("a.doc_id") &&
@@ -3140,7 +3142,7 @@ object TextOps {
     // --------------------------------------------------------------- q312
     // PHRASE search over the POSITIONAL LSM view — q303's matcher
     // with the inline position derivation replaced by the multi-append
-    // positional index (TextIndex.segmentedPositionalFrom): archive =
+    // positional index (TextIndex.positionalSplit): archive =
     // docs with id%10 ≤ 4, five daily append segments for 5…9 — the
     // same split q295 reads the bigram LSM through. Positions are
     // document-local, so archive ∪ segments is row-identical to
@@ -3179,9 +3181,7 @@ object TextOps {
                MIN(pos) AS first_pos
         FROM m GROUP BY doc_id""")
     ) { (s, dir) =>
-      val toks = graft.operators.TextIndex.segmentedPositionalFrom(
-        s, dir, col("doc_id") % 10 <= 4,
-        (5 to 9).map(i => col("doc_id") % 10 === i), "c10")
+      val toks = c10Positional(s, dir)
       // phrase selection identical to q303's (query-side input, not
       // part of the index read path under test)
       val tri = t(s, dir, "documents")

@@ -40,13 +40,19 @@ object Vectors {
       "vec_id", "qv", k, ivfTrainRounds)
     graft.operators.IvfPq.persistedIndex(base, dir, cents, k,
       ivfTrainRounds, ivfReplication)
-    graft.operators.IvfPq.incrementalIndex(base, dir,
-      col("vec_id") % 10 === 0, "d10", k, ivfTrainRounds, ivfReplication)
-    graft.operators.IvfPq.segmentedIndexFrom(base, dir,
-      col("vec_id") % 10 <= 4, (5 to 9).map(i => col("vec_id") % 10 === i),
-      "c10", k, ivfTrainRounds, ivfReplication)
+    pqSplit(base, dir, d10Vecs, k)
+    pqSplit(base, dir, c10Vecs, k)
     ()
   }
+
+  /** The IVF-PQ LSM splits of the embeddings corpus (d10: q289/q291/
+    * q297; c10: q296), resolved at the demo training config. */
+  private val d10Vecs = Splits.d10("vec_id")
+  private val c10Vecs = Splits.c10("vec_id")
+  private def pqSplit(base: DataFrame, dir: String,
+      split: graft.operators.LayoutCatalog.Split, k: Int) =
+    graft.operators.IvfPq.splitIndex(base, dir, split, k, ivfTrainRounds,
+      ivfReplication)
 
   /** Quantized embedding, Spark side: the codegen'd
     * functions/VecKernel (one compiled loop; VecMathSpec pins it equal
@@ -2288,7 +2294,7 @@ object Vectors {
   /** The CTE chain, parameterized for the INCREMENTAL index oracle
     * (q289): with `archPred` set, centroid training, codebook seeds
     * and the codebook Lloyd round all read only the ARCHIVE subset
-    * (the frozen-training contract operators/IvfPq.incrementalIndex
+    * (the frozen-training contract operators/IvfPq.splitIndex
     * implements), while assignment and the final code argmin still
     * cover every vector. With `archPred` empty the text is exactly
     * the per-snapshot chain q286/q287 replay. Restricting `res` to
@@ -2531,7 +2537,7 @@ object Vectors {
   // production PQ append contract — retraining per append would
   // re-code the world), while the delta pays only its own assignment
   // + coding against the frozen tables (operators/IvfPq
-  // .incrementalIndex; merged-vs-frozen-rebuild byte identity pinned
+  // .splitIndex; merged-vs-frozen-rebuild byte identity pinned
   // in LayoutCatalogSpec). Search is the identical ADC tail as q286;
   // is_new flags freshly-ingested vectors in the top-5 — the
   // post-append check that new data is actually retrievable. The
@@ -2548,9 +2554,7 @@ object Vectors {
       val base = quantized(s, dir).filter(col("qn") > 0)
         .select("vec_id", "qv", "qn")
       val k = pqK(pqN(s, dir))
-      val (codes, cbt, cents) = graft.operators.IvfPq.incrementalIndex(
-        base, dir, col("vec_id") % 10 === 0, "d10", k, ivfTrainRounds,
-        ivfReplication)
+      val (codes, cbt, cents) = pqSplit(base, dir, d10Vecs, k)
       pqSearch(base, cents, codes, cbt, pqProbe(k))
         .withColumn("is_new", col("vec_id") % 10 === 0)
     }
@@ -2561,7 +2565,7 @@ object Vectors {
   // vector twin of q295). q289 exercises a single-delta split; here
   // the index has absorbed FIVE appends (days vec_id % 10 = 5..9
   // over a stable vec_id % 10 <= 4 archive) and crossed
-  // segmentedIndexFrom's maxSegments=4 compaction rung: centroids
+  // the LSM skeleton's fold rung of 4: centroids
   // and codebook trained ONCE on the archive and frozen, days 5..8's
   // code segments folded with the archive codes into one merged
   // artifact (bytes identical to a frozen-codebook rebuild —
@@ -2583,10 +2587,7 @@ object Vectors {
       val base = quantized(s, dir).filter(col("qn") > 0)
         .select("vec_id", "qv", "qn")
       val k = pqK(pqN(s, dir))
-      val (codes, cbt, cents) = graft.operators.IvfPq.segmentedIndexFrom(
-        base, dir, col("vec_id") % 10 <= 4,
-        (5 to 9).map(i => col("vec_id") % 10 === i), "c10",
-        k, ivfTrainRounds, ivfReplication)
+      val (codes, cbt, cents) = pqSplit(base, dir, c10Vecs, k)
       pqSearch(base, cents, codes, cbt, pqProbe(k))
         .withColumn("from_tail", col("vec_id") % 10 === 9)
     }
@@ -2648,8 +2649,8 @@ object Vectors {
         .select("vec_id", "qv", "qn")
       val k = pqK(pqN(s, dir))
       val (codes, cbt, cents, retrained) = graft.operators.IvfPq
-        .driftGatedIndex(base, dir, col("vec_id") % 10 === 0, "d10",
-          k, ivfTrainRounds, ivfReplication)
+        .driftGatedIndex(base, dir, d10Vecs, k, ivfTrainRounds,
+          ivfReplication)
       pqSearch(base, cents, codes, cbt, pqProbe(k))
         .withColumn("generation",
           lit(if (retrained) "retrained" else "frozen"))
@@ -2761,9 +2762,7 @@ object Vectors {
       val base = quantized(s, dir).filter(col("qn") > 0)
         .select("vec_id", "qv", "qn")
       val k = pqK(pqN(s, dir))
-      val pred = col("vec_id") % 10 === 0
-      val (codes, cbt, cents) = graft.operators.IvfPq.incrementalIndex(
-        base, dir, pred, "d10", k, ivfTrainRounds, ivfReplication)
+      val (codes, cbt, cents) = pqSplit(base, dir, d10Vecs, k)
       graft.operators.IvfPq.reconErrs(base, codes, cbt, cents)
         .agg(
           sum(when(col("vec_id") % 10 =!= 0, 1L).otherwise(0L)).as("n_arch"),

@@ -323,8 +323,7 @@ object StreamOps {
     // the shared salted Knuth arm hash (graft.Knuth, salt 7), middle
     // bits: (h div 1024) % 2 — identical to the batch assignment
     def hashArm(u: Long): Long =
-      if ((((u + 7L) % 2147483648L) * 2654435761L) % 4294967296L
-          / 1024L % 2L == 0L) 1L else 0L
+      if (graft.Knuth.scalar(u, 7L) / 1024L % 2L == 0L) 1L else 0L
     events
       .groupByKey(_ => 0)
       .flatMapGroupsWithState[ObfState, ObfRow](
@@ -482,15 +481,16 @@ object StreamOps {
     * arithmetic are byte-identical to q153's (same mix, same
     * (k−1)·2³² div h₍ₖ₎), so the parity is transitively oracle-backed.
     */
+  /** The user-id mix of q153/q162 (KMV and HLL): the salted Knuth word
+    * (salt 9176), then an xor-shift multiply finalizer. */
+  private def mix(u: Long): Long = {
+    val h0 = graft.Knuth.scalar(u, 9176L)
+    val h2 = ((h0 ^ (h0 / 65536)) * 1597334677L) % 4294967296L
+    h2 ^ (h2 / 8192)
+  }
+
   def kmvDistinct(events: Dataset[EventRow], k: Int = 64): Dataset[KmvSketch] = {
     import events.sparkSession.implicits._
-    def mix(u: Long): Long = {
-      // byte-identical to Knuth.col(_, 9176): input reduced mod 2^31
-      // before the multiply so the product never wraps 2^63
-      val h0 = (((u + 9176L) % 2147483648L) * 2654435761L) % 4294967296L
-      val h2 = ((h0 ^ (h0 / 65536)) * 1597334677L) % 4294967296L
-      h2 ^ (h2 / 8192)
-    }
     events
       .groupByKey(_.event_type)
       .mapGroupsWithState[Array[Long], KmvSketch](GroupStateTimeout.NoTimeout) {
@@ -534,11 +534,6 @@ object StreamOps {
     * distinguishes HLL from the KMV buffer's O(k) values. */
   def hllDistinct(events: Dataset[EventRow]): Dataset[HllSketch] = {
     import events.sparkSession.implicits._
-    def mix(u: Long): Long = {
-      val h0 = (((u + 9176L) % 2147483648L) * 2654435761L) % 4294967296L
-      val h2 = ((h0 ^ (h0 / 65536)) * 1597334677L) % 4294967296L
-      h2 ^ (h2 / 8192)
-    }
     events
       .groupByKey(_.event_type)
       .mapGroupsWithState[Array[Long], HllSketch](GroupStateTimeout.NoTimeout) {
@@ -824,7 +819,7 @@ object StreamOps {
   final case class Bm25Hit(g: String, doc_id: Long, tf: Long)
 
   /** The serving-node seed loaded from the DURABLE lexical index
-    * (TextIndex.archiveIndex) before the stream starts: global stats
+    * (the archive of a TextIndex split) before the stream starts: global stats
     * (`n` docs, `t` total bigrams) over the whole archive, the hot
     * posting lists of the query terms, and the doc lengths of every
     * document those lists reference. */
@@ -1098,8 +1093,41 @@ object StreamOps {
       }
   }
 
+  /** Content key of a micro-batch for idempotent segment publishes:
+    * one O(batch) aggregate over the id column's image
+    * (count/min/max/sum), hashed to 16 hex chars — a checkpoint
+    * replay of the same batch re-derives the same key; a different
+    * row set can never silently reuse an existing artifact. */
+  private def batchKey(batch: DataFrame, idCol: String): String = {
+    val sig = batch.agg(
+      count(lit(1)), min(col(idCol)), max(col(idCol)), sum(col(idCol))).head()
+    graft.operators.LayoutCatalog.hex16(
+      s"${sig.getLong(0)}|${sig.getLong(1)}|${sig.getLong(2)}|${sig.getLong(3)}")
+  }
+
+  /** The stateless segment-ingest sink shared by the three streaming
+    * index builders: each non-empty micro-batch `bid` publishes one
+    * segment via `publish(batch, bid, contentKey)` (the content key of
+    * the batch's `idCol` image), and the writer queues what each
+    * publish returns, in publish order. The caller starts the writer.
+    * Exactly-once = checkpoint batch-id fencing + the content-keyed
+    * idempotent publish. */
+  private def segmentIngest[T](in: DataFrame, idCol: String)(
+      publish: (DataFrame, Int, String) => T)
+      : (org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row],
+         java.util.concurrent.ConcurrentLinkedQueue[T]) = {
+    val published = new java.util.concurrent.ConcurrentLinkedQueue[T]()
+    val writer = in.writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: DataFrame, bid: Long) =>
+        if (!batch.isEmpty)
+          published.add(publish(batch, bid.toInt, batchKey(batch, idCol))): Unit
+      }
+    (writer, published)
+  }
+
   /** Streaming LSM segment INGEST — the streaming half of the batch
-    * append path ([[graft.operators.TextIndex.segmentedPostingsFrom]],
+    * append path ([[graft.operators.TextIndex.splitPostings]],
     * the 19th stream/batch parity): each arriving micro-batch of
     * (doc_id, text) documents is ONE delta, and the foreachBatch sink
     * publishes it as its own durable bucketed O(batch) segment
@@ -1109,7 +1137,7 @@ object StreamOps {
     * total file order), a stream that delivers the same documents in
     * the same micro-batch partitioning as a batch-side predicate
     * split produces segment artifacts BYTE-identical to
-    * segmentedPostingsFrom's, and the served view (archive ∪
+    * splitPostings', and the served view (archive ∪
     * published segments) is row-identical to the batch LSM view —
     * StreamBatchParitySpec pins both. The artifact key is a CONTENT
     * hash of the batch's doc_id set image (count/min/max/sum — one
@@ -1120,37 +1148,13 @@ object StreamOps {
     * checkpoint's batch-id fencing plus the idempotent publish.
     * Returns (configured writer, queue of published postings-table
     * names in publish order) — the caller starts the writer. */
-  /** Content key of a micro-batch for idempotent segment publishes:
-    * one O(batch) aggregate over the id column's image
-    * (count/min/max/sum), hashed to 16 hex chars — a checkpoint
-    * replay of the same batch re-derives the same key; a different
-    * row set can never silently reuse an existing artifact. */
-  private def batchKey(batch: DataFrame, idCol: String): String = {
-    val sig = batch.agg(
-      count(lit(1)), min(col(idCol)), max(col(idCol)), sum(col(idCol))).head()
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    md.digest(
-        s"${sig.getLong(0)}|${sig.getLong(1)}|${sig.getLong(2)}|${sig.getLong(3)}"
-          .getBytes("UTF-8"))
-      .take(8).map(b => f"${b & 0xff}%02x").mkString
-  }
-
   def lsmSegmentIngest(docs: DataFrame, dir: String, tag: String)
       : (org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row],
-         java.util.concurrent.ConcurrentLinkedQueue[String]) = {
-    val published = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val writer = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (!batch.isEmpty) {
-          val (name, _) = graft.operators.TextIndex.publishSegmentRows(
-            batch.sparkSession, dir, batch.select("doc_id", "text"),
-            tag, bid.toInt, batchKey(batch, "doc_id"))
-          published.add(name): Unit
-        }
-      }
-    (writer, published)
-  }
+         java.util.concurrent.ConcurrentLinkedQueue[String]) =
+    segmentIngest(docs, "doc_id") { (batch, i, key) =>
+      graft.operators.TextIndex.publishSegmentRows(batch.sparkSession, dir,
+        batch.select("doc_id", "text"), tag, i, key)._1
+    }
 
   /** Streaming POSITIONAL segment ingest — the phrase-index twin of
     * [[lsmSegmentIngest]] (the 24th stream/batch parity): each
@@ -1166,19 +1170,11 @@ object StreamOps {
     * fencing + the content-keyed idempotent publish. */
   def positionalSegmentIngest(docs: DataFrame, dir: String, tag: String)
       : (org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row],
-         java.util.concurrent.ConcurrentLinkedQueue[String]) = {
-    val published = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val writer = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (!batch.isEmpty) {
-          published.add(graft.operators.TextIndex.publishPositionalSegmentRows(
-            batch.sparkSession, dir, batch.select("doc_id", "text"),
-            tag, bid.toInt, batchKey(batch, "doc_id"))): Unit
-        }
-      }
-    (writer, published)
-  }
+         java.util.concurrent.ConcurrentLinkedQueue[String]) =
+    segmentIngest(docs, "doc_id") { (batch, i, key) =>
+      graft.operators.TextIndex.publishPositionalSegmentRows(
+        batch.sparkSession, dir, batch.select("doc_id", "text"), tag, i, key)
+    }
 
   /** Streaming PQ segment INGEST — the vector twin of
     * [[lsmSegmentIngest]] (the 20th stream/batch parity): each
@@ -1197,20 +1193,12 @@ object StreamOps {
       cbt: DataFrame, nCentroids: Int, rounds: Int, replication: Int,
       tag: String)
       : (org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row],
-         java.util.concurrent.ConcurrentLinkedQueue[java.io.File]) = {
-    val published = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
-    val writer = vecs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (!batch.isEmpty) {
-          published.add(graft.operators.IvfPq.publishCodeSegmentRows(
-            batch.select("vec_id", "qv", "qn"), dir, cents, cbt,
-            nCentroids, rounds, replication, tag, bid.toInt,
-            batchKey(batch, "vec_id"))): Unit
-        }
-      }
-    (writer, published)
-  }
+         java.util.concurrent.ConcurrentLinkedQueue[java.io.File]) =
+    segmentIngest(vecs, "vec_id") { (batch, i, key) =>
+      graft.operators.IvfPq.publishCodeSegmentRows(
+        batch.select("vec_id", "qv", "qn"), dir, cents, cbt,
+        nCentroids, rounds, replication, tag, i, key)
+    }
 
   def incrementalDedup(
       incoming: DataFrame,
@@ -1363,8 +1351,6 @@ object StreamOps {
     import incoming.sparkSession.implicits._
     def ctz(h: Long): Long =
       if (h == 0) 20L else java.lang.Long.numberOfTrailingZeros(h).toLong
-    def knuth(x: Long, salt: Long): Long =
-      (((x + salt) % 2147483648L) * 2654435761L) % 4294967296L
     incoming
       .groupByKey(_ => 0)
       .flatMapGroupsWithState[DpState, DpSnap](
@@ -1380,8 +1366,8 @@ object StreamOps {
           val st = DpState(st0.batch + 1, counts)
           state.update(st)
           counts.toSeq.sortBy(_._1).iterator.map { case (nation, n) =>
-            val noise = ctz(knuth(nation, 577L) % 1048576L) -
-              ctz(knuth(nation, 9241L) % 1048576L)
+            val noise = ctz(graft.Knuth.scalar(nation, 577L) % 1048576L) -
+              ctz(graft.Knuth.scalar(nation, 9241L) % 1048576L)
             DpSnap(st.batch, nation, n + noise, noise, 693L)
           }
       }

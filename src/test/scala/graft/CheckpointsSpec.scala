@@ -65,6 +65,34 @@ class CheckpointsSpec extends SparkSpec {
     } finally spark.conf.unset(Checkpoints.DirConf)
   }
 
+  test("spark.graft.checkpointDir reaches every materializing query: none leaves an executor-local checkpoint") {
+    // q149, q163 and q268 materialize their per-doc signature state.
+    // Under the reliable config that state must land in the configured
+    // directory like every other materialization; an executor-local
+    // checkpoint (persisted, checkpointed, no checkpoint file) is
+    // lost with its executor on a cluster.
+    val names = Seq("q149_minhash_calibration", "q163_neardup_eval",
+      "q268_threshold_curve")
+    val sf = "/root/testdata/sf0.001"
+    val sc = spark.sparkContext
+    val dir = Files.createTempDirectory("graft-ckpt-route").toString
+    spark.conf.set(Checkpoints.DirConf, dir)
+    try names.foreach { n =>
+      val before = sc.getPersistentRDDs.keySet
+      val df = SparkEntry.queries(n)(spark, sf)
+      val local = sc.getPersistentRDDs.collect {
+        case (id, rdd) if !before(id) && rdd.isCheckpointed &&
+            rdd.getCheckpointFile.isEmpty => id
+      }
+      // the registry of persisted RDDs holds them weakly: keep the
+      // built frame (and so its checkpointed RDDs) alive until here
+      java.lang.ref.Reference.reachabilityFence(df)
+      assert(local.isEmpty,
+        s"$n built ${local.size} executor-local checkpoint(s) under " +
+          Checkpoints.DirConf)
+    } finally spark.conf.unset(Checkpoints.DirConf)
+  }
+
   test("checkpointed registry queries are value-identical under both durability paths") {
     // The deploy-posture parity ask: every query whose plan runs
     // through Checkpoints.materialize must produce the same rows

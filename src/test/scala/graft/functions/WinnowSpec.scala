@@ -56,7 +56,6 @@ class WinnowSpec extends SparkSpec {
   }
 
   test("winnow registered for SQL use") {
-    graft.plans.GraftExtensions.register(spark)
     val r = spark.sql("SELECT winnow('abcdefghij') AS f").head().getSeq[Long](0)
     assert(r.nonEmpty && r === r.sorted)
     assert(spark.sql("SELECT winnow('abcdefghij', 3, 2) AS f")

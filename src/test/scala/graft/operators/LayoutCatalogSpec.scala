@@ -193,8 +193,8 @@ class LayoutCatalogSpec extends SparkSpec {
     // LSM append: doc_id % 10 == 0 is "today's batch"; the archive
     // indexes separately, the append writes ONLY the delta's own
     // segment artifact, and the view unions the two
-    val (inc, incDl) = TextIndex.incrementalPostings(spark, dir,
-      col("doc_id") % 10 === 0, "d10")
+    val (inc, incDl) = TextIndex.splitPostings(spark, dir,
+      graft.queries.Splits.d10("doc_id"))
     assert(inc.orderBy("doc_id", "g").collect().map(_.toSeq).toSeq == full,
       "the union view's rows must equal the from-scratch table")
     assert(incDl.orderBy("doc_id").collect().map(_.toSeq).toSeq ==
@@ -234,12 +234,12 @@ class LayoutCatalogSpec extends SparkSpec {
       .foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
     TextIndex.bigramPostings(spark, dir).queryExecution.toRdd.count()
     // four disjoint daily deltas (doc_id % 10 ∈ 0..3; archive = 4..9)
-    // reach the maxSegments=4 fold boundary → the oldest
-    // maxSegments-multiple (all four) compacts with the archive,
+    // reach the FoldRung=4 fold boundary → the oldest
+    // FoldRung-multiple (all four) compacts with the archive,
     // covering the FULL corpus
     val preds = (0 to 3).map(i => col("doc_id") % 10 === i)
-    val (view, viewDl) = TextIndex.segmentedPostings(
-      spark, dir, preds, "lsm", maxSegments = 4)
+    val (view, viewDl) = TextIndex.splitPostings(
+      spark, dir, LayoutCatalog.Split("lsm", !preds.reduce(_ || _), preds))
     assert(view.orderBy("doc_id", "g").collect().map(_.toSeq).toSeq ==
       TextIndex.bigramPostings(spark, dir)
         .orderBy("doc_id", "g").collect().map(_.toSeq).toSeq,
@@ -273,8 +273,8 @@ class LayoutCatalogSpec extends SparkSpec {
     val archPred = col("doc_id") % 10 >= 6
     def day(i: Int) = col("doc_id") % 10 === i
     // day 5 state: archive + days 0..4 → folded = 4, seg4 live
-    val (v5, _) = TextIndex.segmentedPostingsFrom(
-      spark, dir, archPred, (0 to 4).map(day), "ml", maxSegments = 4)
+    val (v5, _) = TextIndex.splitPostings(
+      spark, dir, LayoutCatalog.Split("ml", archPred, (0 to 4).map(day)))
     val expect5 = full.filter(col("doc_id") % 10 =!= 5)
     assert(v5.count() === expect5.count())
     assert(v5.count() ===
@@ -286,8 +286,8 @@ class LayoutCatalogSpec extends SparkSpec {
     // is the O(delta) append contract; pre-fix the archive keyed only
     // by tag and silently reused a row set that still CONTAINED day
     // 5's documents, double-counting them in the view)
-    val (v6, _) = TextIndex.segmentedPostingsFrom(
-      spark, dir, archPred, (0 to 5).map(day), "ml", maxSegments = 4)
+    val (v6, _) = TextIndex.splitPostings(
+      spark, dir, LayoutCatalog.Split("ml", archPred, (0 to 5).map(day)))
     assert(LayoutCatalog.buildsPublished.get() === before + 1,
       "appending one day must publish exactly one new artifact")
     assert(v6.orderBy("doc_id", "g").collect().map(_.toSeq).toSeq ==
@@ -352,8 +352,8 @@ class LayoutCatalogSpec extends SparkSpec {
     LayoutCatalog.reset()
     val base = pqBase(dir)
     val deltaPred = col("vec_id") % 10 === 0
-    val (codes, cbt, cents) = IvfPq.incrementalIndex(
-      base, dir, deltaPred, "d10", 8, 2, 3)
+    val (codes, cbt, cents) = IvfPq.splitIndex(
+      base, dir, LayoutCatalog.Split("d10", !deltaPred, Seq(deltaPred)), 8, 2, 3)
     // the view must cover BOTH sides of the append boundary
     assert(codes.filter(col("vec_id") % 10 === 0).count() > 0)
     assert(codes.filter(col("vec_id") % 10 =!= 0).count() > 0)
@@ -395,12 +395,12 @@ class LayoutCatalogSpec extends SparkSpec {
     val dir = corpus.getAbsolutePath
     LayoutCatalog.reset()
     val base = pqBase(dir)
-    // four disjoint daily deltas reach the maxSegments=4 fold
+    // four disjoint daily deltas reach the FoldRung=4 fold
     // boundary → the fold covers the full corpus
     val preds = (0 to 3).map(i => col("vec_id") % 10 === i)
     val anyDelta = preds.reduce(_ || _)
-    val (codes, _, cents) = IvfPq.segmentedIndex(
-      base, dir, preds, "lsm", 8, 2, 3, maxSegments = 4)
+    val (codes, _, cents) = IvfPq.splitIndex(
+      base, dir, LayoutCatalog.Split("lsm", !anyDelta, preds), 8, 2, 3)
     val kind = new File(LayoutCatalog.root, s"ivfpq_v${IvfPq.LayoutVersion}")
     val compDir = kind.listFiles()
       .filter(d => d.getName.contains("_lsm_compacted4_") &&
@@ -425,14 +425,14 @@ class LayoutCatalogSpec extends SparkSpec {
     val base = pqBase(dir)
     val archPred = col("vec_id") % 10 >= 6
     def day(i: Int) = col("vec_id") % 10 === i
-    val (v5, _, _) = IvfPq.segmentedIndexFrom(
-      base, dir, archPred, (0 to 4).map(day), "ml", 8, 2, 3, maxSegments = 4)
+    val (v5, _, _) = IvfPq.splitIndex(
+      base, dir, LayoutCatalog.Split("ml", archPred, (0 to 4).map(day)), 8, 2, 3)
     assert(v5.count() ===
       v5.select("vec_id", "centroid_id", "subspace").distinct().count(),
       "no (copy, subspace) may be coded twice in the view")
     val before = LayoutCatalog.buildsPublished.get()
-    val (v6, _, _) = IvfPq.segmentedIndexFrom(
-      base, dir, archPred, (0 to 5).map(day), "ml", 8, 2, 3, maxSegments = 4)
+    val (v6, _, _) = IvfPq.splitIndex(
+      base, dir, LayoutCatalog.Split("ml", archPred, (0 to 5).map(day)), 8, 2, 3)
     assert(LayoutCatalog.buildsPublished.get() === before + 1,
       "appending one day must publish exactly one new code segment")
     assert(v6.count() ===
@@ -523,6 +523,52 @@ class LayoutCatalogSpec extends SparkSpec {
     assert(warm == cold)
   }
 
+  test("split names: d10 and c10 publish the bigram, positional and IVF-PQ base names ingest has always published") {
+    // Expected suffixes copied from the directories a cold Ingest
+    // published at sf0.001 before splits moved behind LayoutCatalog
+    // (corpus base and fingerprint stripped). The 16-hex predicate
+    // keys repeat because LayoutCatalog.predKey hashes one constant
+    // per predicate (see its scaladoc); renaming any of these
+    // directories orphans every published LSM artifact.
+    import graft.queries.Splits
+    val dir = corpus.getAbsolutePath
+    val root = new File(scratch, "names")
+    sys.props("graft.layout.root") = root.getAbsolutePath
+    LayoutCatalog.reset()
+    try {
+      TextIndex.splitParts(spark, dir, Splits.d10("doc_id"))
+      TextIndex.splitParts(spark, dir, Splits.c10("doc_id"))
+      TextIndex.positionalSplit(spark, dir, Splits.c10("doc_id"))
+      val base = pqBase(dir)
+      IvfPq.splitIndex(base, dir, Splits.d10("vec_id"), 32, 2, 3)
+      IvfPq.splitIndex(base, dir, Splits.c10("vec_id"), 32, 2, 3)
+      val k = "16a77c893c21cf88"
+      val fold = "c10_compacted4_c317967c11d3c904"
+      val segs = (0 to 4).map(i => s"c10_seg${i}_$k")
+      val expected =
+        (Seq(s"d10_arch_$k", s"d10_seg0_$k", s"c10_arch_$k", fold) ++ segs)
+          .map(n => s"lexical_v3/_$n") ++
+        (s"c10_parch_$k" +: (0 to 4).map(i => s"c10_pseg${i}_$k"))
+          .map(n => s"positional_v1/_$n") ++
+        Seq(s"d10_arch_$k", s"c10_arch_$k")
+          .map(n => s"ivf_v1/_${n}_k32_r2_cos") ++
+        (Seq(s"d10_arch_$k", s"d10_seg0_$k", s"c10_arch_$k", fold) ++ segs)
+          .map(n => s"ivfpq_v2/_${n}_k32_r2_x3")
+      val suffix = "(_[dc]10_.*)_[0-9a-f]{16}".r.unanchored
+      val published = root.listFiles().toSeq.flatMap { kind =>
+        kind.listFiles().toSeq.map(_.getName)
+          .filterNot(_.startsWith(".tmp_")).collect {
+            case suffix(sfx) => s"${kind.getName}/$sfx"
+          }
+      }
+      assert(published.sorted == expected.sorted,
+        s"published: ${published.sorted}")
+    } finally {
+      sys.props("graft.layout.root") = new File(scratch, "root").getAbsolutePath
+      LayoutCatalog.reset()
+    }
+  }
+
   test("multi-generation retention: a rolled corpus snapshot retires every old-generation split artifact") {
     // compaction deliberately leaves superseded segments on disk
     // within a snapshot (concurrent readers of the pre-fold view must
@@ -539,10 +585,11 @@ class LayoutCatalogSpec extends SparkSpec {
     resetSession()
     val archPred = col("doc_id") % 10 >= 5
     def day(i: Int) = col("doc_id") % 10 === i
-    // five appends → past the maxSegments=4 fold: the generation is
+    // five appends → past the FoldRung=4 fold: the generation is
     // archive + seg0..4 + compacted4 = 7 artifacts
-    TextIndex.segmentedPostingsFrom(spark, dir, archPred,
-      (0 to 4).map(day), "mg")._1.queryExecution.toRdd.count()
+    TextIndex.splitPostings(spark, dir,
+      LayoutCatalog.Split("mg", archPred, (0 to 4).map(day)))._1
+      .queryExecution.toRdd.count()
     val kind = new File(LayoutCatalog.root,
       s"lexical_v${TextIndex.LayoutVersion}")
     def gen(): Set[String] = kind.listFiles().map(_.getName)
@@ -554,8 +601,9 @@ class LayoutCatalogSpec extends SparkSpec {
     val doc = new File(corpus, "documents.parquet")
     assert(doc.setLastModified(doc.lastModified() + 60000))
     resetSession()
-    TextIndex.segmentedPostingsFrom(spark, dir, archPred,
-      (0 to 4).map(day), "mg")._1.queryExecution.toRdd.count()
+    TextIndex.splitPostings(spark, dir,
+      LayoutCatalog.Split("mg", archPred, (0 to 4).map(day)))._1
+      .queryExecution.toRdd.count()
     val gen2 = gen()
     assert(gen2.size == 7, s"new generation fully re-derived: $gen2")
     assert(gen2.intersect(gen1).isEmpty,

@@ -55,6 +55,7 @@ class PqDriftSpec extends SparkSpec {
   }
 
   private val deltaPred = col("vec_id") % 10 === 0
+  private val split = LayoutCatalog.Split("drift", !deltaPred, Seq(deltaPred))
   private val N = 2000
   private val K = 64 // the √n ladder rung for n=2000
   private val Rounds = 2
@@ -169,15 +170,15 @@ class PqDriftSpec extends SparkSpec {
   test("control: i.i.d. delta keeps drift near 1000 permille — no retrain") {
     val dir = synthCorpus("plain", drifted = false)
     val base = baseOf(dir)
-    val (codes, cbt, cents) = IvfPq.incrementalIndex(
-      base, dir, deltaPred, "drift", K, Rounds, Repl)
+    val (codes, cbt, cents) = IvfPq.splitIndex(
+      base, dir, split, K, Rounds, Repl)
     val (archMean, deltaMean, drift) =
       IvfPq.driftStats(base, codes, cbt, cents, deltaPred)
     info(s"control corpus: archMean=$archMean deltaMean=$deltaMean drift=$drift‰")
     assert(drift <= 1500,
       s"an i.i.d. delta must not trip the retrain gate: $drift‰")
     val (_, _, _, retrained) = IvfPq.driftGatedIndex(
-      base, dir, deltaPred, "drift", K, Rounds, Repl)
+      base, dir, split, K, Rounds, Repl)
     assert(!retrained)
     // and the healthy index meets the recall floor outright
     val recall = recallAt5(base, cents, codes, cbt, bruteTop5(base))
@@ -191,8 +192,8 @@ class PqDriftSpec extends SparkSpec {
     val exact = bruteTop5(base)
     assert(exact.size === N / 10)
 
-    val (codes, cbt, cents) = IvfPq.incrementalIndex(
-      base, dir, deltaPred, "drift", K, Rounds, Repl)
+    val (codes, cbt, cents) = IvfPq.splitIndex(
+      base, dir, split, K, Rounds, Repl)
     val (archMean, deltaMean, drift) =
       IvfPq.driftStats(base, codes, cbt, cents, deltaPred)
     info(s"drifted corpus: archMean=$archMean deltaMean=$deltaMean drift=$drift‰")
@@ -203,7 +204,7 @@ class PqDriftSpec extends SparkSpec {
     info(f"frozen-codebook recall@5 = $frozenRecall%.3f")
 
     val (c2, cb2, ce2, retrained) = IvfPq.driftGatedIndex(
-      base, dir, deltaPred, "drift", K, Rounds, Repl)
+      base, dir, split, K, Rounds, Repl)
     assert(retrained, "driftGatedIndex must retrain past the gate")
     val retrainedRecall = recallAt5(base, ce2, c2, cb2, exact)
     info(f"retrained recall@5 = $retrainedRecall%.3f")

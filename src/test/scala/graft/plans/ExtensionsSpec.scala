@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 class ExtensionsSpec extends SparkSpec {
 
   test("minhash_signature usable from SQL after registration") {
-    GraftExtensions.register(spark)
     val sig = spark.sql(
       "SELECT minhash_signature('sparkling analytics engine') AS sig")
       .head().getSeq[String](0)
@@ -19,7 +18,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("minhash_k, simhash16 and jaccard3 usable from SQL after registration") {
-    GraftExtensions.register(spark)
     val sig = spark.sql("SELECT minhash_k('sparkling analytics engine', 6) AS s")
       .head().getSeq[String](0)
     assert(sig.length === 6)
@@ -36,7 +34,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("round-4 kernels usable from SQL after registration") {
-    GraftExtensions.register(spark)
     val mf = spark.sql("SELECT minhash_fast('sparkling analytics engine', 6) AS s")
       .head().getSeq[Long](0)
     assert(mf.length === 6)
@@ -63,7 +60,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("gram_codes3 and sorted_intersect_count usable from SQL after registration") {
-    GraftExtensions.register(spark)
     // "abcd" → grams abc, bcd → sorted distinct injective codes
     val gc = spark.sql("SELECT gram_codes3('abcd') AS g")
       .head().getSeq[Long](0)
@@ -77,7 +73,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("jaccard5w and sorted_intersect_count_str usable from SQL after registration") {
-    GraftExtensions.register(spark)
     // identical 5-token texts: one shared 5-gram, jaccard 1.0
     val j = spark.sql(
       "SELECT jaccard5w('a b c d e', 'a b c d e') AS j").head().getStruct(0)
@@ -96,14 +91,12 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("payload_sig usable from SQL after registration") {
-    GraftExtensions.register(spark)
     // 'aaaa': every sample reads 'a' (97 div 32 = class 3) → 64·128³
     val pk = spark.sql("SELECT payload_sig('aaaa') AS p").head().getLong(0)
     assert(pk === 64L * (1L << 21))
   }
 
   test("minhash_k matches a builtin-function replay of the same math") {
-    GraftExtensions.register(spark)
     val docs = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .filter(length(col("text")) >= 3)
     val replay = (0 until 4).map(j =>

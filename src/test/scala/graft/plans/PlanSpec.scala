@@ -940,17 +940,53 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  /** Shrink test of the unpartitioned-window sweep: does a shrinking
+    * node (aggregate or limit) sit on `p`'s streamed lineage?
+    * ReusedExchangeExec is a leaf whose referenced exchange holds the
+    * real subtree (exchange reuse would otherwise HIDE the shrinking
+    * aggregate, as it does in q180) — recurse through it. Walk only
+    * the NON-BROADCAST lineage: an aggregate/limit on a broadcast
+    * branch (a one-row stats attach feeding the window via a join)
+    * must NOT attest the frame as shrunk — the corpus branch could
+    * still reach the window unaggregated, which is exactly the
+    * scale-killer the sweep exists to catch. Broadcast subtrees are
+    * pruned (return false) so only the streamed lineage can attest. */
+  private def shrunk(p: SparkPlan): Boolean = p match {
+    case _: HashAggregateExec => true
+    case _: ObjectHashAggregateExec => true
+    case _: org.apache.spark.sql.execution.aggregate.SortAggregateExec => true
+    case _: TakeOrderedAndProjectExec => true
+    case _: org.apache.spark.sql.execution.GlobalLimitExec => true
+    case _: org.apache.spark.sql.execution.LocalLimitExec => true
+    case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
+      shrunk(r.child)
+    case _: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec =>
+      false
+    case n => n.children.exists(shrunk)
+  }
+
+  /** ONE static plan per registered query, shared by both global
+    * sweeps: (name, has a CartesianProductExec, has an unpartitioned
+    * WindowExec with no shrinking node beneath it). Only names and
+    * booleans are kept — no plan outlives its row — so the checkpoint
+    * blocks a plan references are never pinned by the sweep. */
+  private lazy val registrySweep: Seq[(String, Boolean, Boolean)] =
+    SparkEntry.allQueries.map { q =>
+      val p = plan(q.name)
+      (q.name,
+        p.collect { case j: CartesianProductExec => j }.nonEmpty,
+        p.collect {
+          case w: WindowExec if w.partitionSpec.isEmpty && !shrunk(w.child) => w
+        }.nonEmpty)
+    }
+
   test("global sweep: no unbounded cartesian product in ANY registered query plan") {
     // CartesianProductExec is the catastrophic plan shape (m×n rows
     // with no broadcast bound) — assert it appears in none of the
     // registered queries' static plans. Broadcast nested-loop joins
     // (one-row stats attaches, bounded by the broadcast side) are
     // allowed; true cartesians are not.
-    val offenders = SparkEntry.allQueries.flatMap { q =>
-      val p = plan(q.name)
-      if (p.collect { case j: CartesianProductExec => j }.nonEmpty) Some(q.name)
-      else None
-    }
+    val offenders = registrySweep.collect { case (n, true, _) => n }
     assert(offenders.isEmpty, s"cartesian products in: $offenders")
   }
 
@@ -960,34 +996,10 @@ class PlanSpec extends SparkSpec {
     // shape before its two-phase rewrite). An unpartitioned window is
     // acceptable ONLY when its input frame was already shrunk below
     // corpus size — an aggregate (value-/bucket-space table) or a
-    // limit sits between the window and every scan. Sweep every
-    // registered query's static plan; any WindowExec with an empty
-    // partitionSpec must have a shrinking node beneath it, or be on
-    // the explicit whitelist with a justification.
-    // ReusedExchangeExec is a leaf whose referenced exchange holds the
-    // real subtree (exchange reuse would otherwise HIDE the shrinking
-    // aggregate, as it does in q180) — recurse through it.
-    // Walk only the NON-BROADCAST lineage: an aggregate/limit on a
-    // broadcast branch (a one-row stats attach feeding the window via
-    // a join) must NOT attest the frame as shrunk — the corpus branch
-    // could still reach the window unaggregated, which is exactly the
-    // scale-killer this sweep exists to catch. Broadcast subtrees are
-    // pruned (return false) so only the streamed lineage can attest.
-    def shrunk(p: SparkPlan): Boolean = p match {
-      case _: HashAggregateExec => true
-      case _: ObjectHashAggregateExec => true
-      case _: org.apache.spark.sql.execution.aggregate.SortAggregateExec => true
-      case _: TakeOrderedAndProjectExec => true
-      case _: org.apache.spark.sql.execution.GlobalLimitExec => true
-      case _: org.apache.spark.sql.execution.LocalLimitExec => true
-      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
-        shrunk(r.child)
-      case _: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec =>
-        false
-      case n => n.children.exists(shrunk)
-    }
-    def shrunkBeneath(w: org.apache.spark.sql.execution.window.WindowExec): Boolean =
-      shrunk(w.child)
+    // limit sits between the window and every scan ([[shrunk]]). Sweep
+    // every registered query's static plan; any WindowExec with an
+    // empty partitionSpec must have a shrinking node beneath it, or be
+    // on the explicit whitelist with a justification.
     // Justified sites where the shrink is not visible as a plan node
     // beneath the window (each audited by hand):
     val whitelist: Map[String, String] = Map(
@@ -997,13 +1009,8 @@ class PlanSpec extends SparkSpec {
       // attest; the corpus window is the partitioned phase-1 one.
       "q121_skyline" -> "phase-2 input is phase-1 local-skyline survivors"
     )
-    val offenders = SparkEntry.allQueries.flatMap { q =>
-      val p = plan(q.name)
-      val bad = p.collect {
-        case w: org.apache.spark.sql.execution.window.WindowExec
-            if w.partitionSpec.isEmpty && !shrunkBeneath(w) => w
-      }
-      if (bad.nonEmpty && !whitelist.contains(q.name)) Some(q.name) else None
+    val offenders = registrySweep.collect {
+      case (n, _, true) if !whitelist.contains(n) => n
     }
     assert(offenders.isEmpty,
       s"unpartitioned corpus-frame windows in: $offenders")
@@ -1556,7 +1563,7 @@ class PlanSpec extends SparkSpec {
     val p = plan("q295_lsm_compacted_bm25")
     assert(p.collect { case c: CartesianProductExec => c }.isEmpty,
       s"q295 must not cartesian:\n$p")
-    // past the maxSegments=4 fold boundary the view is the COMPACTED
+    // past the fold rung of 4 the view is the COMPACTED
     // artifact ∪ the day-9 tail segment — exactly two bucketed scans
     // (a view that still unioned five raw segments, or re-read the
     // archive beside the fold, would show more); the term IN-list

@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Path}
 
 import graft.{SparkSpec, SparkEntry, Tables}
+import graft.operators.LayoutCatalog.Split
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -907,8 +908,8 @@ class StreamBatchParitySpec extends SparkSpec {
 
     // seed the serving state from the DURABLE archive artifact: the
     // query terms' posting lists, their docs' lengths, archive N/T
-    val (archTf, archDl) = graft.operators.TextIndex.archiveIndex(
-      spark, sf, col("doc_id") % 10 === 0, "d10")
+    val Seq((archTf, archDl)) = graft.operators.TextIndex.splitParts(
+      spark, sf, graft.queries.Splits.d10("doc_id").copy(deltaPreds = Nil))
     val hits = archTf.filter(col("g").isin(qt.map(_._2): _*)).collect()
       .map(r => StreamOps.Bm25Hit(r.getString(1), r.getLong(0), r.getLong(2)))
       .toSeq
@@ -1020,8 +1021,8 @@ class StreamBatchParitySpec extends SparkSpec {
     // the incrementally-maintained index (q289's artifact at this SF:
     // ladder k=32): frozen archive-trained centroids + codebook,
     // merged codes byte-pinned in LayoutCatalogSpec
-    val (codes, cbt, cents) = graft.operators.IvfPq.incrementalIndex(
-      base, sf, col("vec_id") % 10 === 0, "d10", 32, 2, 3)
+    val (codes, cbt, cents) = graft.operators.IvfPq.splitIndex(
+      base, sf, graft.queries.Splits.d10("vec_id"), 32, 2, 3)
 
     // the q287 errs chain over any codes subset — the batch replay
     // every streamed snapshot is held against
@@ -1112,8 +1113,8 @@ class StreamBatchParitySpec extends SparkSpec {
       .withColumn("qn", graft.functions.VecMath.qdot(col("qv"), col("qv")))
       .filter(col("qn") > 0)
       .select("vec_id", "qv", "qn")
-    val (codes, cbt, cents) = graft.operators.IvfPq.incrementalIndex(
-      base, sf, col("vec_id") % 10 === 0, "d10", 32, 2, 3)
+    val (codes, cbt, cents) = graft.operators.IvfPq.splitIndex(
+      base, sf, graft.queries.Splits.d10("vec_id"), 32, 2, 3)
     // archive per-copy error profile seeds from the durable artifact —
     // the batch arithmetic every streamed snapshot is held against
     val errs = graft.operators.IvfPq.reconErrs(base, codes, cbt, cents)
@@ -1277,13 +1278,13 @@ class StreamBatchParitySpec extends SparkSpec {
     assert(segNames.length === 3, s"one segment per micro-batch: $segNames")
 
     // batch twin: the same three deltas as predicates over the same
-    // stable archive (3 < maxSegments — no fold; the fold rung is
+    // stable archive (3 < FoldRung — no fold; the fold rung is
     // q295's oracle-gated territory)
     val preds = parts.map(ids => col("doc_id").isin(ids.toSeq: _*))
-    val (batchView, _) = graft.operators.TextIndex.segmentedPostingsFrom(
-      spark, sf, col("doc_id") % 10 =!= 0, preds, "st19b")
-    val (arch, _) = graft.operators.TextIndex.archiveIndex(
-      spark, sf, col("doc_id") % 10 === 0, "st19s")
+    val (batchView, _) = graft.operators.TextIndex.splitPostings(
+      spark, sf, Split("st19b", col("doc_id") % 10 =!= 0, preds))
+    val Seq((arch, _)) = graft.operators.TextIndex.splitParts(
+      spark, sf, Split("st19s", !(col("doc_id") % 10 === 0), Nil))
     val streamedView = (arch +: segNames.map(spark.table))
       .reduce(_ unionByName _)
     val sv = streamedView.orderBy("doc_id", "g").collect().map(_.toSeq).toSeq
@@ -1335,8 +1336,9 @@ class StreamBatchParitySpec extends SparkSpec {
     // the single-delta batch view is the row-truth twin AND the
     // source of the frozen archive-trained geometry the serving tier
     // pins (q289's contract)
-    val (batchView, cbt, cents) = graft.operators.IvfPq.incrementalIndex(
-      base, sf, col("vec_id") % 10 === 0, "p20d", k, rounds, repl)
+    val (batchView, cbt, cents) = graft.operators.IvfPq.splitIndex(
+      base, sf, Split("p20d", !(col("vec_id") % 10 === 0),
+        Seq(col("vec_id") % 10 === 0)), k, rounds, repl)
 
     // today's embeddings arrive across 3 consecutive-id micro-batches
     val deltaIds = base.filter(col("vec_id") % 10 === 0)
@@ -1385,8 +1387,8 @@ class StreamBatchParitySpec extends SparkSpec {
     // same micro-batch partitioning (deterministic 32-way ordered
     // writer ⇒ bytes are a pure function of the row set)
     val preds = parts.map(ids => col("vec_id").isin(ids.toSeq: _*))
-    graft.operators.IvfPq.segmentedIndexFrom(base, sf,
-      col("vec_id") % 10 =!= 0, preds, "p20c", k, rounds, repl)
+    graft.operators.IvfPq.splitIndex(base, sf,
+      Split("p20c", col("vec_id") % 10 =!= 0, preds), k, rounds, repl)
       ._1.queryExecution.toRdd.count()
     val kind = new java.io.File(graft.operators.LayoutCatalog.root,
       s"ivfpq_v${graft.operators.IvfPq.LayoutVersion}")
@@ -1450,8 +1452,8 @@ class StreamBatchParitySpec extends SparkSpec {
     val segNames = published.asScala.toSeq
     assert(segNames.length === 3, s"one segment per micro-batch: $segNames")
 
-    val arch = graft.operators.TextIndex.positionalArchive(
-      spark, sf, col("doc_id") % 10 =!= 0, "st24")
+    val arch = graft.operators.TextIndex.positionalSplit(
+      spark, sf, Split("st24", col("doc_id") % 10 =!= 0, Nil))
     val toks = (arch +: segNames.map(spark.table)).reduce(_ unionByName _)
 
     // q303's matcher over the served view, phrase selected exactly as
