@@ -8,7 +8,6 @@ import scala.util.Try
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graftbridge.Bridge
 
 /** Durable, corpus-snapshot-keyed home for layout artifacts, and the
   * ONE resolve path every artifact-backed operator goes through: the
@@ -173,16 +172,15 @@ object LayoutCatalog {
     * with N deltas folds its oldest N − N % FoldRung segments. */
   val FoldRung = 4
 
-  /** Content key of a predicate list (16 hex chars over the
-    * expressions' `.sql` forms). Split-artifact names embed it so two
-    * different splits are meant to resolve to different artifacts.
-    * Caveat, pinned by LayoutCatalogSpec: a Spark 4 `Column` converts
-    * to an unresolved `ColumnNodeExpression` whose `.sql` is the
-    * constant `columnnodeexpression()`, so today the key depends on
-    * the list's LENGTH only — the tag, the segment index and the fold
-    * count are what actually tell split artifacts apart. */
+  /** Content key of a predicate list: 16 hex chars over each
+    * predicate's `Column.toString`, which renders the whole expression
+    * tree (`!(=(%(doc_id, 10), 0))`). Split-artifact names embed it, so
+    * two different predicates resolve to two artifacts. Neither the
+    * converted expression's `.sql` (the constant
+    * `columnnodeexpression()`) nor a canonicalized analyzed expression
+    * (which renders the column as `none`) tells predicates apart. */
   private def predKey(preds: Seq[Column]): String =
-    hex16(preds.map(c => Bridge.expression(c).sql).mkString("|"))
+    hex16(preds.map(_.toString).mkString("|"))
 
   /** One LSM split of a corpus: the stable ARCHIVE (rows matching
     * `archPred`) plus one delta SEGMENT per predicate in `deltaPreds`,

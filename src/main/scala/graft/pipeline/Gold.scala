@@ -10,8 +10,13 @@ import org.apache.spark.sql.functions._
   * The reference's DELETE + INSERT idempotency on the DuckDB history
   * table (gold.py:100-113) maps to a dynamic INSERT OVERWRITE of the
   * ingestion_date partition — same end state, one operation. Its four
-  * per-run re-reads of the history table (gold.py:118-178) collapse to
-  * one cached run-slice that feeds the three rollups and four exports.
+  * per-run re-reads of the history table (gold.py:118-178) are not
+  * needed: the slice it writes IS the base counts, so the history
+  * write, the three rollups and the four exports all derive from one
+  * `baseCounts` frame (SURVEY §3.3's "compute G1 once"). It stays
+  * uncached: a cached frame keeps all its shuffle partitions (Spark
+  * does not let a cached plan's output partitioning change), so the
+  * history slice would be written as one file per partition.
   */
 object Gold {
 
@@ -38,57 +43,44 @@ object Gold {
     base.groupBy("brewery_type")
       .agg(sum("brewery_count").as("brewery_count"))
 
-  private def writeGold(df: DataFrame, dest: String,
-      partitionBy: Seq[String]): Unit = {
-    val w = df.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .option("compression", "snappy")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(dest)
-  }
-
-  /** Full gold stage; returns the base export dir (gold.py:180). */
+  /** Full gold stage; returns the base export dir (gold.py:180).
+    *
+    * Silver is read with its declared schema: an inferred one types a
+    * partition column whose values all look numeric (state `01`) as
+    * `int`, so the code would not reach gold as written. Every export
+    * leaf directory holds exactly one row (its grouping keys are its
+    * partition keys), so the writes carry no sort; the run views keep
+    * the reference's ordered shape at no job cost. */
   def aggregate(spark: SparkSession, settings: Settings,
       ingestionDate: String): String = {
-    val silver = spark.read.parquet(settings.silverDir(ingestionDate))
+    val silver = spark.read.schema(Schemas.silver)
+      .parquet(settings.silverDir(ingestionDate))
     val base = baseCounts(silver)
 
     // History partition: dynamic overwrite of this run's slice
     // (D2 ≡ DELETE+INSERT, gold.py:100-113).
     base.withColumn("ingestion_date", to_date(lit(ingestionDate)))
-      .select("ingestion_date", "country", "state", "brewery_type", "brewery_count")
+      .select(Schemas.goldHistory.fieldNames.toSeq.map(col): _*)
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("ingestion_date")
       .parquet(settings.warehouseTableDir)
 
-    // Re-read this run's slice from the warehouse (partition-pruned scan,
-    // F3) and cache it — it feeds all four exports.
-    val run = spark.read.parquet(settings.warehouseTableDir)
-      .filter(col("ingestion_date") === to_date(lit(ingestionDate)))
-      .select("country", "state", "brewery_type", "brewery_count")
-      .cache()
-    try {
-      val baseDir = settings.goldBaseDir(ingestionDate)
-
-      val finest = run.orderBy("country", "state", "brewery_type")
-      writeGold(finest, s"$baseDir/by_country_state_type",
-        Seq("country", "state", "brewery_type"))
-      finest.createOrReplaceTempView("v_gold_by_country_state_type_run")
-
-      val ct = byCountryType(run).orderBy("country", "brewery_type")
-      writeGold(ct, s"$baseDir/by_country_type", Seq("country", "brewery_type"))
-      ct.createOrReplaceTempView("v_gold_by_country_type_run")
-
-      val st = byStateType(run).orderBy("state", "brewery_type")
-      writeGold(st, s"$baseDir/by_state_type", Seq("state", "brewery_type"))
-      st.createOrReplaceTempView("v_gold_by_state_type_run")
-
-      val ty = byType(run).orderBy("brewery_type")
-      writeGold(ty, s"$baseDir/by_type", Seq("brewery_type"))
-      ty.createOrReplaceTempView("v_gold_by_type_run")
-
-      baseDir
-    } finally run.unpersist()
+    val baseDir = settings.goldBaseDir(ingestionDate)
+    Seq(
+      "country_state_type" -> base,
+      "country_type" -> byCountryType(base),
+      "state_type" -> byStateType(base),
+      "type" -> byType(base)).foreach { case (grain, frame) =>
+      val keys = frame.columns.toSeq.filterNot(_ == "brewery_count")
+      frame.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .option("compression", "snappy")
+        .partitionBy(keys: _*)
+        .parquet(s"$baseDir/by_$grain")
+      frame.orderBy(keys.map(col): _*)
+        .createOrReplaceTempView(s"v_gold_by_${grain}_run")
+    }
+    baseDir
   }
 }

@@ -4,7 +4,7 @@ import java.time.LocalDate
 
 import org.apache.spark.sql.SparkSession
 
-/** Sequential medallion orchestration with per-stage retry —
+/** Sequential medallion orchestration with per-stage retry and timing —
   * bronze → silver → gold → quality
   * (/root/reference/app/pipeline.py:10-29; task retries
   * /root/reference/app/tasks/extract.py:29, silver.py:5, gold.py:44).
@@ -36,20 +36,29 @@ object Pipeline {
       ingestionDate: Option[String] = None,
       retryDelayMs: Long = 5000): RunReport = {
     val d = ingestionDate.getOrElse(LocalDate.now().toString)
+    /** Runs one stage under `retry`, then logs `<name>_done` with the
+      * stage's fields and its wall seconds (retries included). */
+    def stage[A](name: String, attempts: Int)(f: => A)(
+        fields: A => Seq[(String, Any)]): A = {
+      val t0 = System.nanoTime()
+      val out = retry(attempts, retryDelayMs)(f)
+      val seconds = (System.nanoTime() - t0) / 1e9
+      Log.info(s"${name}_done", ("ingestion_date" -> d) +: fields(out) :+
+        ("seconds" -> "%.3f".formatLocal(java.util.Locale.ROOT, seconds)): _*)
+      out
+    }
     Log.info("pipeline_start", "ingestion_date" -> d)
-    val (pages, records) =
-      retry(3, retryDelayMs)(Bronze.ingest(spark, settings, source, d))
-    Log.info("bronze_done", "ingestion_date" -> d,
-      "pages" -> pages, "records" -> records)
-    val silverRows =
-      retry(3, retryDelayMs)(Silver.transform(spark, settings, d))
-    Log.info("silver_done", "ingestion_date" -> d, "rows" -> silverRows)
-    val goldBase =
-      retry(3, retryDelayMs)(Gold.aggregate(spark, settings, d))
-    Log.info("gold_done", "ingestion_date" -> d, "base_dir" -> goldBase)
-    val checks = Quality.run(spark, settings, d)
-    Log.info("quality_done", "ingestion_date" -> d,
-      "checks" -> checks.size, "failed" -> checks.count(!_.passed))
+    val (pages, records) = stage("bronze", 3)(
+      Bronze.ingest(spark, settings, source, d)) {
+      case (p, r) => Seq("pages" -> p, "records" -> r)
+    }
+    val silverRows = stage("silver", 3)(
+      Silver.transform(spark, settings, d))(n => Seq("rows" -> n))
+    val goldBase = stage("gold", 3)(
+      Gold.aggregate(spark, settings, d))(dir => Seq("base_dir" -> dir))
+    val checks = stage("quality", 1)(Quality.run(spark, settings, d)) { cs =>
+      Seq("checks" -> cs.size, "failed" -> cs.count(!_.passed))
+    }
     RunReport(d, pages, records, silverRows, goldBase, checks)
   }
 }

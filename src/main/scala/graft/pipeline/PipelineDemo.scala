@@ -35,7 +35,8 @@ object PipelineDemo {
     println(s"[demo] pages=${report.pages} records=${report.records} " +
       s"silverRows=${report.silverRows} checksPassed=${report.allChecksPassed}")
     println(s"[demo] warehouse slice:")
-    spark.read.parquet(settings.warehouseTableDir).show(20, truncate = false)
+    spark.read.schema(Schemas.goldHistory).parquet(settings.warehouseTableDir)
+      .show(20, truncate = false)
     println(s"[demo] gold exports: " +
       new java.io.File(report.goldBaseDir).list().sorted.mkString(", "))
     spark.stop()

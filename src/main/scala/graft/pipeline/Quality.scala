@@ -181,8 +181,9 @@ object Quality {
         s"${ds.path}/$GoldDataset"
       }
       .getOrElse(settings.warehouseTableDir)
-    val silver = spark.read.parquet(settings.silverDir(ingestionDate))
-    val gold = spark.read.parquet(warehouseDir)
+    val silver = spark.read.schema(Schemas.silver)
+      .parquet(settings.silverDir(ingestionDate))
+    val gold = spark.read.schema(Schemas.goldHistory).parquet(warehouseDir)
       .filter(col("ingestion_date") === to_date(lit(ingestionDate)))
     evaluate(silver, suites.getOrElse(SilverDataset, silverSuite)) ++
       evaluate(gold, suites.getOrElse(GoldDataset, goldSuite))

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   *   - the dedup survivor is canonical (ordered by every column), where
   *     the reference's ORDER BY id inside an id-partition is a constant
   *     and therefore nondeterministic (silver.py:37-41);
-  *   - the cleaned frame is cached so write + count are one scan, where
-  *     the reference re-executes the whole CTE for COUNT(*)
+  *   - the row count is observed on the write itself, where the
+  *     reference re-executes the whole CTE for COUNT(*)
   *     (silver.py:61-73).
   */
 object Silver {
@@ -63,14 +63,13 @@ object Silver {
     val raw = spark.read.schema(Schemas.bronze)
       .option("multiLine", "true")
       .json(s"${settings.bronzeDir(ingestionDate)}/*.json")
-    val silver = cleanDedupEnforce(raw).cache()
-    try {
-      silver.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", "snappy")
-        .partitionBy("country", "state")
-        .parquet(settings.silverDir(ingestionDate))
-      silver.count()
-    } finally silver.unpersist()
+    val rows = Observation()
+    cleanDedupEnforce(raw).observe(rows, count(lit(1)).as("rows"))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .option("compression", "snappy")
+      .partitionBy("country", "state")
+      .parquet(settings.silverDir(ingestionDate))
+    rows.get("rows").asInstanceOf[Long]
   }
 }

@@ -524,12 +524,12 @@ class LayoutCatalogSpec extends SparkSpec {
   }
 
   test("split names: d10 and c10 publish the bigram, positional and IVF-PQ base names ingest has always published") {
-    // Expected suffixes copied from the directories a cold Ingest
-    // published at sf0.001 before splits moved behind LayoutCatalog
-    // (corpus base and fingerprint stripped). The 16-hex predicate
-    // keys repeat because LayoutCatalog.predKey hashes one constant
-    // per predicate (see its scaladoc); renaming any of these
-    // directories orphans every published LSM artifact.
+    // Expected suffixes of the directories a cold Ingest publishes at
+    // sf0.001 (corpus base and fingerprint stripped). Each 16-hex key
+    // is LayoutCatalog.predKey of the split's predicates, so one
+    // predicate over doc_id and over vec_id keys differently, and the
+    // positional family shares the bigram family's keys. Renaming any
+    // of these directories orphans every published LSM artifact.
     import graft.queries.Splits
     val dir = corpus.getAbsolutePath
     val root = new File(scratch, "names")
@@ -542,18 +542,29 @@ class LayoutCatalogSpec extends SparkSpec {
       val base = pqBase(dir)
       IvfPq.splitIndex(base, dir, Splits.d10("vec_id"), 32, 2, 3)
       IvfPq.splitIndex(base, dir, Splits.c10("vec_id"), 32, 2, 3)
-      val k = "16a77c893c21cf88"
-      val fold = "c10_compacted4_c317967c11d3c904"
-      val segs = (0 to 4).map(i => s"c10_seg${i}_$k")
+      // doc_id keys (bigram and positional postings)
+      val (dArch, dSeg, cArch) =
+        ("b24b10cdad17af12", "6bd1831b1de3f50e", "c86a194ea00722a1")
+      val cSegs = Seq("91deaeaebdf00b3d", "f1761a30f10d80d1",
+        "ac132cd319a8c5f8", "0d9fbd79c7b5c200", "d041ee2d42d27010")
+      val cFold = "c10_compacted4_cfa2015a44747b42"
+      // vec_id keys (IVF centroids and IVF-PQ codes)
+      val (vdArch, vdSeg, vcArch) =
+        ("5b858d018d124b1d", "4aa38e5b3657c3aa", "e6a156eba1e04601")
+      val vcSegs = Seq("f2b54aca65be3fef", "746fbddc640d5058",
+        "b35498ed10b1e0e2", "3debf3add4f3bdde", "eec3e5e5272a5f37")
+      val vcFold = "c10_compacted4_55bca73d326559f6"
+      def segs(infix: String, keys: Seq[String]) =
+        keys.zipWithIndex.map { case (k, i) => s"c10_${infix}seg${i}_$k" }
       val expected =
-        (Seq(s"d10_arch_$k", s"d10_seg0_$k", s"c10_arch_$k", fold) ++ segs)
-          .map(n => s"lexical_v3/_$n") ++
-        (s"c10_parch_$k" +: (0 to 4).map(i => s"c10_pseg${i}_$k"))
+        (Seq(s"d10_arch_$dArch", s"d10_seg0_$dSeg", s"c10_arch_$cArch", cFold) ++
+          segs("", cSegs)).map(n => s"lexical_v3/_$n") ++
+        (s"c10_parch_$cArch" +: segs("p", cSegs))
           .map(n => s"positional_v1/_$n") ++
-        Seq(s"d10_arch_$k", s"c10_arch_$k")
+        Seq(s"d10_arch_$vdArch", s"c10_arch_$vcArch")
           .map(n => s"ivf_v1/_${n}_k32_r2_cos") ++
-        (Seq(s"d10_arch_$k", s"d10_seg0_$k", s"c10_arch_$k", fold) ++ segs)
-          .map(n => s"ivfpq_v2/_${n}_k32_r2_x3")
+        (Seq(s"d10_arch_$vdArch", s"d10_seg0_$vdSeg", s"c10_arch_$vcArch", vcFold) ++
+          segs("", vcSegs)).map(n => s"ivfpq_v2/_${n}_k32_r2_x3")
       val suffix = "(_[dc]10_.*)_[0-9a-f]{16}".r.unanchored
       val published = root.listFiles().toSeq.flatMap { kind =>
         kind.listFiles().toSeq.map(_.getName)
@@ -567,6 +578,18 @@ class LayoutCatalogSpec extends SparkSpec {
       sys.props("graft.layout.root") = new File(scratch, "root").getAbsolutePath
       LayoutCatalog.reset()
     }
+  }
+
+  test("split keys: different predicates name different artifacts; one predicate built twice names one") {
+    import LayoutCatalog.Split
+    val (p, q) = (col("doc_id") % 10 <= 4, !(col("doc_id") % 10 === 0))
+    assert(Split("t", p, Nil).archive("") !== Split("t", q, Nil).archive(""))
+    assert(Split("t", p, Seq(q)).segment("", 0) !==
+      Split("t", p, Seq(col("doc_id") % 10 === 0)).segment("", 0))
+    assert(Split("t", p, Seq.fill(4)(q)).fold !==
+      Split("t", q, Seq.fill(4)(p)).fold)
+    assert(Split("t", col("doc_id") % 10 <= 4, Nil).archive("") ===
+      Split("t", p, Nil).archive(""))
   }
 
   test("multi-generation retention: a rolled corpus snapshot retires every old-generation split artifact") {

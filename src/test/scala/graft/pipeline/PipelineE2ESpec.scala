@@ -3,7 +3,9 @@ package graft.pipeline
 import java.nio.file.Files
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** End-to-end medallion run on an injected page source with dirty rows
   * (FIXTURES.md A); covers S1–S4, K1–K5, P*, F*, W1, G1–G7, D1–D3. */
@@ -42,6 +44,27 @@ class PipelineE2ESpec extends SparkSpec {
     goldPrefix = "gold-layer", warehouseRoot = s"$root/warehouse",
     apiUrl = "http://unused", perPage = 3)
 
+  /** This run's warehouse slice, read with its declared schema. */
+  private def warehouseSlice(st: Settings, d: String): DataFrame =
+    spark.read.schema(Schemas.goldHistory).parquet(st.warehouseTableDir)
+      .filter(col("ingestion_date") === to_date(lit(d)))
+
+  /** One gold export, read with its keys typed as strings (an inferred
+    * schema would type numeric-looking partition values as ints). */
+  private def goldExport(st: Settings, d: String, grain: String,
+      keys: Seq[String]): DataFrame =
+    spark.read.schema(StructType(StructField("brewery_count", LongType) +:
+      keys.map(StructField(_, StringType))))
+      .parquet(s"${st.goldBaseDir(d)}/by_$grain")
+
+  /** (keys, brewery_count) rows, sorted by keys. */
+  private def rowsOf(df: DataFrame, keys: Seq[String]): Seq[(Seq[String], Long)] = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    df.collect().toSeq
+      .map(r => keys.map(r.getAs[String]) -> r.getAs[Long]("brewery_count"))
+      .sortBy(_._1)
+  }
+
   test("full pipeline: dirty pages → silver rows → gold counts; rerun idempotent") {
     val root = Files.createTempDirectory("graft-e2e").toString
     val st = settings(root)
@@ -75,9 +98,24 @@ class PipelineE2ESpec extends SparkSpec {
     assert(counts(("US", "TX", "micro")) === 1)
     assert(counts.values.sum === 5)
 
-    // exports exist at all four grains
-    val byType = spark.read.parquet(s"${st.goldBaseDir(d)}/by_type")
-    assert(byType.agg(sum("brewery_count")).head().getLong(0) === 5)
+    // each of the four exports is the matching rollup of the warehouse
+    // slice, and each run view returns its export's rows in key order
+    val slice = warehouseSlice(st, d).drop("ingestion_date")
+    val grains = Seq[(String, DataFrame => DataFrame)](
+      "country_state_type" -> identity, "country_type" -> Gold.byCountryType,
+      "state_type" -> Gold.byStateType, "type" -> Gold.byType)
+    for ((grain, rollup) <- grains) {
+      val expected = rollup(slice)
+      val keys = expected.columns.toSeq.filterNot(_ == "brewery_count")
+      val exported = rowsOf(goldExport(st, d, grain, keys), keys)
+      assert(exported === rowsOf(expected, keys), grain)
+      val view = spark.table(s"v_gold_by_${grain}_run")
+      assert(view.collect().map(r => keys.map(r.getAs[String])).toSeq ===
+        exported.map(_._1), s"v_gold_by_${grain}_run")
+      assert(rowsOf(view, keys) === exported, s"v_gold_by_${grain}_run")
+    }
+    assert(rowsOf(goldExport(st, d, "type", Seq("brewery_type")),
+      Seq("brewery_type")).map(_._2).sum === 5)
 
     // idempotent rerun: same end state, no duplication (D1/D2)
     val report2 = Pipeline.run(spark, st, FakeSource, Some(d), retryDelayMs = 0)
@@ -91,6 +129,68 @@ class PipelineE2ESpec extends SparkSpec {
     Pipeline.run(spark, st, FakeSource, Some(d2), retryDelayMs = 0)
     val allHist = spark.read.parquet(st.warehouseTableDir)
     assert(allHist.select("ingestion_date").distinct().count() === 2)
+  }
+
+  test("numeric-looking state codes reach gold as written, not as ints") {
+    // silver partitions by state; an inferred read of state=01 would
+    // type the column int and turn "01" into "1"
+    object CodedSource extends Bronze.PageSource {
+      override def fetch(page: Int, perPage: Int): Bronze.Page =
+        if (page > 1) Bronze.Page("[]", 0, None)
+        else Bronze.Page("""[
+          {"id":"n1","name":"A","brewery_type":"micro","country":"BR","state":"01"},
+          {"id":"n2","name":"B","brewery_type":"micro","country":"BR","state":"02"},
+          {"id":"n3","name":"C","brewery_type":"nano","country":"BR","state":"01"}]""", 3, None)
+    }
+    val root = Files.createTempDirectory("graft-codes").toString
+    val st = settings(root)
+    val d = "2026-01-19"
+    val report = Pipeline.run(spark, st, CodedSource, Some(d), retryDelayMs = 0)
+    assert(report.silverRows === 3)
+    assert(report.allChecksPassed, report.checks.toString)
+    val keys = Seq("country", "state", "brewery_type")
+    val expected = Seq(Seq("BR", "01", "micro") -> 1L,
+      Seq("BR", "01", "nano") -> 1L, Seq("BR", "02", "micro") -> 1L)
+    assert(rowsOf(warehouseSlice(st, d), keys) === expected)
+    assert(rowsOf(goldExport(st, d, "country_state_type", keys), keys) === expected)
+  }
+
+  test("every stage logs <stage>_done with its wall seconds") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("pipeline-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        lines.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      .getLogger("graft.pipeline")
+    val level = logger.getLevel
+    logger.addAppender(appender)
+    logger.setLevel(Level.INFO)
+    try {
+      val root = Files.createTempDirectory("graft-log").toString
+      Pipeline.run(spark, settings(root), FakeSource, Some("2026-01-20"),
+        retryDelayMs = 0)
+    } finally {
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+      appender.stop()
+    }
+    val seconds = """.* seconds=(\d+\.\d{3})""".r
+    for (stage <- Seq("bronze", "silver", "gold", "quality")) {
+      val done = lines.toArray.map(_.toString)
+        .filter(_.startsWith(s"event=${stage}_done "))
+      assert(done.length === 1, s"$stage: $lines")
+      done.head match {
+        case seconds(v) => assert(v.toDouble > 0, done.head)
+        case other => fail(s"no seconds field: $other")
+      }
+    }
   }
 
   test("file-driven quality suite: conf/quality-checks.yml replays the in-code checks") {

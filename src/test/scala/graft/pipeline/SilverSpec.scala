@@ -3,6 +3,9 @@ package graft.pipeline
 import graft.SparkSpec
 import org.apache.spark.sql.Row
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 /** Silver cleaning semantics on dirty rows — every rule from
@@ -73,5 +76,25 @@ class SilverSpec extends SparkSpec {
     // canonical survivor: ordered by all non-id columns → Alpha/CA
     val row = out.head()
     assert(row.getString(1) === "Alpha" && row.getString(4) === "CA")
+  }
+
+  test("transform: a day whose rows are all rejected counts 0 without blocking") {
+    val root = java.nio.file.Files.createTempDirectory("graft-silver-empty")
+    val st = Settings(lakeRoot = s"$root/lake", bronzePrefix = "b",
+      silverPrefix = "s", goldPrefix = "g", warehouseRoot = s"$root/wh",
+      apiUrl = "http://unused", perPage = 3)
+    val d = "2026-03-01"
+    val bronze = java.nio.file.Paths.get(st.bronzeDir(d))
+    java.nio.file.Files.createDirectories(bronze)
+    // blank name, no country, latitude out of range: nothing survives
+    java.nio.file.Files.write(bronze.resolve("page_1.json"),
+      """[{"id":"r1","name":" ","country":"US","state":"CA"},
+        |{"id":"r2","name":"B","state":"CA"},
+        |{"id":"r3","name":"C","country":"US","state":"CA","latitude":"91"}]"""
+        .stripMargin.getBytes("UTF-8"))
+    // Observation.get waits for the write's metrics; a plan that drops
+    // them would hang here, so the call runs under a timeout
+    val rows = Await.result(Future(Silver.transform(spark, st, d)), 120.seconds)
+    assert(rows === 0L)
   }
 }

@@ -1281,8 +1281,9 @@ class StreamBatchParitySpec extends SparkSpec {
     // stable archive (3 < FoldRung — no fold; the fold rung is
     // q295's oracle-gated territory)
     val preds = parts.map(ids => col("doc_id").isin(ids.toSeq: _*))
+    val batchSplit = Split("st19b", col("doc_id") % 10 =!= 0, preds)
     val (batchView, _) = graft.operators.TextIndex.splitPostings(
-      spark, sf, Split("st19b", col("doc_id") % 10 =!= 0, preds))
+      spark, sf, batchSplit)
     val Seq((arch, _)) = graft.operators.TextIndex.splitParts(
       spark, sf, Split("st19s", !(col("doc_id") % 10 === 0), Nil))
     val streamedView = (arch +: segNames.map(spark.table))
@@ -1312,7 +1313,9 @@ class StreamBatchParitySpec extends SparkSpec {
       .filterNot(_.getName.startsWith(".tmp_"))
     (0 until 3).foreach { i =>
       val sd = pub.find(_.getName.contains(s"_st19s_seg${i}_"))
-      val bd = pub.find(_.getName.contains(s"_st19b_seg${i}_"))
+      // the batch segment this split resolved (a catalog that outlived
+      // an earlier split key may hold other st19b segment generations)
+      val bd = pub.find(_.getName.contains(s"_${batchSplit.segment("", i)}_"))
       assert(sd.isDefined && bd.isDefined,
         s"segment $i artifacts must exist: ${pub.map(_.getName).toSeq}")
       val sb = bucketBytes(sd.get)
@@ -1387,8 +1390,8 @@ class StreamBatchParitySpec extends SparkSpec {
     // same micro-batch partitioning (deterministic 32-way ordered
     // writer ⇒ bytes are a pure function of the row set)
     val preds = parts.map(ids => col("vec_id").isin(ids.toSeq: _*))
-    graft.operators.IvfPq.splitIndex(base, sf,
-      Split("p20c", col("vec_id") % 10 =!= 0, preds), k, rounds, repl)
+    val batchSplit = Split("p20c", col("vec_id") % 10 =!= 0, preds)
+    graft.operators.IvfPq.splitIndex(base, sf, batchSplit, k, rounds, repl)
       ._1.queryExecution.toRdd.count()
     val kind = new java.io.File(graft.operators.LayoutCatalog.root,
       s"ivfpq_v${graft.operators.IvfPq.LayoutVersion}")
@@ -1405,7 +1408,9 @@ class StreamBatchParitySpec extends SparkSpec {
     val pub = Option(kind.listFiles()).getOrElse(Array.empty)
       .filterNot(_.getName.startsWith(".tmp_"))
     (0 until 3).foreach { i =>
-      val bd = pub.find(_.getName.contains(s"_p20c_seg${i}_"))
+      // the batch segment this split resolved (a catalog that outlived
+      // an earlier split key may hold other p20c segment generations)
+      val bd = pub.find(_.getName.contains(s"_${batchSplit.segment("", i)}_"))
       assert(bd.isDefined,
         s"batch split segment $i must exist: ${pub.map(_.getName).toSeq}")
       val sb = codeBytes(segDirs(i))
