@@ -16,7 +16,10 @@ import org.apache.spark.sql.functions._
   *     and therefore nondeterministic (silver.py:37-41);
   *   - the row count is observed on the write itself, where the
   *     reference re-executes the whole CTE for COUNT(*)
-  *     (silver.py:61-73).
+  *     (silver.py:61-73);
+  *   - the date's directory is overwritten whole (static overwrite):
+  *     it holds this date alone, and a (country, state) leaf that a
+  *     re-run no longer produces must go, or gold counts its rows twice.
   */
 object Silver {
 
@@ -66,7 +69,7 @@ object Silver {
     val rows = Observation()
     cleanDedupEnforce(raw).observe(rows, count(lit(1)).as("rows"))
       .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
+      .option("partitionOverwriteMode", "static")
       .option("compression", "snappy")
       .partitionBy("country", "state")
       .parquet(settings.silverDir(ingestionDate))

@@ -65,6 +65,21 @@ class PipelineE2ESpec extends SparkSpec {
       .sortBy(_._1)
   }
 
+  /** Asserts that each of the four exports equals the
+    * `groupBy(keys).sum` rollup of the warehouse slice, and returns each
+    * grain's keys and exported rows. */
+  private def exportsMatchSlice(st: Settings,
+      d: String): Seq[(String, Seq[String], Seq[(Seq[String], Long)])] = {
+    val slice = warehouseSlice(st, d)
+    Gold.grains.map { case (grain, keys) =>
+      val expected = slice.groupBy(keys.map(col): _*)
+        .agg(sum("brewery_count").as("brewery_count"))
+      val exported = rowsOf(goldExport(st, d, grain, keys), keys)
+      assert(exported === rowsOf(expected, keys), grain)
+      (grain, keys, exported)
+    }
+  }
+
   test("full pipeline: dirty pages → silver rows → gold counts; rerun idempotent") {
     val root = Files.createTempDirectory("graft-e2e").toString
     val st = settings(root)
@@ -100,15 +115,7 @@ class PipelineE2ESpec extends SparkSpec {
 
     // each of the four exports is the matching rollup of the warehouse
     // slice, and each run view returns its export's rows in key order
-    val slice = warehouseSlice(st, d).drop("ingestion_date")
-    val grains = Seq[(String, DataFrame => DataFrame)](
-      "country_state_type" -> identity, "country_type" -> Gold.byCountryType,
-      "state_type" -> Gold.byStateType, "type" -> Gold.byType)
-    for ((grain, rollup) <- grains) {
-      val expected = rollup(slice)
-      val keys = expected.columns.toSeq.filterNot(_ == "brewery_count")
-      val exported = rowsOf(goldExport(st, d, grain, keys), keys)
-      assert(exported === rowsOf(expected, keys), grain)
+    for ((grain, keys, exported) <- exportsMatchSlice(st, d)) {
       val view = spark.table(s"v_gold_by_${grain}_run")
       assert(view.collect().map(r => keys.map(r.getAs[String])).toSeq ===
         exported.map(_._1), s"v_gold_by_${grain}_run")
@@ -153,6 +160,36 @@ class PipelineE2ESpec extends SparkSpec {
       Seq("BR", "01", "nano") -> 1L, Seq("BR", "02", "micro") -> 1L)
     assert(rowsOf(warehouseSlice(st, d), keys) === expected)
     assert(rowsOf(goldExport(st, d, "country_state_type", keys), keys) === expected)
+  }
+
+  test("re-running a date drops the silver and gold leaves it no longer produces") {
+    /** One short page per run: run 1 puts s1 alone in (US, CA); run 2
+      * re-lists s1 with a smaller name and state OR, so the canonical
+      * dedup (bronze keeps both pages) moves it to (US, OR). */
+    final class RunSource(body: String) extends Bronze.PageSource {
+      override def fetch(page: Int, perPage: Int): Bronze.Page =
+        if (page > 1) Bronze.Page("[]", 0, None) else Bronze.Page(body, 2, None)
+    }
+    val first = new RunSource("""[
+      {"id":"s1","name":"Tau","brewery_type":"micro","country":"US","state":"CA"},
+      {"id":"s2","name":"Kappa","brewery_type":"nano","country":"US","state":"TX"}]""")
+    val second = new RunSource("""[
+      {"id":"s1","name":"Alpha","brewery_type":"micro","country":"US","state":"OR"},
+      {"id":"s2","name":"Kappa","brewery_type":"nano","country":"US","state":"TX"}]""")
+    val root = Files.createTempDirectory("graft-stale").toString
+    val st = settings(root)
+    val d = "2026-01-21"
+    Pipeline.run(spark, st, first, Some(d), retryDelayMs = 0)
+    val report = Pipeline.run(spark, st, second, Some(d), retryDelayMs = 0)
+    assert(report.silverRows === 2)
+    assert(report.allChecksPassed, report.checks.toString)
+
+    val silver = spark.read.schema(Schemas.silver).parquet(st.silverDir(d))
+    assert(silver.count() === 2, "a stale silver leaf survived the re-run")
+    assert(silver.filter(col("id") === "s1").head().getAs[String]("state") === "OR")
+    val slice = warehouseSlice(st, d)
+    assert(slice.agg(sum("brewery_count")).head().getLong(0) === 2)
+    exportsMatchSlice(st, d)
   }
 
   test("every stage logs <stage>_done with its wall seconds") {

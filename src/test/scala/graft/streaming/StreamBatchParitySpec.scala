@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Path}
 
 import graft.{SparkSpec, SparkEntry, Tables}
+import graft.operators.LayoutCatalog
 import graft.operators.LayoutCatalog.Split
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -17,6 +18,23 @@ import org.apache.spark.sql.streaming.Trigger
 class StreamBatchParitySpec extends SparkSpec {
 
   private val gapUs = 1800000000L // 30 minutes, matching q23/q24
+
+  /** Runs `body` on a layout catalog root of its own, so both sides of
+    * a byte comparison are published by this JVM: a default catalog that
+    * outlived an earlier run may hold one side, and parquet footers
+    * differ across JVMs. */
+  private def withScratchCatalog[A](body: => A): A = {
+    val root = Files.createTempDirectory("graft-parity-catalog").toFile
+    val previous = sys.props.get("graft.layout.root")
+    sys.props("graft.layout.root") = root.getAbsolutePath
+    LayoutCatalog.reset()
+    try body finally {
+      previous.fold(sys.props.remove("graft.layout.root"))(
+        sys.props.put("graft.layout.root", _))
+      LayoutCatalog.reset()
+      LayoutCatalog.deleteRecursively(root)
+    }
+  }
 
   /** Stages `events` as chronologically-ordered source files: the real
     * rows (`copies` times — an at-least-once feed when > 1), then one
@@ -1239,7 +1257,7 @@ class StreamBatchParitySpec extends SparkSpec {
     }
   }
 
-  test("streaming LSM segment ingest publishes byte-identical segments; the served view equals batch segmentedPostingsFrom") {
+  test("streaming LSM segment ingest publishes byte-identical segments; the served view equals batch segmentedPostingsFrom")(withScratchCatalog {
     import scala.jdk.CollectionConverters._
     val sf = "/root/testdata/sf0.001"
     val docs = Tables.load(spark, sf, "documents").select("doc_id", "text")
@@ -1322,9 +1340,9 @@ class StreamBatchParitySpec extends SparkSpec {
       assert(sb.nonEmpty && sb == bucketBytes(bd.get),
         s"segment $i bucket bytes must match the batch predicate split")
     }
-  }
+  })
 
-  test("streaming PQ segment ingest publishes byte-identical code segments; the served view equals the batch LSM index") {
+  test("streaming PQ segment ingest publishes byte-identical code segments; the served view equals the batch LSM index")(withScratchCatalog {
     import scala.jdk.CollectionConverters._
     val sf = "/root/testdata/sf0.001"
     val base = Tables.load(spark, sf, "embeddings")
@@ -1418,7 +1436,7 @@ class StreamBatchParitySpec extends SparkSpec {
           sb == codeBytes(new java.io.File(bd.get, "codes")),
         s"code segment $i bytes must match the batch predicate split")
     }
-  }
+  })
 
   test("streaming positional segment ingest serves phrase search equal to batch q303") {
     // the 24th parity — the POSITIONAL index's LSM read path: today's
