@@ -23,9 +23,12 @@ import scala.jdk.CollectionConverters._
   * table (gold.py:100-113) maps to a dynamic INSERT OVERWRITE of the
   * ingestion_date partition: same end state, one operation. Its four
   * per-run re-reads of the history table (gold.py:118-178) are not
-  * needed, because the slice it writes IS the base grain. Each export
-  * directory belongs to this date alone, so it is overwritten whole
-  * (static overwrite): a leaf that a re-run no longer produces goes.
+  * needed, because the slice it writes IS the base grain. The date's
+  * export directory belongs to this date alone, so it is replaced whole
+  * ([[Pipeline.replaceDir]]): a leaf that a re-run no longer produces
+  * goes, and a re-run that fails keeps the earlier exports. The slice is
+  * written after the four exports are staged and before they replace
+  * the old ones, so a failed export leaves the slice as it was.
   */
 object Gold {
 
@@ -77,28 +80,30 @@ object Gold {
     val silver = spark.read.schema(Schemas.silver)
       .parquet(settings.silverDir(ingestionDate))
     val baseDir = settings.goldBaseDir(ingestionDate)
-    for ((grain, keys, rows) <- counts(silver)) {
+    val frames = counts(silver).map { case (grain, keys, rows) =>
       val schema = StructType(keys.map(StructField(_, StringType, nullable = false)) :+
         StructField("brewery_count", LongType, nullable = false))
-      val frame = spark.createDataFrame(rows.asJava, schema).coalesce(1)
-      if (keys == dims) {
-        // History partition: dynamic overwrite of this run's slice
-        // (D2 ≡ DELETE+INSERT, gold.py:100-113).
-        frame.withColumn("ingestion_date", to_date(lit(ingestionDate)))
-          .select(Schemas.goldHistory.fieldNames.toSeq.map(col): _*)
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingestion_date")
-          .parquet(settings.warehouseTableDir)
-      }
-      frame.write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .option("compression", "snappy")
-        .partitionBy(keys: _*)
-        .parquet(s"$baseDir/by_$grain")
+      (grain, keys, spark.createDataFrame(rows.asJava, schema).coalesce(1))
+    }
+    Pipeline.replaceDir(spark, baseDir) { dir =>
+      for ((grain, keys, frame) <- frames)
+        frame.write.option("compression", "snappy")
+          .partitionBy(keys: _*)
+          .parquet(s"$dir/by_$grain")
+      // History partition from the base grain (the first in grains):
+      // dynamic overwrite of this run's slice (D2 ≡ DELETE+INSERT,
+      // gold.py:100-113).
+      val (_, _, base) = frames.head
+      base.withColumn("ingestion_date", to_date(lit(ingestionDate)))
+        .select(Schemas.goldHistory.fieldNames.toSeq.map(col): _*)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("ingestion_date")
+        .parquet(settings.warehouseTableDir)
+    }
+    for ((grain, keys, frame) <- frames)
       frame.orderBy(keys.map(col): _*)
         .createOrReplaceTempView(s"v_gold_by_${grain}_run")
-    }
     baseDir
   }
 }

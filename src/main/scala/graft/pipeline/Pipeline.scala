@@ -1,7 +1,9 @@
 package graft.pipeline
 
+import java.io.IOException
 import java.time.LocalDate
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Sequential medallion orchestration with per-stage retry and timing —
@@ -31,6 +33,25 @@ object Pipeline {
         Thread.sleep(delayMs)
         retry(attempts - 1, delayMs)(f)
     }
+
+  /** Replaces `dir`, a directory that holds one date alone, with what
+    * `write` commits into a fresh hidden sibling (`.<name>.staging`,
+    * which Spark's file listing skips). Only after `write` returns is
+    * `dir` deleted and the sibling renamed over it. So a re-run drops
+    * the leaves it no longer produces, and a re-run that fails leaves the
+    * earlier output in place; a leftover sibling is cleared by the next
+    * run. A crash between the delete and the rename leaves `dir` missing
+    * and its complete replacement beside it. */
+  def replaceDir(spark: SparkSession, dir: String)(write: String => Unit): Unit = {
+    val target = new Path(dir)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staged = new Path(target.getParent, s".${target.getName}.staging")
+    fs.delete(staged, true)
+    write(staged.toString)
+    fs.delete(target, true)
+    if (!fs.rename(staged, target))
+      throw new IOException(s"could not rename $staged to $target")
+  }
 
   def run(spark: SparkSession, settings: Settings, source: Bronze.PageSource,
       ingestionDate: Option[String] = None,

@@ -17,9 +17,11 @@ import org.apache.spark.sql.functions._
   *   - the row count is observed on the write itself, where the
   *     reference re-executes the whole CTE for COUNT(*)
   *     (silver.py:61-73);
-  *   - the date's directory is overwritten whole (static overwrite):
-  *     it holds this date alone, and a (country, state) leaf that a
-  *     re-run no longer produces must go, or gold counts its rows twice.
+  *   - the date's directory is replaced whole
+  *     ([[Pipeline.replaceDir]]): it holds this date alone, and a
+  *     (country, state) leaf that a re-run no longer produces must go,
+  *     or gold counts its rows twice. A re-run that fails keeps the
+  *     earlier silver, which the warehouse slice still counts.
   */
 object Silver {
 
@@ -67,12 +69,12 @@ object Silver {
       .option("multiLine", "true")
       .json(s"${settings.bronzeDir(ingestionDate)}/*.json")
     val rows = Observation()
-    cleanDedupEnforce(raw).observe(rows, count(lit(1)).as("rows"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "static")
-      .option("compression", "snappy")
-      .partitionBy("country", "state")
-      .parquet(settings.silverDir(ingestionDate))
+    Pipeline.replaceDir(spark, settings.silverDir(ingestionDate)) { dir =>
+      cleanDedupEnforce(raw).observe(rows, count(lit(1)).as("rows"))
+        .write.option("compression", "snappy")
+        .partitionBy("country", "state")
+        .parquet(dir)
+    }
     rows.get("rows").asInstanceOf[Long]
   }
 }

@@ -48,9 +48,6 @@ object SparkSessionFactory {
     // library amortizes by construction). Sized to hold the whole
     // registry's generated classes; caches CODE, never data.
     "spark.sql.codegen.cache.maxEntries" -> "10000",
-    // sets local file modes in-process instead of forking a chmod per
-    // file and directory when libhadoop is absent (NioLocalFileSystem)
-    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
     "spark.sql.extensions" -> "graft.plans.GraftExtensions")
 
   /** Core count for [[local]]: `SPARK_GRAFT_CPUS` when set, else the

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
@@ -190,6 +190,34 @@ class PipelineE2ESpec extends SparkSpec {
     val slice = warehouseSlice(st, d)
     assert(slice.agg(sum("brewery_count")).head().getLong(0) === 2)
     exportsMatchSlice(st, d)
+  }
+
+  test("a re-run that fails mid-write keeps the date's earlier silver and gold") {
+    val root = Files.createTempDirectory("graft-failed-rerun").toString
+    val st = settings(root)
+    val d = "2026-01-22"
+    val report = Pipeline.run(spark, st, FakeSource, Some(d), retryDelayMs = 0)
+    def silverRows = spark.read.schema(Schemas.silver).parquet(st.silverDir(d)).count()
+    assert(silverRows === report.silverRows)
+    val exports = exportsMatchSlice(st, d)
+
+    // two tasks: one commits its file, the other throws
+    val failing = spark.range(0, 2, 1, 2).select(
+      when(col("id") === 1, raise_error(lit("injected"))).otherwise(col("id")).as("id"))
+    for (dir <- Seq(st.silverDir(d), st.goldBaseDir(d)))
+      intercept[Exception](Pipeline.replaceDir(spark, dir)(failing.write.parquet(_)))
+    assert(silverRows === report.silverRows, "the failed re-run removed silver")
+    assert(exportsMatchSlice(st, d) === exports, "the failed re-run changed gold")
+
+    // the next run clears the failed run's staging dirs and replaces both
+    val again = Pipeline.run(spark, st, FakeSource, Some(d), retryDelayMs = 0)
+    assert(again.silverRows === report.silverRows)
+    assert(silverRows === report.silverRows)
+    assert(exportsMatchSlice(st, d) === exports)
+    for (dir <- Seq(st.silverDir(d), st.goldBaseDir(d))) {
+      val target = Paths.get(dir)
+      assert(!Files.exists(target.resolveSibling(s".${target.getFileName}.staging")), dir)
+    }
   }
 
   test("every stage logs <stage>_done with its wall seconds") {

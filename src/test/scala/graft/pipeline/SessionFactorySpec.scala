@@ -82,41 +82,6 @@ class SessionFactorySpec extends SparkSpec {
     assert(hc.get("fs.s3a.path.style.access") === "true")
   }
 
-  test("file: paths resolve to NioLocalFileSystem: Hadoop's modes, .crc files and partitioned parquet hold") {
-    import java.nio.file.{Files, Paths}
-    import java.nio.file.attribute.PosixFilePermissions
-    import org.apache.hadoop.fs.Path
-    import org.apache.hadoop.fs.permission.FsPermission
-    val dir = Files.createTempDirectory("graft-fs")
-    // a FileSystem cached before the session was built would win here:
-    // the cache key ignores the conf
-    val fs = new Path(dir.toUri).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.getClass === classOf[NioLocalFileSystem])
-    def mode(p: Path) =
-      PosixFilePermissions.toString(Files.getPosixFilePermissions(Paths.get(p.toUri)))
-    val leaf = new Path(s"${dir.toUri}/a/b")
-    assert(fs.mkdirs(leaf))
-    val file = new Path(leaf, "f.txt")
-    val out = fs.create(file)
-    try out.write(1) finally out.close()
-    // Hadoop's defaults under its default umask 022
-    assert(mode(leaf.getParent) === "rwxr-xr-x")
-    assert(mode(leaf) === "rwxr-xr-x")
-    assert(mode(file) === "rw-r--r--")
-    assert(mode(new Path(leaf, ".f.txt.crc")) === "rw-r--r--")
-    fs.setPermission(file, new FsPermission("640"))
-    assert(mode(file) === "rw-r-----")
-
-    import spark.implicits._
-    val rows = Seq(("US", "CA", 1L), ("US", "01", 2L), ("DE", "BY", 3L))
-    rows.toDF("country", "state", "n").write
-      .partitionBy("country", "state").parquet(s"$dir/pq")
-    val back = spark.read.schema("n BIGINT, country STRING, state STRING")
-      .parquet(s"$dir/pq").as[(Long, String, String)].collect()
-      .map { case (n, c, st) => (c, st, n) }.sorted.toSeq
-    assert(back === rows.sorted)
-  }
-
   test("retry propagates fatal errors immediately but retries non-fatal ones") {
     var calls = 0
     val out = Pipeline.retry(3, delayMs = 0) {
