@@ -3,324 +3,13 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries.{Cleaning, Curation, Events, Graph, Layout, Matching, Multimodal, Relational, TextOps, Vectors}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query registry `queries`, its DuckDB oracles `oracleSql`, and
+  * the flagship `entry` (SURVEY.md §7).
   *
-  * Query registry layout:
-  *   q01–q20 graft.queries.Relational — scans/filters/projections/joins/
-  *            windows/aggregations/rollup/set-ops/top-k (SURVEY §2.3–§2.8)
-  *   q21–q25 graft.queries.Events     — JSON column ops, time windows,
-  *            sessionization (SURVEY §7.5)
-  *   q26–q34 graft.queries.TextOps    — dedup/fingerprint/MinHash/SimHash/
-  *            Jaccard/token/quality/language ops
-  *   q36–q39 graft.queries.Vectors    — cosine top-k, LSH buckets,
-  *            embedding near-dup
-  *   q50–q53 graft.queries.Cleaning   — the reference pipeline's operator
-  *            semantics (P*, W1, G1, G2) replayed on the test tables
-  *   q55–q56 graft.queries.Multimodal — binary columns + frame sampling
-  *   q67–q74 graft.queries.Curation   — split/shard, contamination,
-  *            simhash near-dup, PII redaction, repetition filter,
-  *            stratified sampling, chunk windows, corpus mixing
-  *   q75–q77 graft.queries.Matching   — blocked fuzzy (edit-distance)
-  *            matching, inverted-index sparse tf-idf cosine,
-  *            bloom-prefiltered semi join
-  *   q78–q79 graft.queries.Curation   — bigram-LM quality scoring,
-  *            per-source cap
-  *   q80     graft.queries.Layout     — z-order clustering key
-  *   q81     graft.queries.TextOps    — tokenizer vocabulary induction
-  *   q82     graft.queries.Curation   — concat-and-chunk sequence packing
-  *   q83     graft.queries.TextOps    — exact substring-span dedup
-  *   q84     graft.queries.Multimodal — nearest-neighbor resize (stub codec)
-  *   q85     graft.queries.TextOps    — count-min frequency estimation
-  *   q86     graft.queries.Events     — keyed interval join (attribution)
-  *   q87     graft.queries.TextOps    — incremental dedup vs corpus index
-  *   q88     graft.queries.Relational — OLS fit from sufficient statistics
-  *   q89     graft.queries.Vectors    — semantic dedup (SemDeDup, IVF cells)
-  *   q90     graft.queries.Matching   — BM25 ranked retrieval
-  *   q91–q93 graft.queries.Events     — cohort retention, funnel,
-  *            time-series gap-fill + forward fill
-  *   q94     graft.queries.Graph      — fixed-point PageRank (3 iters)
-  *   q95     graft.queries.TextOps    — BPE merge induction
-  *   q96     graft.queries.Relational — mergeable histogram quantiles
-  *   q97     graft.queries.Events     — Markov transition matrix
-  *   q98     graft.queries.Curation   — weighted priority sampling
-  *   q99     graft.queries.Layout     — Hilbert-curve clustering key
-  *   q100–q102 graft.queries.Relational — CUBE, UNPIVOT, rank family
-  *   q103    graft.queries.Vectors    — nearest-centroid classification
-  *   q104    graft.queries.Graph      — bounded BFS via WITH RECURSIVE
-  *   q105    graft.queries.Events     — gaps-and-islands SCD2 intervals
-  *   q106    graft.queries.Curation   — quality cut by sketched percentile
-  *   q107    graft.queries.Vectors    — embedding covariance statistics
-  *   q108–q109 graft.queries.Relational — full-outer reconciliation,
-  *            EXCEPT ALL / INTERSECT ALL
-  *   q110    graft.queries.Vectors    — integer z-score outlier flags
-  *   q111    graft.queries.Relational — null-aware NOT IN anti join
-  *   q112    graft.queries.Relational — order-free md5 table checksum
-  *   q113    graft.queries.Matching   — reciprocal-rank-fusion hybrid retrieval
-  *   q114    graft.queries.Vectors    — scalar-quantized ANN + exact rerank
-  *   q115    graft.queries.Curation   — per-source winsorized calibration
-  *   q116    graft.queries.TextOps    — lexical diversity (Simpson index)
-  *   q117    graft.queries.Curation   — median/MAD robust outlier screen
-  *   q118    graft.queries.Events     — CDC MERGE (compaction + upsert/delete)
-  *   q119    graft.queries.Curation   — cross-source quantile normalization
-  *   q120    graft.queries.Vectors    — contrastive hard-negative mining
-  *   q121    graft.queries.Relational — two-phase distributed skyline
-  *   q122    graft.queries.Curation   — temperature-based source rebalancing
-  *   q123    graft.queries.Graph      — triangle census (one-mode projection)
-  *   q124    graft.queries.Vectors    — incremental IVF index insert
-  *   q125    graft.queries.TextOps    — source-vocabulary overlap matrix
-  *   q126    graft.queries.Events     — sequential motif mining (trigrams)
-  *   q127    graft.queries.TextOps    — token-distribution drift monitor
-  *   q128    graft.queries.Events     — linear-interpolation gap fill
-  *   q129    graft.queries.Curation   — shard-rebalance movement plan
-  *   q130    graft.queries.Events     — sliding-window rate anomaly flags
-  *   q131    graft.queries.Relational — join-key skew diagnostics report
-  *   q132    graft.queries.Multimodal — payload signature near-dup clusters
-  *   q133    graft.queries.TextOps    — PMI collocation mining (integer)
-  *   q134    graft.queries.Relational — Benford first-digit audit
-  *   q135    graft.queries.TextOps    — tokenizer fertility per language
-  *   q136    graft.queries.TextOps    — split-leakage audit (folds × bands)
-  *   q137    graft.queries.Relational — nested ARRAY<STRUCT> rollup (HOFs)
-  *   q138    graft.queries.Relational — deterministic argmax (max_by)
-  *   q139    graft.queries.Vectors    — embedding whitening (integer z×1000)
-  *   q140    graft.queries.TextOps    — exact-dedup savings report
-  *   q141    graft.queries.Events     — day-of-week × hour activity heatmap
-  *   q142    graft.queries.Events     — referential-integrity audit
-  *   q143    graft.queries.Curation   — length-bucketed padding-waste audit
-  *   q144    graft.queries.TextOps    — cross-source syndication detection
-  *   q145    graft.queries.Events     — event co-occurrence lift (baskets)
-  *   q146    graft.queries.Vectors    — ANN recall-vs-probe sweep
-  *   q147    graft.queries.Curation   — rendezvous-hash relayout plan
-  *   q148    graft.queries.TextOps    — per-source novelty audit
-  *   q149    graft.queries.TextOps    — MinHash estimator calibration
-  *   q150    graft.queries.Vectors    — quantization-grid error audit
-  *   q151    graft.queries.Vectors    — IVF cell-purity report
-  *   q152    graft.queries.Events     — activity-concentration Gini audit
-  *   q153    graft.queries.Events     — KMV distinct-count sketch audit
-  *   q154    graft.queries.Curation   — quality-filter funnel report
-  *   q155    graft.queries.Relational — column-profiling report
-  *   q156    graft.queries.Relational — functional-dependency audit
-  *   q157    graft.queries.Graph      — label-propagation communities
-  *   q158    graft.queries.Vectors    — dimension-truncation recall sweep
-  *   q159    graft.queries.TextOps    — positional-postings phrase search
-  *   q160    graft.queries.Events     — KMV set algebra (union/Jaccard/∩)
-  *   q161    graft.queries.Matching   — sorted-neighborhood ER blocking
-  *   q162    graft.queries.Events     — HyperLogLog register sketch audit
-  *   q163    graft.queries.TextOps    — near-dup detector precision/recall
-  *   q164    graft.queries.TextOps    — n-gram-profile language ID audit
-  *   q165    graft.queries.Layout     — zone-map pruning audit (3 layouts)
-  *   q166    graft.queries.Matching   — bloom-filter FPR calibration sweep
-  *   q167    graft.queries.Multimodal — shot-boundary detection over frames
-  *   q168    graft.queries.Events     — time-decayed activity scores
-  *   q169    graft.queries.TextOps    — boilerplate-share audit
-  *   q170    graft.queries.Events     — heavy hitters (bounded-heap top-k)
-  *   q171    graft.queries.Events     — incremental aggregate maintenance
-  *   q172    graft.queries.TextOps    — vocabulary growth (Heaps' law)
-  *   q173    graft.queries.Events     — AMS F2 / self-join size sketch
-  *   q174    graft.queries.TextOps    — asymmetric containment classes
-  *   q175    graft.queries.Graph      — bounded k-core peeling
-  *   q176    graft.queries.Events     — watermark-lateness audit
-  *   q177    graft.queries.Events     — two-phase prefix-sum concurrency
-  *   q178    graft.queries.Vectors    — audited k-means (Lloyd) step
-  *   q179    graft.queries.Events     — incremental SCD2 apply (IVM)
-  *   q180    graft.queries.Layout     — equi-depth range-boundary planning
-  *   q181    graft.queries.Curation   — composed curation pipeline funnel
-  *   q182    graft.queries.Relational — distribution-drift audit (2 halves)
-  *   q183    graft.queries.Graph      — deterministic random walks
-  *   q184    graft.queries.Events     — mergeable histogram quantiles
-  *   q185    graft.queries.TextOps    — sampled Kendall rank correlation
-  *   q186    graft.queries.Relational — per-segment OLS monthly-revenue trend
-  *   q187    graft.queries.Events     — seasonal-baseline anomaly screen
-  *   q188    graft.queries.Events     — declared-values pivot (daily matrix)
-  *   q189    graft.queries.Curation   — token-budget curriculum plan
-  *   q190    graft.queries.Multimodal — audio silence-split segmentation
-  *   q191    graft.queries.Vectors    — nDCG@10 retrieval eval
-  *   q192    graft.queries.TextOps    — leakage-safe cluster split audit
-  *   q193    graft.queries.Events     — event×dow independence (TVD)
-  *   q194    graft.queries.Curation   — k-anonymity release audit
-  *   q195    graft.queries.Events     — chi-square independence test
-  *   q196    graft.queries.Events     — deterministic A/B lift readout
-  *   q197    graft.queries.Events     — CEP click→purchase pattern
-  *   q198    graft.queries.Vectors    — MMR diversified retrieval
-  *   q199    graft.queries.Curation   — per-source KS drift gate
-  *   q200    graft.queries.Vectors    — product-quantization codes
-  *   q201    graft.queries.Vectors    — PQ asymmetric-distance top-k
-  *   q202    graft.queries.Events     — CUSUM changepoint scan
-  *   q203    graft.queries.Vectors    — grid-DBSCAN density clustering
-  *   q204    graft.queries.Relational — relational division (counting)
-  *   q205    graft.queries.Events     — user-lifecycle weekly report
-  *   q206    graft.queries.Relational — floor-clamped running balance
-  *   q207    graft.queries.Events     — three-way merge reconciliation
-  *   q208    graft.queries.Events     — multi-touch linear attribution
-  *   q209    graft.queries.Vectors    — per-cell medoid exemplars
-  *   q210    graft.queries.Vectors    — class-separation audit
-  *   q211    graft.queries.Vectors    — conformal calibration threshold
-  *   q212    graft.queries.Relational — business-day lag SLA report
-  *   q213    graft.queries.Events     — bitemporal as-of point query
-  *   q214    graft.queries.TextOps    — Cohen's kappa agreement
-  *   q215    graft.queries.Events     — ROC-AUC by tie-corrected rank sums
-  *   q216    graft.queries.Relational — Nelson–Aalen cumulative hazard
-  *   q217    graft.queries.Relational — Spearman rank correlation per nation
-  *   q218    graft.queries.Curation   — l-diversity privacy audit
-  *   q219    graft.queries.Graph      — HITS hubs/authorities (fixed-point)
-  *   q220    graft.queries.Layout     — small-file compaction plan (next-fit)
-  *   q221    graft.queries.Relational — Gini-impurity feature ranking
-  *   q222    graft.queries.Events     — per-account max drawdown top-k
-  *   q223    graft.queries.Events     — Allen interval-relation census
-  *   q224    graft.queries.Graph      — nation-partition modularity
-  *   q225    graft.queries.Vectors    — MAP@10 / MRR@10 retrieval eval
-  *   q226    graft.queries.Relational — FIFO lot allocation (cum-interval)
-  *   q227    graft.queries.Layout     — RLE payoff estimate per sort order
-  *   q228    graft.queries.Graph      — bounded weighted shortest paths
-  *   q229    graft.queries.Curation   — 1-D EMD drift per source
-  *   q230    graft.queries.Curation   — Poisson-bootstrap mean CI
-  *   q231    graft.queries.Vectors    — cell-blocked 5-NN LOOCV confusion
-  *   q232    graft.queries.Relational — Lorenz concentration deciles
-  *   q233    graft.queries.Events     — day-of-week seasonal index
-  *   q234    graft.queries.Events     — cohort LTV accumulation
-  *   q235    graft.queries.TextOps    — LIX readability + hapax share
-  *   q236    graft.queries.Events     — funnel latency order statistics
-  *   q237    graft.queries.Events     — Markov removal-effect attribution
-  *   q238    graft.queries.Graph      — degree-mixing association (χ², V²)
-  *   q239    graft.queries.Curation   — leave-one-out target encoding
-  *   q240    graft.queries.Layout     — packed-corpus shard offsets
-  *   q241    graft.queries.Events     — sessionization gap-parameter sweep
-  *   q242    graft.queries.Multimodal — media header validation audit
-  *   q243    graft.queries.Relational — two-phase exact distributed median
-  *   q244    graft.queries.Layout     — broadcast-join threshold advisor
-  *   q245    graft.queries.Relational — partition-grain snapshot diff plan
-  *   q246    graft.queries.Relational — join-cardinality estimator audit
-  *   q247    graft.queries.TextOps    — dedup cluster-size report
-  *   q248    graft.queries.Events     — retention vacuum plan (keep-newest-k)
-  *   q249    graft.queries.Relational — skew-salting routing table
-  *   q250    graft.queries.Relational — incremental join-view maintenance
-  *   q251    graft.queries.Relational — correlated-sampling join estimation
-  *   q252    graft.queries.Relational — GDPR erasure cascade plan
-  *   q253    graft.queries.Events     — calibration reliability table + ECE
-  *   q254    graft.queries.Events     — exact weighted median per flag
-  *   q255    graft.queries.Events     — rolling 7-day WAU + stickiness
-  *   q256    graft.queries.Relational — FIFO stock aging (closed form)
-  *   q257    graft.queries.Events     — event-type audience overlap
-  *   q258    graft.queries.Events     — duplicate-payment detection
-  *   q259    graft.queries.Graph      — bucketed shared edge corpus
-  *   q260    graft.queries.Events     — Page's CUSUM alarm (online)
-  *   q261    graft.queries.Events     — A/B sample-ratio-mismatch check
-  *   q262    graft.queries.Events     — CUPED variance reduction
-  *   q263    graft.queries.Vectors    — ANN replication sweep
-  *   q264    graft.queries.Events     — exact Shapley attribution
-  *   q265    graft.queries.Events     — rank-1 ALS recommender sweep
-  *   q266    graft.queries.Events     — Benjamini–Hochberg FDR gate
-  *   q267    graft.queries.Events     — Poisson overdispersion audit
-  *   q268    graft.queries.TextOps    — dedup-threshold P/R curve
-  *   q269    graft.queries.Events     — group-sequential OBF monitor
-  *   q270    graft.queries.Curation   — leave-one-source-out ablation
-  *   q271    graft.queries.Multimodal — real-container dispatch round-trip
-  *   q272    graft.queries.Multimodal — real PCM frame-energy round-trip
-  *   q273    graft.queries.Graph      — degree-magnitude profile (layout)
-  *   q274    graft.queries.Vectors    — reciprocal-rank fusion (hybrid)
-  *   q275    graft.queries.Events     — Mann–Kendall trend test
-  *   q276    graft.queries.TextOps    — Chao1 vocabulary richness
-  *   q277    graft.queries.Curation   — blocklist scrub report
-  *   q278    graft.queries.Curation   — Neyman allocation (Hamilton seats)
-  *   q279    graft.queries.Events     — Wald–Wolfowitz runs test
-  *   q280    graft.queries.Vectors    — label-centroid embedding drift
-  *   q281    graft.queries.TextOps    — Heaps' vocabulary-growth curve
-  *   q282    graft.queries.Curation   — exact per-source length bands
-  *   q283    graft.queries.Curation   — shard interleave audit
-  *   q284    graft.queries.Graph      — volume-weighted PageRank (shared
-  *            weighted edge layout)
-  *   q285    graft.queries.Multimodal — CRC32-validated PNG round-trip
-  *            (real zlib gray8 encode/decode, tamper quarantine)
-  *   q286    graft.queries.Vectors    — IVF-PQ index: residual coding,
-  *            trained codebook, cosine IP-ADC shortlist, exact rerank
-  *            (durable operators/IvfPq artifact)
-  *   q287    graft.queries.Vectors    — IVF-PQ per-cell
-  *            reconstruction-error health audit
-  *   q288    graft.queries.Matching   — BM25 over the incrementally-
-  *            maintained lexical index (LSM view: archive postings ∪
-  *            today's O(delta) segment, zero archive re-tokenization)
-  *   q289    graft.queries.Vectors    — ANN search over the
-  *            incrementally-maintained IVF-PQ index (frozen
-  *            archive-trained centroids/codebook, delta-only coding
-  *            into the delta's own segment artifact)
-  *   q290    graft.queries.Matching   — index delta report: per-gram
-  *            df rise from today's segment, artifact-only arithmetic
-  *   q291    graft.queries.Vectors    — codebook-drift audit of the
-  *            incremental index: delta-vs-archive mean reconstruction
-  *            error (permille), the retrain-gate statistic
-  *   q292    graft.queries.Vectors    — Johnson–Lindenstrauss
-  *            projection distortion audit: 16-plane signed projection
-  *            on pair differences, exact permille ratio percentiles
-  *   q293    graft.queries.Vectors    — int8 scalar-quantization
-  *            audit: per-dimension [min,max] codes, exact
-  *            reconstruction-error profile
-  *   q294    graft.queries.Graph      — pointer-jumping connected
-  *            components: O(log d) min-label rounds (label's label +
-  *            neighbor labels), four fixed rounds both engines unroll
-  *   q295    graft.queries.Matching   — BM25 over the multi-append
-  *            LSM view past the compaction fold (compacted artifact ∪
-  *            live tail segment; the fold's read path under the gate)
-  *   q296    graft.queries.Vectors    — ANN over the multi-append
-  *            IVF-PQ index past the fold (compacted codes ∪ tail)
-  *   q297    graft.queries.Vectors    — drift-GATED ANN: the search
-  *            runs over whichever index generation the retrain gate
-  *            selected; the generation column is the acted decision
-  *   q298    graft.queries.Matching   — LSM tier report: per-tier
-  *            doc/gram/posting/tf counts from the artifacts only
-  *   q299    graft.queries.TextOps    — EXACT Jaccard-threshold
-  *            self-join via prefix filtering (PPJoin family): the
-  *            lossless sibling of the MinHash band join
-  *   q300    graft.queries.Matching   — MaxScore-pruned BM25 top-k:
-  *            θ from a seed pass over one term's postings prunes
-  *            docs matching only low-upper-bound terms; result
-  *            provably identical to exhaustive scoring
-  *   q301    graft.queries.Curation   — blocked sorted-neighborhood
-  *            dedup (merge/purge): per-block sort, w=5 sliding
-  *            window as keyed (block, rn+i) probes, kernel verify
-  *   q302    graft.queries.TextOps    — incremental EXACT dedup:
-  *            batch×archive prefix-filtered Jaccard join under the
-  *            frozen archive-df gram order (q87's lossless sibling)
-  *   q303    graft.queries.TextOps    — phrase search over a
-  *            positional index: n-way (doc_id, pos+offset) join of
-  *            term-selected postings; phrase = dominant trigram
-  *   q304    graft.queries.TextOps    — proximity search: |Δpos| ≤ 3
-  *            band unrolled into 6 keyed offsets (no range join);
-  *            terms = the corpus's two most frequent tokens
-  *   q305    graft.queries.Vectors    — greedy k-center coreset
-  *            (farthest-point traversal): 5 materialized rounds,
-  *            argmax min-dist per round in quantized BIGINT space
-  *   q306    graft.queries.Curation   — ε=ln2 DP noisy count release:
-  *            discrete Laplace as a difference of two trailing-zero
-  *            geometrics over salted Knuth words (integer-exact)
-  *   q307    graft.queries.TextOps    — exact dedup groups: min-label
-  *            connected components over q299's lossless pair graph,
-  *            3 unrolled rounds, every round materialized
-  *   q308    graft.queries.Matching   — Kendall τ rank agreement
-  *            between BM25 and TF-only rankings on top-10 unions
-  *   q309    graft.queries.Graph      — connected components to a
-  *            DATA-DRIVEN fixpoint (operators/FixpointCC): pointer
-  *            jumping until a round changes no label, rounds_run
-  *            emitted and hash-gated via a change-detecting
-  *            recursive-CTE oracle
-  *   q310    graft.queries.TextOps    — capped-output exact dedup:
-  *            canonical exemplar + partner count per doc, the pair
-  *            stream collapsed map-side (output O(docs), never
-  *            O(pairs))
-  *   q311    graft.queries.Curation   — capped-output banded
-  *            near-dup: per-doc exemplar computed entirely in
-  *            SimHash value space (≤ 2^16 values), doc pairs never
-  *            formed
-  *   q312    graft.queries.TextOps    — phrase search over the
-  *            POSITIONAL LSM view (archive ∪ append segments,
-  *            tok-bucketed): the positional-index read path under
-  *            the hash gate; result ≡ q303 by document-local
-  *            positions
-  *   q313    graft.queries.TextOps    — exact dedup groups to a
-  *            DATA-DRIVEN fixpoint: q307 without the fixed-round
-  *            witness — FixpointCC over the pair-graph artifact,
-  *            rounds_run oracle-gated
-  *   q314    graft.queries.TextOps    — capped incremental dedup:
-  *            per-batch-doc archive exemplar + match count (NULL =
-  *            clean), O(batch) output on q302's batch×archive shape
+  * The registry is every family's `all` (graft.queries.*), in the
+  * order of `allQueries`. Each query is described by its header
+  * comment in its family file; OPERATORS.md maps every operator to the
+  * queries and specs that exercise it.
   */
 object SparkEntry {
 

@@ -1,5 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.SparkSession
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -9,9 +11,20 @@ object Verify {
     val only: Option[Set[String]] =
       args.drop(2).headOption.map(_.split(",").toSet)
     val spark = graft.pipeline.SparkSessionFactory.local()
+    dump(spark, sfDir, outDir, only)
+    spark.stop()
+  }
+
+  /** Writes `<outDir>/<name>` (one parquet file) for every query `only`
+    * admits (all when None), and the admitted queries' oracle SQL as
+    * `<outDir>/oracle_sql.json` — the layout tools/check_oracle.py
+    * reads. A query that fails is logged and left without a result. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      only: Option[Set[String]]): Unit = {
+    def admitted(name: String) = only.forall(_.contains(name))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => admitted(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -32,8 +45,8 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (k, _) => admitted(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

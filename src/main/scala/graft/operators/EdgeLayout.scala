@@ -46,9 +46,10 @@ import org.apache.spark.sql.functions._
 object EdgeLayout {
 
   /** Bump when the BUILD semantics change (v2 = weighted pairs, v3 =
-    * adds the supplier-bucketed pairs copy), so an upgraded engine
-    * never misreads an older artifact as current. */
-  val LayoutVersion = 3
+    * adds the supplier-bucketed pairs copy, v4 = every bucket file
+    * sorted by its whole key), so an upgraded engine never misreads an
+    * older artifact as current. */
+  val LayoutVersion = 4
 
   /** The one derivation both tables share: (c, s, n) trading pairs
     * with their order-line counts. Orders and lineitem are BOTH fact
@@ -77,10 +78,15 @@ object EdgeLayout {
   }
 
   /** Build the three bucketed tables under `tmp` (the catalog's
-    * unpublished temp dir). */
+    * unpublished temp dir). Each bucket file is sorted by the table's
+    * whole key — (c, s), (s, c), (src, dst), all unique — so the bytes
+    * are a function of the row set alone, as TextIndex's and IvfPq's
+    * are; sorting by the bucket key only left rows that share it in a
+    * per-run order. Readers declare the bucket key alone as the sort
+    * order, which the full-key order implies. */
   private def buildInto(s: SparkSession, dir: String, tmp: File): Unit =
     LayoutCatalog.writeBucketed(derivePairs(s, dir), new File(tmp, "pairs"),
-        "c") { pairs =>
+        "c", "s") { pairs =>
       // v3: the SAME pair rows bucketed by the supplier key — s-keyed
       // consumers (HITS' authority steps, supplier-side joins)
       // otherwise re-shuffle the pair corpus by s on EVERY execution;
@@ -88,7 +94,7 @@ object EdgeLayout {
       // all of them (guide §2.4: bucketed tables persist a
       // partitioning across jobs). Built from the pairs read-back — a
       // bucketed scan, not a re-run of the fact⋈fact join.
-      LayoutCatalog.writeBucketed(pairs, new File(tmp, "pairs_s"), "s")(_ => ())
+      LayoutCatalog.writeBucketed(pairs, new File(tmp, "pairs_s"), "s", "c")(_ => ())
       // both edge directions from ONE explode pass over the pairs
       // table read-back (cheap: a bucketed scan, not the fact join)
       LayoutCatalog.writeBucketed(
@@ -99,7 +105,7 @@ object EdgeLayout {
               col("n")))).as("e"))
           .select(col("e.src").as("src"), col("e.dst").as("dst"),
             col("e.n").as("n")),
-        new File(tmp, "edges"), "src")(_ => ())
+        new File(tmp, "edges"), "src", "dst")(_ => ())
     }
 
   /** The published bucketed table `leaf` of `dir`'s layout, bucketed

@@ -22,10 +22,11 @@ import org.apache.spark.sql.functions._
   *
   * Determinism: each per-seed minimum is the first 8 hex chars of
   * md5("<seed>:" || shingle) minimized over the distinct 3-gram
-  * shingles — replayed exactly in DuckDB by the q66 oracle's
+  * shingles — replayed exactly in DuckDB by
   * `list_min(list_transform(grams, g -> substr(md5('<seed>:' || g),
   * 1, 8)))` per seed; the universal family's replay is
-  * [[universalMinSql]] (q58, q192).
+  * [[universalMinSql]]. Every oracle builds its signatures and bands
+  * through `graft.queries.TextOps.minhashSql` / `bandedSql`.
   */
 object MinHashLsh {
 
@@ -46,9 +47,16 @@ object MinHashLsh {
     * band*r .. band*r+r-1 joined with '|' (the separator keeps the
     * join collision-free for fixed-width hex and decimal minima
     * alike). */
-  def bandKeyCol(sigCol: Column, band: Int, rowsPerBand: Int): Column =
+  private def bandKeyCol(sigCol: Column, band: Int, rowsPerBand: Int): Column =
     concat_ws("|", (0 until rowsPerBand).map(t =>
       element_at(sigCol, band * rowsPerBand + t + 1).cast("string")): _*)
+
+  /** The `cfg.bands` band keys of signature `sigCol`, posexploded into
+    * the two columns `band` (0-based int) and `band_key` (string) —
+    * for callers that keep the signature itself (q149, q174, q181). */
+  def bandKeys(sigCol: Column, cfg: Config): Column =
+    posexplode(array((0 until cfg.bands).map(j =>
+      bandKeyCol(sigCol, j, cfg.rowsPerBand)): _*)).as(Seq("band", "band_key"))
 
   /** DuckDB-side replay of one UNIVERSAL-family minimum (the
     * `minhash_fast` math): gh(g) is the exact-integer Knuth 3-gram
@@ -76,10 +84,7 @@ object MinHashLsh {
           graft.functions.MinHash.minhashFast(col(textCol), cfg.numHashes)
         else graft.functions.MinHash.minhashK(col(textCol), cfg.numHashes))
       .filter(col("__sig").isNotNull)
-      .select(col("*"),
-        posexplode(array((0 until cfg.bands).map(j =>
-          bandKeyCol(col("__sig"), j, cfg.rowsPerBand)): _*))
-          .as(Seq("band", "band_key")))
+      .select(col("*"), bandKeys(col("__sig"), cfg))
       .drop("__sig")
 
   /** Near-dup candidate groups: (band, band_key) buckets holding more

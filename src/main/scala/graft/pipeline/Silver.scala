@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Silver transform: bronze JSON glob → clean → dedup → enforce →
+/** Silver transform: bronze JSON pages → clean → dedup → enforce →
   * partitioned snappy parquet + row count
   * (/root/reference/app/tasks/silver.py:6-74).
   *
@@ -65,9 +65,13 @@ object Silver {
       ingestionDate: String): Long = {
     // multiLine: each bronze object is ONE JSON array per file (the raw
     // API page, app/io/storage.py:22-30) — not line-delimited JSON.
+    // The directory is read with a file-name filter, not as a
+    // `<dir>/*.json` glob: Spark looks a glob up as a literal path
+    // first and logs a FileNotFoundException trace on every run.
     val raw = spark.read.schema(Schemas.bronze)
       .option("multiLine", "true")
-      .json(s"${settings.bronzeDir(ingestionDate)}/*.json")
+      .option("pathGlobFilter", "*.json")
+      .json(settings.bronzeDir(ingestionDate))
     val rows = Observation()
     Pipeline.replaceDir(spark, settings.silverDir(ingestionDate)) { dir =>
       cleanDedupEnforce(raw).observe(rows, count(lit(1)).as("rows"))

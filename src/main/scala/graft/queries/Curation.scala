@@ -1102,12 +1102,6 @@ object Curation {
     Q(
       "q181_curation_pipeline",
       Some {
-        val hashes = (0 until 6).map(j =>
-          s"${graft.operators.MinHashLsh.universalMinSql("grams", j)} AS h$j")
-          .mkString(",\n                 ")
-        val bands = (0 until 3).map(j =>
-          s"SELECT doc_id, $j AS band, CAST(h${2 * j} AS VARCHAR) || '|' || CAST(h${2 * j + 1} AS VARCHAR) AS band_key FROM mh")
-          .mkString("\n          UNION ALL ")
         val nMatch = (0 until 6).map(j =>
           s"CASE WHEN ma.h$j = mb.h$j THEN 1 ELSE 0 END").mkString(" + ")
         s"""
@@ -1118,15 +1112,7 @@ object Curation {
           SELECT *, doc_id = MIN(doc_id) OVER (PARTITION BY md5(text))
                    AS keep1
           FROM base),
-        sh AS (
-          SELECT doc_id, ${graft.queries.TextOps.shinglesSql} AS grams
-          FROM s1 WHERE keep1),
-        mh AS (
-          SELECT doc_id,
-                 $hashes
-          FROM sh),
-        banded AS (
-          $bands),
+        ${TextOps.bandedSql(3, 2, from = "s1 WHERE keep1")},
         small AS (
           SELECT band, band_key FROM banded
           GROUP BY band, band_key HAVING COUNT(*) <= 16),
@@ -1179,9 +1165,7 @@ object Curation {
             graft.functions.MinHash.minhashFast(col("text"), cfg.numHashes)
               .as("sig")))
       val banded = sigs.select(col("doc_id"),
-        posexplode(array((0 until cfg.bands).map(j =>
-          graft.operators.MinHashLsh.bandKeyCol(col("sig"), j, cfg.rowsPerBand)): _*))
-          .as(Seq("band", "band_key")))
+        graft.operators.MinHashLsh.bandKeys(col("sig"), cfg))
       val small = banded.groupBy("band", "band_key")
         .agg(count(lit(1)).as("bn")).filter(col("bn") <= 16)
         .select("band", "band_key")

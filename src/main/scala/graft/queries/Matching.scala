@@ -3,7 +3,7 @@ package graft.queries
 import graft.{Q, Tables}
 import graft.Det.dec
 import graft.operators.BloomPrefilter
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -69,6 +69,119 @@ object Matching {
   /** q76's report threshold. */
   private val minCosine = 0.3
 
+  /** The documents' bigram postings, DuckDB side, as WITH-clause
+    * entries `tok → big(doc_id, g) → tf(doc_id, g, tf)`: the raw-text
+    * replay of the TextIndex artifacts every lexical oracle checks. */
+  private val bigramTfSql = """tok AS (
+          SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
+        big AS (
+          SELECT doc_id,
+                 unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS g
+          FROM tok),
+        tf AS (SELECT doc_id, g, CAST(COUNT(*) AS BIGINT) AS tf FROM big GROUP BY doc_id, g)"""
+
+  // ------------------------------------------------------ integer BM25
+  // Integer-exact BM25, shared by q90, q288, q295, q300 and q308:
+  // k1=1.2, b=0.75 fold into  idf₂ · 22·T·tf / (10·T·tf + 3·T + 9·dl·N)
+  // (T = total tokens, N = docs, dl = doc length — multiply the classic
+  // formula through by 10T), and idf₂ is the bit-length surrogate
+  // log2((N−df+½)/(df+½)) ≅ length(bin(2(N−df)+1)) − length(bin(2df+1))
+  // — the q78 move that dodges libm ln() ulp drift. One IEEE division
+  // per (doc, term), cast to DECIMAL(18,4) so per-query sums are
+  // order-free; every rank carries a doc_id tiebreak. Each query's
+  // (query_id, term) list below feeds both engines, and the Spark
+  // scorer's isin pushdown list derives from it, so the two can never
+  // silently diverge (a term missing from the pushdown would contribute
+  // nothing to its query's scores).
+
+  /** q90's workload, re-ranked by q308. */
+  private val q90Terms = Seq((1, "hash join"), (1, "merge join"),
+    (2, "stream batch"), (2, "batch window"), (3, "vector scan"))
+  private val q288Terms = Seq((1, "table hash"), (1, "part filter"),
+    (2, "customer join"), (2, "slow key"), (3, "merge group"), (3, "batch scan"))
+  private val q295Terms = Seq((1, "vector small"), (1, "filter hash"),
+    (2, "sort a"), (2, "merge order"), (3, "spark big"), (3, "batch agg"))
+  private val q300Terms = Seq((1, "hash dup"), (1, "table hash"), (1, "merge group"),
+    (2, "big dup"), (2, "slow key"), (2, "part filter"))
+
+  /** Results kept per query by the BM25 rankings. */
+  private val bm25K = 10
+
+  /** Spark side: every posting of a query term with its `term_score`,
+    * over postings `tf` (g, doc_id, tf, dl — dl rides denormalized on
+    * every row, so length normalization is a column read) and doc
+    * lengths `dls` (doc_id, dl). Postings of ONLY the query terms: the
+    * isin literal pushes into every bucketed scan, and the per-term df
+    * aggregate runs exchange-free on the bucket partitioning — so the
+    * only broadcast relations are bounded by the query length (df, qt)
+    * and one row (stats). The vocabulary-sized df table grows with the
+    * corpus (Heaps' law — q281 measures it) and must never broadcast. */
+  private def bm25Scored(tf: DataFrame, dls: DataFrame,
+      qTerms: Seq[(Int, String)]): DataFrame = {
+    val s = tf.sparkSession
+    import s.implicits._
+    val stats = dls.agg(count(lit(1)).as("n"), sum(col("dl")).as("t"))
+    val tfq = tf.filter(col("g").isin(qTerms.map(_._2).distinct: _*))
+    val df = tfq.groupBy("g").agg(count(lit(1)).as("df"))
+    def bits(c: Column): Column = length(bin(c))
+    val idf2 = bits(lit(2) * (col("n") - col("df")) + 1) - bits(lit(2) * col("df") + 1)
+    tfq.join(broadcast(qTerms.toDF("query_id", "term")), col("g") === col("term"))
+      .join(broadcast(df.withColumnRenamed("g", "g2")), col("g") === col("g2"))
+      .crossJoin(broadcast(stats))
+      .withColumn("term_score",
+        ((idf2 * 22 * col("t") * col("tf")).cast("double") /
+          (lit(10) * col("t") * col("tf") + lit(3) * col("t") +
+            lit(9) * col("dl") * col("n")).cast("double"))
+          .cast(DecimalType(18, 4)))
+  }
+
+  /** The top [[bm25K]] documents per query_id of `scored`'s summed
+    * term scores, as (query_id, doc_id, score, rnk). */
+  private def bm25Top(scored: DataFrame): DataFrame =
+    scored.groupBy("query_id", "doc_id")
+      .agg(sum(col("term_score")).cast("double").as("score"))
+      .withColumn("rnk", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy("query_id")
+          .orderBy(desc("score"), col("doc_id"))).cast("long"))
+      .filter(col("rnk") <= bm25K)
+
+  /** DuckDB side: the full-corpus replay from raw text, as a WITH
+    * clause ending in `scored(query_id, doc_id, tf, term_score)`. */
+  private def bm25ScoredSql(qTerms: Seq[(Int, String)]): String = {
+    val values = qTerms.map { case (q, t) => s"($q, '$t')" }.mkString(", ")
+    s"""
+        WITH $bigramTfSql,
+        dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM big GROUP BY doc_id),
+        stats AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(dl) AS BIGINT) AS t FROM dl),
+        df AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY g),
+        qt AS (SELECT * FROM (VALUES $values) AS v(query_id, term)),
+        scored AS (
+          SELECT q.query_id, tf.doc_id, tf.tf,
+                 CAST(CAST((length(bin(2 * (s.n - df.df) + 1)) - length(bin(2 * df.df + 1)))
+                             * 22 * s.t * tf.tf AS DOUBLE)
+                      / CAST(10 * s.t * tf.tf + 3 * s.t + 9 * dl.dl * s.n AS DOUBLE)
+                      AS DECIMAL(18,4)) AS term_score
+          FROM qt q
+          JOIN tf ON tf.g = q.term
+          JOIN df ON df.g = q.term
+          JOIN dl ON dl.doc_id = tf.doc_id
+          CROSS JOIN stats s)"""
+  }
+
+  /** [[bm25Top]]'s oracle: (query_id, doc_id, score, rnk) followed by
+    * `extraCols` (a SELECT-list tail over doc_id, e.g.
+    * `", doc_id % 10 = 0 AS is_new"`). */
+  private def bm25TopSql(qTerms: Seq[(Int, String)],
+      extraCols: String = ""): String = bm25ScoredSql(qTerms) + s""",
+        agg AS (
+          SELECT query_id, doc_id, CAST(SUM(term_score) AS DOUBLE) AS score
+          FROM scored GROUP BY query_id, doc_id)
+        SELECT query_id, doc_id, score, rnk$extraCols FROM (
+          SELECT query_id, doc_id, score,
+                 ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id) AS rnk
+          FROM agg) t
+        WHERE rnk <= $bm25K"""
+
   val all: Seq[Q] = Seq(
     // ---------------------------------------------------------------- q75
     // Fuzzy entity matching: part names within levenshtein distance 4,
@@ -118,13 +231,7 @@ object Matching {
     Q(
       "q76_sparse_cosine",
       Some(s"""
-        WITH tok AS (
-          SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        big AS (
-          SELECT doc_id,
-                 unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS g
-          FROM tok),
-        tf AS (SELECT doc_id, g, CAST(COUNT(*) AS BIGINT) AS tf FROM big GROUP BY doc_id, g),
+        WITH $bigramTfSql,
         df AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY g),
         wts AS (
           SELECT tf.doc_id, tf.g, tf.tf * (10000 // df.df) AS wq
@@ -229,92 +336,12 @@ object Matching {
     // is Σ df(query term) — query-length × posting-list cost, never a
     // corpus scan (the standard search-engine shape; at 100 TB the
     // postings would be the bucketed table and nothing changes).
-    // Integer-exact scoring: BM25's k1=1.2, b=0.75 fold into the
-    // integer form  idf₂ · 22·T·tf / (10·T·tf + 3·T + 9·dl·N)  (T =
-    // total tokens, N = docs, dl = doc length — multiply the classic
-    // formula through by 10T), and idf₂ is the bit-length surrogate
-    // log2((N−df+½)/(df+½)) ≅ length(bin(2(N−df)+1)) −
-    // length(bin(2df+1)) — the q78 move that dodges libm ln() ulp
-    // drift. One IEEE division per (doc, term); per-query sums go
-    // through DECIMAL (order-free); rank carries a doc_id tiebreak.
-    Q(
-      "q90_bm25",
-      Some("""
-        WITH tok AS (
-          SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        big AS (
-          SELECT doc_id,
-                 unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS g
-          FROM tok),
-        tf AS (SELECT doc_id, g, CAST(COUNT(*) AS BIGINT) AS tf FROM big GROUP BY doc_id, g),
-        dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM big GROUP BY doc_id),
-        stats AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(dl) AS BIGINT) AS t FROM dl),
-        df AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY g),
-        qt AS (SELECT * FROM (VALUES (1, 'hash join'), (1, 'merge join'),
-                                     (2, 'stream batch'), (2, 'batch window'),
-                                     (3, 'vector scan')) AS v(query_id, term)),
-        scored AS (
-          SELECT q.query_id, tf.doc_id,
-                 CAST(CAST((length(bin(2 * (s.n - df.df) + 1)) - length(bin(2 * df.df + 1)))
-                             * 22 * s.t * tf.tf AS DOUBLE)
-                      / CAST(10 * s.t * tf.tf + 3 * s.t + 9 * dl.dl * s.n AS DOUBLE)
-                      AS DECIMAL(18,4)) AS term_score
-          FROM qt q
-          JOIN tf ON tf.g = q.term
-          JOIN df ON df.g = q.term
-          JOIN dl ON dl.doc_id = tf.doc_id
-          CROSS JOIN stats s),
-        agg AS (
-          SELECT query_id, doc_id, CAST(SUM(term_score) AS DOUBLE) AS score
-          FROM scored GROUP BY query_id, doc_id)
-        SELECT query_id, doc_id, score, rnk FROM (
-          SELECT query_id, doc_id, score,
-                 ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id) AS rnk
-          FROM agg) t
-        WHERE rnk <= 10""")
-    ) { (s, dir) =>
-      import s.implicits._
+    // Scoring is the shared integer-exact BM25 ([[bm25Scored]]).
+    Q("q90_bm25", Some(bm25TopSql(q90Terms))) { (s, dir) =>
       // the inverted index is the durable TextIndex artifact: the
-      // tokenize + (doc, gram) aggregation is paid once at ingest;
-      // dl rides denormalized on every postings row (v3), so BM25's
-      // length normalization is a column read — no doclen join at all
-      val tf = graft.operators.TextIndex.bigramPostings(s, dir)
-      val stats = graft.operators.TextIndex.docLengths(s, dir)
-        .agg(count(lit(1)).as("n"), sum(col("dl")).as("t"))
-      // single source of truth for the query terms: the isin pushdown
-      // list derives from the (query_id, term) pairs, so the two can
-      // never silently diverge (a term missing from the pushdown would
-      // contribute nothing to its query's scores)
-      val qTerms = Seq((1, "hash join"), (1, "merge join"),
-        (2, "stream batch"), (2, "batch window"),
-        (3, "vector scan"))
-      val termStrs = qTerms.map(_._2).distinct
-      val qt = qTerms.toDF("query_id", "term")
-      // postings of ONLY the query terms: the isin literal pushes
-      // into the parquet scan, and the per-term df aggregate runs
-      // exchange-free on the bucket partitioning over ≤5 groups — so
-      // the ONLY broadcast relations are ≤5 rows (df), 5 rows (qt),
-      // and 1 row (stats). The full vocabulary-sized df table grows
-      // with the corpus (Heaps' law — q281 measures it) and must
-      // never broadcast.
-      val tfq = tf.filter(col("g").isin(termStrs: _*))
-      val df = tfq.groupBy("g").agg(count(lit(1)).as("df"))
-      val idf2 = length(bin(lit(2) * (col("n") - col("df")) + 1)) -
-        length(bin(lit(2) * col("df") + 1))
-      val scored = tfq.join(broadcast(qt), col("g") === col("term"))
-        .join(broadcast(df.withColumnRenamed("g", "g2")), col("g") === col("g2"))
-        .crossJoin(broadcast(stats))
-        .withColumn("term_score",
-          ((idf2 * 22 * col("t") * col("tf")).cast("double") /
-            (lit(10) * col("t") * col("tf") + lit(3) * col("t") +
-              lit(9) * col("dl") * col("n")).cast("double"))
-            .cast(DecimalType(18, 4)))
-      val agg = scored.groupBy("query_id", "doc_id")
-        .agg(sum(col("term_score")).cast("double").as("score"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id").orderBy(desc("score"), col("doc_id"))
-      agg.withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= 10)
+      // tokenize + (doc, gram) aggregation is paid once at ingest
+      bm25Top(bm25Scored(graft.operators.TextIndex.bigramPostings(s, dir),
+          graft.operators.TextIndex.docLengths(s, dir), q90Terms))
         .select("query_id", "doc_id", "score", "rnk")
     },
 
@@ -599,77 +626,15 @@ object Matching {
     // replays full-corpus BM25 inline — a hash match here IS the
     // proof that the incrementally-built index answers queries
     // identically to a from-scratch index.
-    Q(
-      "q288_incremental_bm25",
-      Some("""
-        WITH tok AS (
-          SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        big AS (
-          SELECT doc_id,
-                 unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS g
-          FROM tok),
-        tf AS (SELECT doc_id, g, CAST(COUNT(*) AS BIGINT) AS tf FROM big GROUP BY doc_id, g),
-        dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM big GROUP BY doc_id),
-        stats AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(dl) AS BIGINT) AS t FROM dl),
-        df AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY g),
-        qt AS (SELECT * FROM (VALUES (1, 'table hash'), (1, 'part filter'),
-                                     (2, 'customer join'), (2, 'slow key'),
-                                     (3, 'merge group'), (3, 'batch scan')) AS v(query_id, term)),
-        scored AS (
-          SELECT q.query_id, tf.doc_id,
-                 CAST(CAST((length(bin(2 * (s.n - df.df) + 1)) - length(bin(2 * df.df + 1)))
-                             * 22 * s.t * tf.tf AS DOUBLE)
-                      / CAST(10 * s.t * tf.tf + 3 * s.t + 9 * dl.dl * s.n AS DOUBLE)
-                      AS DECIMAL(18,4)) AS term_score
-          FROM qt q
-          JOIN tf ON tf.g = q.term
-          JOIN df ON df.g = q.term
-          JOIN dl ON dl.doc_id = tf.doc_id
-          CROSS JOIN stats s),
-        agg AS (
-          SELECT query_id, doc_id, CAST(SUM(term_score) AS DOUBLE) AS score
-          FROM scored GROUP BY query_id, doc_id)
-        SELECT query_id, doc_id, score, rnk, doc_id % 10 = 0 AS is_new FROM (
-          SELECT query_id, doc_id, score,
-                 ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id) AS rnk
-          FROM agg) t
-        WHERE rnk <= 10""")
+    Q("q288_incremental_bm25",
+      Some(bm25TopSql(q288Terms, ", doc_id % 10 = 0 AS is_new"))
     ) { (s, dir) =>
-      import s.implicits._
       // the LSM index view: archive postings read back from the
       // durable catalog (zero re-tokenization) ∪ today's segment —
-      // the append published only the delta's O(delta) artifact
+      // the append published only the delta's O(delta) artifact; the
+      // isin literal pushes into BOTH segment scans
       val (tf, dls) = graft.operators.TextIndex.splitPostings(s, dir, d10Docs)
-      val stats = dls.agg(count(lit(1)).as("n"), sum(col("dl")).as("t"))
-      // pushdown term list derives from the (query_id, term) pairs —
-      // one source of truth (q90's rule)
-      val qTerms = Seq((1, "table hash"), (1, "part filter"),
-        (2, "customer join"), (2, "slow key"),
-        (3, "merge group"), (3, "batch scan"))
-      val termStrs = qTerms.map(_._2).distinct
-      val qt = qTerms.toDF("query_id", "term")
-      // q90's bounded-broadcast shape over the segmented view: the
-      // isin literal pushes into BOTH segment scans, df aggregates
-      // over ≤6 terms' postings, dl rides denormalized on the rows —
-      // nothing vocabulary- or doc-count-sized ever broadcasts
-      val tfq = tf.filter(col("g").isin(termStrs: _*))
-      val df = tfq.groupBy("g").agg(count(lit(1)).as("df"))
-      val idf2 = length(bin(lit(2) * (col("n") - col("df")) + 1)) -
-        length(bin(lit(2) * col("df") + 1))
-      val scored = tfq.join(broadcast(qt), col("g") === col("term"))
-        .join(broadcast(df.withColumnRenamed("g", "g2")), col("g") === col("g2"))
-        .crossJoin(broadcast(stats))
-        .withColumn("term_score",
-          ((idf2 * 22 * col("t") * col("tf")).cast("double") /
-            (lit(10) * col("t") * col("tf") + lit(3) * col("t") +
-              lit(9) * col("dl") * col("n")).cast("double"))
-            .cast(DecimalType(18, 4)))
-      val agg = scored.groupBy("query_id", "doc_id")
-        .agg(sum(col("term_score")).cast("double").as("score"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id").orderBy(desc("score"), col("doc_id"))
-      agg.withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= 10)
+      bm25Top(bm25Scored(tf, dls, q288Terms))
         .withColumn("is_new", col("doc_id") % 10 === 0)
         .select("query_id", "doc_id", "score", "rnk", "is_new")
     },
@@ -693,14 +658,8 @@ object Matching {
     // corpus-truth delta.
     Q(
       "q290_index_delta_report",
-      Some("""
-        WITH tok AS (
-          SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        big AS (
-          SELECT doc_id,
-                 unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS g
-          FROM tok),
-        tf AS (SELECT doc_id, g, CAST(COUNT(*) AS BIGINT) AS tf FROM big GROUP BY doc_id, g),
+      Some(s"""
+        WITH $bigramTfSql,
         dfa AS (
           SELECT g, CAST(COUNT(*) AS BIGINT) AS df_arch
           FROM tf WHERE doc_id % 10 <> 0 GROUP BY g),
@@ -756,75 +715,15 @@ object Matching {
     // from-scratch index (the split jointly covers the corpus, so
     // any fold bug — double-counted rows, a dropped segment, stale
     // archive reuse — lands here as a score or rank mismatch).
-    Q(
-      "q295_lsm_compacted_bm25",
-      Some("""
-        WITH tok AS (
-          SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        big AS (
-          SELECT doc_id,
-                 unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS g
-          FROM tok),
-        tf AS (SELECT doc_id, g, CAST(COUNT(*) AS BIGINT) AS tf FROM big GROUP BY doc_id, g),
-        dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM big GROUP BY doc_id),
-        stats AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(dl) AS BIGINT) AS t FROM dl),
-        df AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY g),
-        qt AS (SELECT * FROM (VALUES (1, 'vector small'), (1, 'filter hash'),
-                                     (2, 'sort a'), (2, 'merge order'),
-                                     (3, 'spark big'), (3, 'batch agg')) AS v(query_id, term)),
-        scored AS (
-          SELECT q.query_id, tf.doc_id,
-                 CAST(CAST((length(bin(2 * (s.n - df.df) + 1)) - length(bin(2 * df.df + 1)))
-                             * 22 * s.t * tf.tf AS DOUBLE)
-                      / CAST(10 * s.t * tf.tf + 3 * s.t + 9 * dl.dl * s.n AS DOUBLE)
-                      AS DECIMAL(18,4)) AS term_score
-          FROM qt q
-          JOIN tf ON tf.g = q.term
-          JOIN df ON df.g = q.term
-          JOIN dl ON dl.doc_id = tf.doc_id
-          CROSS JOIN stats s),
-        agg AS (
-          SELECT query_id, doc_id, CAST(SUM(term_score) AS DOUBLE) AS score
-          FROM scored GROUP BY query_id, doc_id)
-        SELECT query_id, doc_id, score, rnk, doc_id % 10 = 9 AS from_tail FROM (
-          SELECT query_id, doc_id, score,
-                 ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id) AS rnk
-          FROM agg) t
-        WHERE rnk <= 10""")
+    Q("q295_lsm_compacted_bm25",
+      Some(bm25TopSql(q295Terms, ", doc_id % 10 = 9 AS from_tail"))
     ) { (s, dir) =>
-      import s.implicits._
       // five appends over a STABLE archive — day 9 is the live tail;
       // days 5..8 folded with the archive at the fold rung of 4,
-      // so this view reads the compacted artifact ∪ one tail segment
+      // so this view reads the compacted artifact ∪ one tail segment,
+      // and the isin literal pushes into both scans
       val (tf, dls) = graft.operators.TextIndex.splitPostings(s, dir, c10Docs)
-      val stats = dls.agg(count(lit(1)).as("n"), sum(col("dl")).as("t"))
-      val qTerms = Seq((1, "vector small"), (1, "filter hash"),
-        (2, "sort a"), (2, "merge order"),
-        (3, "spark big"), (3, "batch agg"))
-      val termStrs = qTerms.map(_._2).distinct
-      val qt = qTerms.toDF("query_id", "term")
-      // q90's bounded-broadcast shape: the isin literal pushes into
-      // BOTH the compacted and tail scans, df aggregates over ≤6
-      // terms' postings, dl rides denormalized on the rows — nothing
-      // vocabulary- or doc-count-sized ever broadcasts
-      val tfq = tf.filter(col("g").isin(termStrs: _*))
-      val df = tfq.groupBy("g").agg(count(lit(1)).as("df"))
-      val idf2 = length(bin(lit(2) * (col("n") - col("df")) + 1)) -
-        length(bin(lit(2) * col("df") + 1))
-      val scored = tfq.join(broadcast(qt), col("g") === col("term"))
-        .join(broadcast(df.withColumnRenamed("g", "g2")), col("g") === col("g2"))
-        .crossJoin(broadcast(stats))
-        .withColumn("term_score",
-          ((idf2 * 22 * col("t") * col("tf")).cast("double") /
-            (lit(10) * col("t") * col("tf") + lit(3) * col("t") +
-              lit(9) * col("dl") * col("n")).cast("double"))
-            .cast(DecimalType(18, 4)))
-      val agg = scored.groupBy("query_id", "doc_id")
-        .agg(sum(col("term_score")).cast("double").as("score"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id").orderBy(desc("score"), col("doc_id"))
-      agg.withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= 10)
+      bm25Top(bm25Scored(tf, dls, q295Terms))
         .withColumn("from_tail", col("doc_id") % 10 === 9)
         .select("query_id", "doc_id", "score", "rnk", "from_tail")
     },
@@ -846,14 +745,8 @@ object Matching {
     // lands here as a count mismatch even if no query term noticed).
     Q(
       "q298_lsm_tier_report",
-      Some("""
-        WITH tok AS (
-          SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        big AS (
-          SELECT doc_id,
-                 unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS g
-          FROM tok),
-        tf AS (SELECT doc_id, g, CAST(COUNT(*) AS BIGINT) AS tf FROM big GROUP BY doc_id, g)
+      Some(s"""
+        WITH $bigramTfSql
         SELECT CASE WHEN doc_id % 10 = 9 THEN 'tail' ELSE 'compacted' END AS tier,
                CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
                CAST(COUNT(DISTINCT g) AS BIGINT) AS n_grams,
@@ -900,65 +793,12 @@ object Matching {
     // every per-query frame (ub, seed, θ, essential set) is ≤ terms
     // rows; the oracle scores exhaustively — identical output is the
     // losslessness proof, hash-checked by the driver.
-    Q(
-      "q300_maxscore_bm25",
-      Some("""
-        WITH tok AS (
-          SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        big AS (
-          SELECT doc_id,
-                 unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS g
-          FROM tok),
-        tf AS (SELECT doc_id, g, CAST(COUNT(*) AS BIGINT) AS tf FROM big GROUP BY doc_id, g),
-        dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM big GROUP BY doc_id),
-        stats AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(dl) AS BIGINT) AS t FROM dl),
-        df AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY g),
-        qt AS (SELECT * FROM (VALUES (1, 'hash dup'), (1, 'table hash'), (1, 'merge group'),
-                                     (2, 'big dup'), (2, 'slow key'), (2, 'part filter')) AS v(query_id, term)),
-        scored AS (
-          SELECT q.query_id, tf.doc_id,
-                 CAST(CAST((length(bin(2 * (s.n - df.df) + 1)) - length(bin(2 * df.df + 1)))
-                             * 22 * s.t * tf.tf AS DOUBLE)
-                      / CAST(10 * s.t * tf.tf + 3 * s.t + 9 * dl.dl * s.n AS DOUBLE)
-                      AS DECIMAL(18,4)) AS term_score
-          FROM qt q
-          JOIN tf ON tf.g = q.term
-          JOIN df ON df.g = q.term
-          JOIN dl ON dl.doc_id = tf.doc_id
-          CROSS JOIN stats s),
-        agg AS (
-          SELECT query_id, doc_id, CAST(SUM(term_score) AS DOUBLE) AS score
-          FROM scored GROUP BY query_id, doc_id)
-        SELECT query_id, doc_id, score, rnk FROM (
-          SELECT query_id, doc_id, score,
-                 ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id) AS rnk
-          FROM agg) t
-        WHERE rnk <= 10""")
-    ) { (s, dir) =>
-      import s.implicits._
-      val k = 10
-      val tf = graft.operators.TextIndex.bigramPostings(s, dir)
-      val stats = graft.operators.TextIndex.docLengths(s, dir)
-        .agg(count(lit(1)).as("n"), sum(col("dl")).as("t"))
-      val qTerms = Seq((1, "hash dup"), (1, "table hash"), (1, "merge group"),
-        (2, "big dup"), (2, "slow key"), (2, "part filter"))
-      val termStrs = qTerms.map(_._2).distinct
-      val qt = qTerms.toDF("query_id", "term")
-      // exactly q90's scoring frame: postings of ONLY the query terms
-      // (isin pushdown into the bucketed scan), ≤6-row df aggregate,
+    Q("q300_maxscore_bm25", Some(bm25TopSql(q300Terms))) { (s, dir) =>
+      val k = bm25K
+      // exactly q90's scoring frame: postings of ONLY the query terms,
       // broadcasts bounded by the query length — never the corpus
-      val tfq = tf.filter(col("g").isin(termStrs: _*))
-      val dfq = tfq.groupBy("g").agg(count(lit(1)).as("df"))
-      val idf2 = length(bin(lit(2) * (col("n") - col("df")) + 1)) -
-        length(bin(lit(2) * col("df") + 1))
-      val scored = tfq.join(broadcast(qt), col("g") === col("term"))
-        .join(broadcast(dfq.withColumnRenamed("g", "g2")), col("g") === col("g2"))
-        .crossJoin(broadcast(stats))
-        .withColumn("term_score",
-          ((idf2 * 22 * col("t") * col("tf")).cast("double") /
-            (lit(10) * col("t") * col("tf") + lit(3) * col("t") +
-              lit(9) * col("dl") * col("n")).cast("double"))
-            .cast(DecimalType(18, 4)))
+      val scored = bm25Scored(graft.operators.TextIndex.bigramPostings(s, dir),
+          graft.operators.TextIndex.docLengths(s, dir), q300Terms)
         .select("query_id", "g", "doc_id", "df", "term_score")
       // seven downstream references (ub, seed, θ, essential, candidate,
       // final aggregate ×2 joins) — materialize the Σdf(term)-sized
@@ -998,12 +838,7 @@ object Matching {
       val candDocs = scoredM.join(broadcast(ess),
           col("query_id") === col("eq") && col("g") === col("eg"))
         .select(col("query_id"), col("doc_id")).distinct()
-      val agg = scoredM.join(candDocs, Seq("query_id", "doc_id"))
-        .groupBy("query_id", "doc_id")
-        .agg(sum(col("term_score")).cast("double").as("score"))
-      agg.withColumn("rnk", row_number().over(
-          wq.orderBy(desc("score"), col("doc_id"))).cast("long"))
-        .filter(col("rnk") <= k)
+      bm25Top(scoredM.join(candDocs, Seq("query_id", "doc_id")))
         .select("query_id", "doc_id", "score", "rnk")
     },
 
@@ -1022,31 +857,7 @@ object Matching {
     // is query-bounded, independent of corpus size.
     Q(
       "q308_rank_agreement",
-      Some("""
-        WITH tok AS (
-          SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        big AS (
-          SELECT doc_id,
-                 unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS g
-          FROM tok),
-        tf AS (SELECT doc_id, g, CAST(COUNT(*) AS BIGINT) AS tf FROM big GROUP BY doc_id, g),
-        dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM big GROUP BY doc_id),
-        stats AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(dl) AS BIGINT) AS t FROM dl),
-        df AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY g),
-        qt AS (SELECT * FROM (VALUES (1, 'hash join'), (1, 'merge join'),
-                                     (2, 'stream batch'), (2, 'batch window'),
-                                     (3, 'vector scan')) AS v(query_id, term)),
-        scored AS (
-          SELECT q.query_id, tf.doc_id, tf.tf,
-                 CAST(CAST((length(bin(2 * (s.n - df.df) + 1)) - length(bin(2 * df.df + 1)))
-                             * 22 * s.t * tf.tf AS DOUBLE)
-                      / CAST(10 * s.t * tf.tf + 3 * s.t + 9 * dl.dl * s.n AS DOUBLE)
-                      AS DECIMAL(18,4)) AS term_score
-          FROM qt q
-          JOIN tf ON tf.g = q.term
-          JOIN df ON df.g = q.term
-          JOIN dl ON dl.doc_id = tf.doc_id
-          CROSS JOIN stats s),
+      Some(bm25ScoredSql(q90Terms) + """,
         agg AS (
           SELECT query_id, doc_id,
                  CAST(SUM(term_score) AS DECIMAL(28,4)) AS bm25,
@@ -1086,26 +897,8 @@ object Matching {
                CAST((1000 * (SUM(conc) - (COUNT(*) - SUM(conc)))) // COUNT(*) AS BIGINT) AS tau_milli
         FROM prs GROUP BY query_id""")
     ) { (s, dir) =>
-      import s.implicits._
-      val tf = graft.operators.TextIndex.bigramPostings(s, dir)
-      val stats = graft.operators.TextIndex.docLengths(s, dir)
-        .agg(count(lit(1)).as("n"), sum(col("dl")).as("t"))
-      val qTerms = Seq((1, "hash join"), (1, "merge join"),
-        (2, "stream batch"), (2, "batch window"), (3, "vector scan"))
-      val termStrs = qTerms.map(_._2).distinct
-      val qt = qTerms.toDF("query_id", "term")
-      val tfq = tf.filter(col("g").isin(termStrs: _*))
-      val dfq = tfq.groupBy("g").agg(count(lit(1)).as("df"))
-      val idf2 = length(bin(lit(2) * (col("n") - col("df")) + 1)) -
-        length(bin(lit(2) * col("df") + 1))
-      val scored = tfq.join(broadcast(qt), col("g") === col("term"))
-        .join(broadcast(dfq.withColumnRenamed("g", "g2")), col("g") === col("g2"))
-        .crossJoin(broadcast(stats))
-        .withColumn("term_score",
-          ((idf2 * 22 * col("t") * col("tf")).cast("double") /
-            (lit(10) * col("t") * col("tf") + lit(3) * col("t") +
-              lit(9) * col("dl") * col("n")).cast("double"))
-            .cast(DecimalType(18, 4)))
+      val scored = bm25Scored(graft.operators.TextIndex.bigramPostings(s, dir),
+        graft.operators.TextIndex.docLengths(s, dir), q90Terms)
       val agg = graft.Checkpoints.materialize(
         scored.groupBy("query_id", "doc_id")
           .agg(sum(col("term_score")).cast(DecimalType(28, 4)).as("bm25"),

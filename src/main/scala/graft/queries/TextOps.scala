@@ -45,9 +45,56 @@ object TextOps {
     "array_distinct(transform(sequence(1, length(text) - 2), i -> substring(text, i, 3)))"
 
   /** Same shingles, DuckDB side (range upper bound is exclusive).
-    * `private[queries]`: q181's composed pipeline reuses the fragment. */
+    * `private[queries]`: q301's pair verifier reuses the fragment. */
   private[queries] val shinglesSql =
     "list_distinct(list_transform(range(1, length(text) - 1), i -> substr(text, CAST(i AS INT), 3)))"
+
+  /** The rows MinHash signs by default: every document with a shingle. */
+  private val shingledDocs = "documents WHERE length(text) >= 3"
+
+  /** DuckDB replay of the k-hash MinHash signature over [[shinglesSql]],
+    * as WITH-clause entries `sh(doc_id, grams)` over the rows of `from`
+    * (a FROM-clause tail) and `mh(doc_id, h0 … h{k−1})`: the universal
+    * family's per-seed minima ([[graft.operators.MinHashLsh.universalMinSql]],
+    * `minhash_fast`), or the md5 family's first 8 hex chars of
+    * md5('<seed>:' || g) (`minhash_k`). */
+  private def minhashSql(k: Int, universal: Boolean = true,
+      from: String = shingledDocs): String = {
+    val hashes = (0 until k).map(j =>
+      if (universal)
+        s"${graft.operators.MinHashLsh.universalMinSql("grams", j)} AS h$j"
+      else
+        s"list_min(list_transform(grams, g -> substr(md5('$j:' || g), 1, 8))) AS h$j")
+      .mkString(",\n                 ")
+    s"""sh AS (
+          SELECT doc_id, $shinglesSql AS grams
+          FROM $from),
+        mh AS (
+          SELECT doc_id,
+                 $hashes
+          FROM sh)"""
+  }
+
+  /** [[minhashSql]] over nBands·rowsPerBand hashes plus
+    * `banded(doc_id, band, band_key)`: the oracle of
+    * [[graft.operators.MinHashLsh.explodeBands]] (band j's key joins
+    * the minima of seeds j·r … j·r+r−1 with '|'). `private[queries]`:
+    * q181's composed pipeline bands its exact-dedup survivors. */
+  private[queries] def bandedSql(nBands: Int, rowsPerBand: Int,
+      universal: Boolean = true,
+      from: String = shingledDocs): String = {
+    val bands = (0 until nBands).map(j =>
+      s"SELECT doc_id, $j AS band, " +
+        (0 until rowsPerBand).map(t =>
+          if (universal) s"CAST(h${j * rowsPerBand + t} AS VARCHAR)"
+          else s"h${j * rowsPerBand + t}")
+          .mkString(" || '|' || ") +
+        " AS band_key FROM mh")
+      .mkString("\n          UNION ALL ")
+    s"""${minhashSql(nBands * rowsPerBand, universal, from)},
+        banded AS (
+          $bands)"""
+  }
 
   /** Knuth multiplicative 32-bit hash of one 3-gram, from ASCII codes —
     * exact BIGINT arithmetic, identical in both engines. */
@@ -152,20 +199,6 @@ object TextOps {
     * fixture). */
   private def minLabelCte(nBands: Int, rowsPerBand: Int,
       universal: Boolean = false): String = {
-    val hashes = (0 until nBands * rowsPerBand).map(j =>
-      if (universal)
-        s"${graft.operators.MinHashLsh.universalMinSql("grams", j)} AS h$j"
-      else
-        s"list_min(list_transform(grams, g -> substr(md5('$j:' || g), 1, 8))) AS h$j")
-      .mkString(",\n                 ")
-    val bands = (0 until nBands).map(j =>
-      s"SELECT doc_id, $j AS band, " +
-        (0 until rowsPerBand).map(t =>
-          if (universal) s"CAST(h${j * rowsPerBand + t} AS VARCHAR)"
-          else s"h${j * rowsPerBand + t}")
-          .mkString(" || '|' || ") +
-        " AS band_key FROM mh")
-      .mkString("\n          UNION ALL ")
     val rounds = (0 until 3).map { t =>
       s"""bm$t AS (
           SELECT b.band, b.band_key, MIN(l.cluster_id) AS bucket_min
@@ -181,15 +214,7 @@ object TextOps {
                  least(l.cluster_id, coalesce(d.prop_min, l.cluster_id)) AS cluster_id
           FROM it$t l LEFT JOIN dm$t d ON d.doc_id = l.doc_id)"""
     }.mkString(",\n        ")
-    s"""sh AS (
-          SELECT doc_id, $shinglesSql AS grams
-          FROM documents WHERE length(text) >= 3),
-        mh AS (
-          SELECT doc_id,
-                 $hashes
-          FROM sh),
-        banded AS (
-          $bands),
+    s"""${bandedSql(nBands, rowsPerBand, universal)},
         it0 AS (SELECT DISTINCT doc_id, doc_id AS cluster_id FROM banded),
         $rounds"""
   }
@@ -505,26 +530,10 @@ object TextOps {
     // digests the shingle k times.
     Q(
       "q58_banded_dedup",
-      Some {
-        val hashes = (0 until 6).map(j =>
-          s"${graft.operators.MinHashLsh.universalMinSql("grams", j)} AS h$j")
-          .mkString(",\n                 ")
-        val bands = (0 until 3).map(j =>
-          s"SELECT doc_id, $j AS band, CAST(h${2 * j} AS VARCHAR) || '|' || CAST(h${2 * j + 1} AS VARCHAR) AS band_key FROM mh")
-          .mkString("\n          UNION ALL ")
-        s"""
-        WITH sh AS (
-          SELECT doc_id, $shinglesSql AS grams
-          FROM documents WHERE length(text) >= 3),
-        mh AS (
-          SELECT doc_id,
-                 $hashes
-          FROM sh),
-        banded AS (
-          $bands)
+      Some(s"""
+        WITH ${bandedSql(3, 2)}
         SELECT band, band_key, COUNT(*) AS n_docs, MIN(doc_id) AS canonical_id
-        FROM banded GROUP BY band, band_key HAVING COUNT(*) > 1"""
-      }
+        FROM banded GROUP BY band, band_key HAVING COUNT(*) > 1""")
     ) { (s, dir) =>
       // the shared operator (graft.operators.MinHashLsh) — one k-hash
       // signature per row, band keys posexploded from it (the former
@@ -850,25 +859,8 @@ object TextOps {
     // three stages replayed exactly by the oracle.
     Q(
       "q87_incremental_dedup",
-      Some {
-        import graft.operators.MinHashLsh
-        val hashes = (0 until 6).map(j =>
-          s"${MinHashLsh.universalMinSql("grams", j)} AS h$j")
-          .mkString(",\n                 ")
-        val bands = (0 until 3).map(j =>
-          s"SELECT doc_id, $j AS band, CAST(h${2 * j} AS VARCHAR) || '|' || " +
-            s"CAST(h${2 * j + 1} AS VARCHAR) AS band_key FROM mh")
-          .mkString("\n          UNION ALL ")
-        s"""
-        WITH sh AS (
-          SELECT doc_id, $shinglesSql AS grams
-          FROM documents WHERE length(text) >= 3),
-        mh AS (
-          SELECT doc_id,
-                 $hashes
-          FROM sh),
-        banded AS (
-          $bands),
+      Some(s"""
+        WITH ${bandedSql(3, 2)},
         corp AS (
           SELECT * FROM banded WHERE doc_id % 10 <> 0),
         small AS (
@@ -890,8 +882,7 @@ object TextOps {
         JOIN sh b ON b.doc_id = cd.corpus_id
         WHERE len(list_filter(a.grams, g -> list_contains(b.grams, g)))
                 / (len(a.grams) + len(b.grams)
-                   - len(list_filter(a.grams, g -> list_contains(b.grams, g)))) >= 0.7"""
-      }
+                   - len(list_filter(a.grams, g -> list_contains(b.grams, g)))) >= 0.7""")
     ) { (s, dir) =>
       import graft.operators.MinHashLsh
       val cfg = MinHashLsh.Config(bands = 3, rowsPerBand = 2, universal = true)
@@ -1333,23 +1324,8 @@ object TextOps {
     // split-design signal.
     Q(
       "q136_split_leakage",
-      Some {
-        val hashes = (0 until 6).map(j =>
-          s"${graft.operators.MinHashLsh.universalMinSql("grams", j)} AS h$j")
-          .mkString(",\n                 ")
-        val bands = (0 until 3).map(j =>
-          s"SELECT doc_id, $j AS band, CAST(h${2 * j} AS VARCHAR) || '|' || CAST(h${2 * j + 1} AS VARCHAR) AS band_key FROM mh")
-          .mkString("\n          UNION ALL ")
-        s"""
-        WITH sh AS (
-          SELECT doc_id, $shinglesSql AS grams
-          FROM documents WHERE length(text) >= 3),
-        mh AS (
-          SELECT doc_id,
-                 $hashes
-          FROM sh),
-        banded AS (
-          $bands),
+      Some(s"""
+        WITH ${bandedSql(3, 2)},
         keepb AS (
           SELECT band, band_key FROM banded
           GROUP BY band, band_key HAVING COUNT(*) <= $incrMaxBucket),
@@ -1367,8 +1343,7 @@ object TextOps {
         SELECT least(fa, fb) AS fold_lo, greatest(fa, fb) AS fold_hi,
                CAST(COUNT(*) AS BIGINT) AS n_pairs,
                CAST(SUM(CASE WHEN fa = fb THEN 0 ELSE 1 END) AS BIGINT) AS n_leaking
-        FROM f GROUP BY 1, 2"""
-      }
+        FROM f GROUP BY 1, 2""")
     ) { (s, dir) =>
       val cfg = graft.operators.MinHashLsh.Config(
         bands = 3, rowsPerBand = 2, universal = true)
@@ -1492,24 +1467,10 @@ object TextOps {
     Q(
       "q149_minhash_calibration",
       Some {
-        val hashes = (0 until 6).map(j =>
-          s"${graft.operators.MinHashLsh.universalMinSql("grams", j)} AS h$j")
-          .mkString(",\n                 ")
-        val bands = (0 until 3).map(j =>
-          s"SELECT doc_id, $j AS band, CAST(h${2 * j} AS VARCHAR) || '|' || CAST(h${2 * j + 1} AS VARCHAR) AS band_key FROM mh")
-          .mkString("\n          UNION ALL ")
         val nMatch = (0 until 6).map(j =>
           s"CASE WHEN ma.h$j = mb.h$j THEN 1 ELSE 0 END").mkString(" + ")
         s"""
-        WITH sh AS (
-          SELECT doc_id, $shinglesSql AS grams
-          FROM documents WHERE length(text) >= 3),
-        mh AS (
-          SELECT doc_id,
-                 $hashes
-          FROM sh),
-        banded AS (
-          $bands),
+        WITH ${bandedSql(3, 2)},
         pairs AS (
           SELECT doc_a, doc_b FROM (
             SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1560,9 +1521,7 @@ object TextOps {
             graft.functions.Jaccard.gramCodes3(col("text")).as("grams"))
           .withColumn("n_grams", size(col("grams")).cast("long")))
       val banded = sigs.select(col("doc_id"),
-        posexplode(array((0 until cfg.bands).map(j =>
-          graft.operators.MinHashLsh.bandKeyCol(col("sig"), j, cfg.rowsPerBand)): _*))
-          .as(Seq("band", "band_key")))
+        graft.operators.MinHashLsh.bandKeys(col("sig"), cfg))
       val pairs = banded.as("a")
         .join(banded.as("b"),
           col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
@@ -1695,16 +1654,10 @@ object TextOps {
     Q(
       "q163_neardup_eval",
       Some {
-        val hashes = (0 until 6).map(j =>
-          s"${graft.operators.MinHashLsh.universalMinSql("grams", j)} AS h$j")
-          .mkString(",\n                 ")
         val nMatch = (0 until 6).map(j =>
           s"CASE WHEN a.h$j = b.h$j THEN 1 ELSE 0 END").mkString(" + ")
         s"""
-        WITH sh AS (
-          SELECT doc_id, $shinglesSql AS grams
-          FROM documents WHERE length(text) >= 3),
-        mh AS (SELECT doc_id, $hashes FROM sh),
+        WITH ${minhashSql(6)},
         sims AS ($simhashDocsSql),
         pairs AS (
           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1833,9 +1786,6 @@ object TextOps {
     Q(
       "q268_threshold_curve",
       Some {
-        val hashes = (0 until 6).map(j =>
-          s"${graft.operators.MinHashLsh.universalMinSql("grams", j)} AS h$j")
-          .mkString(",\n                 ")
         val nMatch = (0 until 6).map(j =>
           s"CASE WHEN a.h$j = b.h$j THEN 1 ELSE 0 END").mkString(" + ")
         val cmCols = (1 to 6).map(k =>
@@ -1847,10 +1797,7 @@ object TextOps {
           s"SELECT CAST($k AS BIGINT) AS k, tp_$k AS tp, fp_$k AS fp, fn_$k AS fn FROM cm")
           .mkString("\n          UNION ALL\n          ")
         s"""
-        WITH sh AS (
-          SELECT doc_id, $shinglesSql AS grams
-          FROM documents WHERE length(text) >= 3),
-        mh AS (SELECT doc_id, $hashes FROM sh),
+        WITH ${minhashSql(6)},
         pairs AS (
           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
           FROM sh a JOIN sh b ON b.doc_id > a.doc_id
@@ -2171,23 +2118,8 @@ object TextOps {
     // kernel path — no pair re-shingles text).
     Q(
       "q174_containment",
-      Some {
-        val hashes = (0 until 6).map(j =>
-          s"${graft.operators.MinHashLsh.universalMinSql("grams", j)} AS h$j")
-          .mkString(",\n                 ")
-        val bands = (0 until 3).map(j =>
-          s"SELECT doc_id, $j AS band, CAST(h${2 * j} AS VARCHAR) || '|' || CAST(h${2 * j + 1} AS VARCHAR) AS band_key FROM mh")
-          .mkString("\n          UNION ALL ")
-        s"""
-        WITH sh AS (
-          SELECT doc_id, $shinglesSql AS grams
-          FROM documents WHERE length(text) >= 3),
-        mh AS (
-          SELECT doc_id,
-                 $hashes
-          FROM sh),
-        banded AS (
-          $bands),
+      Some(s"""
+        WITH ${bandedSql(3, 2)},
         small AS (
           SELECT band, band_key FROM banded
           GROUP BY band, band_key HAVING COUNT(*) <= 16),
@@ -2222,8 +2154,7 @@ object TextOps {
                     WHEN cont_a_permille >= 800 OR cont_b_permille >= 800
                       THEN 'contains'
                     ELSE 'overlap' END AS relation
-        FROM cls"""
-      }
+        FROM cls""")
     ) { (s, dir) =>
       val cfg = graft.operators.MinHashLsh.Config(
         bands = 3, rowsPerBand = 2, universal = true)
@@ -2236,9 +2167,7 @@ object TextOps {
             graft.functions.Jaccard.gramCodes3(col("text")).as("grams"))
           .withColumn("n_grams", size(col("grams")).cast("long")))
       val banded = sigs.select(col("doc_id"),
-        posexplode(array((0 until cfg.bands).map(j =>
-          graft.operators.MinHashLsh.bandKeyCol(col("sig"), j, cfg.rowsPerBand)): _*))
-          .as(Seq("band", "band_key")))
+        graft.operators.MinHashLsh.bandKeys(col("sig"), cfg))
       val small = banded.groupBy("band", "band_key")
         .agg(count(lit(1)).as("bn")).filter(col("bn") <= 16)
         .select("band", "band_key")

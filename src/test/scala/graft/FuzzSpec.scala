@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Path}
 
 import scala.collection.JavaConverters._
-import scala.sys.process._
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
@@ -42,12 +41,8 @@ class FuzzSpec extends SparkSpec {
 
   private case class FQ(name: String, sparkSql: String, duckSql: String)
 
-  private def duckdbAvailable: Boolean =
-    try Process(Seq("python3", "-c", "import duckdb")).! == 0
-    catch { case _: java.io.IOException => false }
-
   test("differential fuzz: 100 random relations × 13 template families match DuckDB") {
-    assume(duckdbAvailable, "python3+duckdb oracle not available on this host")
+    assume(DuckOracle.available, "python3+duckdb oracle not available on this host")
     info(s"fuzz seed = $seed (set GRAFT_FUZZ_SEED to replay)")
     val rng = new scala.util.Random(seed)
 
@@ -505,17 +500,11 @@ class FuzzSpec extends SparkSpec {
         .mkString("{", ",", "}"))
 
     // ---- 4. DuckDB replays every query over the same parquet bytes
-    val buf = new StringBuilder
-    val rc = Process(
-      Seq("python3", "/root/repo/tools/check_oracle.py",
-        relDir.toString, outDir.toString))
-      .!(ProcessLogger(l => buf.append(l).append('\n'),
-        l => buf.append(l).append('\n')))
-    val report = buf.toString
-    val fails = report.linesIterator.filter(_.startsWith("FAIL")).toSeq
+    val (rc, report) = DuckOracle.check(relDir.toString, outDir.toString)
+    val fails = report.filter(_.startsWith("FAIL"))
     assert(rc == 0 && fails.isEmpty,
       s"fuzz mismatches (seed=$seed):\n${fails.take(10).mkString("\n")}")
-    val oks = report.linesIterator.count(_.startsWith("OK"))
+    val oks = report.count(_.startsWith("OK"))
     assert(oks == queries.size, s"expected ${queries.size} OK rows, got $oks")
     info(s"$oks fuzz queries matched DuckDB exactly")
   }

@@ -461,6 +461,27 @@ class LayoutCatalogSpec extends SparkSpec {
     assert(EdgeLayout.pairs(spark, dir).distinct().count() == wp.count())
   }
 
+  test("edge layout: every bucket file is sorted by its table's whole key") {
+    // bucket-key order alone leaves rows that share the key in a
+    // per-run order, so two builds of one corpus differ in bytes
+    val dir = corpus.getAbsolutePath
+    EdgeLayout.weightedPairs(spark, dir).queryExecution // ensure built
+    val kind = new File(LayoutCatalog.root, s"edges_v${EdgeLayout.LayoutVersion}")
+    val Array(dest) = kind.listFiles().filterNot(_.getName.startsWith(".tmp_"))
+    for ((leaf, key) <- Seq("pairs" -> Seq("c", "s"), "pairs_s" -> Seq("s", "c"),
+        "edges" -> Seq("src", "dst"))) {
+      val files = new File(dest, leaf).listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+      assert(files.nonEmpty, s"no bucket files under $leaf")
+      files.foreach { f =>
+        val rows = spark.read.parquet(f.getPath).select(key.map(col): _*)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+        assert(rows == rows.sorted,
+          s"$leaf/${f.getName} is not sorted by (${key.mkString(", ")})")
+      }
+    }
+  }
+
   test("edge layout: a changed corpus snapshot rebuilds and retires the stale artifact") {
     val dir = corpus.getAbsolutePath
     EdgeLayout.weightedPairs(spark, dir).queryExecution // ensure built
