@@ -92,26 +92,71 @@ object Tables {
     df.repartition(scaledPartitions(spark, dir, tables), key)
 }
 
-/** The engine's reproducible "random" stream: a salted Knuth
-  * multiplicative hash in exact BIGINT arithmetic, identical in both
-  * engines (salt adds BEFORE the multiply — see queries/Curation).
-  * One definition, referenced by every consumer, so the Spark side
-  * and the DuckDB oracles can never drift apart.
+/** The engine's hashes, one definition per engine each: every Spark
+  * query, every DuckDB oracle and every JVM kernel calls these, so the
+  * two engines can never drift apart. All are exact BIGINT arithmetic.
   *
-  * The input is reduced mod 2³¹ BEFORE the multiply so the product
-  * stays under 2⁶³ for ANY bigint input ((2³¹−1)·2654435761 ≈ 5.7e18):
-  * Spark/Scala would wrap silently on overflow while DuckDB raises,
-  * so without the reduction the cross-engine identity breaks for
-  * ids ≳ 2^31.4. Inputs below 2³¹ (every shipped id domain) hash to
-  * the same value as the unreduced form. */
+  *  - The salted Knuth word, the reproducible "random" stream:
+  *    ((x + salt) mod 2³¹) · 2654435761 mod 2³². [[sql]] is plain
+  *    arithmetic that Spark `expr` and DuckDB both read; [[col]] is the
+  *    Spark column and [[scalar]] the JVM long (stateful streaming
+  *    operators). The salt adds BEFORE the multiply (see
+  *    queries/Curation).
+  *  - The avalanche mix of a word h0 (two xor-shift rounds around one
+  *    odd multiply): h2 = ((h0 ^ h0 div 2¹⁶) · 1597334677) mod 2³²,
+  *    then h = h2 ^ h2 div 2¹³. A bare multiplicative hash of
+  *    consecutive ids is a lattice (q153); the mix breaks it and stays
+  *    injective on [0, 2³²). The query forms come in two rounds so the
+  *    caller binds h2 once as a column of its own: [[mixSql]] /
+  *    [[mixEndSql]] for DuckDB (`xor`, `//`), [[mixCol]] / [[mixEndCol]]
+  *    for Spark (`^`, `div`), and [[mix]] runs both on a JVM long.
+  *  - The 3-gram hash: the word (salt 0) of the packed code points
+  *    cp₀·961 + cp₁·31 + cp₂, which is below 2³¹, so the reduction
+  *    leaves it unchanged. [[gramSql]] is the DuckDB text over a
+  *    3-character string, [[gram]] the JVM kernels' scalar (MinHash
+  *    universal family, SimHash).
+  *
+  * Callers' contract: never inline the multiply. The word reduces its
+  * input mod 2³¹ BEFORE the multiply so the product stays under 2⁶³
+  * for ANY bigint input ((2³¹−1)·2654435761 ≈ 5.7e18): Spark/Scala
+  * would wrap silently on overflow while DuckDB raises, so without the
+  * reduction the cross-engine identity breaks for ids ≳ 2^31.4. Inputs
+  * below 2³¹ (every shipped id domain) hash to the same value as the
+  * unreduced form. The mix takes a word (< 2³²), which keeps
+  * h·1597334677 under 2⁶³. The Carter–Wegman seed formulas
+  * (`MinHashKernel.seedA`, q147's aₛ, `Matching.bloomFamily`) are
+  * multiplier families, not the word, and stay with their owners. */
 object Knuth {
   def sql(column: String, salt: Long): String =
     s"((($column + $salt) % 2147483648) * 2654435761) % 4294967296"
   def col(c: Column, salt: Long): Column =
     (((c + lit(salt)) % lit(2147483648L)) * lit(2654435761L)) % lit(4294967296L)
-  /** The same hash on a JVM long, for stateful streaming operators. */
   def scalar(x: Long, salt: Long): Long =
     (((x + salt) % 2147483648L) * 2654435761L) % 4294967296L
+
+  /** Mix round one, h0 → h2 (DuckDB). */
+  def mixSql(h0: String): String =
+    s"(xor($h0, $h0 // 65536) * 1597334677) % 4294967296"
+  /** Mix round two, h2 → h (DuckDB). */
+  def mixEndSql(h2: String): String = s"xor($h2, $h2 // 8192)"
+  /** Mix round one over column `h0` (Spark). */
+  def mixCol(h0: String): Column =
+    expr(s"(($h0 ^ ($h0 div 65536)) * 1597334677) % 4294967296")
+  /** Mix round two over column `h2` (Spark). */
+  def mixEndCol(h2: String): Column = expr(s"$h2 ^ ($h2 div 8192)")
+  /** Both mix rounds on a JVM long. */
+  def mix(h0: Long): Long = {
+    val h2 = ((h0 ^ (h0 / 65536)) * 1597334677L) % 4294967296L
+    h2 ^ (h2 / 8192)
+  }
+
+  /** The 3-gram hash of string column `g` (DuckDB). */
+  def gramSql(g: String): String = sql(
+    s"(ascii(substr($g, 1, 1)) * 961 + ascii(substr($g, 2, 1)) * 31 + " +
+      s"ascii(substr($g, 3, 1)))", 0L)
+  /** The 3-gram hash of three code points. */
+  def gram(c0: Int, c1: Int, c2: Int): Long =
+    scalar(c0 * 961L + c1 * 31L + c2, 0L)
 }
 
 object Det {

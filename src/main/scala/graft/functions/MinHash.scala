@@ -108,10 +108,8 @@ object MinHashKernel {
 
   /** k independent MinHash values from a UNIVERSAL hash family instead
     * of [[signatureSeeded]]'s k md5s per shingle: the 3-gram's base
-    * hash is the same exact-integer Knuth formula the other text
-    * oracles replay —
-    *   gh(g) = ((cp₀·961 + cp₁·31 + cp₂) · 2654435761) % 2³²
-    * (cpᵢ = code point of gram char i) — and hash j is
+    * hash gh(g) is [[graft.Knuth.gram]] over the gram's code points,
+    * the formula the text oracles replay, and hash j is
     *   (aⱼ·gh + bⱼ) % 4294967311.
     * This is the textbook MinHash construction (Broder; Carter–Wegman
     * hashing): one multiply-add-mod per shingle per seed, ~20× cheaper
@@ -127,10 +125,8 @@ object MinHashKernel {
     val mins = Array.fill(k)(Long.MaxValue)
     var i = 0
     while (i <= n - 3) {
-      val c0 = s.codePointAt(cp(i))
-      val c1 = s.codePointAt(cp(i + 1))
-      val c2 = s.codePointAt(cp(i + 2))
-      val base = ((c0 * 961L + c1 * 31L + c2) * 2654435761L) % 4294967296L
+      val base = graft.Knuth.gram(s.codePointAt(cp(i)),
+        s.codePointAt(cp(i + 1)), s.codePointAt(cp(i + 2)))
       var j = 0
       while (j < k) {
         val v = (as(j) * base + bs(j)) % UniversalP

@@ -12,8 +12,8 @@ object SimHashKernel {
   val Bits = 16
 
   /** 16-bit SimHash over the *distinct* 3-gram shingles of `text`:
-    * shingle hash = Knuth multiplicative 32-bit over char codes
-    * ((a*961 + b*31 + c) * 2654435761 mod 2^32), per-bit majority vote,
+    * shingle hash = the Knuth 3-gram hash of the code points
+    * ([[graft.Knuth.gram]]), per-bit majority vote,
     * bit set when vote >= 0. Integer-exact — byte-for-byte the SQL
     * formulation in q34's oracle. Returns -1 for texts shorter than one
     * shingle (callers filter length >= 3).
@@ -38,9 +38,8 @@ object SimHashKernel {
     var i = 0
     while (i <= n - 3) {
       if (seen.add(s.substring(cp(i), cp(i + 3)))) {
-        val packed = s.codePointAt(cp(i)) * 961 +
-          s.codePointAt(cp(i + 1)) * 31 + s.codePointAt(cp(i + 2))
-        val h = (packed.toLong * 2654435761L) % 4294967296L
+        val h = graft.Knuth.gram(s.codePointAt(cp(i)),
+          s.codePointAt(cp(i + 1)), s.codePointAt(cp(i + 2)))
         var b = 0
         while (b < Bits) {
           votes(b) += (((h >> b) & 1L).toInt * 2) - 1

@@ -43,7 +43,7 @@ import org.apache.spark.sql.functions._
   * table is the full previous round and DuckDB replays the exact
   * recurrence; an EXISTS(change) guard stops emission at the
   * fixpoint, and MAX(d) is the same effective-round count this loop
-  * returns (q309's SQL in queries/Graph.scala).
+  * returns ([[labelsSql]], q309's and q313's oracle).
   */
 object FixpointCC {
 
@@ -138,6 +138,42 @@ object FixpointCC {
     }
     (cur, rounds)
   }
+
+  /** The DuckDB replay of [[run]] (see "Oracle replay" above), the
+    * oracle of q309 and q313: `edgesCtes` is a WITH-clause body ending
+    * in a symmetric `edges(src, dst)`; the query returns the fixpoint
+    * labels as (`nodeAs`, `lblAs`) plus `rounds_run`. */
+  def labelsSql(edgesCtes: String, nodeAs: String, lblAs: String): String =
+    s"""
+        WITH RECURSIVE $edgesCtes,
+        nodes AS (SELECT DISTINCT src AS node FROM edges),
+        lab(d, node, lbl) AS (
+          SELECT 0, node, node FROM nodes
+          UNION
+          SELECT nx.d, nx.node, nx.lbl
+          FROM (
+            SELECT u.d + 1 AS d, u.node, MIN(u.lbl) AS lbl FROM (
+              SELECT d, node, lbl FROM lab
+              UNION ALL
+              SELECT a.d, a.node, b.lbl FROM lab a JOIN lab b ON b.node = a.lbl
+              UNION ALL
+              SELECT l.d, e.dst AS node, l.lbl FROM edges e JOIN lab l ON l.node = e.src
+            ) u GROUP BY u.d, u.node
+          ) nx
+          WHERE EXISTS (
+            SELECT 1 FROM (
+              SELECT u2.node, MIN(u2.lbl) AS lbl FROM (
+                SELECT d, node, lbl FROM lab
+                UNION ALL
+                SELECT a.d, a.node, b.lbl FROM lab a JOIN lab b ON b.node = a.lbl
+                UNION ALL
+                SELECT l.d, e.dst AS node, l.lbl FROM edges e JOIN lab l ON l.node = e.src
+              ) u2 GROUP BY u2.node
+            ) n2 JOIN lab pv ON pv.node = n2.node AND pv.lbl <> n2.lbl)
+        )
+        SELECT node AS $nodeAs, lbl AS $lblAs,
+               CAST((SELECT MAX(d) FROM lab) AS BIGINT) AS rounds_run
+        FROM lab WHERE d = (SELECT MAX(d) FROM lab)"""
 
   /** Every node labeled with its own id. Symmetric edges ⇒ the src
     * column alone covers the node set. */

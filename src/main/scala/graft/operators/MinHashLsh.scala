@@ -59,14 +59,13 @@ object MinHashLsh {
       bandKeyCol(sigCol, j, cfg.rowsPerBand)): _*)).as(Seq("band", "band_key"))
 
   /** DuckDB-side replay of one UNIVERSAL-family minimum (the
-    * `minhash_fast` math): gh(g) is the exact-integer Knuth 3-gram
-    * hash shared with the other text oracles; seed constants are
-    * inlined literals from [[graft.functions.MinHashKernel]]. */
+    * `minhash_fast` math) over the 3-gram hash [[graft.Knuth.gramSql]];
+    * seed constants are inlined literals from
+    * [[graft.functions.MinHashKernel]]. */
   def universalMinSql(gramsCol: String, seed: Int): String = {
     val a = graft.functions.MinHashKernel.seedA(seed)
     val b = graft.functions.MinHashKernel.seedB(seed)
-    val gh = "((ascii(substr(g, 1, 1)) * 961 + ascii(substr(g, 2, 1)) * 31 + " +
-      "ascii(substr(g, 3, 1))) * 2654435761) % 4294967296"
+    val gh = graft.Knuth.gramSql("g")
     s"list_min(list_transform($gramsCol, g -> ($a * ($gh) + $b) % " +
       s"${graft.functions.MinHashKernel.UniversalP}))"
   }

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.io.File
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -44,6 +44,18 @@ object PairGraph {
   /** Bump when the BUILD semantics change, so an upgraded engine
     * never misreads an old artifact as current. */
   val LayoutVersion = 1
+
+  /** The distinct md5-relabeled word 5-grams of the token array column
+    * `tk` (Spark). Callers drop rows under 5 tokens first: Spark
+    * `sequence` descends on shorter rows. */
+  def word5Grams: Column = expr(
+    "array_distinct(transform(sequence(1, size(tk) - 4), " +
+      "i -> md5(concat_ws(' ', slice(tk, i, 5)))))")
+
+  /** [[word5Grams]], DuckDB side (`range`'s upper bound is exclusive). */
+  val word5GramsSql =
+    "list_distinct(list_transform(range(1, len(tk) - 3), " +
+      "i -> md5(array_to_string(list_slice(tk, i, i + 4), ' '))))"
 
   /** All document pairs with word-5-gram Jaccard ≥ 0.7:
     * `(doc_a, doc_b, sza, szb, n_common)` with doc_a < doc_b —
@@ -102,24 +114,7 @@ object PairGraph {
     * twice and counts intersections with one linear merge per pair
     * (codegen'd sorted_intersect_count_str). */
   private def derive(s: SparkSession, dir: String): DataFrame = {
-    // spread the tokenize+md5 kernel input (the q192 single-file-scan
-    // cliff): documents is one parquet file, so without this the
-    // whole gram kernel strands on ONE task while every other core
-    // idles — measured 1.79 → 1.42 s steady on the q310 shape at
-    // sf0.1 (OPTIMIZATION_r15), and the same pass is the head of every
-    // pairs07 ingest build
-    val spread = graft.Tables.spreadKernelInput(s, dir, Seq("documents"),
-      graft.Tables.load(s, dir, "documents").select("doc_id", "text"),
-      col("doc_id"))
-    val sh = spread
-      .withColumn("tk", split(col("text"), " "))
-      .filter(size(col("tk")) >= 5)
-      .select(col("doc_id"), expr(
-        "array_distinct(transform(sequence(1, size(tk) - 4), " +
-          "i -> md5(concat_ws(' ', slice(tk, i, 5)))))").as("grams"))
-      .withColumn("sz", size(col("grams")).cast("long"))
-    val docsArr = graft.Checkpoints.materialize(
-      sh.select(col("doc_id"), col("sz"), sort_array(col("grams")).as("grams")))
+    val docsArr = gramArrays(s, dir)
     val g = docsArr.select(col("doc_id"), col("sz"), explode(col("grams")).as("g"))
     val dfq = g.groupBy("g").agg(count(lit(1)).as("df"))
     // prefix = first (sz − ⌈0.7·sz⌉ + 1) grams under (df, g) order;
@@ -145,5 +140,27 @@ object PairGraph {
         graft.functions.Jaccard.sortedIntersectCountStr(col("ga"), col("gb")))
       .filter(lit(17) * col("n_common") >= lit(7) * (col("sza") + col("szb")))
       .select("doc_a", "doc_b", "sza", "szb", "n_common")
+  }
+
+  /** The materialized doc-array table of every document with 5 or more
+    * tokens: `(doc_id, sz, grams)`, grams its [[word5Grams]] sorted,
+    * sz their count. Shared by [[derive]] and q302's batch×archive
+    * join. */
+  private[graft] def gramArrays(s: SparkSession, dir: String): DataFrame = {
+    // spread the tokenize+md5 kernel input (the q192 single-file-scan
+    // cliff): documents is one parquet file, so without this the
+    // whole gram kernel strands on ONE task while every other core
+    // idles — measured 1.79 → 1.42 s steady on the q310 shape at
+    // sf0.1 (OPTIMIZATION_r15), and the same pass is the head of every
+    // pairs07 ingest build
+    val sh = graft.Tables.spreadKernelInput(s, dir, Seq("documents"),
+        graft.Tables.load(s, dir, "documents").select("doc_id", "text"),
+        col("doc_id"))
+      .withColumn("tk", split(col("text"), " "))
+      .filter(size(col("tk")) >= 5)
+      .select(col("doc_id"), word5Grams.as("grams"))
+      .withColumn("sz", size(col("grams")).cast("long"))
+    graft.Checkpoints.materialize(
+      sh.select(col("doc_id"), col("sz"), sort_array(col("grams")).as("grams")))
   }
 }

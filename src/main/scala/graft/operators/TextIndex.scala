@@ -267,6 +267,26 @@ object TextIndex {
       .select(col("doc_id"), col("col").as("tok"),
         (col("pos") + 1).cast("long").as("pos"))
 
+  /** The phrase a positional probe looks up: the dominant word
+    * trigram of `docs(text)` under (count DESC, trigram ASC), as one
+    * row `(w1, w2, w3)` — q303, q312 and the streaming phrase matcher.
+    * The global top-1 is a sort+limit, NOT a window: it plans as
+    * TakeOrderedAndProject — per-partition top-1 then a 1-row driver
+    * merge, never a single-partition vocabulary sort. */
+  def dominantTrigram(docs: DataFrame): DataFrame = {
+    val tri = docs
+      .withColumn("tk", split(col("text"), " "))
+      .filter(size(col("tk")) >= 3)
+      .select(explode(expr(
+        "transform(sequence(1, size(tk) - 2), " +
+          "i -> concat_ws(' ', tk[i-1], tk[i], tk[i+1]))")).as("g"))
+    tri.groupBy("g").agg(count(lit(1)).as("n"))
+      .orderBy(desc("n"), col("g")).limit(1)
+      .select(element_at(split(col("g"), " "), 1).as("w1"),
+        element_at(split(col("g"), " "), 2).as("w2"),
+        element_at(split(col("g"), " "), 3).as("w3"))
+  }
+
   /** Build of one positional artifact of `docs` (by-name, as in
     * [[buildDocs]]): a deterministic bucketed write of
     * (doc_id, tok, pos), one file per bucket, rows totally ordered by

@@ -854,7 +854,7 @@ object Curation {
                    AS thr_permyriad
           FROM w CROSS JOIN tot t)
         SELECT d.source, th.n, th.w, th.thr_permyriad,
-               CAST(SUM(CASE WHEN ((d.doc_id + 7919) * 2654435761) % 4294967296
+               CAST(SUM(CASE WHEN ${graft.Knuth.sql("d.doc_id", 7919L)}
                                   % 10000 < th.thr_permyriad
                              THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
         FROM documents d JOIN thr th USING (source)
@@ -1555,8 +1555,7 @@ object Curation {
       Some(s"""
         WITH r AS (
           SELECT d.source, d.n_chars, b.b,
-                 (((d.doc_id * 1000 + b.b + 9176) % 2147483648)
-                  * 2654435761) % 4294967296 % 1000 AS h
+                 ${graft.Knuth.sql("(d.doc_id * 1000 + b.b)", 9176L)} % 1000 AS h
           FROM documents d CROSS JOIN (
             SELECT unnest(range(0, 16)) AS b) b),
         w AS (
@@ -1590,9 +1589,8 @@ object Curation {
       val r = t(s, dir, "documents")
         .select(col("source"), col("n_chars"), col("doc_id"))
         .withColumn("b", explode(sequence(lit(0), lit(15))))
-        .withColumn("h", expr(
-          "(((doc_id * 1000 + b + 9176) % 2147483648)" +
-            " * 2654435761) % 4294967296 % 1000"))
+        .withColumn("h",
+          expr(s"${graft.Knuth.sql("(doc_id * 1000 + b)", 9176L)} % 1000"))
       val w = r.withColumn("wt",
         when(col("h") < 368, 0L).when(col("h") < 736, 1L)
           .when(col("h") < 920, 2L).when(col("h") < 981, 3L)
@@ -2136,6 +2134,6 @@ object Curation {
     * aₛ·base < 2⁶² — no overflow. */
   private def hrwSql(s: String): String =
     s"(((($s + 1) * 2654435761) % 1073741789 + 1) * " +
-      s"((doc_id * 2654435761) % 4294967296) + " +
+      s"(${graft.Knuth.sql("doc_id", 0L)}) + " +
       s"(($s + 1) * 2246822519) % 4294967296) % 4294967311"
 }

@@ -25,6 +25,25 @@ object Events {
 
   private val sessionGapUs: Long = 30L * 60 * 1000 * 1000 // 30 min
 
+  /** The sketch input of q153, q160 and q162 (KMV, KMV algebra, HLL):
+    * distinct (event_type, h) with h the mixed salted Knuth word of
+    * user_id (salt 9176), as the WITH-clause entries `h0t → h2t → uh`. */
+  private val userHashCte = s"""h0t AS (
+          SELECT DISTINCT event_type, ${Knuth.sql("user_id", 9176L)} AS h0
+          FROM events),
+        h2t AS (
+          SELECT event_type, ${Knuth.mixSql("h0")} AS h2 FROM h0t),
+        uh AS (
+          SELECT DISTINCT event_type, ${Knuth.mixEndSql("h2")} AS h FROM h2t)"""
+
+  /** Spark side of [[userHashCte]]: the `uh(event_type, h)` frame. */
+  private def userHashes(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "events")
+      .select(col("event_type"), Knuth.col(col("user_id"), 9176L).as("h0"))
+      .withColumn("h2", Knuth.mixCol("h0"))
+      .select(col("event_type"), Knuth.mixEndCol("h2").as("h"))
+      .distinct()
+
   /** q105's rebuild semantics — the SCD2 islands of the full event log.
     * Shared: it is q105's oracle AND q179's (where the Spark side runs
     * the incremental APPLY and this full rebuild is the equality
@@ -1038,15 +1057,7 @@ object Events {
     Q(
       "q153_kmv_distinct",
       Some(s"""
-        WITH h0t AS (
-          SELECT DISTINCT event_type, ${Knuth.sql("user_id", 9176L)} AS h0
-          FROM events),
-        h2t AS (
-          SELECT event_type,
-                 (xor(h0, h0 // 65536) * 1597334677) % 4294967296 AS h2
-          FROM h0t),
-        uh AS (
-          SELECT DISTINCT event_type, xor(h2, h2 // 8192) AS h FROM h2t),
+        WITH $userHashCte,
         rk AS (
           SELECT event_type, h,
                  row_number() OVER (PARTITION BY event_type ORDER BY h) AS r,
@@ -1067,12 +1078,7 @@ object Events {
                     // exact_distinct AS BIGINT) AS abs_err_permille
         FROM sk""")
     ) { (s, dir) =>
-      val uh = t(s, dir, "events")
-        .select(col("event_type"), Knuth.col(col("user_id"), 9176L).as("h0"))
-        .withColumn("h2",
-          expr("((h0 ^ (h0 div 65536)) * 1597334677) % 4294967296"))
-        .select(col("event_type"), expr("h2 ^ (h2 div 8192)").as("h"))
-        .distinct()
+      val uh = userHashes(s, dir)
       val topk = udaf(new graft.functions.TopKAggregator(64),
         graft.functions.TopK.inputEncoder)
       val sk = uh.groupBy("event_type")
@@ -1113,15 +1119,7 @@ object Events {
     Q(
       "q160_kmv_algebra",
       Some(s"""
-        WITH h0t AS (
-          SELECT DISTINCT event_type, ${Knuth.sql("user_id", 9176L)} AS h0
-          FROM events),
-        h2t AS (
-          SELECT event_type,
-                 (xor(h0, h0 // 65536) * 1597334677) % 4294967296 AS h2
-          FROM h0t),
-        uh AS (
-          SELECT DISTINCT event_type, xor(h2, h2 // 8192) AS h FROM h2t),
+        WITH $userHashCte,
         rk AS (
           SELECT event_type, h,
                  row_number() OVER (PARTITION BY event_type ORDER BY h) AS r,
@@ -1165,12 +1163,7 @@ object Events {
         FROM est e LEFT JOIN ix
           ON ix.type_a = e.type_a AND ix.type_b = e.type_b""")
     ) { (s, dir) =>
-      val uh = t(s, dir, "events")
-        .select(col("event_type"), Knuth.col(col("user_id"), 9176L).as("h0"))
-        .withColumn("h2",
-          expr("((h0 ^ (h0 div 65536)) * 1597334677) % 4294967296"))
-        .select(col("event_type"), expr("h2 ^ (h2 div 8192)").as("h"))
-        .distinct()
+      val uh = userHashes(s, dir)
       val topk = udaf(new graft.functions.TopKAggregator(64),
         graft.functions.TopK.inputEncoder)
       val sk = uh.groupBy("event_type")
@@ -1227,15 +1220,7 @@ object Events {
     Q(
       "q162_hll_distinct",
       Some(s"""
-        WITH h0t AS (
-          SELECT DISTINCT event_type, ${Knuth.sql("user_id", 9176L)} AS h0
-          FROM events),
-        h2t AS (
-          SELECT event_type,
-                 (xor(h0, h0 // 65536) * 1597334677) % 4294967296 AS h2
-          FROM h0t),
-        uh AS (
-          SELECT DISTINCT event_type, xor(h2, h2 // 8192) AS h FROM h2t),
+        WITH $userHashCte,
         reg AS (
           SELECT event_type, h % 64 AS j,
                  CASE WHEN h // 64 = 0 THEN 27
@@ -1271,12 +1256,7 @@ object Events {
                  AS abs_err_permille
         FROM fin""")
     ) { (s, dir) =>
-      val uh = t(s, dir, "events")
-        .select(col("event_type"), Knuth.col(col("user_id"), 9176L).as("h0"))
-        .withColumn("h2",
-          expr("((h0 ^ (h0 div 65536)) * 1597334677) % 4294967296"))
-        .select(col("event_type"), expr("h2 ^ (h2 div 8192)").as("h"))
-        .distinct()
+      val uh = userHashes(s, dir)
       val reg = uh.select(col("event_type"), (col("h") % 64).as("j"),
         when(expr("h div 64") === 0, lit(27L))
           .otherwise(lit(27L) - length(expr("bin(h div 64)")).cast("long"))
@@ -1507,10 +1487,8 @@ object Events {
       "q173_ams_f2",
       Some {
         val mixH =
-          s"""SELECT event_type, c,
-                 xor(h2, h2 // 8192) AS h FROM (
-               SELECT event_type, c,
-                      (xor(h0, h0 // 65536) * 1597334677) % 4294967296 AS h2
+          s"""SELECT event_type, c, ${Knuth.mixEndSql("h2")} AS h FROM (
+               SELECT event_type, c, ${Knuth.mixSql("h0")} AS h2
                FROM (
                  SELECT event_type, c, (${graft.Knuth.sql("user_id", 5711L)}) AS h0
                  FROM c) t0) t1"""
@@ -1543,9 +1521,8 @@ object Events {
         .groupBy("event_type", "user_id").agg(count(lit(1)).as("c"))
       val hh = c
         .withColumn("h0", expr(graft.Knuth.sql("user_id", 5711L)))
-        .withColumn("h2",
-          expr("((h0 ^ (h0 div 65536)) * 1597334677) % 4294967296"))
-        .withColumn("h", expr("h2 ^ (h2 div 8192)"))
+        .withColumn("h2", Knuth.mixCol("h0"))
+        .withColumn("h", Knuth.mixEndCol("h2"))
       val ctrAggs = (0 until 16).map(j =>
         sum(when(expr(s"(h div ${1L << j}) % 2 = 1"), col("c"))
           .otherwise(-col("c"))).cast("long").as(s"ctr$j"))

@@ -1076,48 +1076,12 @@ object Graph {
     // non-minimal labels and nothing fails, whereas the fixpoint loop
     // runs O(log diameter) rounds whatever the diameter is
     // (CcFixpointSpec demonstrates the divergence on a long chain).
-    // The oracle replays the EXACT recurrence, convergence check
-    // included: rows carry the round index d, which makes every
-    // round's full label table "new" under recursive-CTE UNION dedup
-    // (so the working table is the complete previous round, not a
-    // delta), the recursive term recomputes round d+1 from round d
-    // with the same self ∪ jump ∪ neighbor MIN, and an
-    // EXISTS(any-label-differs) guard stops emission at the fixpoint
-    // — MAX(d) is then the same effective-round count the Spark loop
-    // returns, so the hash gate covers the round COUNT, not just the
-    // final labels.
+    // The oracle (FixpointCC.labelsSql) replays the EXACT recurrence,
+    // convergence check included, so the hash gate covers the round
+    // COUNT, not just the final labels.
     Q(
       "q309_cc_fixpoint",
-      Some(s"""
-        WITH RECURSIVE $pairsEdgesCte,
-        nodes AS (SELECT DISTINCT src AS node FROM edges),
-        lab(d, node, lbl) AS (
-          SELECT 0, node, node FROM nodes
-          UNION
-          SELECT nx.d, nx.node, nx.lbl
-          FROM (
-            SELECT u.d + 1 AS d, u.node, MIN(u.lbl) AS lbl FROM (
-              SELECT d, node, lbl FROM lab
-              UNION ALL
-              SELECT a.d, a.node, b.lbl FROM lab a JOIN lab b ON b.node = a.lbl
-              UNION ALL
-              SELECT l.d, e.dst AS node, l.lbl FROM edges e JOIN lab l ON l.node = e.src
-            ) u GROUP BY u.d, u.node
-          ) nx
-          WHERE EXISTS (
-            SELECT 1 FROM (
-              SELECT u2.node, MIN(u2.lbl) AS lbl FROM (
-                SELECT d, node, lbl FROM lab
-                UNION ALL
-                SELECT a.d, a.node, b.lbl FROM lab a JOIN lab b ON b.node = a.lbl
-                UNION ALL
-                SELECT l.d, e.dst AS node, l.lbl FROM edges e JOIN lab l ON l.node = e.src
-              ) u2 GROUP BY u2.node
-            ) n2 JOIN lab pv ON pv.node = n2.node AND pv.lbl <> n2.lbl)
-        )
-        SELECT node, lbl AS comp,
-               CAST((SELECT MAX(d) FROM lab) AS BIGINT) AS rounds_run
-        FROM lab WHERE d = (SELECT MAX(d) FROM lab)""")
+      Some(graft.operators.FixpointCC.labelsSql(pairsEdgesCte, "node", "comp"))
     ) { (s, dir) =>
       val (labels, rounds) =
         graft.operators.FixpointCC.run(tradingEdges(s, dir))

@@ -556,11 +556,10 @@ object Layout {
     // one corpus pass, one window, deterministic bytes.
     Q(
       "q240_packed_offsets",
-      Some("""
+      Some(s"""
         WITH r AS (
           SELECT doc_id, n_chars,
-                 ((doc_id + 9176) % 2147483648) * 2654435761
-                   % 4294967296 % 8 AS shard
+                 ${graft.Knuth.sql("doc_id", 9176L)} % 8 AS shard
           FROM documents),
         w AS (
           SELECT doc_id, shard, n_chars,
@@ -574,8 +573,7 @@ object Layout {
         FROM w""")
     ) { (s, dir) =>
       val r = t(s, dir, "documents").select(col("doc_id"), col("n_chars"),
-        expr("((doc_id + 9176) % 2147483648) * 2654435761" +
-          " % 4294967296 % 8").as("shard"))
+        expr(s"${graft.Knuth.sql("doc_id", 9176L)} % 8").as("shard"))
       val wRun = Window.partitionBy("shard").orderBy("doc_id")
       val wAll = Window.partitionBy("shard")
       r.select(col("doc_id"), col("shard"),

@@ -519,9 +519,9 @@ object Matching {
           s"SELECT c_custkey, $i AS i, (${bloomH0Sql(i)}) AS h0 FROM $src"
         }.mkString("\n            UNION ALL ")
         def mixed(h0cte: String): String = s"""
-          SELECT c_custkey, i, xor(h2, h2 // 8192) % 1024 AS pos FROM (
-            SELECT c_custkey, i,
-                   (xor(h0, h0 // 65536) * 1597334677) % 4294967296 AS h2
+          SELECT c_custkey, i, ${graft.Knuth.mixEndSql("h2")} % 1024 AS pos
+          FROM (
+            SELECT c_custkey, i, ${graft.Knuth.mixSql("h0")} AS h2
             FROM $h0cte) t"""
         s"""
         WITH bld AS (
@@ -576,9 +576,8 @@ object Matching {
         expr("stack(3, " + bloomFamily.indices.map { i =>
           s"${i}L, (${bloomH0Sql(i)})"
         }.mkString(", ") + ") AS (i, h0)"))
-        .withColumn("h2",
-          expr("((h0 ^ (h0 div 65536)) * 1597334677) % 4294967296"))
-        .withColumn("pos", expr("(h2 ^ (h2 div 8192)) % 1024"))
+        .withColumn("h2", graft.Knuth.mixCol("h0"))
+        .withColumn("pos", graft.Knuth.mixEndCol("h2") % 1024)
         .select("c_custkey", "i", "pos")
       val ks = broadcast(s.range(1, 4).select(col("id").as("k")))
       // the filter itself: per sweep point k, the distinct bit positions

@@ -2530,7 +2530,7 @@ object Relational {
     // 100 TB the sample join touches 1/16 of keys — the whole point.
     Q(
       "q251_sample_estimate",
-      Some("""
+      Some(s"""
         WITH o AS (
           SELECT o_orderkey,
                  year(CAST(o_orderdate AS DATE)) * 100
@@ -2543,16 +2543,14 @@ object Relational {
         ck AS (
           SELECT o.mon, CAST(16 * COUNT(*) AS BIGINT) AS est_corr
           FROM lineitem l JOIN o ON o.o_orderkey = l.l_orderkey
-          WHERE ((l.l_orderkey + 9176) % 2147483648) * 2654435761
-                % 4294967296 % 16 = 0
+          WHERE ${graft.Knuth.sql("l.l_orderkey", 9176L)} % 16 = 0
           GROUP BY 1),
         ind AS (
           SELECT o.mon, CAST(256 * COUNT(*) AS BIGINT) AS est_indep
           FROM lineitem l JOIN o ON o.o_orderkey = l.l_orderkey
-          WHERE ((o.o_orderkey + 9176) % 2147483648) * 2654435761
-                % 4294967296 % 16 = 0
-            AND ((l.l_orderkey * 8 + l.l_linenumber + 5189) % 2147483648)
-                * 2654435761 % 4294967296 % 16 = 0
+          WHERE ${graft.Knuth.sql("o.o_orderkey", 9176L)} % 16 = 0
+            AND ${graft.Knuth.sql("(l.l_orderkey * 8 + l.l_linenumber)", 5189L)}
+                % 16 = 0
           GROUP BY 1)
         SELECT act.mon, act.actual,
                COALESCE(ck.est_corr, 0) AS est_corr,
@@ -2571,7 +2569,7 @@ object Relational {
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"))
       def keyHash(c: String, salt: Long) =
-        expr(s"(($c + $salt) % 2147483648) * 2654435761 % 4294967296 % 16")
+        expr(s"${graft.Knuth.sql(c, salt)} % 16")
       // one corpus join pass: actual and both sampled counts fold into
       // conditional aggregates (three separate aggregations over the
       // shared join subtree would re-execute it three times)
@@ -2582,8 +2580,7 @@ object Relational {
           (lit(16L) * sum(when(keyHash("l_orderkey", 9176L) === 0, 1L)
             .otherwise(0L))).as("est_corr"),
           (lit(256L) * sum(when(keyHash("o_orderkey", 9176L) === 0 &&
-            expr("((l_orderkey * 8 + l_linenumber + 5189) % 2147483648)" +
-              " * 2654435761 % 4294967296 % 16") === 0, 1L)
+            keyHash("(l_orderkey * 8 + l_linenumber)", 5189L) === 0, 1L)
             .otherwise(0L))).as("est_indep"))
         .select(col("mon"), col("actual"), col("est_corr"), col("est_indep"),
           expr("(1000 * (est_corr - actual)) div actual").as("err_corr_pm"),

@@ -40,11 +40,8 @@ object TextOps {
   private def c10Positional(s: SparkSession, dir: String): DataFrame =
     graft.operators.TextIndex.positionalSplit(s, dir, Splits.c10("doc_id"))
 
-  /** 3-gram character shingles, distinct, Spark side. */
-  private val shinglesExpr =
-    "array_distinct(transform(sequence(1, length(text) - 2), i -> substring(text, i, 3)))"
-
-  /** Same shingles, DuckDB side (range upper bound is exclusive).
+  /** 3-gram character shingles, distinct, DuckDB side (range upper
+    * bound is exclusive).
     * `private[queries]`: q301's pair verifier reuses the fragment. */
   private[queries] val shinglesSql =
     "list_distinct(list_transform(range(1, length(text) - 1), i -> substr(text, CAST(i AS INT), 3)))"
@@ -96,8 +93,6 @@ object TextOps {
           $bands)"""
   }
 
-  /** Knuth multiplicative 32-bit hash of one 3-gram, from ASCII codes —
-    * exact BIGINT arithmetic, identical in both engines. */
   /** q299's prefix-filtered EXACT Jaccard-0.7 self-join — since round
     * 14 resolved from the durable pair-graph artifact
     * ([[graft.operators.PairGraph]]; derivation unchanged, scaladoc
@@ -116,23 +111,10 @@ object TextOps {
     * Jaccard-0.7 pair; derivation unchanged from q302 (scaladoc at
     * the registration site). */
   private def incrementalExactPairs(s: SparkSession, dir: String): DataFrame = {
-    // spread the tokenize+md5 kernel input (the q192 single-file-scan
-    // cliff, measured on the sibling q310 shape: 1.79 → 1.42 s steady
-    // at sf0.1) — documents is one parquet file, so without this the
-    // gram kernel strands on one task
-    val sh = graft.Tables.spreadKernelInput(s, dir, Seq("documents"),
-        t(s, dir, "documents").select("doc_id", "text"), col("doc_id"))
-      .withColumn("tk", split(col("text"), " "))
-      .filter(size(col("tk")) >= 5)
-      .select(col("doc_id"), expr(
-        "array_distinct(transform(sequence(1, size(tk) - 4), " +
-          "i -> md5(concat_ws(' ', slice(tk, i, 5)))))").as("grams"))
-      .withColumn("sz", size(col("grams")).cast("long"))
     // one materialized doc-array table; exploded gram streams derive
     // from it and the verify joins stay candidate×doc-sized (the
     // q299 shape)
-    val docsArr = graft.Checkpoints.materialize(
-      sh.select(col("doc_id"), col("sz"), sort_array(col("grams")).as("grams")))
+    val docsArr = graft.operators.PairGraph.gramArrays(s, dir)
     val g = docsArr.select(col("doc_id"), col("sz"), explode(col("grams")).as("g"))
     val gc = g.filter(col("doc_id") % 10 =!= 0)
     val gn = g.filter(col("doc_id") % 10 === 0)
@@ -170,24 +152,38 @@ object TextOps {
       .select("new_id", "corpus_id", "szn", "szc", "n_common")
   }
 
+  /** Every document's distinct word-5-grams as WITH-clause entries
+    * `tok → sh → g(doc_id, sz, g)`, one row per gram, sz the doc's
+    * gram count (DuckDB side of [[graft.operators.PairGraph.gramArrays]]). */
+  private val gramRowsCte = s"""
+        tok AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
+        sh AS (
+          SELECT doc_id, ${graft.operators.PairGraph.word5GramsSql} AS grams
+          FROM tok WHERE len(tk) >= 5),
+        g AS (SELECT doc_id, CAST(len(grams) AS BIGINT) AS sz, unnest(grams) AS g FROM sh)"""
+
   /** The q299 brute-pair SQL body (gram join, integer threshold) as a
     * WITH-clause fragment ending in `p(doc_a, doc_b, sza, szb,
     * n_common)` — shared by the q299 oracle and q307's group oracle. */
-  private val exactPairsCte = """
-        tok AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        sh AS (
-          SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 3),
-                   i -> md5(array_to_string(list_slice(tk, i, i + 4), ' ')))) AS grams
-          FROM tok WHERE len(tk) >= 5),
-        g AS (SELECT doc_id, CAST(len(grams) AS BIGINT) AS sz, unnest(grams) AS g FROM sh),
+  private val exactPairsCte = s"""$gramRowsCte,
         p AS (
           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.sz AS sza, b.sz AS szb,
                  CAST(COUNT(*) AS BIGINT) AS n_common
           FROM g a JOIN g b ON b.g = a.g AND b.doc_id > a.doc_id
           GROUP BY 1, 2, 3, 4)"""
 
-  private def gramHashSql(g: String): String =
-    s"((ascii(substr($g, 1, 1)) * 961 + ascii(substr($g, 2, 1)) * 31 + ascii(substr($g, 3, 1))) * 2654435761) % 4294967296"
+  /** [[incrementalExactPairs]]' oracle body before its threshold: the
+    * all-pairs batch (doc_id % 10 = 0) × archive gram join as a
+    * WITH-clause fragment ending in `p(new_id, corpus_id, szn, szc,
+    * n_common)` — shared by the q302 and q314 oracles. */
+  private val incrementalPairsCte = s"""$gramRowsCte,
+        gn AS (SELECT * FROM g WHERE doc_id % 10 = 0),
+        gc AS (SELECT * FROM g WHERE doc_id % 10 <> 0),
+        p AS (
+          SELECT n.doc_id AS new_id, c.doc_id AS corpus_id, n.sz AS szn, c.sz AS szc,
+                 CAST(COUNT(*) AS BIGINT) AS n_common
+          FROM gn n JOIN gc c ON c.g = n.g
+          GROUP BY 1, 2, 3, 4)"""
 
   /** The q66 min-label clustering pipeline as a WITH-clause body
     * (b bands × r rows, 3 unrolled propagation rounds): terminates in
@@ -234,12 +230,84 @@ object TextOps {
           SELECT doc_id, unnest($shinglesSql) AS g
           FROM documents WHERE length(text) >= 3),
         hashed AS (
-          SELECT doc_id, ${gramHashSql("g")} AS h FROM grams),
+          SELECT doc_id, ${graft.Knuth.gramSql("g")} AS h FROM grams),
         votes AS (
           SELECT doc_id,
                  $votes
           FROM hashed GROUP BY doc_id)
         SELECT doc_id, CAST($bits AS BIGINT) AS simhash FROM votes"""
+  }
+
+  /** The winnow fingerprints of `functions/Winnow` (k = 5, w = 4),
+    * DuckDB side, as WITH-clause entries `hs → fps(doc_id, fp)`
+    * (distinct): the base-257 5-gram hash of code points mod 2³² at
+    * every position, then the minimum of every window of 4 hashes
+    * (a single short window when a doc has fewer). q61 and q64. */
+  private val winnowFpsCte = {
+    val gramHash = (0 until 5).map { j =>
+      s"CAST(ascii(substr(text, CAST(i + $j AS INT), 1)) AS BIGINT)"
+    }.reduce((acc, c) => s"($acc * 257 + $c)") + " % 4294967296"
+    s"""hs AS (
+          SELECT doc_id,
+                 list_transform(range(1, length(text) - 3), i -> $gramHash) AS h
+          FROM documents WHERE length(text) >= 5),
+        fps AS (
+          SELECT DISTINCT doc_id, fp FROM (
+            SELECT doc_id,
+                   unnest(list_transform(range(1, greatest(len(h) - 3, 1) + 1),
+                     i -> list_min(list_transform(
+                            range(i, least(i + 4, len(h) + 1)),
+                            j -> h[CAST(j AS INT)])))) AS fp
+            FROM hs) t)"""
+  }
+
+  /** q303's oracle (q312's too: the LSM view must equal the corpus-wide
+    * positions): every occurrence of the dominant word trigram as a
+    * 3-way (doc_id, pos) self-join, per doc its count and first
+    * position. */
+  private val phraseSearchSql = """
+        WITH tok AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
+        pos AS (
+          SELECT doc_id, u.tok AS tok, u.pos AS pos FROM (
+            SELECT doc_id, unnest(list_transform(range(1, len(tk) + 1),
+                     i -> struct_pack(tok := tk[i], pos := CAST(i AS BIGINT)))) AS u
+            FROM tok)),
+        tri AS (
+          SELECT unnest(list_transform(range(1, len(tk) - 1),
+                   i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS g
+          FROM tok),
+        top1 AS (
+          SELECT string_split(g, ' ')[1] AS w1, string_split(g, ' ')[2] AS w2,
+                 string_split(g, ' ')[3] AS w3
+          FROM (SELECT g, COUNT(*) AS n FROM tri GROUP BY g
+                ORDER BY n DESC, g LIMIT 1)),
+        m AS (
+          SELECT p1.doc_id, p1.pos
+          FROM pos p1
+          JOIN pos p2 ON p2.doc_id = p1.doc_id AND p2.pos = p1.pos + 1
+          JOIN pos p3 ON p3.doc_id = p1.doc_id AND p3.pos = p1.pos + 2
+          CROSS JOIN top1 t
+          WHERE p1.tok = t.w1 AND p2.tok = t.w2 AND p3.tok = t.w3)
+        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_matches,
+               MIN(pos) AS first_pos
+        FROM m GROUP BY doc_id"""
+
+  /** The Spark side of [[phraseSearchSql]] over positional postings
+    * `toks(doc_id, pos, tok)` and the 1-row phrase frame `top1(w1, w2,
+    * w3)`: three term-selected posting streams — each filter references
+    * the broadcast phrase frame, so the scans prune to the phrase terms
+    * without hardcoding them — joined on (doc_id, pos). */
+  private def phraseMatches(toks: DataFrame, top1: DataFrame): DataFrame = {
+    val tagged = toks.crossJoin(broadcast(top1))
+    val m1 = tagged.filter(col("tok") === col("w1"))
+      .select(col("doc_id"), col("pos"))
+    val m2 = tagged.filter(col("tok") === col("w2"))
+      .select(col("doc_id"), (col("pos") - 1).as("pos"))
+    val m3 = tagged.filter(col("tok") === col("w3"))
+      .select(col("doc_id"), (col("pos") - 2).as("pos"))
+    m1.join(m2, Seq("doc_id", "pos")).join(m3, Seq("doc_id", "pos"))
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_matches"), min(col("pos")).as("first_pos"))
   }
 
   /** q62's BPE-style pre-tokenizer: the GPT-2 pattern family —
@@ -556,23 +624,9 @@ object TextOps {
     // math gram-by-gram with list_min per window.
     Q(
       "q61_winnow_fingerprints",
-      Some {
-        val gramHash = (0 until 5).map { j =>
-          s"CAST(ascii(substr(text, CAST(i + $j AS INT), 1)) AS BIGINT)"
-        }.reduce((acc, c) => s"($acc * 257 + $c)") + " % 4294967296"
-        s"""
-        WITH hs AS (
-          SELECT doc_id,
-                 list_transform(range(1, length(text) - 3), i -> $gramHash) AS h
-          FROM documents WHERE length(text) >= 5)
-        SELECT DISTINCT doc_id, fp FROM (
-          SELECT doc_id,
-                 unnest(list_transform(range(1, greatest(len(h) - 3, 1) + 1),
-                   i -> list_min(list_transform(
-                          range(i, least(i + 4, len(h) + 1)),
-                          j -> h[CAST(j AS INT)])))) AS fp
-          FROM hs) t"""
-      }
+      Some(s"""
+        WITH $winnowFpsCte
+        SELECT doc_id, fp FROM fps""")
     ) { (s, dir) =>
       t(s, dir, "documents")
         .select(col("doc_id"),
@@ -592,23 +646,8 @@ object TextOps {
     // an IDF-style filter instead of key refinement.
     Q(
       "q64_winnow_neardup",
-      Some {
-        val gramHash = (0 until 5).map { j =>
-          s"CAST(ascii(substr(text, CAST(i + $j AS INT), 1)) AS BIGINT)"
-        }.reduce((acc, c) => s"($acc * 257 + $c)") + " % 4294967296"
-        s"""
-        WITH hs AS (
-          SELECT doc_id,
-                 list_transform(range(1, length(text) - 3), i -> $gramHash) AS h
-          FROM documents WHERE length(text) >= 5),
-        fps AS (
-          SELECT DISTINCT doc_id, fp FROM (
-            SELECT doc_id,
-                   unnest(list_transform(range(1, greatest(len(h) - 3, 1) + 1),
-                     i -> list_min(list_transform(
-                            range(i, least(i + 4, len(h) + 1)),
-                            j -> h[CAST(j AS INT)])))) AS fp
-            FROM hs) t),
+      Some(s"""
+        WITH $winnowFpsCte,
         kept AS (
           SELECT doc_id, fp FROM (
             SELECT doc_id, fp, COUNT(*) OVER (PARTITION BY fp) AS df
@@ -618,8 +657,7 @@ object TextOps {
                COUNT(*) AS n_shared
         FROM kept a JOIN kept b
           ON a.fp = b.fp AND b.doc_id > a.doc_id
-        GROUP BY 1, 2 HAVING COUNT(*) >= 2"""
-      }
+        GROUP BY 1, 2 HAVING COUNT(*) >= 2""")
     ) { (s, dir) =>
       val fps = t(s, dir, "documents")
         .select(col("doc_id"),
@@ -2788,39 +2826,10 @@ object TextOps {
     // driver actions.
     Q(
       "q313_dedup_groups_fixpoint",
-      Some(s"""
-        WITH RECURSIVE $exactPairsCte,
+      Some(graft.operators.FixpointCC.labelsSql(s"""$exactPairsCte,
         q AS (SELECT doc_a, doc_b FROM p WHERE 17 * n_common >= 7 * (sza + szb)),
         edges AS (SELECT doc_a AS src, doc_b AS dst FROM q
-                  UNION ALL SELECT doc_b, doc_a FROM q),
-        nodes AS (SELECT DISTINCT src AS node FROM edges),
-        lab(d, node, lbl) AS (
-          SELECT 0, node, node FROM nodes
-          UNION
-          SELECT nx.d, nx.node, nx.lbl
-          FROM (
-            SELECT u.d + 1 AS d, u.node, MIN(u.lbl) AS lbl FROM (
-              SELECT d, node, lbl FROM lab
-              UNION ALL
-              SELECT a.d, a.node, b.lbl FROM lab a JOIN lab b ON b.node = a.lbl
-              UNION ALL
-              SELECT l.d, e.dst AS node, l.lbl FROM edges e JOIN lab l ON l.node = e.src
-            ) u GROUP BY u.d, u.node
-          ) nx
-          WHERE EXISTS (
-            SELECT 1 FROM (
-              SELECT u2.node, MIN(u2.lbl) AS lbl FROM (
-                SELECT d, node, lbl FROM lab
-                UNION ALL
-                SELECT a.d, a.node, b.lbl FROM lab a JOIN lab b ON b.node = a.lbl
-                UNION ALL
-                SELECT l.d, e.dst AS node, l.lbl FROM edges e JOIN lab l ON l.node = e.src
-              ) u2 GROUP BY u2.node
-            ) n2 JOIN lab pv ON pv.node = n2.node AND pv.lbl <> n2.lbl)
-        )
-        SELECT node AS doc_id, lbl AS group_id,
-               CAST((SELECT MAX(d) FROM lab) AS BIGINT) AS rounds_run
-        FROM lab WHERE d = (SELECT MAX(d) FROM lab)""")
+                  UNION ALL SELECT doc_b, doc_a FROM q)""", "doc_id", "group_id"))
     ) { (s, dir) =>
       val p = graft.operators.PairGraph.qualifyingPairs(s, dir)
         .select("doc_a", "doc_b")
@@ -2852,20 +2861,8 @@ object TextOps {
     // grams — never batch × archive, never archive × archive.
     Q(
       "q302_incremental_prefix_dedup",
-      Some("""
-        WITH tok AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        sh AS (
-          SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 3),
-                   i -> md5(array_to_string(list_slice(tk, i, i + 4), ' ')))) AS grams
-          FROM tok WHERE len(tk) >= 5),
-        g AS (SELECT doc_id, CAST(len(grams) AS BIGINT) AS sz, unnest(grams) AS g FROM sh),
-        gn AS (SELECT * FROM g WHERE doc_id % 10 = 0),
-        gc AS (SELECT * FROM g WHERE doc_id % 10 <> 0),
-        p AS (
-          SELECT n.doc_id AS new_id, c.doc_id AS corpus_id, n.sz AS szn, c.sz AS szc,
-                 CAST(COUNT(*) AS BIGINT) AS n_common
-          FROM gn n JOIN gc c ON c.g = n.g
-          GROUP BY 1, 2, 3, 4)
+      Some(s"""
+        WITH $incrementalPairsCte
         SELECT new_id, corpus_id, n_common,
                CAST(n_common AS DOUBLE) / (szn + szc - n_common) AS jaccard
         FROM p WHERE 17 * n_common >= 7 * (szn + szc)""")
@@ -2888,20 +2885,8 @@ object TextOps {
     // is the decision a daily contamination/dedup gate executes.
     Q(
       "q314_incremental_dedup_exemplar",
-      Some("""
-        WITH tok AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        sh AS (
-          SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 3),
-                   i -> md5(array_to_string(list_slice(tk, i, i + 4), ' ')))) AS grams
-          FROM tok WHERE len(tk) >= 5),
-        g AS (SELECT doc_id, CAST(len(grams) AS BIGINT) AS sz, unnest(grams) AS g FROM sh),
-        gn AS (SELECT * FROM g WHERE doc_id % 10 = 0),
-        gc AS (SELECT * FROM g WHERE doc_id % 10 <> 0),
-        p AS (
-          SELECT n.doc_id AS new_id, c.doc_id AS corpus_id, n.sz AS szn, c.sz AS szc,
-                 CAST(COUNT(*) AS BIGINT) AS n_common
-          FROM gn n JOIN gc c ON c.g = n.g
-          GROUP BY 1, 2, 3, 4),
+      Some(s"""
+        WITH $incrementalPairsCte,
         q AS (SELECT new_id, corpus_id FROM p WHERE 17 * n_common >= 7 * (szn + szc)),
         agg AS (SELECT new_id, MIN(corpus_id) AS mn,
                        CAST(COUNT(*) AS BIGINT) AS nm
@@ -2941,64 +2926,14 @@ object TextOps {
     // positional postings table bucketed by token; nothing changes.
     Q(
       "q303_phrase_search",
-      Some("""
-        WITH tok AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        pos AS (
-          SELECT doc_id, u.tok AS tok, u.pos AS pos FROM (
-            SELECT doc_id, unnest(list_transform(range(1, len(tk) + 1),
-                     i -> struct_pack(tok := tk[i], pos := CAST(i AS BIGINT)))) AS u
-            FROM tok)),
-        tri AS (
-          SELECT unnest(list_transform(range(1, len(tk) - 1),
-                   i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS g
-          FROM tok),
-        top1 AS (
-          SELECT string_split(g, ' ')[1] AS w1, string_split(g, ' ')[2] AS w2,
-                 string_split(g, ' ')[3] AS w3
-          FROM (SELECT g, COUNT(*) AS n FROM tri GROUP BY g
-                ORDER BY n DESC, g LIMIT 1)),
-        m AS (
-          SELECT p1.doc_id, p1.pos
-          FROM pos p1
-          JOIN pos p2 ON p2.doc_id = p1.doc_id AND p2.pos = p1.pos + 1
-          JOIN pos p3 ON p3.doc_id = p1.doc_id AND p3.pos = p1.pos + 2
-          CROSS JOIN top1 t
-          WHERE p1.tok = t.w1 AND p2.tok = t.w2 AND p3.tok = t.w3)
-        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_matches,
-               MIN(pos) AS first_pos
-        FROM m GROUP BY doc_id""")
+      Some(phraseSearchSql)
     ) { (s, dir) =>
       val toks = t(s, dir, "documents")
         .select(col("doc_id"), posexplode(split(col("text"), " ")))
         .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"),
           col("col").as("tok"))
-      val tri = t(s, dir, "documents")
-        .withColumn("tk", split(col("text"), " "))
-        .filter(size(col("tk")) >= 3)
-        .select(explode(expr(
-          "transform(sequence(1, size(tk) - 2), " +
-            "i -> concat_ws(' ', tk[i-1], tk[i], tk[i+1]))")).as("g"))
-      // global top-1 as sort+limit, NOT a window: plans as
-      // TakeOrderedAndProject — per-partition top-1 then a 1-row
-      // driver merge, never a single-partition vocabulary sort
-      val top1 = tri.groupBy("g").agg(count(lit(1)).as("n"))
-        .orderBy(desc("n"), col("g")).limit(1)
-        .select(element_at(split(col("g"), " "), 1).as("w1"),
-          element_at(split(col("g"), " "), 2).as("w2"),
-          element_at(split(col("g"), " "), 3).as("w3"))
-      // three term-selected posting streams: each filter references the
-      // broadcast 1-row phrase frame, so the scans prune to the phrase
-      // terms without hardcoding them
-      val tagged = toks.crossJoin(broadcast(top1))
-      val m1 = tagged.filter(col("tok") === col("w1"))
-        .select(col("doc_id"), col("pos"))
-      val m2 = tagged.filter(col("tok") === col("w2"))
-        .select(col("doc_id"), (col("pos") - 1).as("pos"))
-      val m3 = tagged.filter(col("tok") === col("w3"))
-        .select(col("doc_id"), (col("pos") - 2).as("pos"))
-      m1.join(m2, Seq("doc_id", "pos")).join(m3, Seq("doc_id", "pos"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_matches"), min(col("pos")).as("first_pos"))
+      phraseMatches(toks,
+        graft.operators.TextIndex.dominantTrigram(t(s, dir, "documents")))
     },
 
     // --------------------------------------------------------------- q304
@@ -3083,57 +3018,12 @@ object TextOps {
     // 1-row phrase frame broadcasts.
     Q(
       "q312_phrase_search_lsm",
-      Some("""
-        WITH tok AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        pos AS (
-          SELECT doc_id, u.tok AS tok, u.pos AS pos FROM (
-            SELECT doc_id, unnest(list_transform(range(1, len(tk) + 1),
-                     i -> struct_pack(tok := tk[i], pos := CAST(i AS BIGINT)))) AS u
-            FROM tok)),
-        tri AS (
-          SELECT unnest(list_transform(range(1, len(tk) - 1),
-                   i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS g
-          FROM tok),
-        top1 AS (
-          SELECT string_split(g, ' ')[1] AS w1, string_split(g, ' ')[2] AS w2,
-                 string_split(g, ' ')[3] AS w3
-          FROM (SELECT g, COUNT(*) AS n FROM tri GROUP BY g
-                ORDER BY n DESC, g LIMIT 1)),
-        m AS (
-          SELECT p1.doc_id, p1.pos
-          FROM pos p1
-          JOIN pos p2 ON p2.doc_id = p1.doc_id AND p2.pos = p1.pos + 1
-          JOIN pos p3 ON p3.doc_id = p1.doc_id AND p3.pos = p1.pos + 2
-          CROSS JOIN top1 t
-          WHERE p1.tok = t.w1 AND p2.tok = t.w2 AND p3.tok = t.w3)
-        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_matches,
-               MIN(pos) AS first_pos
-        FROM m GROUP BY doc_id""")
+      Some(phraseSearchSql)
     ) { (s, dir) =>
-      val toks = c10Positional(s, dir)
       // phrase selection identical to q303's (query-side input, not
       // part of the index read path under test)
-      val tri = t(s, dir, "documents")
-        .withColumn("tk", split(col("text"), " "))
-        .filter(size(col("tk")) >= 3)
-        .select(explode(expr(
-          "transform(sequence(1, size(tk) - 2), " +
-            "i -> concat_ws(' ', tk[i-1], tk[i], tk[i+1]))")).as("g"))
-      val top1 = tri.groupBy("g").agg(count(lit(1)).as("n"))
-        .orderBy(desc("n"), col("g")).limit(1)
-        .select(element_at(split(col("g"), " "), 1).as("w1"),
-          element_at(split(col("g"), " "), 2).as("w2"),
-          element_at(split(col("g"), " "), 3).as("w3"))
-      val tagged = toks.crossJoin(broadcast(top1))
-      val m1 = tagged.filter(col("tok") === col("w1"))
-        .select(col("doc_id"), col("pos"))
-      val m2 = tagged.filter(col("tok") === col("w2"))
-        .select(col("doc_id"), (col("pos") - 1).as("pos"))
-      val m3 = tagged.filter(col("tok") === col("w3"))
-        .select(col("doc_id"), (col("pos") - 2).as("pos"))
-      m1.join(m2, Seq("doc_id", "pos")).join(m3, Seq("doc_id", "pos"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_matches"), min(col("pos")).as("first_pos"))
+      phraseMatches(c10Positional(s, dir),
+        graft.operators.TextIndex.dominantTrigram(t(s, dir, "documents")))
     },
   )
 }

@@ -469,6 +469,10 @@ object StreamOps {
 
   final case class KmvSketch(event_type: String, in_sketch: Int, kmv_estimate: Long)
 
+  /** The user-id hash of q153/q162 (KMV and HLL): the mixed salted
+    * Knuth word (salt 9176). */
+  private def mix(u: Long): Long = graft.Knuth.mix(graft.Knuth.scalar(u, 9176L))
+
   /** Streaming KMV distinct-count sketch — the incremental half of
     * batch q153: per event type, the k smallest DISTINCT finalized
     * user hashes live in mapGroupsWithState, deduped INSIDE the buffer
@@ -481,14 +485,6 @@ object StreamOps {
     * arithmetic are byte-identical to q153's (same mix, same
     * (k−1)·2³² div h₍ₖ₎), so the parity is transitively oracle-backed.
     */
-  /** The user-id mix of q153/q162 (KMV and HLL): the salted Knuth word
-    * (salt 9176), then an xor-shift multiply finalizer. */
-  private def mix(u: Long): Long = {
-    val h0 = graft.Knuth.scalar(u, 9176L)
-    val h2 = ((h0 ^ (h0 / 65536)) * 1597334677L) % 4294967296L
-    h2 ^ (h2 / 8192)
-  }
-
   def kmvDistinct(events: Dataset[EventRow], k: Int = 64): Dataset[KmvSketch] = {
     import events.sparkSession.implicits._
     events
@@ -1258,9 +1254,7 @@ object StreamOps {
       incoming: DataFrame,
       corpus: DataFrame,
       watermark: String = "1 hour"): DataFrame = {
-    val gram5 = explode(expr(
-      "array_distinct(transform(sequence(1, size(tk) - 4), " +
-        "i -> md5(concat_ws(' ', slice(tk, i, 5)))))")).as("g")
+    val gram5 = explode(graft.operators.PairGraph.word5Grams).as("g")
     // archive prefix index, built once on the static side: per-doc
     // first sz − ⌈0.7·sz⌉ + 1 grams under (archive df, gram) order
     val gc = corpus
@@ -1307,17 +1301,7 @@ object StreamOps {
     * the stream as a 1-row broadcast — the standard
     * small-dimension-against-stream join. */
   def phraseMatchStream(incoming: DataFrame, corpus: DataFrame): DataFrame = {
-    val tri = corpus
-      .withColumn("tk", split(col("text"), " "))
-      .filter(size(col("tk")) >= 3)
-      .select(explode(expr(
-        "transform(sequence(1, size(tk) - 2), " +
-          "i -> concat_ws(' ', tk[i-1], tk[i], tk[i+1]))")).as("g"))
-    val top1 = tri.groupBy("g").agg(count(lit(1)).as("n"))
-      .orderBy(desc("n"), col("g")).limit(1)
-      .select(element_at(split(col("g"), " "), 1).as("w1"),
-        element_at(split(col("g"), " "), 2).as("w2"),
-        element_at(split(col("g"), " "), 3).as("w3"))
+    val top1 = graft.operators.TextIndex.dominantTrigram(corpus)
     incoming
       .withColumn("tk", split(col("text"), " "))
       .filter(size(col("tk")) >= 3) // BEFORE sequence (q83's trap)

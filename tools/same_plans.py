@@ -14,8 +14,16 @@ Each directory may hold:
 Plans are compared after masking what differs between two runs of one
 plan: expression ids (`#123L`), `plan_id=`, RDD ids (`RDD[45]`), source
 line numbers in RDD call sites, the machine path in front of the layout
-catalog (`.../graft_layouts/`), other `file:` paths, and the location
-hash in catalog table names (`graft_postings_<16 hex>`).
+catalog (`.../graft_layouts/`), other `file:` paths, the location hash
+in catalog table names (`graft_postings_<16 hex>`), the identity hash
+of an aggregator object (`TopKAggregator@1f6b8c1f`) and the JVM's name
+for a lambda (`$Lambda$6893/0x00007fa9f58fb958@7c81f0f3`). Before masking,
+each `Expand` that Spark's distinct-aggregate rewrite plants is put in a
+canonical order: the rewrite orders its distinct groups by expression
+hash, which changes from run to run, so two runs of one plan can number
+the groups (`gid`) and list their columns differently. The groups are
+sorted by their masked column names and renumbered, and the new order is
+carried into the `gid = k` filters and the column lists that follow.
 
 Prints one line per difference; the exit code is the number of
 differences (capped at 255), so 0 means identical.
@@ -33,13 +41,81 @@ PLAN_MASKS = [
     (re.compile(r"file:\S*?/graft_layouts/"), "<layouts>/"),
     (re.compile(r"file:[^\s,\]\)]+"), "file:<path>"),
     (re.compile(r"\b(graft_[a-z_]+?)_[0-9a-f]{16}\b"), r"\1_<hash>"),
+    (re.compile(r"(\.[A-Z]\w*)@[0-9a-f]+\b"), r"\1@<obj>"),
+    (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+"), "$Lambda"),
 ]
 
 
 def mask_plan(text):
+    text = canon_expands(text)
     for pat, rep in PLAN_MASKS:
         text = pat.sub(rep, text)
     return text
+
+
+def mask_names(text):
+    for pat, rep in PLAN_MASKS:
+        text = pat.sub(rep, text)
+    return text
+
+
+def split_top(s):
+    """Split a comma-separated list at bracket depth 0."""
+    items, depth, start = [], 0, 0
+    for i, ch in enumerate(s):
+        if ch in "([{":
+            depth += 1
+        elif ch in ")]}":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            items.append(s[start:i].strip())
+            start = i + 1
+    items.append(s[start:].strip())
+    return items
+
+
+def canon_expands(text):
+    """Canonical group order for every distinct-aggregate `Expand`."""
+    lines = text.split("\n")
+    for i, line in enumerate(lines):
+        if not re.match(r"\(\d+\) Expand\b", line):
+            continue
+        j = next((k for k in range(i + 1, len(lines))
+                  if lines[k].startswith("Arguments: ")), None)
+        if j is None:
+            continue
+        projs_s, out_s = split_top(lines[j][len("Arguments: "):])[:2]
+        projs = [split_top(p[1:-1]) for p in split_top(projs_s[1:-1])]
+        out = split_top(out_s[1:-1])
+        gid = next((k for k, o in enumerate(out) if o.startswith("gid#")), None)
+        if gid is None:
+            continue
+        shared = {k for k in range(len(out)) if all(p[k] != "null" for p in projs)}
+
+        def cols(p):
+            return [k for k in range(len(out))
+                    if k != gid and k not in shared and p[k] != "null"]
+        groups = sorted((p for p in projs if p[gid] != "0"),
+                        key=lambda p: [mask_names(out[k]) for k in cols(p)])
+        renum = {p[gid]: str(n + 1) for n, p in enumerate(groups)}
+        child = sorted({k for p in groups for k in cols(p)})
+        canon = list(dict.fromkeys(k for p in groups for k in cols(p)))
+        order = list(range(len(out)))
+        for slot, k in zip(child, canon):
+            order[slot] = k
+        new_projs = [[p[k] for k in order] for p in projs if p[gid] == "0"] + \
+            [[renum[p[k]] if k == gid else p[k] for k in order] for p in groups]
+        lines[j] = ("Arguments: [" + ", ".join("[" + ", ".join(p) + "]" for p in new_projs)
+                    + "], [" + ", ".join(out[k] for k in order) + "]")
+        old_seq = ", ".join(out[k] for k in child)
+        new_seq = ", ".join(out[k] for k in canon)
+        gid_ref = re.compile(r"\(" + re.escape(out[gid]) + r" = (\d+)\)")
+        for k in range(len(lines)):
+            if k != j:
+                lines[k] = gid_ref.sub(
+                    lambda m: f"({out[gid]} = {renum.get(m.group(1), m.group(1))})",
+                    lines[k].replace(old_seq, new_seq))
+    return "\n".join(lines)
 
 
 def norm_sql(sql):
