@@ -37,16 +37,16 @@ object Ingest {
     * its location). */
   private def groups(s: SparkSession, dir: String)
       : Seq[(String, () => Unit)] = Seq(
-    // trading-graph bucketed layout (edges_v3: pairs + pairs_s +
+    // trading-graph bucketed layout (edges_v5: pairs + pairs_s +
     // edges) — the whole graph family rides it
     ("edge_layout", () => { graft.operators.EdgeLayout.pairs(s, dir); () }),
-    // exact near-dup pair graph (pairs07_v1) — q299/q307/q313
+    // exact near-dup pair graph (pairs07_v2) — q299/q307/q313
     ("pair_graph", () =>
       { graft.operators.PairGraph.qualifyingPairs(s, dir); () }),
-    // lexical text indexes (lexical_v3), incl. the d10 incremental
+    // lexical text indexes (lexical_v4), incl. the d10 incremental
     // and c10 LSM splits
     ("lexical_index", () => queries.Matching.ingestArtifacts(s, dir)),
-    // positional index LSM split (positional_v1 c10) + the pair graph
+    // positional index LSM split (positional_v2 c10) + the pair graph
     ("positional_index", () => queries.TextOps.ingestArtifacts(s, dir)),
     // IVF centroids + IVF-PQ codes (ivf_v1, ivfpq_v2), including the
     // d10 incremental and c10 LSM splits

@@ -70,8 +70,12 @@ object Tables {
       } catch { case scala.util.control.NonFatal(_) => 0L }
     }.sum
     val default = spark.sessionState.conf.numShufflePartitions
-    math.max(default, (bytes / (64L << 20)).toInt)
+    math.max(default, (bytes / PartitionBytes).toInt)
   }
+
+  /** The input size unit of [[scaledPartitions]] and of the catalog
+    * artifacts' file count (`LayoutCatalog.width`). */
+  val PartitionBytes: Long = 64L << 20
 
   /** Spread a QUERY-PATH linear kernel's input across the executor
     * before the per-row map (q192's cliff fix, shared): a single-file

@@ -36,9 +36,11 @@ import org.apache.spark.sql.functions._
   *
   * Each table is written and registered through
   * [[LayoutCatalog.writeBucketed]] / [[LayoutCatalog.bucketed]]: one
-  * file per bucket, so the scan reports HashPartitioning(key, 32),
-  * and catalog names hashed from the published location, so
-  * registration is idempotent if the SparkSession is recreated.
+  * file per bucket, so the scan reports HashPartitioning(key, B) with
+  * B = [[LayoutCatalog.bucketsOf]] the corpus (4 at every fixture
+  * scale, 32 from 2 GiB of orders + lineitem), and catalog names
+  * hashed from the published location, so registration is idempotent
+  * if the SparkSession is recreated.
   *
   * Semantics are a layout only: every consumer's oracle derives the
   * identical pair list straight from parquet.
@@ -47,9 +49,12 @@ object EdgeLayout {
 
   /** Bump when the BUILD semantics change (v2 = weighted pairs, v3 =
     * adds the supplier-bucketed pairs copy, v4 = every bucket file
-    * sorted by its whole key), so an upgraded engine never misreads an
-    * older artifact as current. */
-  val LayoutVersion = 4
+    * sorted by its whole key, v5 = bucket count sized to the corpus),
+    * so an upgraded engine never misreads an older artifact as
+    * current. */
+  val LayoutVersion = 5
+
+  private val Facts = Seq("orders", "lineitem")
 
   /** The one derivation both tables share: (c, s, n) trading pairs
     * with their order-line counts. Orders and lineitem are BOTH fact
@@ -62,9 +67,9 @@ object EdgeLayout {
     // at n·log(64 MB) instead of n·log(n/32) — the q192 fixed-width
     // cliff, fenced at the ingest join too. At the test SFs this
     // equals the session default, so the build plan there is
-    // unchanged; the final bucketed write below stays at the
-    // artifact's fixed 32 buckets either way.
-    val np = graft.Tables.scaledPartitions(s, dir, Seq("orders", "lineitem"))
+    // unchanged; the bucketed writes below take the artifact's own
+    // corpus-sized bucket count either way.
+    val np = graft.Tables.scaledPartitions(s, dir, Facts)
     val orders = graft.Tables.load(s, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"))
       .repartition(np, col("o_orderkey"))
@@ -84,9 +89,10 @@ object EdgeLayout {
     * are; sorting by the bucket key only left rows that share it in a
     * per-run order. Readers declare the bucket key alone as the sort
     * order, which the full-key order implies. */
-  private def buildInto(s: SparkSession, dir: String, tmp: File): Unit =
+  private def buildInto(s: SparkSession, dir: String, tmp: File): Unit = {
+    val b = LayoutCatalog.bucketsOf(dir, Facts)
     LayoutCatalog.writeBucketed(derivePairs(s, dir), new File(tmp, "pairs"),
-        "c", "s") { pairs =>
+        b, "c", "s") { pairs =>
       // v3: the SAME pair rows bucketed by the supplier key — s-keyed
       // consumers (HITS' authority steps, supplier-side joins)
       // otherwise re-shuffle the pair corpus by s on EVERY execution;
@@ -94,7 +100,7 @@ object EdgeLayout {
       // all of them (guide §2.4: bucketed tables persist a
       // partitioning across jobs). Built from the pairs read-back — a
       // bucketed scan, not a re-run of the fact⋈fact join.
-      LayoutCatalog.writeBucketed(pairs, new File(tmp, "pairs_s"), "s", "c")(_ => ())
+      LayoutCatalog.writeBucketed(pairs, new File(tmp, "pairs_s"), b, "s", "c")(_ => ())
       // both edge directions from ONE explode pass over the pairs
       // table read-back (cheap: a bucketed scan, not the fact join)
       LayoutCatalog.writeBucketed(
@@ -105,15 +111,16 @@ object EdgeLayout {
               col("n")))).as("e"))
           .select(col("e.src").as("src"), col("e.dst").as("dst"),
             col("e.n").as("n")),
-        new File(tmp, "edges"), "src", "dst")(_ => ())
+        new File(tmp, "edges"), b, "src", "dst")(_ => ())
     }
+  }
 
   /** The published bucketed table `leaf` of `dir`'s layout, bucketed
     * and sorted by `key`. */
   private def table(s: SparkSession, dir: String, leaf: String,
       schema: String, key: String): DataFrame = {
     val dest = LayoutCatalog.resolve(s"edges_v$LayoutVersion", dir,
-      Seq("orders", "lineitem"), "")(buildInto(s, dir, _))
+      Facts, "")(buildInto(s, dir, _))
     LayoutCatalog.bucketed(s, new File(dest, leaf), schema, key)
   }
 

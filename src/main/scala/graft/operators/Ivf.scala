@@ -240,7 +240,11 @@ object Ivf {
       trainCentroidsCosine(df, idCol, qvCol, n, rounds)
         .write.mode("overwrite")
         .parquet(new java.io.File(tmp, "centroids").getAbsolutePath))
-    df.sparkSession.read.parquet(
+    // read with the schema the training writes: no schema-inference
+    // job (LayoutCatalogSpec checks the two agree)
+    val schema = new org.apache.spark.sql.types.StructType()
+      .add("centroid_id", "int").add("cv", df.schema(qvCol).dataType)
+    df.sparkSession.read.schema(schema).parquet(
       new java.io.File(dest, "centroids").getAbsolutePath)
   }
 

@@ -62,8 +62,15 @@ object IvfPq {
   private def params(nCentroids: Int, rounds: Int, replication: Int): String =
     s"_k${nCentroids}_r${rounds}_x$replication"
 
+  /** The schema [[writeTables]] writes each table with, declared at
+    * the read so no job infers it (LayoutCatalogSpec checks the two
+    * agree). */
+  private val Schemas = Map(
+    "codes" -> "vec_id BIGINT, centroid_id INT, qn BIGINT, subspace BIGINT, code BIGINT",
+    "codebook" -> "subspace BIGINT, code BIGINT, cw ARRAY<BIGINT>")
+
   private def read(s: SparkSession, dest: File, leaf: String): DataFrame =
-    s.read.parquet(new File(dest, leaf).getAbsolutePath)
+    s.read.schema(Schemas(leaf)).parquet(new File(dest, leaf).getAbsolutePath)
 
   /** r-way cell assignment + per-copy residuals of `base` against the
     * broadcast centroid table (columns vec_id, centroid_id, qn, rv). */

@@ -58,11 +58,19 @@ import org.apache.spark.sql.functions.col
   *     bounded at one live artifact per (kind, corpus), fixing the
   *     round-9 unbounded tmpdir accumulation.
   *   - **Bucketed tables**: [[writeBucketed]] writes one file per
-  *     bucket through a scratch `graft_build_<leaf>_<hash>` table;
-  *     [[bucketed]] re-attaches a published location to the session
-  *     catalog as `graft_<leaf>_<hash>`, where leaf is the location's
-  *     directory name (`pairs`, `edges`, `postings`, ...) and hash is
-  *     16 hex chars of its absolute path.
+  *     bucket through a scratch `graft_build_<leaf>_<hash>` table and
+  *     records the bucket count beside the files; [[bucketed]]
+  *     re-attaches a published location to the session catalog as
+  *     `graft_<leaf>_<hash>` with that count, where leaf is the
+  *     location's directory name (`pairs`, `edges`, `postings`, ...)
+  *     and hash is 16 hex chars of its absolute path.
+  *   - **Width**: an artifact table's file count follows its corpus —
+  *     [[width]] files per plain table and [[buckets]] (the width held
+  *     between 4 and 32) per bucketed table, both a pure function of
+  *     the bytes of the tables the artifact fingerprints, so one
+  *     corpus snapshot's archive, segments and folds share one count
+  *     and their unions stay co-partitioned. At every fixture scale
+  *     the width is 1: one file per plain table, 4 buckets.
   *   - **LSM splits**: a [[Split]] (tag, archive predicate, delta
   *     predicates) owns the archive / segment / fold base names, and
   *     [[resolveSplit]] is the one archive → segments → fold skeleton
@@ -91,28 +99,40 @@ object LayoutCatalog {
       sys.props.getOrElse("graft.layout.root",
         "spark-warehouse/graft_layouts")))
 
+  /** The regular files of table `t` under corpus dir `dir`, by name:
+    * a table may be a single `.parquet` file or a directory of parts.
+    * None when the path is absent. */
+  private def tableFiles(dir: String, t: String): Option[Seq[File]] = {
+    val f = new File(dir, s"$t.parquet")
+    if (f.isDirectory) Some(f.listFiles().sortBy(_.getName).filter(_.isFile).toSeq)
+    else if (f.isFile) Some(Seq(f))
+    else None
+  }
+
   /** Content fingerprint of `tables` under corpus dir `dir`:
-    * SHA-256 over each file's (name, size, mtime), 16 hex chars. A
-    * table may be a single `.parquet` file or a directory of parts —
-    * both fingerprint every regular file under the path. Missing
-    * paths fingerprint as their name alone (stable, but then unable
-    * to detect content changes — callers should pass tables that
-    * exist). */
+    * SHA-256 over each file's (name, size, mtime), 16 hex chars.
+    * Missing paths fingerprint as their name alone (stable, but then
+    * unable to detect content changes — callers should pass tables
+    * that exist). */
   def fingerprint(dir: String, tables: Seq[String]): String = {
     val sb = new StringBuilder
     tables.sorted.foreach { t =>
-      val f = new File(dir, s"$t.parquet")
-      def add(g: File): Unit = {
-        sb.append(g.getName).append('|').append(g.length())
-          .append('|').append(g.lastModified()).append('\n')
+      tableFiles(dir, t) match {
+        case Some(fs) => fs.foreach { g =>
+          sb.append(g.getName).append('|').append(g.length())
+            .append('|').append(g.lastModified()).append('\n')
+        }
+        case None => sb.append(t).append("|absent\n")
       }
-      if (f.isDirectory)
-        f.listFiles().sortBy(_.getName).filter(_.isFile).foreach(add)
-      else if (f.isFile) add(f)
-      else sb.append(t).append("|absent\n")
     }
     hex16(sb.toString)
   }
+
+  /** Bytes of `tables` under corpus dir `dir`: the sum of the file
+    * sizes [[fingerprint]] hashes, so one fingerprint always means one
+    * byte count — and one [[width]] for every artifact keyed on it. */
+  def inputBytes(dir: String, tables: Seq[String]): Long =
+    tables.flatMap(tableFiles(dir, _).getOrElse(Nil)).map(_.length).sum
 
   /** First 8 bytes of SHA-256(`s`), as 16 hex chars — the digest of
     * fingerprints, predicate keys, table names and the streaming
@@ -249,31 +269,56 @@ object LayoutCatalog {
     (arch, live)
   }
 
-  /** Bucket count of every bucketed artifact table. */
-  private val Buckets = 32
+  /** Files per plain artifact table for a corpus of `bytes`: one per
+    * started [[graft.Tables.PartitionBytes]] (64 MiB), the unit of
+    * [[graft.Tables.scaledPartitions]], and at least one. */
+  def width(bytes: Long): Int = math.max(1,
+    ((bytes + graft.Tables.PartitionBytes - 1) / graft.Tables.PartitionBytes).toInt)
+
+  /** Buckets per bucketed artifact table for a corpus of `bytes`: the
+    * [[width]] held between 4 and 32. The floor keeps every
+    * exchange-free bucketed join and aggregate at least 4-way parallel
+    * on a small corpus; the ceiling is the fixed count every corpus
+    * used before the width rule (reached at 2 GiB). */
+  def buckets(bytes: Long): Int = math.min(32, math.max(4, width(bytes)))
+
+  /** [[buckets]] of the corpus tables `tables` under `dir` — the
+    * tables an artifact fingerprints, so every artifact of one corpus
+    * snapshot (archive, segments, folds, streamed segments) is written
+    * with the same count. */
+  def bucketsOf(dir: String, tables: Seq[String]): Int =
+    buckets(inputBytes(dir, tables))
+
+  /** The file beside a bucketed table's data files that records its
+    * bucket count (Spark's file listing skips `_`-prefixed names). */
+  private def bucketsFile(loc: File): java.nio.file.Path =
+    new File(loc, "_buckets").toPath
 
   private def tableName(prefix: String, loc: File): String =
     s"${prefix}_${loc.getName}_${hex16(loc.getAbsolutePath)}"
 
-  /** Bucketed write of `df` to `loc`, bucketed by `sortBy.head` and
-    * sorted by `sortBy`. Repartitioning on the bucket key with the
-    * bucket count first (same murmur3 hash as the bucketed write)
-    * yields one file per bucket, so a read-back claims
-    * HashPartitioning(key, 32) and keeps the per-bucket sort. Bucketed
-    * writes need saveAsTable: a scratch table is registered and
-    * dropped (an external table — the files stay). `readBack` gets
+  /** Bucketed write of `df` to `loc` in `buckets` buckets, bucketed by
+    * `sortBy.head` and sorted by `sortBy`. Repartitioning on the
+    * bucket key with the bucket count first (same murmur3 hash as the
+    * bucketed write) yields one file per bucket, so a read-back claims
+    * HashPartitioning(key, buckets) and keeps the per-bucket sort; the
+    * count is recorded in `_buckets` for [[registerBucketed]].
+    * Bucketed writes need saveAsTable: a scratch table is registered
+    * and dropped (an external table — the files stay). `readBack` gets
     * that table's bucketed scan before the drop, for derived writes
     * whose bytes depend on its partitioning. */
-  def writeBucketed(df: DataFrame, loc: File, sortBy: String*)(
+  def writeBucketed(df: DataFrame, loc: File, buckets: Int, sortBy: String*)(
       readBack: DataFrame => Unit): Unit = {
     val s = df.sparkSession
     val scratch = tableName("graft_build", loc)
     try {
-      df.repartition(Buckets, col(sortBy.head))
+      df.repartition(buckets, col(sortBy.head))
         .write.mode("overwrite")
-        .bucketBy(Buckets, sortBy.head).sortBy(sortBy.head, sortBy.tail: _*)
+        .bucketBy(buckets, sortBy.head).sortBy(sortBy.head, sortBy.tail: _*)
         .option("path", loc.getAbsolutePath)
         .saveAsTable(scratch)
+      Files.write(bucketsFile(loc),
+        buckets.toString.getBytes(StandardCharsets.UTF_8))
       readBack(s.table(scratch))
     } finally {
       s.sql(s"DROP TABLE IF EXISTS $scratch"): Unit
@@ -281,19 +326,23 @@ object LayoutCatalog {
   }
 
   /** Idempotent per-session registration of a published bucketed
-    * location as `graft_<leaf>_<hash>`; returns the table name.
-    * CREATE TABLE over the existing files re-attaches the bucket-spec
-    * metadata (Spark recovers each file's bucket id from its name), so
-    * a recreated session reads the same artifact exchange-free without
-    * rewriting a byte. IF NOT EXISTS makes the check-then-create
-    * race-free: two threads registering one location both succeed. */
+    * location as `graft_<leaf>_<hash>`, with the bucket count its
+    * writer recorded; returns the table name. CREATE TABLE over the
+    * existing files re-attaches the bucket-spec metadata (Spark
+    * recovers each file's bucket id from its name), so a recreated
+    * session reads the same artifact exchange-free without rewriting
+    * a byte. IF NOT EXISTS makes the check-then-create race-free: two
+    * threads registering one location both succeed. */
   def registerBucketed(s: SparkSession, loc: File, schema: String,
       key: String): String = {
     val name = tableName("graft", loc)
-    if (!s.catalog.tableExists(name))
+    if (!s.catalog.tableExists(name)) {
+      val buckets = new String(Files.readAllBytes(bucketsFile(loc)),
+        StandardCharsets.UTF_8).trim.toInt
       s.sql(s"""CREATE TABLE IF NOT EXISTS $name ($schema) USING PARQUET
-               |CLUSTERED BY ($key) SORTED BY ($key) INTO $Buckets BUCKETS
+               |CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS
                |LOCATION '${loc.getAbsolutePath}'""".stripMargin)
+    }
     name
   }
 

@@ -115,16 +115,16 @@ object MinHashLsh {
     // The edge list joins into EVERY round twice (bucket-min, then
     // doc-min) — without materialization the upstream banding plan
     // (including its signature kernel) would re-execute ~2·rounds
-    // times. Persist the slim projection once; Spark's ContextCleaner
-    // unpersists it when the frame becomes unreachable. Callers whose
-    // `banded` is ALREADY materialized (localCheckpoint/checkpoint —
-    // a LogicalRDD re-reads stored blocks, nothing recomputes) pass
-    // persistEdges = false and skip the second copy.
+    // times. Materialize the slim projection EAGERLY: a lazy persist
+    // fills only when its first reader finishes, and AQE submits the
+    // 2·rounds leaf stages that read it together, so each of them
+    // re-ran the documents scan, the spreading exchange and the
+    // kernel. Callers whose `banded` is ALREADY materialized
+    // (Checkpoints.materialize — a LogicalRDD re-reads stored blocks,
+    // nothing recomputes) pass persistEdges = false and skip the
+    // second copy.
     val slim = banded.select(col(idCol), col("band"), col("band_key"))
-    val edges =
-      if (persistEdges)
-        slim.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else slim
+    val edges = if (persistEdges) graft.Checkpoints.materialize(slim) else slim
     val docs = edges.select(col(idCol)).distinct()
       .withColumn("cluster_id", col(idCol))
     // Per round: bucket-min then doc-min, and NOTHING else. The old
@@ -140,8 +140,8 @@ object MinHashLsh {
     // no 2^rounds re-execution to fence — and the per-round
     // materialize barrier goes with it: the whole propagation runs
     // as one jobful of back-to-back keyed exchanges (edges is
-    // persisted/checkpointed above, so its two references per round
-    // read blocks, not the banding kernel).
+    // checkpointed above, so its two references per round read
+    // blocks, not the banding kernel).
     (0 until rounds).foldLeft(docs) { (labels, _) =>
       val bucketMin = edges.join(labels, idCol)
         .groupBy(col("band"), col("band_key"))

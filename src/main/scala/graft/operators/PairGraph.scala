@@ -22,12 +22,14 @@ import org.apache.spark.sql.functions._
   * parquet, and a changed corpus snapshot fingerprints to a new
   * directory — never a silent stale read.
   *
-  * Artifact: `pairs07_v1/<corpus>_<fp>/pairs` — all pairs with
+  * Artifact: `pairs07_v2/<corpus>_<fp>/pairs` — all pairs with
   * word-5-gram Jaccard ≥ 0.7 as (doc_a < doc_b, sza, szb, n_common),
   * the integer-exact frame both q299's ratio projection and q307's
   * components derive from. Pair-count-sized (O(n) in corpus size
   * times dup-family density — the bounded quantity the prefix filter
-  * exists to keep join-shaped), written hash-distributed on doc_a.
+  * exists to keep join-shaped), written hash-distributed on doc_a
+  * into [[LayoutCatalog.width]] of the documents table files (one at
+  * every fixture scale).
   *
   * Derivation semantics are UNCHANGED from q299 (scaladoc there;
   * BlockingSpec pins ≡ brute force): docs under 5 tokens drop before
@@ -42,8 +44,11 @@ import org.apache.spark.sql.functions._
 object PairGraph {
 
   /** Bump when the BUILD semantics change, so an upgraded engine
-    * never misreads an old artifact as current. */
-  val LayoutVersion = 1
+    * never misreads an old artifact as current (v2: file count sized
+    * to the documents table instead of a fixed 32). */
+  val LayoutVersion = 2
+
+  private val Docs = Seq("documents")
 
   /** The distinct md5-relabeled word 5-grams of the token array column
     * `tk` (Spark). Callers drop rows under 5 tokens first: Spark
@@ -63,13 +68,19 @@ object PairGraph {
     * corpus snapshot has none. */
   def qualifyingPairs(s: SparkSession, dir: String): DataFrame = {
     val dest = LayoutCatalog.resolve(s"pairs07_v$LayoutVersion", dir,
-      Seq("documents"), "")(tmp =>
+      Docs, "")(tmp =>
       derive(s, dir)
-        .repartition(32, col("doc_a"))
+        .repartition(LayoutCatalog.width(LayoutCatalog.inputBytes(dir, Docs)),
+          col("doc_a"))
         .write.mode("overwrite")
         .parquet(new File(tmp, "pairs").getAbsolutePath))
-    s.read.parquet(new File(dest, "pairs").getAbsolutePath)
+    s.read.schema(PairsSchema).parquet(new File(dest, "pairs").getAbsolutePath)
   }
+
+  /** The schema the build writes `pairs` with, declared at the read
+    * so no job infers it (LayoutCatalogSpec checks the two agree). */
+  private val PairsSchema =
+    "doc_a BIGINT, doc_b BIGINT, sza BIGINT, szb BIGINT, n_common BIGINT"
 
   /** CAPPED-OUTPUT exact dedup: canonical exemplar per document,
     * computed by streaming the qualifying-pair derivation straight

@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   * Two tables per artifact, one derivation:
   *
   *   - `postings` — (doc_id, g, tf) bigram term frequencies,
-  *     CLUSTERED BY g INTO 32 BUCKETS: document frequency
-  *     (`groupBy(g)`), idf weighting joins, and the posting-list
+  *     CLUSTERED BY g INTO B BUCKETS (B = [[LayoutCatalog.bucketsOf]]
+  *     the documents table, 4 at every fixture scale): document
+  *     frequency (`groupBy(g)`), idf weighting joins, and the posting-list
   *     SELF-join that generates sparse-cosine candidate pairs
   *     (q76's `wts a ⋈ wts b ON a.g = b.g`) all run on the bucket
   *     partitioning with ZERO exchange on the postings side.
@@ -78,8 +79,10 @@ object TextIndex {
     * costs one BIGINT column at build time and deletes the
     * doc-count-sized `dl` join from every BM25-family consumer
     * (which previously BROADCAST doclen — a guaranteed OOM at 100 TB
-    * where doclen is one row per document). */
-  val LayoutVersion = 3
+    * where doclen is one row per document). v4: bucket count sized to
+    * the documents table ([[LayoutCatalog.buckets]]) instead of a
+    * fixed 32. */
+  val LayoutVersion = 4
 
   /** The shared derivation: adjacent-token bigrams of every document,
     * exactly as the inline consumers built them (q76/q90's
@@ -122,13 +125,15 @@ object TextIndex {
   }
 
   /** Write `postings` (doc_id, g, tf, dl) into `tmp` as the
-    * artifact's two tables. DETERMINISTIC BYTES: bucket files are
+    * artifact's two tables, in the bucket count of `dir`'s documents
+    * (one count per corpus snapshot, whichever split part writes
+    * it). DETERMINISTIC BYTES: bucket files are
     * sorted by (g, doc_id) — a total order, since (doc_id, g) is
     * unique after the tf aggregate — and doclen is one file sorted by
     * doc_id, so the output bytes depend only on the row SET, not on
     * which path (from-scratch, segment, or compaction merge) produced
     * it. */
-  private def writeInto(postings: DataFrame, tmp: File): Unit =
+  private def writeInto(postings: DataFrame, dir: String, tmp: File): Unit =
     // coalesce(tf, 0) normalizes NULLABILITY: a fresh aggregate's
     // count() is non-nullable while a published table reads back
     // nullable — left as-is the two build paths would write
@@ -140,7 +145,8 @@ object TextIndex {
         postings.select(col("doc_id"), col("g"),
           coalesce(col("tf"), lit(0L)).as("tf"),
           coalesce(col("dl"), lit(0L)).as("dl")),
-        new File(tmp, "postings"), "g", "doc_id") { written =>
+        new File(tmp, "postings"), LayoutCatalog.bucketsOf(dir, Docs), "g",
+        "doc_id") { written =>
       // doc lengths from the postings read-back (a bucketed scan, not
       // a re-tokenize); doc-count-sized, one totally-ordered parquet
       // file — the corpus-stats (N, T) aggregate input
@@ -160,8 +166,13 @@ object TextIndex {
   private def postingsOf(s: SparkSession, dest: File): DataFrame =
     s.table(postingsTable(s, dest))
 
+  /** The schema [[writeInto]] writes `doclen` with, declared at the
+    * read so no job infers it (LayoutCatalogSpec checks the two
+    * agree). */
+  private val DoclenSchema = "doc_id BIGINT, dl BIGINT"
+
   private def doclensOf(s: SparkSession, dest: File): DataFrame =
-    s.read.parquet(new File(dest, "doclen").getAbsolutePath)
+    s.read.schema(DoclenSchema).parquet(new File(dest, "doclen").getAbsolutePath)
 
   private val Kind = s"lexical_v$LayoutVersion"
 
@@ -171,7 +182,7 @@ object TextIndex {
     * touches the corpus): tokenize the input-spread documents, write. */
   private def buildDocs(s: SparkSession, dir: String, docs: => DataFrame)(
       tmp: File): Unit =
-    writeInto(withDl(tfOf(spread(s, dir, docs))), tmp)
+    writeInto(withDl(tfOf(spread(s, dir, docs))), dir, tmp)
 
   private def ensureFull(s: SparkSession, dir: String): File =
     LayoutCatalog.resolve(Kind, dir, Docs, "")(
@@ -208,8 +219,8 @@ object TextIndex {
     val (_, live) = LayoutCatalog.resolveSplit(Kind, dir, Docs, split, "", "")(
       archive = p => buildDocs(s, dir, docs(p)),
       segment = (_, p) => buildDocs(s, dir, docs(p)),
-      fold = Some(parts =>
-        writeInto(parts.map(postingsOf(s, _)).reduce(_ unionByName _), _)))
+      fold = Some(parts => writeInto(
+        parts.map(postingsOf(s, _)).reduce(_ unionByName _), dir, _)))
     live.map(d => (postingsOf(s, d), doclensOf(s, d)))
   }
 
@@ -237,7 +248,7 @@ object TextIndex {
       tag: String, i: Int, key: String): (String, File) = {
     val dest = LayoutCatalog.resolve(Kind, dir, Docs,
       s"_${LayoutCatalog.segmentName(tag, "", i, key)}")(
-      writeInto(withDl(tfOf(docs)), _))
+      writeInto(withDl(tfOf(docs)), dir, _))
     (postingsTable(s, dest), new File(dest, "doclen"))
   }
 
@@ -254,8 +265,9 @@ object TextIndex {
   // not implemented until a consumer needs it — the skeleton's fold
   // would take a positional builder the way it takes the bigram one.
 
-  /** Bump when the positional BUILD semantics change. */
-  val PositionalLayoutVersion = 1
+  /** Bump when the positional BUILD semantics change (v2: bucket
+    * count sized to the documents table). */
+  val PositionalLayoutVersion = 2
 
   private val PosKind = s"positional_v$PositionalLayoutVersion"
 
@@ -292,11 +304,13 @@ object TextIndex {
     * (doc_id, tok, pos), one file per bucket, rows totally ordered by
     * (tok, doc_id, pos) — bytes a pure function of the row set, like
     * the bigram writeInto. */
-  private def buildPositional(docs: => DataFrame)(tmp: File): Unit =
+  private def buildPositional(dir: String, docs: => DataFrame)(
+      tmp: File): Unit =
     LayoutCatalog.writeBucketed(
       positionalOf(docs).select(col("doc_id"), col("tok"),
         coalesce(col("pos"), lit(0L)).as("pos")),
-      new File(tmp, "pospostings"), "tok", "doc_id", "pos")(_ => ())
+      new File(tmp, "pospostings"), LayoutCatalog.bucketsOf(dir, Docs), "tok",
+      "doc_id", "pos")(_ => ())
 
   /** Registered bucketed table of a published positional artifact. */
   private def positionalTable(s: SparkSession, dest: File): String =
@@ -313,7 +327,7 @@ object TextIndex {
       docs: DataFrame, tag: String, i: Int, key: String): String =
     positionalTable(s, LayoutCatalog.resolve(PosKind, dir, Docs,
       s"_${LayoutCatalog.segmentName(tag, "p", i, key)}")(
-      buildPositional(docs)))
+      buildPositional(dir, docs)))
 
   /** Positional LSM view of `split`: archive ∪ one segment per delta,
     * no fold. Row-identical to deriving positions from the full
@@ -326,8 +340,8 @@ object TextIndex {
       spread(s, dir, graft.Tables.load(s, dir, "documents").filter(p))
     val (_, live) = LayoutCatalog.resolveSplit(PosKind, dir, Docs, split,
       "p", "")(
-      archive = p => buildPositional(docs(p)),
-      segment = (_, p) => buildPositional(docs(p)),
+      archive = p => buildPositional(dir, docs(p)),
+      segment = (_, p) => buildPositional(dir, docs(p)),
       fold = None)
     live.map(d => s.table(positionalTable(s, d))).reduce(_ unionByName _)
   }

@@ -53,7 +53,8 @@ object Graph {
   /** The Spark side consumes the SHARED BUCKETED LAYOUT
     * (operators/EdgeLayout): the symmetric (src, dst) edge list,
     * derived once per JVM+sf-dir (fact⋈fact sort-merge, one explode
-    * pass) and written as a 32-bucket table CLUSTERED BY src — so
+    * pass) and written as a table of B buckets (sized to the corpus
+    * by LayoutCatalog.buckets) CLUSTERED BY src — so
     * every graph query's edge side is a bucketed scan that already
     * satisfies src-keyed windows, joins and aggregates with NO
     * exchange and NO per-query re-derivation. Columns: (src, dst). */
@@ -234,7 +235,7 @@ object Graph {
       val pairs = graft.operators.EdgeLayout.pairs(s, dir)
       // keepc is CUSTOMER-sized (grows with the corpus) — broadcasting
       // it is the vertex-broadcast trap; as an aggregate over the
-      // bucketed scan it KEEPS HashPartitioning(c, 32), so the pinned
+      // bucketed scan it KEEPS HashPartitioning(c, B), so the pinned
       // shuffled-hash join needs no exchange on either side
       val keepc = pairs.groupBy("c").agg(count(lit(1)).as("dc"))
         .filter(col("dc") <= 20).select("c")
@@ -831,13 +832,14 @@ object Graph {
     // trading graph: the distinct customer⇄supplier pair list is
     // computed ONCE per JVM+sf-dir (operators/EdgeLayout, run-tagged
     // path and table names so concurrent sessions never collide) as a
-    // 32-bucket table CLUSTERED BY the customer key, and every graph
+    // table of B buckets (LayoutCatalog.buckets: sized to the corpus)
+    // CLUSTERED BY the customer key, and every graph
     // query in this file consumes it exchange-free (q94/q104/q157
     // read the symmetric src-bucketed edge table, q123 and this
     // report the c-bucketed pair table). Two consumers demonstrate
     // the payoff in one plan: (1) the per-customer degree aggregate
     // runs with NO exchange at all — the bucketed scan's
-    // HashPartitioning(c, 32) already satisfies the aggregate's
+    // HashPartitioning(c, B) already satisfies the aggregate's
     // clustering, so partial and final collapse into the scan stage;
     // (2) the customer-nation join shuffles ONLY the vertex side into
     // the bucket layout — the (much larger) edge side never moves.

@@ -579,9 +579,9 @@ class LayoutCatalogSpec extends SparkSpec {
         keys.zipWithIndex.map { case (k, i) => s"c10_${infix}seg${i}_$k" }
       val expected =
         (Seq(s"d10_arch_$dArch", s"d10_seg0_$dSeg", s"c10_arch_$cArch", cFold) ++
-          segs("", cSegs)).map(n => s"lexical_v3/_$n") ++
+          segs("", cSegs)).map(n => s"lexical_v4/_$n") ++
         (s"c10_parch_$cArch" +: segs("p", cSegs))
-          .map(n => s"positional_v1/_$n") ++
+          .map(n => s"positional_v2/_$n") ++
         Seq(s"d10_arch_$vdArch", s"c10_arch_$vcArch")
           .map(n => s"ivf_v1/_${n}_k32_r2_cos") ++
         (Seq(s"d10_arch_$vdArch", s"d10_seg0_$vdSeg", s"c10_arch_$vcArch", vcFold) ++
@@ -772,5 +772,91 @@ class LayoutCatalogSpec extends SparkSpec {
     LayoutCatalog.buildAndPublish(dest, _ => { called = true })
     assert(!called, "a published artifact must short-circuit the build")
     assert(Files.readString(new File(dest, "payload").toPath) == "winner")
+  }
+
+  test("width rule: 64 MiB per file, buckets held between 4 and 32") {
+    val mib = 1L << 20
+    val sizes = Seq(1L, 64 * mib + 1, 2048 * mib, 10240 * mib)
+    assert(sizes.map(LayoutCatalog.width) == Seq(1, 2, 32, 160))
+    assert(sizes.map(LayoutCatalog.buckets) == Seq(4, 4, 32, 32))
+    assert(LayoutCatalog.width(0L) == 1 && LayoutCatalog.width(64 * mib) == 1)
+  }
+
+  private def dataFiles(d: File): Seq[File] =
+    Option(d.listFiles()).getOrElse(Array.empty[File]).toSeq
+      .filter(_.getName.endsWith(".parquet"))
+
+  /** Bucket counts of the file scans under `df`'s plan (0: not bucketed). */
+  private def bucketCounts(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+    df.queryExecution.optimizedPlan.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+    }.collect {
+      case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+        h.bucketSpec.map(_.numBuckets).getOrElse(0)
+    }
+
+  test("width rule at sf0.001: edge layout tables in 4 buckets, pairs07 in one file") {
+    val dir = corpus.getAbsolutePath
+    assert(LayoutCatalog.bucketsOf(dir, Seq("orders", "lineitem")) == 4)
+    assert(LayoutCatalog.width(LayoutCatalog.inputBytes(dir, Seq("documents"))) == 1)
+    LayoutCatalog.reset()
+    edgeTableNames().foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
+    assert(bucketCounts(EdgeLayout.weightedEdges(spark, dir)) == Seq(4))
+    assert(bucketCounts(EdgeLayout.pairsBySupplier(spark, dir)) == Seq(4))
+    val edges = new File(LayoutCatalog.root, s"edges_v${EdgeLayout.LayoutVersion}")
+      .listFiles().filterNot(_.getName.startsWith(".tmp_"))
+    assert(edges.length == 1)
+    // one file per non-empty bucket: the 150 customers fill all four
+    // buckets of pairs and edges; the 10 suppliers leave one of
+    // pairs_s's four empty, and an empty bucket writes no file
+    val bucketId = "_(\\d{5})\\.c000".r
+    for ((leaf, filled) <- Seq("pairs" -> 4, "pairs_s" -> 3, "edges" -> 4)) {
+      val ids = dataFiles(new File(edges.head, leaf))
+        .map(f => bucketId.findFirstMatchIn(f.getName).get.group(1).toInt)
+      assert(ids.length == filled && ids.distinct.length == filled &&
+        ids.forall(_ < 4), s"$leaf bucket files: ${ids.sorted}")
+    }
+    PairGraph.qualifyingPairs(spark, dir).queryExecution.toRdd.count()
+    val pairs = new File(LayoutCatalog.root, s"pairs07_v${PairGraph.LayoutVersion}")
+      .listFiles().filterNot(_.getName.startsWith(".tmp_"))
+    assert(pairs.length == 1 && dataFiles(new File(pairs.head, "pairs")).length == 1)
+  }
+
+  test("width rule: a split's archive, segments and fold and a streamed segment of one corpus share one bucket count") {
+    val dir = corpus.getAbsolutePath
+    LayoutCatalog.reset()
+    val b = LayoutCatalog.bucketsOf(dir, Seq("documents"))
+    // five deltas: the fold covers the archive and the oldest four,
+    // the fifth stays a live segment
+    val preds = (0 to 4).map(i => col("doc_id") % 10 === i)
+    val split = LayoutCatalog.Split("wr", !preds.reduce(_ || _), preds)
+    val live = TextIndex.splitParts(spark, dir, split).map(_._1)
+    val arch = TextIndex.splitParts(spark, dir,
+      LayoutCatalog.Split("wr", split.archPred, Nil)).map(_._1)
+    assert(live.length == 2 && arch.length == 1)
+    val docs = graft.Tables.load(spark, dir, "documents")
+      .filter(col("doc_id") % 10 === 5).select("doc_id", "text")
+    val (streamed, _) = TextIndex.publishSegmentRows(spark, dir, docs, "wrs", 0, "k0")
+    val posStreamed =
+      TextIndex.publishPositionalSegmentRows(spark, dir, docs, "wrs", 0, "k0")
+    val counts = (live ++ arch ++ Seq(streamed, posStreamed).map(spark.table))
+      .flatMap(bucketCounts)
+    assert(counts.length == 5 && counts.forall(_ == b), s"bucket counts: $counts")
+  }
+
+  test("declared-schema reads: each artifact table's declared schema is the one its writer wrote") {
+    val dir = corpus.getAbsolutePath
+    val base = pqBase(dir)
+    val cents = Ivf.persistedCentroidsCosine(base, dir, "vec_id", "qv", 8, 2)
+    val (codes, codebook) = IvfPq.persistedIndex(base, dir, cents, 8, 2, 3)
+    val reads = Seq(PairGraph.qualifyingPairs(spark, dir),
+      TextIndex.docLengths(spark, dir), cents, codes, codebook)
+    for (df <- reads) {
+      // the files' own footer schema, as a read without one infers it
+      val table = new File(new java.net.URI(df.inputFiles.head)).getParent
+      val written = spark.read.parquet(table).schema
+      assert(df.schema.map(f => (f.name, f.dataType)) ==
+        written.map(f => (f.name, f.dataType)), s"declared vs written at $table")
+    }
   }
 }

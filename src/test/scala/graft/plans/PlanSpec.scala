@@ -1018,7 +1018,7 @@ class PlanSpec extends SparkSpec {
 
   test("q259: zero Exchange above the bucketed edge scan; only the vertex side shuffles") {
     // The shared-edge-corpus layout demo: the pair list is written as
-    // a 32-bucket table CLUSTERED BY customer key, so (1) the
+    // a bucketed table CLUSTERED BY customer key, so (1) the
     // per-customer degree aggregate and (2) the edge side of the
     // customer join both consume the bucketed scan with NO exchange —
     // the at-scale contract that the edge corpus shuffles once at
@@ -1027,7 +1027,10 @@ class PlanSpec extends SparkSpec {
     val p = plan("q259_bucketed_edge_corpus")
     val bucketScans = scans(p).filter(_.relation.bucketSpec.isDefined)
     assert(bucketScans.nonEmpty, s"expected a bucketed table scan:\n$p")
-    assert(bucketScans.forall(_.relation.bucketSpec.get.numBuckets == 32))
+    // the bucket count the width rule gives the fixture's orders +
+    // lineitem (LayoutCatalog.buckets)
+    val b = graft.operators.LayoutCatalog.bucketsOf(sf, Seq("orders", "lineitem"))
+    assert(bucketScans.forall(_.relation.bucketSpec.get.numBuckets == b))
     val joins = p.collect { case j: ShuffledHashJoinExec => j }
     assert(joins.nonEmpty, s"vertex attach must be a shuffled-hash join:\n$p")
     // the join child that contains the bucketed scan must carry no

@@ -14,6 +14,7 @@ import json
 import math
 import os
 import sys
+import tempfile
 
 import duckdb
 
@@ -37,7 +38,10 @@ def canon(rows, cols):
 
 
 def main(sf_dir, out_dir):
-    con = duckdb.connect()
+    # a spill directory of this run's own: DuckDB's default `.tmp` is
+    # relative to the cwd, and two checks sharing it abort
+    spill = tempfile.TemporaryDirectory(prefix="check_oracle_")
+    con = duckdb.connect(config={"temp_directory": spill.name})
     for p in glob.glob(os.path.join(sf_dir, "*.parquet")):
         name = os.path.basename(p)[: -len(".parquet")]
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")

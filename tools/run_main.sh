@@ -1,8 +1,9 @@
 #!/usr/bin/env bash
 # Plain-java launcher for any graft main: (re)compiles when the classes
-# are missing or a main source is newer, then runs the class with
-# build.sbt's fork flags. No sbt wrapper chatter reaches stdout, so a
-# main's own last stdout line stays the last line.
+# are missing or a main source is newer than the last compile's stamp
+# file, then runs the class with build.sbt's fork flags. No sbt wrapper
+# chatter reaches stdout, so a main's own last stdout line stays the
+# last line.
 #
 # Usage: tools/run_main.sh <MainClass> [args...]
 #   e.g. tools/run_main.sh graft.Ingest <sfDir>
@@ -14,9 +15,15 @@ cd "$(dirname "$0")/.."
 MAIN="${1:?usage: tools/run_main.sh <MainClass> [args...]}"; shift
 
 CLASSES=target/scala-2.13/classes
-if [ ! -d "$CLASSES" ] || \
-   [ -n "$(find src/main -name '*.scala' -newer "$CLASSES" -print -quit 2>/dev/null)" ]; then
+# touched after each compile: the classes directory's own mtime moves
+# only when a top-level entry is added, not when sbt rewrites the
+# class files below it
+STAMP=target/run_main.stamp
+if [ ! -d "$CLASSES" ] || [ ! -f "$STAMP" ] || \
+   [ -n "$(find src/main -name '*.scala' -newer "$STAMP" -print -quit 2>/dev/null)" ]; then
+  mkdir -p target && touch "$STAMP.next"
   sbt -batch compile 1>&2
+  mv "$STAMP.next" "$STAMP"
 fi
 
 # JDK-17 module opens: same list as build.sbt (what spark-submit injects)
