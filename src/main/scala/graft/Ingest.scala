@@ -40,7 +40,7 @@ object Ingest {
     // trading-graph bucketed layout (edges_v5: pairs + pairs_s +
     // edges) — the whole graph family rides it
     ("edge_layout", () => { graft.operators.EdgeLayout.pairs(s, dir); () }),
-    // exact near-dup pair graph (pairs07_v2) — q299/q307/q313
+    // exact near-dup pair graph (pairs07_v3) — q299/q307/q313
     ("pair_graph", () =>
       { graft.operators.PairGraph.qualifyingPairs(s, dir); () }),
     // lexical text indexes (lexical_v4), incl. the d10 incremental
@@ -48,7 +48,7 @@ object Ingest {
     ("lexical_index", () => queries.Matching.ingestArtifacts(s, dir)),
     // positional index LSM split (positional_v2 c10) + the pair graph
     ("positional_index", () => queries.TextOps.ingestArtifacts(s, dir)),
-    // IVF centroids + IVF-PQ codes (ivf_v1, ivfpq_v2), including the
+    // IVF centroids + IVF-PQ codes (ivf_v2, ivfpq_v3), including the
     // d10 incremental and c10 LSM splits
     ("vector_index", () => queries.Vectors.ingestArtifacts(s, dir)))
 

@@ -34,13 +34,12 @@ import org.apache.spark.sql.functions._
   *     (degree/strength windows and every frontier⋈edges join consume
   *     it with no exchange on the edge side).
   *
-  * Each table is written and registered through
-  * [[LayoutCatalog.writeBucketed]] / [[LayoutCatalog.bucketed]]: one
-  * file per bucket, so the scan reports HashPartitioning(key, B) with
-  * B = [[LayoutCatalog.bucketsOf]] the corpus (4 at every fixture
-  * scale, 32 from 2 GiB of orders + lineitem), and catalog names
-  * hashed from the published location, so registration is idempotent
-  * if the SparkSession is recreated.
+  * Each table is one bucketed [[LayoutCatalog.Table]]: one file per
+  * bucket, so the scan reports HashPartitioning(key, B) with B the
+  * corpus's bucket count (4 at every fixture scale, 32 from 2 GiB of
+  * orders + lineitem), and catalog names hashed from the published
+  * location, so registration is idempotent if the SparkSession is
+  * recreated.
   *
   * Semantics are a layout only: every consumer's oracle derives the
   * identical pair list straight from parquet.
@@ -82,17 +81,19 @@ object EdgeLayout {
       .agg(count(lit(1)).as("n"))
   }
 
-  /** Build the three bucketed tables under `tmp` (the catalog's
-    * unpublished temp dir). Each bucket file is sorted by the table's
-    * whole key — (c, s), (s, c), (src, dst), all unique — so the bytes
-    * are a function of the row set alone, as TextIndex's and IvfPq's
-    * are; sorting by the bucket key only left rows that share it in a
-    * per-run order. Readers declare the bucket key alone as the sort
-    * order, which the full-key order implies. */
-  private def buildInto(s: SparkSession, dir: String, tmp: File): Unit = {
-    val b = LayoutCatalog.bucketsOf(dir, Facts)
-    LayoutCatalog.writeBucketed(derivePairs(s, dir), new File(tmp, "pairs"),
-        b, "c", "s") { pairs =>
+  /** The three tables, each bucket file sorted by the table's whole
+    * key — (c, s), (s, c), (src, dst), all unique — so the bytes are a
+    * function of the row set alone; sorting by the bucket key only
+    * left rows that share it in a per-run order. */
+  private val Pairs = LayoutCatalog.Table("pairs", "c BIGINT, s BIGINT, n BIGINT",
+    Seq("c", "s"), LayoutCatalog.Bucketed)
+  private val PairsS = Pairs.copy(leaf = "pairs_s", key = Seq("s", "c"))
+  private val Edges = LayoutCatalog.Table("edges",
+    "src BIGINT, dst BIGINT, n BIGINT", Seq("src", "dst"), LayoutCatalog.Bucketed)
+
+  /** Build the three tables under the artifact temp dir `tmp`. */
+  private def buildInto(s: SparkSession, dir: String, tmp: File): Unit =
+    Pairs.write(derivePairs(s, dir), dir, Facts, tmp) { pairs =>
       // v3: the SAME pair rows bucketed by the supplier key — s-keyed
       // consumers (HITS' authority steps, supplier-side joins)
       // otherwise re-shuffle the pair corpus by s on EVERY execution;
@@ -100,10 +101,10 @@ object EdgeLayout {
       // all of them (guide §2.4: bucketed tables persist a
       // partitioning across jobs). Built from the pairs read-back — a
       // bucketed scan, not a re-run of the fact⋈fact join.
-      LayoutCatalog.writeBucketed(pairs, new File(tmp, "pairs_s"), b, "s", "c")(_ => ())
+      PairsS.write(pairs, dir, Facts, tmp)()
       // both edge directions from ONE explode pass over the pairs
       // table read-back (cheap: a bucketed scan, not the fact join)
-      LayoutCatalog.writeBucketed(
+      Edges.write(
         pairs.select(explode(array(
             struct(col("c").as("src"), (-(col("s") + 1)).as("dst"),
               col("n")),
@@ -111,20 +112,13 @@ object EdgeLayout {
               col("n")))).as("e"))
           .select(col("e.src").as("src"), col("e.dst").as("dst"),
             col("e.n").as("n")),
-        new File(tmp, "edges"), b, "src", "dst")(_ => ())
+        dir, Facts, tmp)()
     }
-  }
 
-  /** The published bucketed table `leaf` of `dir`'s layout, bucketed
-    * and sorted by `key`. */
-  private def table(s: SparkSession, dir: String, leaf: String,
-      schema: String, key: String): DataFrame = {
-    val dest = LayoutCatalog.resolve(s"edges_v$LayoutVersion", dir,
-      Facts, "")(buildInto(s, dir, _))
-    LayoutCatalog.bucketed(s, new File(dest, leaf), schema, key)
-  }
-
-  private val PairsSchema = "c BIGINT, s BIGINT, n BIGINT"
+  /** The published layout of `dir`. */
+  private def built(s: SparkSession, dir: String): File =
+    LayoutCatalog.resolve(s"edges_v$LayoutVersion", dir, Facts, "")(
+      buildInto(s, dir, _))
 
   /** Distinct (c, s) trading pairs, bucketed by c — exchange-free
     * input for c-keyed aggregates and self-joins. (A projection of
@@ -135,11 +129,11 @@ object EdgeLayout {
   /** The SAME distinct (c, s) pairs bucketed by s — exchange-free
     * input for supplier-keyed aggregates and joins (v3). */
   def pairsBySupplier(s: SparkSession, dir: String): DataFrame =
-    table(s, dir, "pairs_s", PairsSchema, "s").select("c", "s")
+    PairsS.read(s, built(s, dir)).select("c", "s")
 
   /** (c, s, n) trading pairs with order-line counts, bucketed by c. */
   def weightedPairs(s: SparkSession, dir: String): DataFrame =
-    table(s, dir, "pairs", PairsSchema, "c")
+    Pairs.read(s, built(s, dir))
 
   /** Symmetric (src, dst) edge list (suppliers −(s+1)), bucketed by
     * src — exchange-free edge side for every vertex-program join. */
@@ -150,5 +144,5 @@ object EdgeLayout {
     * bucketed by src — the weighted vertex-program layout (q228's
     * friction weights, q284's volume-weighted rank). */
   def weightedEdges(s: SparkSession, dir: String): DataFrame =
-    table(s, dir, "edges", "src BIGINT, dst BIGINT, n BIGINT", "src")
+    Edges.read(s, built(s, dir))
 }

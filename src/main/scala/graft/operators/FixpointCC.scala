@@ -99,16 +99,15 @@ object FixpointCC {
       .groupBy("node").agg(min(col("lbl")).as("lbl"))
   }
 
-  /** Fixed-round unroll of [[step]] — q294's discipline, exposed so
-    * CcFixpointSpec can demonstrate the under-convergence a bounded
-    * unroll hides on a long-diameter graph. */
-  def bounded(edges: DataFrame, rounds: Int): DataFrame = {
-    val l0 = init(edges)
-    (1 to rounds).foldLeft(Checkpoints.materialize(l0)) { (l, k) =>
+  /** Fixed-round unroll of [[step]] from the label table `seed` —
+    * q294's discipline, which CcFixpointSpec runs from [[init]] to
+    * demonstrate the under-convergence it hides on a long-diameter
+    * graph. */
+  def bounded(edges: DataFrame, seed: DataFrame, rounds: Int): DataFrame =
+    (1 to rounds).foldLeft(Checkpoints.materialize(seed)) { (l, k) =>
       if (k < rounds) Checkpoints.materialize(step(edges, l))
       else step(edges, l)
     }
-  }
 
   /** Runs [[step]] to fixpoint. Returns (labels `(node, lbl)`,
     * effective rounds run — rounds that changed at least one label;
@@ -177,7 +176,7 @@ object FixpointCC {
 
   /** Every node labeled with its own id. Symmetric edges ⇒ the src
     * column alone covers the node set. */
-  private def init(edges: DataFrame): DataFrame =
+  private[operators] def init(edges: DataFrame): DataFrame =
     edges.select(col("src").as("node")).distinct()
       .withColumn("lbl", col("node"))
 }

@@ -235,18 +235,19 @@ object Ivf {
     // base so subset-trained centroids never collide with the
     // full-corpus table.
     val vtag = if (variant.isEmpty) "" else s"_$variant"
-    val dest = LayoutCatalog.resolve("ivf_v1", corpusKey, Seq("embeddings"),
-      s"${vtag}_k${n}_r${rounds}_cos")(tmp =>
-      trainCentroidsCosine(df, idCol, qvCol, n, rounds)
-        .write.mode("overwrite")
-        .parquet(new java.io.File(tmp, "centroids").getAbsolutePath))
-    // read with the schema the training writes: no schema-inference
-    // job (LayoutCatalogSpec checks the two agree)
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("centroid_id", "int").add("cv", df.schema(qvCol).dataType)
-    df.sparkSession.read.schema(schema).parquet(
-      new java.io.File(dest, "centroids").getAbsolutePath)
+    Centroids.read(df.sparkSession, LayoutCatalog.resolve(
+      s"ivf_v$LayoutVersion", corpusKey, Embeddings,
+      s"${vtag}_k${n}_r${rounds}_cos")(Centroids.write(
+        trainCentroidsCosine(df, idCol, qvCol, n, rounds), corpusKey, Embeddings, _)()))
   }
+
+  /** Bump when the centroids' BUILD semantics change (v2: one file
+    * sorted by centroid_id). */
+  val LayoutVersion = 2
+
+  private val Embeddings = Seq("embeddings")
+  private val Centroids = LayoutCatalog.Table("centroids",
+    "centroid_id INT, cv ARRAY<BIGINT>", Seq("centroid_id"), LayoutCatalog.Single)
 
   /** DuckDB CTE chain replaying [[trainCentroidsCosine]] exactly:
     * expects the seed CTE named `cents0` (carrying cn) and emits

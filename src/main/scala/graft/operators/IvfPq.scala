@@ -25,9 +25,10 @@ import org.apache.spark.sql.functions._
   *
   * V2 — DETERMINISTIC BYTES + INCREMENTAL MAINTENANCE (the
   * TextIndex-v2 treatment, applied to vectors): every file is
-  * totally ordered (codes hashed 32-way on vec_id and sorted by the
-  * unique (vec_id, centroid_id, subspace); codebook one file sorted
-  * by (subspace, code)) and nullability-pinned, so artifact bytes
+  * totally ordered (codes hashed on vec_id into the embeddings
+  * table's width of files — one at every fixture scale — and sorted
+  * by the unique (vec_id, centroid_id, subspace); codebook one file
+  * sorted by (subspace, code)) and nullability-pinned, so artifact bytes
   * are a pure function of the row set. [[splitIndex]] then gives
   * the appends of a [[LayoutCatalog.Split]] the production PQ shape: centroids AND codebook are
   * trained once on the ARCHIVE snapshot and FROZEN (retraining per
@@ -51,8 +52,9 @@ object IvfPq {
 
   /** Bump when the BUILD semantics change. v2: totally-ordered,
     * nullability-pinned files (the byte-determinism the incremental
-    * merge is proven against). */
-  val LayoutVersion = 2
+    * merge is proven against). v3: codes in the embeddings table's
+    * width of files instead of a fixed 32. */
+  val LayoutVersion = 3
 
   private val Kind = s"ivfpq_v$LayoutVersion"
 
@@ -62,15 +64,18 @@ object IvfPq {
   private def params(nCentroids: Int, rounds: Int, replication: Int): String =
     s"_k${nCentroids}_r${rounds}_x$replication"
 
-  /** The schema [[writeTables]] writes each table with, declared at
-    * the read so no job infers it (LayoutCatalogSpec checks the two
-    * agree). */
-  private val Schemas = Map(
-    "codes" -> "vec_id BIGINT, centroid_id INT, qn BIGINT, subspace BIGINT, code BIGINT",
-    "codebook" -> "subspace BIGINT, code BIGINT, cw ARRAY<BIGINT>")
-
-  private def read(s: SparkSession, dest: File, leaf: String): DataFrame =
-    s.read.schema(Schemas(leaf)).parquet(new File(dest, leaf).getAbsolutePath)
+  /** The index's tables, every column pinned non-nullable so a fresh
+    * aggregate and a published-table read-back write one parquet
+    * schema: codes spread on vec_id and sorted by the unique
+    * (vec_id, centroid_id, subspace); the codebook one file sorted by
+    * (subspace, code). */
+  private val Codes = LayoutCatalog.Table("codes",
+    "vec_id BIGINT NOT NULL, centroid_id INT NOT NULL, qn BIGINT NOT NULL, " +
+      "subspace BIGINT NOT NULL, code BIGINT NOT NULL",
+    Seq("vec_id", "centroid_id", "subspace"), LayoutCatalog.Spread)
+  private val Codebook = LayoutCatalog.Table("codebook",
+    "subspace BIGINT NOT NULL, code BIGINT NOT NULL, cw ARRAY<BIGINT> NOT NULL",
+    Seq("subspace", "code"), LayoutCatalog.Single)
 
   /** r-way cell assignment + per-copy residuals of `base` against the
     * broadcast centroid table (columns vec_id, centroid_id, qn, rv). */
@@ -149,35 +154,10 @@ object IvfPq {
         col("subspace"), col("m.code").as("code"))
   }
 
-  /** Deterministic-bytes artifact writer: codes hashed 32-way on
-    * vec_id and totally ordered by the unique (vec_id, centroid_id,
-    * subspace); codebook one file ordered by (subspace, code). Every
-    * column is coalesce-pinned non-nullable so a fresh aggregate and
-    * a published-table read-back write identical parquet schemas
-    * (the TextIndex-v2 lesson: .to(schema) widening is optimized
-    * away; coalesce with a literal survives). */
-  private def writeCodes(codes: DataFrame, tmp: java.io.File): Unit =
-    codes.select(
-        coalesce(col("vec_id"), lit(0L)).as("vec_id"),
-        coalesce(col("centroid_id"), lit(0)).as("centroid_id"),
-        coalesce(col("qn"), lit(0L)).as("qn"),
-        coalesce(col("subspace"), lit(0L)).as("subspace"),
-        coalesce(col("code"), lit(0L)).as("code"))
-      .repartition(32, col("vec_id"))
-      .sortWithinPartitions("vec_id", "centroid_id", "subspace")
-      .write.mode("overwrite")
-      .parquet(new java.io.File(tmp, "codes").getAbsolutePath)
-
-  private def writeTables(codes: DataFrame, cbt: DataFrame,
-      tmp: java.io.File): Unit = {
-    writeCodes(codes, tmp)
-    cbt.select(
-        coalesce(col("subspace"), lit(0L)).as("subspace"),
-        coalesce(col("code"), lit(0L)).as("code"),
-        coalesce(col("cw"), expr("array(0L)")).as("cw"))
-      .repartition(1).sortWithinPartitions("subspace", "code")
-      .write.mode("overwrite")
-      .parquet(new java.io.File(tmp, "codebook").getAbsolutePath)
+  private def writeTables(codes: DataFrame, cbt: DataFrame, dir: String,
+      tmp: File): Unit = {
+    Codes.write(codes, dir, Embeddings, tmp)()
+    Codebook.write(cbt, dir, Embeddings, tmp)()
   }
 
   /** Full build: train on `trainBase`, code `codeBase`. The two
@@ -185,13 +165,13 @@ object IvfPq {
     * rebuild the incremental spec compares against passes
     * (archive, full). */
   private[operators] def buildInto(trainBase: DataFrame, codeBase: DataFrame,
-      cents: DataFrame, replication: Int, tmp: java.io.File): Unit = {
+      cents: DataFrame, replication: Int, dir: String, tmp: File): Unit = {
     val resCodeSub = subspaced(residuals(codeBase, cents, replication))
     val resTrainSub =
       if (trainBase eq codeBase) resCodeSub
       else subspaced(residuals(trainBase, cents, replication))
     val cbt = trainCodebook(trainBase, cents, resTrainSub)
-    writeTables(codeAgainst(resCodeSub, cbt), cbt, tmp)
+    writeTables(codeAgainst(resCodeSub, cbt), cbt, dir, tmp)
   }
 
   /** Resolve (codes, codebook) for `dir`'s embeddings under the given
@@ -204,8 +184,8 @@ object IvfPq {
     val spark = base.sparkSession
     val dest = LayoutCatalog.resolve(Kind, dir, Embeddings,
       params(nCentroids, rounds, replication))(
-      buildInto(base, base, cents, replication, _))
-    (read(spark, dest, "codes"), read(spark, dest, "codebook"))
+      buildInto(base, base, cents, replication, dir, _))
+    (Codes.read(spark, dest), Codebook.read(spark, dest))
   }
 
   /** The LSM vector index of `split` — the production append path:
@@ -236,16 +216,16 @@ object IvfPq {
       split, "", params(nCentroids, rounds, replication))(
       archive = p => {
         val baseArch = base.filter(p)
-        buildInto(baseArch, baseArch, cents, replication, _)
+        buildInto(baseArch, baseArch, cents, replication, dir, _)
       },
-      segment = (archDir, p) => writeCodes(codeAgainst(
+      segment = (archDir, p) => Codes.write(codeAgainst(
         subspaced(residuals(base.filter(p), cents, replication)),
-        read(spark, archDir, "codebook")), _),
+        Codebook.read(spark, archDir)), dir, Embeddings, _)(),
       fold = Some(parts => writeTables(
-        parts.map(read(spark, _, "codes")).reduce(_ unionByName _),
-        read(spark, parts.head, "codebook"), _)))
-    (live.map(read(spark, _, "codes")).reduce(_ unionByName _),
-      read(spark, arch, "codebook"), cents)
+        parts.map(Codes.read(spark, _)).reduce(_ unionByName _),
+        Codebook.read(spark, parts.head), dir, _)))
+    (live.map(Codes.read(spark, _)).reduce(_ unionByName _),
+      Codebook.read(spark, arch), cents)
   }
 
   /** Publish ONE code-segment artifact from an EXPLICIT vector row
@@ -254,7 +234,7 @@ object IvfPq {
     * of [[TextIndex.publishSegmentRows]]): a micro-batch of arriving
     * (vec_id, qv, qn) rows codes against the FROZEN archive-trained
     * centroids + codebook through the identical assignment → residual
-    * → argmin → deterministic 32-way ordered write as a
+    * → argmin → deterministic ordered write as a
     * predicate-defined segment — same bytes for the same row set —
     * keyed by a caller-supplied CONTENT KEY of the batch (checkpoint
     * replays re-derive the key, so the publish is idempotent; a
@@ -262,13 +242,13 @@ object IvfPq {
     * the published codes directory. */
   def publishCodeSegmentRows(base: DataFrame, dir: String, cents: DataFrame,
       cbt: DataFrame, nCentroids: Int, rounds: Int, replication: Int,
-      tag: String, i: Int, key: String): java.io.File = {
+      tag: String, i: Int, key: String): File = {
     val dest = LayoutCatalog.resolve(Kind, dir, Embeddings,
       s"_${LayoutCatalog.segmentName(tag, "", i, key)}" +
         params(nCentroids, rounds, replication))(
-      writeCodes(codeAgainst(
-        subspaced(residuals(base, cents, replication)), cbt), _))
-    new File(dest, "codes")
+      Codes.write(codeAgainst(
+        subspaced(residuals(base, cents, replication)), cbt), dir, Embeddings, _)())
+    new File(dest, Codes.leaf)
   }
 
   /** Per-copy PQ reconstruction error of an index: for each

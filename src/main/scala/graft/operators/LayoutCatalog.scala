@@ -7,7 +7,8 @@ import java.nio.file.Files
 import scala.util.Try
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{array, coalesce, col, lit}
+import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
 
 /** Durable, corpus-snapshot-keyed home for layout artifacts, and the
   * ONE resolve path every artifact-backed operator goes through: the
@@ -57,20 +58,19 @@ import org.apache.spark.sql.functions.col
   *     `.tmp_*` orphans older than a day. Disk use is therefore
   *     bounded at one live artifact per (kind, corpus), fixing the
   *     round-9 unbounded tmpdir accumulation.
-  *   - **Bucketed tables**: [[writeBucketed]] writes one file per
-  *     bucket through a scratch `graft_build_<leaf>_<hash>` table and
-  *     records the bucket count beside the files; [[bucketed]]
-  *     re-attaches a published location to the session catalog as
-  *     `graft_<leaf>_<hash>` with that count, where leaf is the
-  *     location's directory name (`pairs`, `edges`, `postings`, ...)
-  *     and hash is 16 hex chars of its absolute path.
-  *   - **Width**: an artifact table's file count follows its corpus —
-  *     [[width]] files per plain table and [[buckets]] (the width held
-  *     between 4 and 32) per bucketed table, both a pure function of
-  *     the bytes of the tables the artifact fingerprints, so one
-  *     corpus snapshot's archive, segments and folds share one count
-  *     and their unions stay co-partitioned. At every fixture scale
-  *     the width is 1: one file per plain table, 4 buckets.
+  *   - **Tables**: every artifact table is one [[Table]] — directory
+  *     name, schema, unique key, [[Layout]] — declared once by its
+  *     operator, written by [[Table.write]] and read by [[Table.read]]
+  *     with that one schema. A bucketed table is re-attached to the
+  *     session catalog as `graft_<leaf>_<hash>` (16 hex chars of its
+  *     location's absolute path) with the bucket count it recorded.
+  *   - **Width**: a table's file count follows its corpus — one file
+  *     ([[Single]]), [[width]] files ([[Spread]]) or [[buckets]] (the
+  *     width held between 4 and 32, [[Bucketed]]), the width a pure
+  *     function of the bytes of the tables the artifact fingerprints,
+  *     so one corpus snapshot's archive, segments and folds share one
+  *     count and their unions stay co-partitioned. At every fixture
+  *     scale the width is 1: one file per spread table, 4 buckets.
   *   - **LSM splits**: a [[Split]] (tag, archive predicate, delta
   *     predicates) owns the archive / segment / fold base names, and
   *     [[resolveSplit]] is the one archive → segments → fold skeleton
@@ -131,7 +131,7 @@ object LayoutCatalog {
   /** Bytes of `tables` under corpus dir `dir`: the sum of the file
     * sizes [[fingerprint]] hashes, so one fingerprint always means one
     * byte count — and one [[width]] for every artifact keyed on it. */
-  def inputBytes(dir: String, tables: Seq[String]): Long =
+  private[operators] def inputBytes(dir: String, tables: Seq[String]): Long =
     tables.flatMap(tableFiles(dir, _).getOrElse(Nil)).map(_.length).sum
 
   /** First 8 bytes of SHA-256(`s`), as 16 hex chars — the digest of
@@ -269,10 +269,10 @@ object LayoutCatalog {
     (arch, live)
   }
 
-  /** Files per plain artifact table for a corpus of `bytes`: one per
+  /** Files per spread artifact table for a corpus of `bytes`: one per
     * started [[graft.Tables.PartitionBytes]] (64 MiB), the unit of
     * [[graft.Tables.scaledPartitions]], and at least one. */
-  def width(bytes: Long): Int = math.max(1,
+  private[operators] def width(bytes: Long): Int = math.max(1,
     ((bytes + graft.Tables.PartitionBytes - 1) / graft.Tables.PartitionBytes).toInt)
 
   /** Buckets per bucketed artifact table for a corpus of `bytes`: the
@@ -280,14 +280,118 @@ object LayoutCatalog {
     * exchange-free bucketed join and aggregate at least 4-way parallel
     * on a small corpus; the ceiling is the fixed count every corpus
     * used before the width rule (reached at 2 GiB). */
-  def buckets(bytes: Long): Int = math.min(32, math.max(4, width(bytes)))
+  private[operators] def buckets(bytes: Long): Int =
+    math.min(32, math.max(4, width(bytes)))
 
   /** [[buckets]] of the corpus tables `tables` under `dir` — the
-    * tables an artifact fingerprints, so every artifact of one corpus
-    * snapshot (archive, segments, folds, streamed segments) is written
-    * with the same count. */
+    * tables an artifact fingerprints. */
   def bucketsOf(dir: String, tables: Seq[String]): Int =
     buckets(inputBytes(dir, tables))
+
+  /** How an artifact table's rows are laid out in files: [[buckets]]
+    * bucket files on the key's first column, registered in the session
+    * catalog so a read claims the bucket partitioning; [[width]] files
+    * hashed on that column; or one file. */
+  sealed trait Layout
+  case object Bucketed extends Layout
+  case object Spread extends Layout
+  case object Single extends Layout
+
+  /** One artifact table, declared once: its directory name `leaf`
+    * under the artifact, its schema as DDL (a column declared NOT NULL
+    * is pinned non-nullable at the write), its unique `key` and its
+    * [[Layout]]. Every file is sorted by the whole key, so the bytes
+    * are a function of the row set alone, whichever build path (from
+    * scratch, segment, fold, streamed batch) wrote them. */
+  final case class Table(leaf: String, ddl: String, key: Seq[String],
+      layout: Layout) {
+    val schema: StructType = StructType.fromDDL(ddl)
+
+    /** Write `df` as this table under the artifact temp dir `tmp`, in
+      * the file or bucket count of the corpus tables `tables` under
+      * `dir` (the ones the artifact fingerprints, so every part of one
+      * snapshot's split shares it). The declared columns are selected
+      * and each NOT NULL one is pinned with `coalesce`: a fresh count()
+      * is non-nullable, a read-back nullable, and the two write
+      * different parquet repetition (a `.to(schema)` widening is
+      * optimized away). `readBack` gets the written table's scan,
+      * bucketed for a bucketed table. */
+    def write(df: DataFrame, dir: String, tables: Seq[String], tmp: File)(
+        readBack: DataFrame => Unit = _ => ()): Unit = {
+      val s = df.sparkSession
+      // a nullable column stays bare: over a fold's union of bucketed
+      // reads, an aliased bucket key lets Spark drop the repartition
+      // below and write one file per input split
+      val out = df.select(schema.fields.toSeq.map { f =>
+        if (f.nullable) col(f.name)
+        else coalesce(col(f.name), zero(f.dataType)).as(f.name)
+      }: _*)
+      val loc = new File(tmp, leaf)
+      val n = layout match {
+        case Bucketed => bucketsOf(dir, tables)
+        case Spread => width(inputBytes(dir, tables))
+        case Single => 1
+      }
+      // hashing on the key's first column first (the bucketed write's
+      // murmur3 hash) gives one file per partition — per bucket
+      val parts = out.repartition(n, col(key.head))
+      if (layout != Bucketed) {
+        parts.sortWithinPartitions(key.map(col): _*)
+          .write.mode("overwrite").parquet(loc.getAbsolutePath)
+        readBack(s.read.schema(schema).parquet(loc.getAbsolutePath))
+      } else {
+        // bucketed writes need saveAsTable: a scratch external table is
+        // registered and dropped (the files stay); the bucket count is
+        // recorded beside the files for [[register]]
+        val scratch = tableName("graft_build", loc)
+        try {
+          parts.write.mode("overwrite")
+            .bucketBy(n, key.head).sortBy(key.head, key.tail: _*)
+            .option("path", loc.getAbsolutePath)
+            .saveAsTable(scratch)
+          Files.write(bucketsFile(loc), n.toString.getBytes(StandardCharsets.UTF_8))
+          readBack(s.table(scratch))
+        } finally s.sql(s"DROP TABLE IF EXISTS $scratch"): Unit
+      }
+    }
+
+    /** This table of the published artifact `dest`, read with the
+      * declared schema (no schema-inference job); a bucketed table
+      * through its session-catalog registration. */
+    def read(s: SparkSession, dest: File): DataFrame = layout match {
+      case Bucketed => s.table(register(s, dest))
+      case _ => s.read.schema(schema).parquet(new File(dest, leaf).getAbsolutePath)
+    }
+
+    /** Idempotent per-session registration of this bucketed table of
+      * `dest` as `graft_<leaf>_<hash>`, with the bucket count its
+      * writer recorded; returns the table name. CREATE TABLE over the
+      * files re-attaches the bucket spec (Spark recovers each file's
+      * bucket id from its name), so a recreated session reads the
+      * artifact exchange-free; the key's first column is declared as
+      * the sort order, which the whole-key order implies. IF NOT
+      * EXISTS makes concurrent registrations of one location safe. */
+    def register(s: SparkSession, dest: File): String = {
+      require(layout == Bucketed, s"$leaf is not a bucketed table")
+      val loc = new File(dest, leaf)
+      val name = tableName("graft", loc)
+      if (!s.catalog.tableExists(name)) {
+        val n = new String(Files.readAllBytes(bucketsFile(loc)),
+          StandardCharsets.UTF_8).trim.toInt
+        val cols = StructType(schema.map(_.copy(nullable = true))).toDDL
+        s.sql(s"""CREATE TABLE IF NOT EXISTS $name ($cols) USING PARQUET
+                 |CLUSTERED BY (${key.head}) SORTED BY (${key.head}) INTO $n BUCKETS
+                 |LOCATION '${loc.getAbsolutePath}'""".stripMargin)
+      }
+      name
+    }
+  }
+
+  /** The literal a NOT NULL column of type `t` is pinned with. */
+  private def zero(t: DataType): Column = t match {
+    case ArrayType(e, _) => array(zero(e))
+    case _ => lit(0).cast(t)
+  }
 
   /** The file beside a bucketed table's data files that records its
     * bucket count (Spark's file listing skips `_`-prefixed names). */
@@ -296,60 +400,6 @@ object LayoutCatalog {
 
   private def tableName(prefix: String, loc: File): String =
     s"${prefix}_${loc.getName}_${hex16(loc.getAbsolutePath)}"
-
-  /** Bucketed write of `df` to `loc` in `buckets` buckets, bucketed by
-    * `sortBy.head` and sorted by `sortBy`. Repartitioning on the
-    * bucket key with the bucket count first (same murmur3 hash as the
-    * bucketed write) yields one file per bucket, so a read-back claims
-    * HashPartitioning(key, buckets) and keeps the per-bucket sort; the
-    * count is recorded in `_buckets` for [[registerBucketed]].
-    * Bucketed writes need saveAsTable: a scratch table is registered
-    * and dropped (an external table — the files stay). `readBack` gets
-    * that table's bucketed scan before the drop, for derived writes
-    * whose bytes depend on its partitioning. */
-  def writeBucketed(df: DataFrame, loc: File, buckets: Int, sortBy: String*)(
-      readBack: DataFrame => Unit): Unit = {
-    val s = df.sparkSession
-    val scratch = tableName("graft_build", loc)
-    try {
-      df.repartition(buckets, col(sortBy.head))
-        .write.mode("overwrite")
-        .bucketBy(buckets, sortBy.head).sortBy(sortBy.head, sortBy.tail: _*)
-        .option("path", loc.getAbsolutePath)
-        .saveAsTable(scratch)
-      Files.write(bucketsFile(loc),
-        buckets.toString.getBytes(StandardCharsets.UTF_8))
-      readBack(s.table(scratch))
-    } finally {
-      s.sql(s"DROP TABLE IF EXISTS $scratch"): Unit
-    }
-  }
-
-  /** Idempotent per-session registration of a published bucketed
-    * location as `graft_<leaf>_<hash>`, with the bucket count its
-    * writer recorded; returns the table name. CREATE TABLE over the
-    * existing files re-attaches the bucket-spec metadata (Spark
-    * recovers each file's bucket id from its name), so a recreated
-    * session reads the same artifact exchange-free without rewriting
-    * a byte. IF NOT EXISTS makes the check-then-create race-free: two
-    * threads registering one location both succeed. */
-  def registerBucketed(s: SparkSession, loc: File, schema: String,
-      key: String): String = {
-    val name = tableName("graft", loc)
-    if (!s.catalog.tableExists(name)) {
-      val buckets = new String(Files.readAllBytes(bucketsFile(loc)),
-        StandardCharsets.UTF_8).trim.toInt
-      s.sql(s"""CREATE TABLE IF NOT EXISTS $name ($schema) USING PARQUET
-               |CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS
-               |LOCATION '${loc.getAbsolutePath}'""".stripMargin)
-    }
-    name
-  }
-
-  /** [[registerBucketed]], read as a table. */
-  def bucketed(s: SparkSession, loc: File, schema: String,
-      key: String): DataFrame =
-    s.table(registerBucketed(s, loc, schema, key))
 
   /** Build-then-publish: calls `build(tmpDir)` to produce the artifact
     * under an unpublished temp sibling, then atomically renames it to

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.io.File
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,14 +20,14 @@ import org.apache.spark.sql.functions._
   * parquet, and a changed corpus snapshot fingerprints to a new
   * directory — never a silent stale read.
   *
-  * Artifact: `pairs07_v2/<corpus>_<fp>/pairs` — all pairs with
+  * Artifact: `pairs07_v3/<corpus>_<fp>/pairs` — all pairs with
   * word-5-gram Jaccard ≥ 0.7 as (doc_a < doc_b, sza, szb, n_common),
   * the integer-exact frame both q299's ratio projection and q307's
   * components derive from. Pair-count-sized (O(n) in corpus size
   * times dup-family density — the bounded quantity the prefix filter
-  * exists to keep join-shaped), written hash-distributed on doc_a
-  * into [[LayoutCatalog.width]] of the documents table files (one at
-  * every fixture scale).
+  * exists to keep join-shaped), a spread [[LayoutCatalog.Table]]:
+  * hash-distributed on doc_a into the documents table's width (one
+  * file at every fixture scale), each file sorted by (doc_a, doc_b).
   *
   * Derivation semantics are UNCHANGED from q299 (scaladoc there;
   * BlockingSpec pins ≡ brute force): docs under 5 tokens drop before
@@ -45,8 +43,9 @@ object PairGraph {
 
   /** Bump when the BUILD semantics change, so an upgraded engine
     * never misreads an old artifact as current (v2: file count sized
-    * to the documents table instead of a fixed 32). */
-  val LayoutVersion = 2
+    * to the documents table instead of a fixed 32; v3: each file
+    * sorted by (doc_a, doc_b)). */
+  val LayoutVersion = 3
 
   private val Docs = Seq("documents")
 
@@ -66,21 +65,28 @@ object PairGraph {
     * `(doc_a, doc_b, sza, szb, n_common)` with doc_a < doc_b —
     * resolved from the published artifact, building it first if this
     * corpus snapshot has none. */
-  def qualifyingPairs(s: SparkSession, dir: String): DataFrame = {
-    val dest = LayoutCatalog.resolve(s"pairs07_v$LayoutVersion", dir,
-      Docs, "")(tmp =>
-      derive(s, dir)
-        .repartition(LayoutCatalog.width(LayoutCatalog.inputBytes(dir, Docs)),
-          col("doc_a"))
-        .write.mode("overwrite")
-        .parquet(new File(tmp, "pairs").getAbsolutePath))
-    s.read.schema(PairsSchema).parquet(new File(dest, "pairs").getAbsolutePath)
-  }
+  def qualifyingPairs(s: SparkSession, dir: String): DataFrame =
+    Pairs.read(s, LayoutCatalog.resolve(s"pairs07_v$LayoutVersion", dir,
+      Docs, "")(Pairs.write(derive(s, dir), dir, Docs, _)()))
 
-  /** The schema the build writes `pairs` with, declared at the read
-    * so no job infers it (LayoutCatalogSpec checks the two agree). */
-  private val PairsSchema =
-    "doc_a BIGINT, doc_b BIGINT, sza BIGINT, szb BIGINT, n_common BIGINT"
+  /** The artifact's one table, spread on doc_a. */
+  private val Pairs = LayoutCatalog.Table("pairs",
+    "doc_a BIGINT, doc_b BIGINT, sza BIGINT, szb BIGINT, n_common BIGINT",
+    Seq("doc_a", "doc_b"), LayoutCatalog.Spread)
+
+  /** Jaccard-0.7 prefix filter on a doc's gram of rank `rn` (1-based)
+    * among its `sz`: the first sz − ⌈0.7·sz⌉ + 1, ⌈7·sz/10⌉ being
+    * (7·sz + 9) div 10. */
+  def inPrefix: Column = col("rn") <= col("sz") - expr("(7 * sz + 9) div 10") + 1
+
+  /** Both Jaccard-0.7 length filters on gram counts `a`, `b`. */
+  def lengthsCompatible(a: Column, b: Column): Column =
+    lit(10) * b >= lit(7) * a && lit(10) * a >= lit(7) * b
+
+  /** Jaccard ≥ 0.7 in integers for `c` common grams of `a` and `b`:
+    * c / (a + b − c) ≥ 0.7 ⇔ 17c ≥ 7(a + b). */
+  def qualifies(c: Column, a: Column, b: Column): Column =
+    lit(17) * c >= lit(7) * (a + b)
 
   /** CAPPED-OUTPUT exact dedup: canonical exemplar per document,
     * computed by streaming the qualifying-pair derivation straight
@@ -128,17 +134,14 @@ object PairGraph {
     val docsArr = gramArrays(s, dir)
     val g = docsArr.select(col("doc_id"), col("sz"), explode(col("grams")).as("g"))
     val dfq = g.groupBy("g").agg(count(lit(1)).as("df"))
-    // prefix = first (sz − ⌈0.7·sz⌉ + 1) grams under (df, g) order;
-    // integer ceil: ⌈7·sz/10⌉ = (7·sz + 9) div 10
     val prefix = g.join(dfq, "g")
-      .withColumn("rn", row_number().over(
+      .withColumn("rn", row_number().over(  // prefix under (df, g) order
         Window.partitionBy("doc_id").orderBy(col("df"), col("g"))))
-      .filter(col("rn") <= col("sz") - expr("(7 * sz + 9) div 10") + 1)
+      .filter(inPrefix)
       .select(col("doc_id"), col("sz"), col("g"))
     val cand = prefix.as("a").join(prefix.as("b"),
         col("a.g") === col("b.g") && col("b.doc_id") > col("a.doc_id") &&
-          lit(10) * col("b.sz") >= lit(7) * col("a.sz") &&
-          lit(10) * col("a.sz") >= lit(7) * col("b.sz"))
+          lengthsCompatible(col("a.sz"), col("b.sz")))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.sz").as("sza"), col("b.sz").as("szb"))
       .distinct()
@@ -149,7 +152,7 @@ object PairGraph {
         "doc_b")
       .withColumn("n_common",
         graft.functions.Jaccard.sortedIntersectCountStr(col("ga"), col("gb")))
-      .filter(lit(17) * col("n_common") >= lit(7) * (col("sza") + col("szb")))
+      .filter(qualifies(col("n_common"), col("sza"), col("szb")))
       .select("doc_a", "doc_b", "sza", "szb", "n_common")
   }
 

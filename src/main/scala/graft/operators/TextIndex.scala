@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * Two tables per artifact, one derivation:
   *
   *   - `postings` — (doc_id, g, tf) bigram term frequencies,
-  *     CLUSTERED BY g INTO B BUCKETS (B = [[LayoutCatalog.bucketsOf]]
-  *     the documents table, 4 at every fixture scale): document
+  *     CLUSTERED BY g INTO B BUCKETS (B the documents table's bucket
+  *     count, 4 at every fixture scale): document
   *     frequency (`groupBy(g)`), idf weighting joins, and the posting-list
   *     SELF-join that generates sparse-cosine candidate pairs
   *     (q76's `wts a ⋈ wts b ON a.g = b.g`) all run on the bucket
@@ -124,55 +124,29 @@ object TextIndex {
     postings.withColumn("dl", sum(col("tf")).over(w))
   }
 
+  /** The bigram artifact's tables. DETERMINISTIC BYTES: postings
+    * bucket files are sorted by (g, doc_id) — a total order, since
+    * (doc_id, g) is unique after the tf aggregate — and doclen is one
+    * file sorted by doc_id, so the output bytes depend only on the row
+    * SET, not on which path (from-scratch, segment, or compaction
+    * merge) produced it. tf and dl are pinned non-nullable: the fresh
+    * aggregate and the fold's read-back write one parquet schema. */
+  private val Postings = LayoutCatalog.Table("postings",
+    "doc_id BIGINT, g STRING, tf BIGINT NOT NULL, dl BIGINT NOT NULL",
+    Seq("g", "doc_id"), LayoutCatalog.Bucketed)
+  private val Doclen = LayoutCatalog.Table("doclen", "doc_id BIGINT, dl BIGINT",
+    Seq("doc_id"), LayoutCatalog.Single)
+
   /** Write `postings` (doc_id, g, tf, dl) into `tmp` as the
-    * artifact's two tables, in the bucket count of `dir`'s documents
-    * (one count per corpus snapshot, whichever split part writes
-    * it). DETERMINISTIC BYTES: bucket files are
-    * sorted by (g, doc_id) — a total order, since (doc_id, g) is
-    * unique after the tf aggregate — and doclen is one file sorted by
-    * doc_id, so the output bytes depend only on the row SET, not on
-    * which path (from-scratch, segment, or compaction merge) produced
-    * it. */
+    * artifact's two tables. */
   private def writeInto(postings: DataFrame, dir: String, tmp: File): Unit =
-    // coalesce(tf, 0) normalizes NULLABILITY: a fresh aggregate's
-    // count() is non-nullable while a published table reads back
-    // nullable — left as-is the two build paths would write
-    // different parquet schemas/encodings (required vs optional
-    // repetition) and break byte-identity (a .to(schema) widening
-    // is optimized away; coalesce with a literal survives and pins
-    // tf non-nullable on BOTH paths)
-    LayoutCatalog.writeBucketed(
-        postings.select(col("doc_id"), col("g"),
-          coalesce(col("tf"), lit(0L)).as("tf"),
-          coalesce(col("dl"), lit(0L)).as("dl")),
-        new File(tmp, "postings"), LayoutCatalog.bucketsOf(dir, Docs), "g",
-        "doc_id") { written =>
+    Postings.write(postings, dir, Docs, tmp) { written =>
       // doc lengths from the postings read-back (a bucketed scan, not
-      // a re-tokenize); doc-count-sized, one totally-ordered parquet
-      // file — the corpus-stats (N, T) aggregate input
-      written.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-        .repartition(1).sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .parquet(new File(tmp, "doclen").getAbsolutePath)
+      // a re-tokenize); doc-count-sized — the corpus-stats (N, T)
+      // aggregate input
+      Doclen.write(written.groupBy("doc_id").agg(sum(col("tf")).as("dl")),
+        dir, Docs, tmp)()
     }
-
-  private val PostingsSchema = "doc_id BIGINT, g STRING, tf BIGINT, dl BIGINT"
-
-  /** Registered bucketed postings table of a published artifact. */
-  private def postingsTable(s: SparkSession, dest: File): String =
-    LayoutCatalog.registerBucketed(s, new File(dest, "postings"),
-      PostingsSchema, "g")
-
-  private def postingsOf(s: SparkSession, dest: File): DataFrame =
-    s.table(postingsTable(s, dest))
-
-  /** The schema [[writeInto]] writes `doclen` with, declared at the
-    * read so no job infers it (LayoutCatalogSpec checks the two
-    * agree). */
-  private val DoclenSchema = "doc_id BIGINT, dl BIGINT"
-
-  private def doclensOf(s: SparkSession, dest: File): DataFrame =
-    s.read.schema(DoclenSchema).parquet(new File(dest, "doclen").getAbsolutePath)
 
   private val Kind = s"lexical_v$LayoutVersion"
 
@@ -192,12 +166,12 @@ object TextIndex {
     * input for g-keyed aggregates, idf joins, and posting-list
     * self-joins. */
   def bigramPostings(s: SparkSession, dir: String): DataFrame =
-    postingsOf(s, ensureFull(s, dir))
+    Postings.read(s, ensureFull(s, dir))
 
   /** (doc_id, dl) total bigram count per document — doc-count-sized;
     * consumers broadcast it. */
   def docLengths(s: SparkSession, dir: String): DataFrame =
-    doclensOf(s, ensureFull(s, dir))
+    Doclen.read(s, ensureFull(s, dir))
 
   /** The LIVE artifacts of LSM `split` in union order, each as
     * (postings, doclens): the archive's and every segment's, or — past
@@ -220,8 +194,8 @@ object TextIndex {
       archive = p => buildDocs(s, dir, docs(p)),
       segment = (_, p) => buildDocs(s, dir, docs(p)),
       fold = Some(parts => writeInto(
-        parts.map(postingsOf(s, _)).reduce(_ unionByName _), dir, _)))
-    live.map(d => (postingsOf(s, d), doclensOf(s, d)))
+        parts.map(Postings.read(s, _)).reduce(_ unionByName _), dir, _)))
+    live.map(d => (Postings.read(s, d), Doclen.read(s, d)))
   }
 
   /** The LSM view of `split`: (postings, doclens) unioned over
@@ -249,7 +223,7 @@ object TextIndex {
     val dest = LayoutCatalog.resolve(Kind, dir, Docs,
       s"_${LayoutCatalog.segmentName(tag, "", i, key)}")(
       writeInto(withDl(tfOf(docs)), dir, _))
-    (postingsTable(s, dest), new File(dest, "doclen"))
+    (Postings.register(s, dest), new File(dest, Doclen.leaf))
   }
 
   // -----------------------------------------------------------------
@@ -299,23 +273,18 @@ object TextIndex {
         element_at(split(col("g"), " "), 3).as("w3"))
   }
 
+  /** The positional artifact's one table: (doc_id, tok, pos), one
+    * file per bucket, rows totally ordered by (tok, doc_id, pos) —
+    * bytes a pure function of the row set, like the bigram tables. */
+  private val PosPostings = LayoutCatalog.Table("pospostings",
+    "doc_id BIGINT, tok STRING, pos BIGINT NOT NULL", Seq("tok", "doc_id", "pos"),
+    LayoutCatalog.Bucketed)
+
   /** Build of one positional artifact of `docs` (by-name, as in
-    * [[buildDocs]]): a deterministic bucketed write of
-    * (doc_id, tok, pos), one file per bucket, rows totally ordered by
-    * (tok, doc_id, pos) — bytes a pure function of the row set, like
-    * the bigram writeInto. */
+    * [[buildDocs]]). */
   private def buildPositional(dir: String, docs: => DataFrame)(
       tmp: File): Unit =
-    LayoutCatalog.writeBucketed(
-      positionalOf(docs).select(col("doc_id"), col("tok"),
-        coalesce(col("pos"), lit(0L)).as("pos")),
-      new File(tmp, "pospostings"), LayoutCatalog.bucketsOf(dir, Docs), "tok",
-      "doc_id", "pos")(_ => ())
-
-  /** Registered bucketed table of a published positional artifact. */
-  private def positionalTable(s: SparkSession, dest: File): String =
-    LayoutCatalog.registerBucketed(s, new File(dest, "pospostings"),
-      "doc_id BIGINT, tok STRING, pos BIGINT", "tok")
+    PosPostings.write(positionalOf(docs), dir, Docs, tmp)()
 
   /** Publish ONE positional LSM segment from an EXPLICIT row set —
     * the streaming ingest entry point ([[graft.streaming.StreamOps
@@ -325,7 +294,7 @@ object TextIndex {
     * table name. */
   def publishPositionalSegmentRows(s: SparkSession, dir: String,
       docs: DataFrame, tag: String, i: Int, key: String): String =
-    positionalTable(s, LayoutCatalog.resolve(PosKind, dir, Docs,
+    PosPostings.register(s, LayoutCatalog.resolve(PosKind, dir, Docs,
       s"_${LayoutCatalog.segmentName(tag, "p", i, key)}")(
       buildPositional(dir, docs)))
 
@@ -343,6 +312,6 @@ object TextIndex {
       archive = p => buildPositional(dir, docs(p)),
       segment = (_, p) => buildPositional(dir, docs(p)),
       fold = None)
-    live.map(d => s.table(positionalTable(s, d))).reduce(_ unionByName _)
+    live.map(PosPostings.read(s, _)).reduce(_ unionByName _)
   }
 }

@@ -1056,12 +1056,8 @@ object Graph {
       // bit-identically
       val l0 = ed.groupBy("dst").agg(min(col("src")).as("mn"))
         .select(col("dst").as("node"), least(col("dst"), col("mn")).as("lbl"))
-      val l4 = (1 to 4).foldLeft(Checkpoints.materialize(l0)) { (l, k) =>
-        if (k < 4) Checkpoints.materialize(
-          graft.operators.FixpointCC.step(ed, l))
-        else graft.operators.FixpointCC.step(ed, l)
-      }
-      l4.select(col("node"), col("lbl").as("comp"))
+      graft.operators.FixpointCC.bounded(ed, l0, 4)
+        .select(col("node"), col("lbl").as("comp"))
     },
 
     // --------------------------------------------------------------- q309

@@ -130,15 +130,14 @@ object TextOps {
       .na.fill(0L, Seq("df"))
       .withColumn("rn", row_number().over(
         Window.partitionBy("doc_id").orderBy(col("df"), col("g"))))
-      .filter(col("rn") <= col("sz") - expr("(7 * sz + 9) div 10") + 1)
+      .filter(graft.operators.PairGraph.inPrefix)
       .select(col("doc_id"), col("sz"), col("g"))
     val cand = prefixOf(gn)
       .select(col("doc_id").as("new_id"), col("sz").as("szn"), col("g"))
       .join(prefixOf(gc)
         .select(col("doc_id").as("corpus_id"), col("sz").as("szc"), col("g")),
         "g")
-      .filter(lit(10) * col("szc") >= lit(7) * col("szn") &&
-        lit(10) * col("szn") >= lit(7) * col("szc"))
+      .filter(graft.operators.PairGraph.lengthsCompatible(col("szn"), col("szc")))
       .select("new_id", "corpus_id", "szn", "szc")
       .distinct()
     cand
@@ -148,7 +147,8 @@ object TextOps {
         "corpus_id")
       .withColumn("n_common",
         graft.functions.Jaccard.sortedIntersectCountStr(col("ga"), col("gb")))
-      .filter(lit(17) * col("n_common") >= lit(7) * (col("szn") + col("szc")))
+      .filter(graft.operators.PairGraph.qualifies(col("n_common"), col("szn"),
+        col("szc")))
       .select("new_id", "corpus_id", "szn", "szc", "n_common")
   }
 

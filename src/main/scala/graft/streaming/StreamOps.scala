@@ -1267,7 +1267,7 @@ object StreamOps {
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy("corpus_id").orderBy(col("df"), col("g"))))
-      .filter(col("rn") <= col("sz") - expr("(7 * sz + 9) div 10") + 1)
+      .filter(graft.operators.PairGraph.inPrefix)
       .select(col("g"), col("corpus_id"), col("text_c"))
     val ib = incoming.withWatermark("ts", watermark)
       .withColumn("tk", split(col("text"), " "))
@@ -1280,8 +1280,8 @@ object StreamOps {
       .dropDuplicatesWithinWatermark("new_id", "corpus_id")
       .withColumn("jc",
         graft.functions.Jaccard.jaccard5w(col("text_n"), col("text_c")))
-      .filter(lit(17) * col("jc.n_common") >=
-        lit(7) * (col("jc.sz_a") + col("jc.sz_b")))
+      .filter(graft.operators.PairGraph.qualifies(col("jc.n_common"),
+        col("jc.sz_a"), col("jc.sz_b")))
       .select(col("new_id"), col("corpus_id"),
         col("jc.n_common").as("n_common"), col("jc.jaccard").as("jaccard"))
   }

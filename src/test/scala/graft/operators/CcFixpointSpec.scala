@@ -37,7 +37,7 @@ class CcFixpointSpec extends SparkSpec {
     // most ~2^k hops away, so 3 fixed rounds CANNOT label the far end
     // with 1 — and nothing in the bounded variant fails or warns.
     val edges = chain(41)
-    val fixed = labels(FixpointCC.bounded(edges, 3))
+    val fixed = labels(FixpointCC.bounded(edges, FixpointCC.init(edges), 3))
     assert(fixed.values.toSet.size > 1,
       "3 unrolled rounds must leave multiple labels on a diameter-40 chain")
     assert(fixed(41L) !== 1L, "the far end must still hold a stale label")

@@ -380,7 +380,7 @@ class LayoutCatalogSpec extends SparkSpec {
     // the from-scratch equivalent of the segmented view
     val rebuild = Files.createTempDirectory("graft-pq-rebuild").toFile
     try {
-      IvfPq.buildInto(base.filter(!deltaPred), base, cents, 3, rebuild)
+      IvfPq.buildInto(base.filter(!deltaPred), base, cents, 3, dir, rebuild)
       val rebuilt = spark.read.parquet(
         new File(rebuild, "codes").getAbsolutePath)
         .orderBy("vec_id", "centroid_id", "subspace")
@@ -407,7 +407,7 @@ class LayoutCatalogSpec extends SparkSpec {
         !d.getName.startsWith(".tmp_")).head
     val rebuild = Files.createTempDirectory("graft-pq-rebuild2").toFile
     try {
-      IvfPq.buildInto(base.filter(!anyDelta), base, cents, 3, rebuild)
+      IvfPq.buildInto(base.filter(!anyDelta), base, cents, 3, dir, rebuild)
       val mc = partBytes(new File(compDir, "codes"))
       val rc = partBytes(new File(rebuild, "codes"))
       assert(mc.nonEmpty && mc == rc,
@@ -462,23 +462,40 @@ class LayoutCatalogSpec extends SparkSpec {
   }
 
   test("edge layout: every bucket file is sorted by its table's whole key") {
-    // bucket-key order alone leaves rows that share the key in a
-    // per-run order, so two builds of one corpus differ in bytes
+    // every artifact table, bucketed or not: key order alone leaves
+    // rows that share the key in a per-run order, so two builds of one
+    // corpus would differ in bytes. Strictly ascending also checks the
+    // declared key is unique within each file.
     val dir = corpus.getAbsolutePath
-    EdgeLayout.weightedPairs(spark, dir).queryExecution // ensure built
-    val kind = new File(LayoutCatalog.root, s"edges_v${EdgeLayout.LayoutVersion}")
-    val Array(dest) = kind.listFiles().filterNot(_.getName.startsWith(".tmp_"))
-    for ((leaf, key) <- Seq("pairs" -> Seq("c", "s"), "pairs_s" -> Seq("s", "c"),
-        "edges" -> Seq("src", "dst"))) {
-      val files = new File(dest, leaf).listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-      assert(files.nonEmpty, s"no bucket files under $leaf")
-      files.foreach { f =>
-        val rows = spark.read.parquet(f.getPath).select(key.map(col): _*)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-        assert(rows == rows.sorted,
-          s"$leaf/${f.getName} is not sorted by (${key.mkString(", ")})")
-      }
+    val base = pqBase(dir)
+    val cents = Ivf.persistedCentroidsCosine(base, dir, "vec_id", "qv", 8, 2)
+    val (codes, codebook) = IvfPq.persistedIndex(base, dir, cents, 8, 2, 3)
+    val tables = Seq(
+      EdgeLayout.weightedPairs(spark, dir) -> Seq("c", "s"),
+      EdgeLayout.pairsBySupplier(spark, dir) -> Seq("s", "c"),
+      EdgeLayout.weightedEdges(spark, dir) -> Seq("src", "dst"),
+      TextIndex.bigramPostings(spark, dir) -> Seq("g", "doc_id"),
+      TextIndex.positionalSplit(spark, dir,
+        LayoutCatalog.Split("sorted", lit(true), Nil)) -> Seq("tok", "doc_id", "pos"),
+      TextIndex.docLengths(spark, dir) -> Seq("doc_id"),
+      PairGraph.qualifyingPairs(spark, dir) -> Seq("doc_a", "doc_b"),
+      codes -> Seq("vec_id", "centroid_id", "subspace"),
+      codebook -> Seq("subspace", "code"),
+      cents -> Seq("centroid_id"))
+    def cmp(a: Seq[Any], b: Seq[Any]): Int = a.zip(b).iterator.map {
+      case (x: Long, y: Long) => x compare y
+      case (x: Int, y: Int) => x compare y
+      // Spark orders strings by their UTF-8 bytes
+      case (x: String, y: String) => java.util.Arrays.compareUnsigned(
+        x.getBytes("UTF-8"), y.getBytes("UTF-8"))
+      case (x, y) => fail(s"unexpected key values $x, $y")
+    }.find(_ != 0).getOrElse(0)
+    for ((df, key) <- tables; f <- df.inputFiles) {
+      val rows = spark.read.parquet(f).select(key.map(col): _*)
+        .collect().map(_.toSeq).toSeq
+      assert(rows.nonEmpty, s"$f is empty")
+      assert(rows.zip(rows.tail).forall { case (a, b) => cmp(a, b) < 0 },
+        s"$f is not strictly sorted by (${key.mkString(", ")})")
     }
   }
 
@@ -583,9 +600,9 @@ class LayoutCatalogSpec extends SparkSpec {
         (s"c10_parch_$cArch" +: segs("p", cSegs))
           .map(n => s"positional_v2/_$n") ++
         Seq(s"d10_arch_$vdArch", s"c10_arch_$vcArch")
-          .map(n => s"ivf_v1/_${n}_k32_r2_cos") ++
+          .map(n => s"ivf_v2/_${n}_k32_r2_cos") ++
         (Seq(s"d10_arch_$vdArch", s"d10_seg0_$vdSeg", s"c10_arch_$vcArch", vcFold) ++
-          segs("", vcSegs)).map(n => s"ivfpq_v2/_${n}_k32_r2_x3")
+          segs("", vcSegs)).map(n => s"ivfpq_v3/_${n}_k32_r2_x3")
       val suffix = "(_[dc]10_.*)_[0-9a-f]{16}".r.unanchored
       val published = root.listFiles().toSeq.flatMap { kind =>
         kind.listFiles().toSeq.map(_.getName)
@@ -701,6 +718,10 @@ class LayoutCatalogSpec extends SparkSpec {
     // a rolled fingerprint. Runs LAST among the corpus-layout tests
     // because it rolls documents.parquet's mtime.
     val dir = corpus.getAbsolutePath
+    // roll the snapshot first, so the cold resolve builds whichever
+    // earlier test already built this corpus's pair graph
+    val docs = new File(corpus, "documents.parquet")
+    assert(docs.setLastModified(docs.lastModified() + 60000))
     LayoutCatalog.reset()
     val before = LayoutCatalog.buildsPublished.get()
     val cold = PairGraph.qualifyingPairs(spark, dir)
@@ -720,7 +741,6 @@ class LayoutCatalogSpec extends SparkSpec {
       s"pairs07_v${PairGraph.LayoutVersion}")
     val oldDirs = kind.listFiles().map(_.getName)
       .filterNot(_.startsWith(".tmp_")).toSet
-    val docs = new File(corpus, "documents.parquet")
     assert(docs.setLastModified(docs.lastModified() + 60000))
     LayoutCatalog.reset()
     PairGraph.qualifyingPairs(spark, dir).queryExecution.toRdd.count()
